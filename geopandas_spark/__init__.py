@@ -20,6 +20,7 @@ Public surface:
 - ``register_sql(spark)`` — registers every st_* function for Spark SQL
 """
 
+import geopandas_spark._worker  # noqa: F401  (first: trims worker task set-up)
 from geopandas_spark.functions import st, register_sql  # noqa: F401
 from geopandas_spark.frame import (  # noqa: F401
     GeoFrame, concat, from_features, read_file,

@@ -129,7 +129,9 @@ def _enc(ga) -> pd.Series:
 
 
 def _mask_float(ga, vals: np.ndarray) -> pd.Series:
-    """NaN → None so Spark sees SQL NULL for null/empty inputs."""
+    """``vals`` as a float64 Series (``ga`` is unused). NaN is left as
+    NaN here; it reaches Spark as SQL NULL because PySpark's pandas →
+    Arrow conversion masks every null-like value (``mask=isnull()``)."""
     out = pd.Series(vals, dtype="float64")
     return out
 

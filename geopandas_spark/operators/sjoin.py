@@ -79,6 +79,26 @@ def _point_grid_build(rc: np.ndarray):
     return cell, gx0, gy0, nx, ny, key[order], rc[order], order
 
 
+def _coincident_locations(lc: np.ndarray):
+    """``(unique_locations, row_inverse)`` of the (n >= 1, 2) point array
+    ``lc`` when at most half of its rows are distinct locations, else
+    None.
+
+    The exact row-unique lexsorts the whole array, which is waste on
+    unique-location input, so a sample screens for it first: at most
+    1024 rows taken at a ceiling stride across the whole array (a head
+    sample reads a gridded corpus that cycles its locations as unique),
+    compared exactly through a 1-D x+iy combine. Any duplicate in the
+    sample sends the array to the exact unique, which makes the decision.
+    A miss (duplicates only ever between rows the stride skips) keeps
+    the per-row path: results never depend on the screen."""
+    smp = lc[::-(-len(lc) // 1024)]
+    if len(np.unique(smp[:, 0] + 1j * smp[:, 1])) == len(smp):
+        return None
+    uc, linv = np.unique(lc, axis=0, return_inverse=True)
+    return (uc, linv) if 2 * len(uc) <= len(lc) else None
+
+
 def _point_grid_nearest(lc: np.ndarray, grid, cap: float, exclusive: bool):
     """Exact all-ties nearest neighbour of each left point against the
     gridded right point set: Chebyshev rings outward from each point's
@@ -1373,24 +1393,9 @@ def sjoin_nearest(left: DataFrame, right: DataFrame, *,
                 # driver-side right-location dedup; every coincident row
                 # gets its location's exact pair set, so results are
                 # identical.
-                # cheap duplication screen (r14, ADVICE r13): the full
-                # row-unique below lexsorts every batch even when the
-                # dedup gate cannot fire — pure waste on unique-location
-                # corpora. Screen on a STRIDED ~1k sample (stride, not
-                # head: gridded corpora cycle locations, so a head
-                # sample reads as unique) with a 1-D exact (x+iy)
-                # combine; only a duplicate-heavy sample pays the real
-                # axis=0 unique, which still makes the actual decision.
-                # A screen miss only keeps the fallback path (perf, not
-                # results).
-                nlc = len(lc)
-                smp = lc[::max(1, nlc // 1024)][:1024]
-                su = np.unique(smp[:, 0] + 1j * smp[:, 1])
-                dedup_fire = False
-                if 2 * len(su) <= len(smp):
-                    uc, linv = np.unique(lc, axis=0, return_inverse=True)
-                    dedup_fire = 2 * len(uc) <= nlc
-                if dedup_fire:
+                dedup = _coincident_locations(lc)
+                if dedup is not None:
+                    uc, linv = dedup
                     pli, pri, dm = _point_grid_nearest(
                         uc, rgrid, max_distance, exclusive)
                     ok = np.isfinite(dm)

@@ -66,10 +66,12 @@ def mix_constants(num_hashes: int):
 
 _POLY_B = 131                   # Rabin polynomial base
 
-# Max shingle windows processed per chunk inside the signature kernel:
-# bounds every large intermediate to CH*8 bytes (int64), so a worker's
-# reusable buffer set is ~6 x 4 MB however large the Arrow batch is.
-_CHUNK_WINDOWS = 1 << 19
+# Max characters (padded code points) processed per chunk inside the
+# signature kernel: a chunk's windows, shingle codes and masks all fit in
+# CH + 1 entries, so every large intermediate stays at CH*8 bytes (int64)
+# and a worker's reusable buffer set is ~8 x 4 MB however large the Arrow
+# batch is.
+_CHUNK_CHARS = 1 << 19
 
 
 def _poly_powers(k: int):
@@ -115,7 +117,7 @@ def _sig_kernel(num_hashes: int, k: int):
     pages, the dominant cost inside this guest's allocation-weather
     collapse windows (first-touch bandwidth drops 5.5 → 0.15 GB/s; see
     OPTIMIZATION_r13.md §12/§18). The kernel now processes rows in
-    chunks bounded by ``_CHUNK_WINDOWS`` shingle windows and keeps every
+    chunks bounded by ``_CHUNK_CHARS`` characters and keeps every
     large intermediate in closure-held buffers reused across chunks AND
     batches, so a worker's steady-state transient set is ~30 MB of
     already-faulted pages regardless of batch size. Signatures are
@@ -127,7 +129,7 @@ def _sig_kernel(num_hashes: int, k: int):
     # wrap (codes * B^j reaches 2^52)
     bpow = [np.int64(p) for p in _poly_powers(k)]
     M = _MIX_MOD
-    CH = _CHUNK_WINDOWS
+    CH = _CHUNK_CHARS
     bufs = {}
 
     def _buf(name, n, dtype=np.int64):
@@ -150,11 +152,11 @@ def _sig_kernel(num_hashes: int, k: int):
         plens = np.fromiter(map(len, strs), dtype=np.int64, count=nn)
         m = plens - (k - 1)                  # windows per row (>= 1)
         cum = np.zeros(nn + 1, dtype=np.int64)
-        np.cumsum(m, out=cum[1:])
+        np.cumsum(plens, out=cum[1:])
         res = np.empty((nn, num_hashes), dtype=np.int64)
         row0 = 0
         while row0 < nn:
-            # greedy chunk: rows [row0, row1) with <= CH windows (a
+            # greedy chunk: rows [row0, row1) with <= CH characters (a
             # single longer-than-CH row still forms its own chunk)
             row1 = int(np.searchsorted(cum, cum[row0] + CH, side="right")) - 1
             row1 = max(row1, row0 + 1)
@@ -196,14 +198,13 @@ def _sig_kernel(num_hashes: int, k: int):
                 tv %= M
                 res[row0:row1, p] = np.minimum.reduceat(tv, offs)
             row0 = row1
-        # outlier hygiene (r14, ADVICE r13): a single document longer
-        # than CH windows forms its own chunk and grows its buffers past
-        # the chunk bound; without this sweep those stay pinned for the
-        # UDF instance's lifetime. Dropping them after the batch returns
-        # steady-state memory to the documented ~CH-windows bound while
-        # normal batches keep their reused (never-oversized) buffers.
-        cap = CH + k
-        for nm in [nm for nm, b in bufs.items() if len(b) > cap]:
+        # a single document longer than CH characters forms its own
+        # chunk and grows the buffers past the chunk bound; drop those
+        # after the batch so they are not pinned for the UDF instance's
+        # lifetime. A chunk within the bound allocates at most CH + 1
+        # entries (vm holds nwin + 1 = chars - k + 2), so buffers of
+        # normal chunks are never swept and are reused across batches.
+        for nm in [nm for nm, b in bufs.items() if len(b) > CH + 1]:
             del bufs[nm]
         for r, i in enumerate(pos):
             out[i] = res[r].tolist()

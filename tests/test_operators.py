@@ -1208,3 +1208,62 @@ def test_sjoin_nearest_coincident_left_dedup_parity(spark):
             if d == best:
                 exp.add((k, sid, round(d, 12)))
     assert got == exp
+
+
+@pytest.mark.parametrize("n, distinct, fires", [
+    (20_000, 20_000, False),    # all-unique locations
+    (20_000, 500, True),        # <= 512 distinct
+    (20_000, 2_000, True),      # >= 2k distinct, cycled through the batch
+    (1_500, 600, True),         # under 2048 rows: the sample spans the batch
+])
+def test_sjoin_nearest_dedup_screen_regimes(n, distinct, fires):
+    """The per-batch coincident-location screen of sjoin_nearest takes the
+    dedup path exactly when at most half the rows are distinct, for
+    gridded corpora whose locations cycle through the batch, and hands
+    back an exact unique/inverse pair when it does."""
+    import numpy as np
+
+    from geopandas_spark.operators.sjoin import _coincident_locations
+
+    rng = np.random.default_rng(7)
+    locs = rng.uniform(-1e3, 1e3, size=(distinct, 2))
+    lc = locs[np.arange(n) % distinct]
+    got = _coincident_locations(lc)
+    assert (got is not None) == fires
+    if fires:
+        uc, linv = got
+        assert len(uc) == distinct
+        np.testing.assert_array_equal(uc[linv], lc)
+
+
+def test_sjoin_grid_bounds_once_per_side_and_null_geometries(spark):
+    """The grid sjoin evaluates each side's geometry→bounds UDF chain in
+    exactly one ArrowEvalPython node (``st.bounds_fenced`` keeps Catalyst
+    from copying the chain below the IsNotNull filters it infers from the
+    cell join keys), plus one for the refine. NULL geometries on either
+    side are dropped by the cell explode: they never match, and a left
+    join keeps each NULL-geometry left row once, unmatched."""
+    rows = [(i, float(i), float(i) + 0.5) for i in range(30)]
+    rows += [(98, None, None), (99, None, None)]
+    pts = (spark.createDataFrame(rows, "pid long, x double, y double")
+           .withColumn("geom", st.point("x", "y")).drop("x", "y"))
+    wkts = [(k, f"POLYGON (({10 * k} 0, {10 * k + 10} 0, {10 * k + 10} 40, "
+                f"{10 * k} 40, {10 * k} 0))") for k in range(3)]
+    wkts.append((9, None))
+    boxes = (spark.createDataFrame(wkts, "bid long, wkt string")
+             .withColumn("geom", st.geom_from_text("wkt")).drop("wkt"))
+
+    inner = sjoin(pts, boxes, strategy="grid")
+    plan = inner._jdf.queryExecution().executedPlan().toString()
+    evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(evals) == 3, plan
+    assert sum("_bounds(" in ln for ln in evals) == 2, plan
+
+    want = sorted((i, k) for i in range(30) for k in range(3)
+                  if 10 * k <= i <= 10 * k + 10)
+    got = sorted((r.pid, r.bid) for r in inner.select("pid", "bid").collect())
+    assert got == want
+    left = sjoin(pts, boxes, strategy="grid", how="left")
+    got = sorted(((r.pid, r.bid) for r in left.select("pid", "bid").collect()),
+                 key=lambda t: (t[0], -1 if t[1] is None else t[1]))
+    assert got == want + [(98, None), (99, None)]

@@ -573,12 +573,12 @@ def test_minhash_bounded_kernel_parity():
     for nh, k in ((4, 8), (8, 5)):
         ref = reference(texts, nh, k)
         # tiny chunk bound forces many chunk boundaries mid-batch
-        old = dd._CHUNK_WINDOWS
+        old = dd._CHUNK_CHARS
         try:
-            dd._CHUNK_WINDOWS = 7
+            dd._CHUNK_CHARS = 7
             got_chunked = dd._sig_kernel(nh, k)(pd.Series(texts))
         finally:
-            dd._CHUNK_WINDOWS = old
+            dd._CHUNK_CHARS = old
         got = dd._sig_kernel(nh, k)(pd.Series(texts))
         for g1, g2, r in zip(got_chunked, got, ref):
             assert (g1 is None and r is None) or list(g1) == r
@@ -612,14 +612,41 @@ def test_minhash_kernel_buffers_are_bounded_and_reused():
     ids2 = {name: id(b) for name, b in bufs.items()}
     assert ids1 == ids2, "buffers were re-allocated on the second batch"
     # codes holds chunk chars = windows + (k-1) per row; allow that slack
-    bound = (dd._CHUNK_WINDOWS + 2000 * 8 + 16) * 8
+    bound = (dd._CHUNK_CHARS + 2000 * 8 + 16) * 8
     for name, nb in sizes1.items():
         assert nb <= bound, f"buffer {name} exceeds the chunk bound"
 
 
+def test_minhash_kernel_reuses_every_buffer_across_batches():
+    """A normal second batch (no document over the chunk bound) runs on
+    the very buffer objects the first batch allocated, the per-chunk
+    shingle-code and window buffers included: the end-of-batch sweep
+    releases only buffers grown by an oversized document."""
+    import pandas as pd
+
+    from geopandas_spark.pipeline import dedup as dd
+
+    k = 8
+    fn = dd._sig_kernel(4, k)
+    # 300-char docs: a chunk holds far more characters than windows, so
+    # its code and mask buffers are the largest it allocates
+    fn(pd.Series(["x" * 300] * 2000))
+    cells = {v: c.cell_contents for v, c in
+             zip(fn.__code__.co_freevars, fn.__closure__)}
+    hcells = {v: c.cell_contents for v, c in
+              zip(cells["_buf"].__code__.co_freevars,
+                  cells["_buf"].__closure__)}
+    bufs = hcells["bufs"]
+    assert {"codes", "H", "t", "vm", "Hv", "tv", "starts", "offs"} <= \
+        set(bufs), sorted(bufs)
+    ids1 = {name: id(b) for name, b in bufs.items()}
+    fn(pd.Series(["y" * 120, "z" * 500] * 1500))
+    assert {name: id(b) for name, b in bufs.items()} == ids1
+
+
 def test_minhash_kernel_outlier_buffers_are_released():
-    """r14 (ADVICE r13): a single document longer than _CHUNK_WINDOWS
-    windows forms its own chunk and grows the closure-held buffers past
+    """r14 (ADVICE r13): a single document longer than _CHUNK_CHARS
+    characters forms its own chunk and grows the closure-held buffers past
     the chunk bound; the end-of-batch sweep must release them so
     steady-state memory returns to the documented bound, while normal
     batches keep reusing their (never-oversized) buffers."""
@@ -629,8 +656,8 @@ def test_minhash_kernel_outlier_buffers_are_released():
 
     k = 8
     fn = dd._sig_kernel(4, k)
-    cap = (dd._CHUNK_WINDOWS + k) * 8          # bytes, int64 buffers
-    monster = "y" * (dd._CHUNK_WINDOWS + 5000 + k)
+    cap = (dd._CHUNK_CHARS + k) * 8          # bytes, int64 buffers
+    monster = "y" * (dd._CHUNK_CHARS + 5000 + k)
     out_m = fn(pd.Series([monster, "abcdefghij"]))
     cells = {v: c.cell_contents for v, c in
              zip(fn.__code__.co_freevars, fn.__closure__)}

@@ -543,3 +543,58 @@ def test_predicates_share_one_decode(spark):
         assert r.d == (not (inside or on_edge))
         assert r.v == (inside or on_edge)
         assert r.dw == (inside or on_edge)
+
+
+def test_worker_task_setup_skips_zip_rescans(spark):
+    """A Spark Python worker that has run an engine UDF no longer
+    re-parses its zip archives' directories when PySpark invalidates the
+    import caches before each task (see ``geopandas_spark._worker``),
+    imports from pyspark.zip still work there, and the driver's import
+    machinery is untouched."""
+    import json
+    import sys
+    import zipimport
+
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("string")
+    def probe(a):
+        import importlib
+        import json
+        import sys
+        import zipimport
+
+        reads = []
+        real = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return real(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        import pyspark.ml.linalg as linalg
+        plain = zipimport.zipimporter
+        return a.map(lambda _: json.dumps({
+            "hooks": any(h is plain for h in sys.path_hooks),
+            "cached": any(type(f) is plain
+                          for f in sys.path_importer_cache.values()),
+            "reads": len(reads),
+            "linalg": linalg.__file__,
+        }))
+
+    rows = (spark.range(0, 8, numPartitions=4)
+            .select(st.point(F.col("id"), F.col("id")).alias("g"))
+            # chained with the engine UDF, so the probe runs in the same
+            # worker process, after the engine package was imported there
+            .select(probe(st.area("g")).alias("p")).collect())
+    got = [json.loads(r.p) for r in rows]
+    assert len(got) == 8
+    for g in got:
+        assert not g["hooks"] and not g["cached"], g
+        assert g["reads"] == 0, g
+        assert ".zip" in g["linalg"], g
+    assert zipimport.zipimporter in sys.path_hooks
