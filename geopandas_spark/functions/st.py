@@ -7,12 +7,25 @@ Every elementwise operator of the reference's GeoSeries API (SURVEY.md
 - as a Spark SQL function: ``SELECT st_area(geom) ...`` (via
   :func:`register_sql`)
 
-All geometry columns are WKB ``BinaryType``. Each function is a vectorized
-(Arrow-batched) pandas UDF that decodes the batch into the columnar kernel
-representation, runs a numpy kernel from :mod:`geopandas_spark.geom.algos`,
-and re-encodes. This is the engine's equivalent of the reference's thin
-delegation layer (geopandas/base.py:27-131 → shapely ufuncs): same shape —
-a batch-level C-speed kernel behind a per-operator 3-line registration.
+All geometry columns are WKB ``BinaryType``. Each function is an Arrow
+UDF (``arrow_udf``: ``pa.Array`` in, ``pa.Array`` out) built by
+:func:`_udf`, the one boundary helper: it decodes geometry arguments
+straight from the Arrow batch into the columnar kernel representation,
+reads literal arguments from the first row, runs a numpy kernel from
+:mod:`geopandas_spark.geom.algos`, and converts the result to Arrow in
+one place (geometry is encoded into a single flat binary buffer). This is
+the engine's equivalent of the reference's thin delegation layer
+(geopandas/base.py:27-131 → shapely ufuncs): same shape — a batch-level
+C-speed kernel behind a per-operator registration.
+
+NULL/NaN contract (explicit here, not a side effect of a pandas
+conversion): NaN float results are SQL NULL; bounds of a NULL or EMPTY
+geometry are a struct of NULL fields; predicates on a missing geometry
+are False; a NULL or NaN coordinate makes a NULL point.
+
+Every ``st.*`` UDF has the same eval type, so co-located calls share one
+ArrowEvalPython node (mixing eval types in one projection splits it into
+several nodes, each a separate set of Python tasks).
 
 Scale notes (100 TB design): every function here is stateless and
 elementwise — it parallelizes trivially across partitions, survives AQE
@@ -23,13 +36,15 @@ the JVM→Python Arrow hop; batch size is governed by
 
 from __future__ import annotations
 
-import weakref
+import functools
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType, BinaryType, BooleanType, DoubleType, LongType, StringType,
     StructField, StructType,
@@ -39,18 +54,14 @@ from geopandas_spark.geom import algos, wkb
 from geopandas_spark.geom import crs as crsmod
 from geopandas_spark.geom import geojson as gjmod
 from geopandas_spark.geom import wkt as wktmod
-from geopandas_spark.geom.array import points_from_xy, boxes_from_bounds
+from geopandas_spark.geom.array import (
+    GT_LINESTRING, GeometryArray, GeometryBuilder, boxes_from_bounds,
+    points_from_xy,
+)
 
 __all__ = ["register_sql"]
 
 _REGISTRY: dict = {}
-
-
-def _reg(name):
-    def deco(udf):
-        _REGISTRY[name] = udf
-        return udf
-    return deco
 
 
 def _col(c):
@@ -62,176 +73,188 @@ def _col(c):
     return F.lit(c)
 
 
-_SERIES_MEMO: dict = {}    # id(series) -> (weakref(series), GeometryArray)
+# ---------------------------------------------------------------------------
+# the Arrow boundary
+# ---------------------------------------------------------------------------
+
+_DECODED: dict = {}     # buffers key -> (pa.Array, GeometryArray)
+_DECODED_MAX = 4        # about one batch's geometry columns
 
 
-def _memo_get(s: pd.Series):
-    """Per-batch decode memo, keyed on Series OBJECT IDENTITY (r13).
+def _decode(arr: pa.Array, dedup: bool = False) -> GeometryArray:
+    """Decode a WKB column once per batch across co-located UDFs.
 
-    When one ArrowEvalPython node evaluates several geometry UDFs over
-    the same input column (the predicates query runs six, each with the
-    same (box, pt) args; buffer+centroid share geom), the worker unpacks
-    each Arrow column to ONE pandas Series and passes that same object
-    to every UDF — so the column was decoded once per UDF per batch.
-    The memo returns the prior decode when the exact Series object is
-    seen again. A weakref guards id() reuse: an entry only hits while
-    the original Series is alive, and dead entries are swept on every
-    store, so at most the current batch's columns are retained (the
-    Series dies with the batch, taking the entry with it on the next
-    sweep — no cross-batch result caching, values only ever live within
-    one evaluation)."""
-    ent = _SERIES_MEMO.get(id(s))
-    if ent is not None and ent[0]() is s:
-        return ent[1]
-    return None
+    One ArrowEvalPython node hands each of its UDFs a fresh ``pa.Array``
+    wrapper of the same batch column (the predicates query runs six over
+    the same two columns), so the memo keys on the buffers' addresses,
+    offset and length rather than on the wrapper. An entry holds its
+    array: those buffers cannot be freed, and their addresses reused,
+    while the entry lives. Only the last ``_DECODED_MAX`` columns stay.
 
-
-def _memo_put(s: pd.Series, ga) -> None:
-    try:
-        ref = weakref.ref(s)
-    except TypeError:               # non-weakrefable input: skip memo
-        return
-    for k in [k for k, (r, _) in _SERIES_MEMO.items() if r() is None]:
-        del _SERIES_MEMO[k]
-    _SERIES_MEMO[id(s)] = (ref, ga)
-
-
-def _decode(s: pd.Series):
-    ga = _memo_get(s)
+    ``dedup`` is for join refines, which feed the same geometry many
+    times per batch (one polygon × many points sharing a grid cell): when
+    at most half the rows are distinct, each distinct buffer decodes once
+    and the rows gather from it."""
+    key = (tuple(0 if b is None else b.address for b in arr.buffers()),
+           arr.offset, len(arr))
+    hit = _DECODED.get(key)
+    if hit is not None:
+        return hit[1]
+    ga = None
+    if dedup:
+        enc = arr.dictionary_encode(null_encoding="encode")
+        if 2 * len(enc.dictionary) <= len(arr):
+            ga = wkb.decode(enc.dictionary).take(enc.indices.to_numpy())
     if ga is None:
-        ga = wkb.decode(s.tolist())
-        _memo_put(s, ga)
+        ga = wkb.decode(arr)
+    if len(_DECODED) >= _DECODED_MAX:
+        del _DECODED[next(iter(_DECODED))]
+    _DECODED[key] = (arr, ga)
     return ga
 
 
-def _decode_dedup(s: pd.Series):
-    """Decode with per-batch duplicate elimination.  Join refines feed
-    the same geometry bytes many times per batch (one polygon × many
-    points sharing a grid cell): factorize the raw WKB first so each
-    DISTINCT buffer decodes once, then gather.  Falls back to the plain
-    decode when the batch is mostly distinct (factorize cost ≈ 2 ms per
-    20k rows vs ≈ 40 ms decode, so the check is nearly free)."""
-    ga = _memo_get(s)
-    if ga is not None:
-        return ga
-    vals = s.to_numpy(dtype=object)
-    codes, uniq = pd.factorize(vals, use_na_sentinel=False)
-    if 2 * len(uniq) > len(vals):
-        ga = wkb.decode(vals.tolist())
-    else:
-        ga = wkb.decode(list(uniq)).take(codes)
-    _memo_put(s, ga)
-    return ga
+# what the kernel receives for each SQL argument, by kind letter
+_ARG = {
+    "g": _decode,                                     # geometry
+    "G": lambda a: _decode(a, dedup=True),            # geometry, join refine
+    "f": lambda a: a.cast(pa.float64()).to_numpy(     # per-row doubles,
+        zero_copy_only=False, writable=True),         # NULL -> NaN
+    "i": lambda a: a.cast(pa.int64()).to_numpy(),     # per-row integers
+    "l": lambda a: a[0].as_py(),                      # literal
+    "p": lambda a: a.to_pylist(),                     # Python values
+    "a": lambda a: a,                                 # the Arrow array
+}
+_NP_OUT = {"boolean": bool, "bigint": np.int64, "double": np.float64}
 
 
-def _enc(ga) -> pd.Series:
-    return pd.Series(wkb.encode(ga), dtype=object)
+def _to_arrow(v, t) -> pa.Array:
+    """A kernel result as an Arrow array of Spark type ``t``. Geometry
+    encodes to binary; a struct takes one result per field; NaN in any
+    float result becomes NULL; booleans have no NULL (missing → False)."""
+    if isinstance(v, pa.Array):
+        return v
+    if isinstance(v, GeometryArray):
+        return wkb.encode_arrow(v)
+    if isinstance(t, StructType):
+        return pa.StructArray.from_arrays(
+            [_to_arrow(c, f.dataType) for c, f in zip(v, t.fields)],
+            names=t.names)
+    if t.simpleString() in _NP_OUT:
+        v = np.asarray(v, dtype=_NP_OUT[t.simpleString()])
+    return pa.array(v, type=to_arrow_type(t), from_pandas=True)
 
 
-def _mask_float(ga, vals: np.ndarray) -> pd.Series:
-    """``vals`` as a float64 Series (``ga`` is unused). NaN is left as
-    NaN here; it reaches Spark as SQL NULL because PySpark's pandas →
-    Arrow conversion masks every null-like value (``mask=isnull()``)."""
-    out = pd.Series(vals, dtype="float64")
-    return out
+def _udf(name, out, *kinds, agg=False):
+    """Decorator: a kernel over decoded arguments → an Arrow UDF returning
+    Spark type ``out``, registered for SQL as ``name`` (when given).
+
+    ``kinds`` has one letter per SQL argument (see ``_ARG``). With
+    ``agg`` the UDF is a grouped aggregate returning one value per group
+    (a geometry result is encoded to its WKB). The UDF keeps the
+    kernel's function name, which is what plans show."""
+    def deco(fn):
+        if agg:
+            def f(*cols: pa.Array) -> object:
+                v = fn(*(_ARG[k](c) for k, c in zip(kinds, cols)))
+                return wkb.encode(v)[0] if isinstance(v, GeometryArray) else v
+        else:
+            def f(*cols: pa.Array) -> pa.Array:
+                if len(cols[0]) == 0:
+                    return pa.array([], to_arrow_type(out))
+                return _to_arrow(
+                    fn(*(_ARG[k](c) for k, c in zip(kinds, cols))), out)
+        f.__name__ = f.__qualname__ = fn.__name__
+        udf = arrow_udf(f, out)
+        if name:
+            _REGISTRY[name] = udf
+        return udf
+    return deco
 
 
-def _mask_null_bool(ga, vals) -> pd.Series:
-    # missing geometry → False, matching the reference's predicate
-    # semantics for missing values (geopandas/array.py:794-851)
-    return pd.Series(np.asarray(vals, dtype=bool))
+def _null_where(arr: pa.Array, mask) -> pa.Array:
+    return pc.if_else(pa.array(mask, pa.bool_()), pa.scalar(None, arr.type),
+                      arr)
+
+
+def _grid(g):
+    """A literal size/tolerance: positive, or None for 'not given'."""
+    return float(g) if g and g > 0 else None
 
 
 # ---------------------------------------------------------------------------
 # constructors / codecs
 # ---------------------------------------------------------------------------
 
-@_reg("st_point")
-@pandas_udf(BinaryType())
-def _point(x: pd.Series, y: pd.Series) -> pd.Series:
-    ga = points_from_xy(x.to_numpy(np.float64), y.to_numpy(np.float64))
-    out = wkb.encode(ga)
-    null = (x.isna() | y.isna()).to_numpy()
-    if null.any():
-        for i in np.nonzero(null)[0]:
-            out[i] = None
-    return pd.Series(out, dtype=object)
+@_udf("st_point", BinaryType(), "f", "f")
+def _point(x, y):
+    # a NULL coordinate arrives as NaN: either makes a NULL point
+    return _null_where(wkb.encode_arrow(points_from_xy(x, y)),
+                       np.isnan(x) | np.isnan(y))
 
 
-@_reg("st_makebox")
-@pandas_udf(BinaryType())
-def _makebox(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series,
-             ymax: pd.Series) -> pd.Series:
-    ga = boxes_from_bounds(xmin.to_numpy(np.float64), ymin.to_numpy(np.float64),
-                           xmax.to_numpy(np.float64), ymax.to_numpy(np.float64))
-    return _enc(ga)
+@_udf("st_makebox", BinaryType(), "f", "f", "f", "f")
+def _makebox(xmin, ymin, xmax, ymax):
+    return boxes_from_bounds(xmin, ymin, xmax, ymax)
 
 
-@_reg("st_geomfromtext")
-@pandas_udf(BinaryType())
-def _geomfromtext(s: pd.Series) -> pd.Series:
-    ga = wktmod.parse_array(s.tolist())
-    return _enc(ga)
+@_udf("st_geomfromtext", BinaryType(), "p")
+def _geomfromtext(s):
+    return wktmod.parse_array(s)
 
 
-@_reg("st_length_of_wkt")
-@pandas_udf(DoubleType())
-def _length_of_wkt(s: pd.Series) -> pd.Series:
+@_udf("st_length_of_wkt", DoubleType(), "p")
+def _length_of_wkt(s):
     """Fused parse→length kernel (r13, guide §4.2): same parse_array and
     same length kernel as the st_geomfromtext → st_length chain, minus
-    the per-row WKB encode → bytes Series → decode round trip between
-    the two UDFs (wkb.decode(wkb.encode(ga)) is the identity on every
-    parse_array output, so the values are unchanged by construction).
-    Selected by ``length()`` when its argument is a Column that
-    ``geom_from_text()`` returned in this session — see
-    ``_FROMTEXT_ARG_ATTR``."""
-    ga = wktmod.parse_array(s.tolist())
-    return _mask_float(ga, algos.length(ga))
+    the per-row WKB encode → decode round trip between the two UDFs
+    (wkb.decode(wkb.encode(ga)) is the identity on every parse_array
+    output, so the values are unchanged by construction). Selected by
+    ``length()`` when its argument is a Column that ``geom_from_text()``
+    returned in this session — see ``_FROMTEXT_ARG_ATTR``."""
+    return algos.length(wktmod.parse_array(s))
 
 
-@_reg("st_astext")
-@pandas_udf(StringType())
-def _astext(s: pd.Series) -> pd.Series:
-    ga = _decode(s)
-    return pd.Series(wktmod.format_array(ga), dtype=object)
+@_udf("st_astext", StringType(), "g")
+def _astext(ga):
+    return wktmod.format_array(ga)
 
 
-@_reg("st_geomfromwkb")
-@pandas_udf(BinaryType())
-def _geomfromwkb(s: pd.Series) -> pd.Series:
+@_udf("st_geomfromwkb", BinaryType(), "g")
+def _geomfromwkb(ga):
     # validation round-trip (normalizes endianness / EWKB flags)
-    return _enc(_decode(s))
+    return ga
 
 
-@_reg("st_aswkb")
-@pandas_udf(BinaryType())
-def _aswkb(s: pd.Series) -> pd.Series:
+@_udf("st_aswkb", BinaryType(), "a")
+def _aswkb(s):
     return s
 
 
-@_reg("st_geomfromgeojson")
-@pandas_udf(BinaryType())
-def _geomfromgeojson(s: pd.Series) -> pd.Series:
-    return _enc(gjmod.parse_array(s.tolist()))
+@_udf("st_geomfromgeojson", BinaryType(), "p")
+def _geomfromgeojson(s):
+    return gjmod.parse_array(s)
 
 
-@_reg("st_asgeojson")
-@pandas_udf(StringType())
-def _asgeojson(s: pd.Series) -> pd.Series:
-    return pd.Series(gjmod.format_array(_decode(s)), dtype=object)
+@_udf("st_asgeojson", StringType(), "g")
+def _asgeojson(ga):
+    return gjmod.format_array(ga)
 
 
 # ---------------------------------------------------------------------------
 # measures
 # ---------------------------------------------------------------------------
 
-def _unary_double(name, kernel):
-    @_reg(name)
-    @pandas_udf(DoubleType())
-    def f(s: pd.Series) -> pd.Series:
-        ga = _decode(s)
-        return _mask_float(ga, kernel(ga))
+def _unary(out, name, kernel):
+    @_udf(name, out, "g")
+    def f(ga):
+        return kernel(ga)
     return f
+
+
+_unary_double = functools.partial(_unary, DoubleType())
+_unary_long = functools.partial(_unary, LongType())
+_unary_bool = functools.partial(_unary, BooleanType())
+_unary_geom = functools.partial(_unary, BinaryType())
 
 
 _unary_double("st_area", algos.area)
@@ -242,29 +265,9 @@ _unary_double("st_y", algos.get_y)
 _unary_double("st_z", algos.get_z)
 _unary_double("st_m", algos.get_m)
 
-
-def _unary_long(name, kernel):
-    @_reg(name)
-    @pandas_udf(LongType())
-    def f(s: pd.Series) -> pd.Series:
-        ga = _decode(s)
-        return pd.Series(np.asarray(kernel(ga), dtype=np.int64))
-    return f
-
-
 _unary_long("st_npoints", algos.count_coordinates)
 _unary_long("st_ngeometries", algos.count_geometries)
 _unary_long("st_ninteriorrings", algos.count_interior_rings)
-
-
-def _unary_bool(name, kernel):
-    @_reg(name)
-    @pandas_udf(BooleanType())
-    def f(s: pd.Series) -> pd.Series:
-        ga = _decode(s)
-        return _mask_null_bool(ga, kernel(ga))
-    return f
-
 
 _unary_bool("st_isempty", lambda ga: ga.is_empty() | ga.is_missing())
 _unary_bool("st_isvalid", algos.is_valid)
@@ -274,11 +277,9 @@ _unary_bool("st_isclosed", algos.is_closed)
 _unary_bool("st_isccw", algos.is_ccw)
 
 
-@_reg("st_geometrytype")
-@pandas_udf(StringType())
-def _geometrytype(s: pd.Series) -> pd.Series:
-    ga = _decode(s)
-    return pd.Series(algos.geom_type_name(ga), dtype=object)
+@_udf("st_geometrytype", StringType(), "g")
+def _geometrytype(ga):
+    return algos.geom_type_name(ga)
 
 
 _BOUNDS_SCHEMA = StructType([
@@ -287,35 +288,21 @@ _BOUNDS_SCHEMA = StructType([
 ])
 
 
-@_reg("st_bounds")
-@pandas_udf(_BOUNDS_SCHEMA)
-def _bounds(s: pd.Series) -> pd.DataFrame:
-    ga = _decode(s)
-    bb = algos.bounds(ga)
-    return pd.DataFrame(
-        {"xmin": bb[:, 0], "ymin": bb[:, 1], "xmax": bb[:, 2], "ymax": bb[:, 3]})
+@_udf("st_bounds", _BOUNDS_SCHEMA, "g")
+def _bounds(ga):
+    return np.ascontiguousarray(algos.bounds(ga).T)
 
 
 for _nm, _ix in (("st_xmin", 0), ("st_ymin", 1), ("st_xmax", 2), ("st_ymax", 3)):
-    def _mk(ix):
-        @pandas_udf(DoubleType())
-        def f(s: pd.Series) -> pd.Series:
-            ga = _decode(s)
-            return pd.Series(algos.bounds(ga)[:, ix])
-        return f
-    _REGISTRY[_nm] = _mk(_ix)
+    _unary_double(_nm, lambda ga, ix=_ix: algos.bounds(ga)[:, ix])
 
 
-@_reg("st_hilbert")
-@pandas_udf(LongType())
-def _hilbert(s: pd.Series, xmin: pd.Series, ymin: pd.Series, xmax: pd.Series,
-             ymax: pd.Series) -> pd.Series:
+@_udf("st_hilbert", LongType(), "g", "l", "l", "l", "l")
+def _hilbert(ga, xmin, ymin, xmax, ymax):
     """Hilbert-curve key of the bbox midpoint within the given total bounds —
     the spatial partitioning key (SURVEY §2.6)."""
-    ga = _decode(s)
-    tb = [float(xmin.iloc[0]), float(ymin.iloc[0]),
-          float(xmax.iloc[0]), float(ymax.iloc[0])]
-    return pd.Series(algos.hilbert_distance(ga, tb, level=15))
+    return algos.hilbert_distance(
+        ga, [float(v) for v in (xmin, ymin, xmax, ymax)], level=15)
 
 
 # ---------------------------------------------------------------------------
@@ -323,11 +310,9 @@ def _hilbert(s: pd.Series, xmin: pd.Series, ymin: pd.Series, xmax: pd.Series,
 # ---------------------------------------------------------------------------
 
 def _binary_bool(name, kernel):
-    @_reg(name)
-    @pandas_udf(BooleanType())
-    def f(a: pd.Series, b: pd.Series) -> pd.Series:
-        return _mask_null_bool(None, kernel(_decode_dedup(a),
-                                            _decode_dedup(b)))
+    @_udf(name, BooleanType(), "G", "G")
+    def f(ga, gb):
+        return kernel(ga, gb)
     return f
 
 
@@ -344,31 +329,19 @@ _binary_bool("st_equals", algos.geom_equals)
 _binary_bool("st_containsproperly", algos.contains_properly)
 
 
-@_reg("st_distance")
-@pandas_udf(DoubleType())
-def _distance(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(algos.distance(_decode_dedup(a), _decode_dedup(b)))
+@_udf("st_distance", DoubleType(), "G", "G")
+def _distance(ga, gb):
+    return algos.distance(ga, gb)
 
 
-@_reg("st_dwithin")
-@pandas_udf(BooleanType())
-def _dwithin(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
-    return _mask_null_bool(
-        None, algos.distance(_decode_dedup(a), _decode_dedup(b))
-        <= d.to_numpy(np.float64))
+@_udf("st_dwithin", BooleanType(), "G", "G", "f")
+def _dwithin(ga, gb, d):
+    return algos.distance(ga, gb) <= d
 
 
 # ---------------------------------------------------------------------------
 # constructive (geometry → geometry)
 # ---------------------------------------------------------------------------
-
-def _unary_geom(name, kernel):
-    @_reg(name)
-    @pandas_udf(BinaryType())
-    def f(s: pd.Series) -> pd.Series:
-        return _enc(kernel(_decode(s)))
-    return f
-
 
 _unary_geom("st_centroid", algos.centroid)
 _unary_geom("st_envelope", algos.envelope)
@@ -381,19 +354,19 @@ _unary_bool("st_hasz", lambda ga: ga.row_has_z())
 _unary_bool("st_hasm", lambda ga: ga.row_has_m())
 
 
-@_reg("st_force3d")
-@pandas_udf(BinaryType())
-def _force3d(s: pd.Series, zfill: pd.Series) -> pd.Series:
+@_udf("st_force3d", BinaryType(), "g", "l")
+def _force3d(ga, zfill):
     """force_3d (reference base.py:2332): keep existing Z, fill 2-D rows."""
-    return _enc(algos.force_3d(_decode(s), float(zfill.iloc[0])))
+    return algos.force_3d(ga, float(zfill))
 
 
-@_reg("st_collectionextract")
-@pandas_udf(BinaryType())
-def _collectionextract(s: pd.Series, gtype: pd.Series) -> pd.Series:
+@_udf("st_collectionextract", BinaryType(), "g", "l")
+def _collectionextract(ga, gtype):
     """Parts of one dimension (reference overlay keep_geom_type explode,
     geopandas/tools/overlay.py:395-454)."""
-    return _enc(algos.collection_extract(_decode(s), str(gtype.iloc[0])))
+    return algos.collection_extract(ga, gtype)
+
+
 _unary_geom("st_normalize", algos.normalize)
 _unary_geom("st_orientpolygons", algos.orient_polygons)
 _unary_geom("st_points", algos.extract_unique_points)
@@ -406,217 +379,156 @@ _unary_geom("st_constraineddelaunaytriangles",
             algos.constrained_delaunay_triangles)
 
 
-@_reg("st_maximuminscribedcircle")
-@pandas_udf(BinaryType())
-def _maxinscribedcircle(s: pd.Series, tol: pd.Series) -> pd.Series:
-    t = tol.iloc[0]
-    return _enc(algos.maximum_inscribed_circle(
-        _decode(s), None if t is None or t <= 0 else float(t)))
-@_reg("st_makevalid")
-@pandas_udf(BinaryType())
-def _makevalid(s: pd.Series, method: pd.Series) -> pd.Series:
-    return _enc(algos.make_valid(_decode(s), method=str(method.iloc[0])))
-@_reg("st_linemerge")
-@pandas_udf(BinaryType())
-def _linemerge(s: pd.Series, directed: pd.Series) -> pd.Series:
-    return _enc(algos.line_merge(_decode(s),
-                                 directed=bool(directed.iloc[0])))
-@_reg("st_delaunaytriangles")
-@pandas_udf(BinaryType())
-def _delaunaytriangles(s: pd.Series, tolerance: pd.Series,
-                       only_edges: pd.Series) -> pd.Series:
-    return _enc(algos.delaunay_triangles(
-        _decode(s), float(tolerance.iloc[0]), bool(only_edges.iloc[0])))
+@_udf("st_maximuminscribedcircle", BinaryType(), "g", "l")
+def _maxinscribedcircle(ga, tol):
+    return algos.maximum_inscribed_circle(ga, _grid(tol))
 
 
-@_reg("st_voronoipolygons")
-@pandas_udf(BinaryType())
-def _voronoipolygons(s: pd.Series, tolerance: pd.Series,
-                     only_edges: pd.Series) -> pd.Series:
-    return _enc(algos.voronoi_polygons(
-        _decode(s), tolerance=float(tolerance.iloc[0]),
-        only_edges=bool(only_edges.iloc[0])))
+@_udf("st_makevalid", BinaryType(), "g", "l")
+def _makevalid(ga, method):
+    return algos.make_valid(ga, method=method)
+
+
+@_udf("st_linemerge", BinaryType(), "g", "l")
+def _linemerge(ga, directed):
+    return algos.line_merge(ga, directed=bool(directed))
+
+
+@_udf("st_delaunaytriangles", BinaryType(), "g", "l", "l")
+def _delaunaytriangles(ga, tolerance, only_edges):
+    return algos.delaunay_triangles(ga, float(tolerance), bool(only_edges))
+
+
+@_udf("st_voronoipolygons", BinaryType(), "g", "l", "l")
+def _voronoipolygons(ga, tolerance, only_edges):
+    return algos.voronoi_polygons(ga, tolerance=float(tolerance),
+                                  only_edges=bool(only_edges))
 
 
 _unary_double("st_minimumclearance", algos.minimum_clearance)
 _unary_double("st_precision", algos.get_precision)
 
 
-@_reg("st_offsetcurve")
-@pandas_udf(BinaryType())
-def _offsetcurve(s: pd.Series, d: pd.Series) -> pd.Series:
-    return _enc(algos.offset_curve(_decode(s), d.to_numpy(np.float64)))
+@_udf("st_offsetcurve", BinaryType(), "g", "f")
+def _offsetcurve(ga, d):
+    return algos.offset_curve(ga, d)
 
 
-@_reg("st_isvalidcoverage_agg")
-@pandas_udf(BooleanType())
-def _isvalidcoverage_agg(s: pd.Series) -> bool:
+@_udf("st_isvalidcoverage_agg", BooleanType(), "a", agg=True)
+def _isvalidcoverage_agg(s):
     """Whole-group coverage validity (GROUPED_AGG; reference base.py:378):
     polygon interiors pairwise disjoint."""
-    return bool(algos.is_valid_coverage(wkb.decode(s.tolist())))
+    return bool(algos.is_valid_coverage(wkb.decode(s)))
 
 
-@_reg("st_skew")
-@pandas_udf(BinaryType())
-def _skew(s: pd.Series, xs_deg: pd.Series, ys_deg: pd.Series) -> pd.Series:
-    return _enc(algos.skew(_decode(s), float(xs_deg.iloc[0]),
-                           float(ys_deg.iloc[0])))
+@_udf("st_skew", BinaryType(), "g", "l", "l")
+def _skew(ga, xs_deg, ys_deg):
+    return algos.skew(ga, float(xs_deg), float(ys_deg))
 
 
-@_reg("st_interiorrings")
-@pandas_udf(ArrayType(BinaryType()))
-def _interiorrings(s: pd.Series) -> pd.Series:
-    return pd.Series(algos.interiors(_decode(s)), dtype=object)
+@_udf("st_interiorrings", ArrayType(BinaryType()), "g")
+def _interiorrings(ga):
+    return algos.interiors(ga)
 
 
-@_reg("st_relate")
-@pandas_udf(StringType())
-def _relate(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(algos.relate(_decode(a), _decode(b)), dtype=object)
+@_udf("st_relate", StringType(), "g", "g")
+def _relate(ga, gb):
+    return algos.relate(ga, gb)
 
 
-@_reg("st_relatematch")
-@pandas_udf(BooleanType())
-def _relatematch(a: pd.Series, b: pd.Series, pat: pd.Series) -> pd.Series:
-    ga = _decode(a)
-    return _mask_null_bool(ga, algos.relate_pattern(ga, _decode(b),
-                                                    str(pat.iloc[0])))
+@_udf("st_relatematch", BooleanType(), "g", "g", "l")
+def _relatematch(ga, gb, pat):
+    return algos.relate_pattern(ga, gb, pat)
 
 
-@_reg("st_concavehull")
-@pandas_udf(BinaryType())
-def _concavehull(s: pd.Series, ratio: pd.Series,
-                 allow_holes: pd.Series) -> pd.Series:
-    return _enc(algos.concave_hull(_decode(s), float(ratio.iloc[0]),
-                                   bool(allow_holes.iloc[0])))
+@_udf("st_concavehull", BinaryType(), "g", "l", "l")
+def _concavehull(ga, ratio, allow_holes):
+    return algos.concave_hull(ga, float(ratio), bool(allow_holes))
 
 
-@_reg("st_isvalidreason")
-@pandas_udf(StringType())
-def _isvalidreason(s: pd.Series) -> pd.Series:
-    return pd.Series(algos.is_valid_reason(_decode(s)), dtype=object)
+@_udf("st_isvalidreason", StringType(), "g")
+def _isvalidreason(ga):
+    return algos.is_valid_reason(ga)
 
 
-@_reg("st_segmentize")
-@pandas_udf(BinaryType())
-def _segmentize(s: pd.Series, max_len: pd.Series) -> pd.Series:
-    return _enc(algos.segmentize(_decode(s), max_len.to_numpy(np.float64)))
+@_udf("st_segmentize", BinaryType(), "g", "f")
+def _segmentize(ga, max_len):
+    return algos.segmentize(ga, max_len)
 
 
-@_reg("st_removerepeatedpoints")
-@pandas_udf(BinaryType())
-def _removerepeatedpoints(s: pd.Series, tol: pd.Series) -> pd.Series:
-    return _enc(algos.remove_repeated_points(_decode(s),
-                                             tol.to_numpy(np.float64)))
+@_udf("st_removerepeatedpoints", BinaryType(), "g", "f")
+def _removerepeatedpoints(ga, tol):
+    return algos.remove_repeated_points(ga, tol)
 
 
-@_reg("st_setprecision")
-@pandas_udf(BinaryType())
-def _setprecision(s: pd.Series, grid: pd.Series) -> pd.Series:
-    return _enc(algos.set_precision(_decode(s), grid.to_numpy(np.float64)))
+@_udf("st_setprecision", BinaryType(), "g", "f")
+def _setprecision(ga, grid):
+    return algos.set_precision(ga, grid)
 
 
-@_reg("st_snap")
-@pandas_udf(BinaryType())
-def _snap(a: pd.Series, b: pd.Series, tol: pd.Series) -> pd.Series:
-    return _enc(algos.snap(_decode(a), _decode(b), tol.to_numpy(np.float64)))
+@_udf("st_snap", BinaryType(), "g", "g", "f")
+def _snap(ga, gb, tol):
+    return algos.snap(ga, gb, tol)
 
 
-@_reg("st_shortestline")
-@pandas_udf(BinaryType())
-def _shortestline(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _enc(algos.shortest_line(_decode(a), _decode(b)))
+@_udf("st_shortestline", BinaryType(), "g", "g")
+def _shortestline(ga, gb):
+    return algos.shortest_line(ga, gb)
 
 
-@_reg("st_hausdorffdistance")
-@pandas_udf(DoubleType())
-def _hausdorff(a: pd.Series, b: pd.Series) -> pd.Series:
-    ga = _decode(a)
-    return _mask_float(ga, algos.hausdorff_distance(ga, _decode(b)))
+@_udf("st_hausdorffdistance", DoubleType(), "g", "g")
+def _hausdorff(ga, gb):
+    return algos.hausdorff_distance(ga, gb)
 
 
-@_reg("st_frechetdistance")
-@pandas_udf(DoubleType())
-def _frechet(a: pd.Series, b: pd.Series) -> pd.Series:
-    ga = _decode(a)
-    return _mask_float(ga, algos.frechet_distance(ga, _decode(b)))
+@_udf("st_frechetdistance", DoubleType(), "g", "g")
+def _frechet(ga, gb):
+    return algos.frechet_distance(ga, gb)
 
 
-@_reg("st_hausdorffdistance_densify")
-@pandas_udf(DoubleType())
-def _hausdorff_densify(a: pd.Series, b: pd.Series,
-                       dens: pd.Series) -> pd.Series:
-    ga = _decode(a)
-    f = float(dens.iloc[0]) if len(dens) else None
-    return _mask_float(ga, algos.hausdorff_distance(ga, _decode(b),
-                                                    densify=f))
+@_udf("st_hausdorffdistance_densify", DoubleType(), "g", "g", "l")
+def _hausdorff_densify(ga, gb, dens):
+    return algos.hausdorff_distance(ga, gb, densify=float(dens))
 
 
-@_reg("st_frechetdistance_densify")
-@pandas_udf(DoubleType())
-def _frechet_densify(a: pd.Series, b: pd.Series,
-                     dens: pd.Series) -> pd.Series:
-    ga = _decode(a)
-    f = float(dens.iloc[0]) if len(dens) else None
-    return _mask_float(ga, algos.frechet_distance(ga, _decode(b),
-                                                  densify=f))
+@_udf("st_frechetdistance_densify", DoubleType(), "g", "g", "l")
+def _frechet_densify(ga, gb, dens):
+    return algos.frechet_distance(ga, gb, densify=float(dens))
 
 
-@_reg("st_equalsexact")
-@pandas_udf(BooleanType())
-def _equalsexact(a: pd.Series, b: pd.Series, tol: pd.Series) -> pd.Series:
-    ga = _decode(a)
-    return _mask_null_bool(ga, algos.geom_equals_exact(
-        ga, _decode(b), tol.to_numpy(np.float64)))
+@_udf("st_equalsexact", BooleanType(), "g", "g", "f")
+def _equalsexact(ga, gb, tol):
+    return algos.geom_equals_exact(ga, gb, tol)
 
 
-@_reg("st_buffer")
-@pandas_udf(BinaryType())
-def _buffer(s: pd.Series, d: pd.Series, quad_segs: pd.Series,
-            cap_style: pd.Series, join_style: pd.Series,
-            mitre_limit: pd.Series, single_sided: pd.Series) -> pd.Series:
-    ga = _decode(s)
-    return _enc(algos.buffer(ga, d.to_numpy(np.float64),
-                             int(quad_segs.iloc[0]),
-                             cap_style=str(cap_style.iloc[0]),
-                             join_style=str(join_style.iloc[0]),
-                             mitre_limit=float(mitre_limit.iloc[0]),
-                             single_sided=bool(single_sided.iloc[0])))
+@_udf("st_buffer", BinaryType(), "g", "f", "l", "l", "l", "l", "l")
+def _buffer(ga, d, quad_segs, cap_style, join_style, mitre_limit,
+            single_sided):
+    return algos.buffer(ga, d, int(quad_segs), cap_style=cap_style,
+                        join_style=join_style, mitre_limit=float(mitre_limit),
+                        single_sided=bool(single_sided))
 
 
-@_reg("st_simplify")
-@pandas_udf(BinaryType())
-def _simplify(s: pd.Series, tol: pd.Series,
-              preserve: pd.Series) -> pd.Series:
-    return _enc(algos.simplify(_decode(s), tol.to_numpy(np.float64),
-                               preserve_topology=bool(preserve.iloc[0])))
+@_udf("st_simplify", BinaryType(), "g", "f", "l")
+def _simplify(ga, tol, preserve):
+    return algos.simplify(ga, tol, preserve_topology=bool(preserve))
 
 
-@_reg("st_clipbyrect")
-@pandas_udf(BinaryType())
-def _clipbyrect(s: pd.Series, xmin: pd.Series, ymin: pd.Series,
-                xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-    ga = _decode(s)
-    return _enc(algos.clip_by_rect(ga, float(xmin.iloc[0]), float(ymin.iloc[0]),
-                                   float(xmax.iloc[0]), float(ymax.iloc[0])))
+@_udf("st_clipbyrect", BinaryType(), "g", "l", "l", "l", "l")
+def _clipbyrect(ga, xmin, ymin, xmax, ymax):
+    return algos.clip_by_rect(ga, float(xmin), float(ymin), float(xmax),
+                              float(ymax))
 
 
-@_reg("st_intersection")
-@pandas_udf(BinaryType())
-def _intersection(a: pd.Series, b: pd.Series, grid_size: pd.Series,
-                  mixed: pd.Series) -> pd.Series:
-    g = float(grid_size.iloc[0])
-    return _enc(algos.intersection(_decode(a), _decode(b),
-                             grid_size=g if g > 0 else None,
-                             mixed=bool(mixed.iloc[0])))
+@_udf("st_intersection", BinaryType(), "g", "g", "l", "l")
+def _intersection(ga, gb, grid_size, mixed):
+    return algos.intersection(ga, gb, grid_size=_grid(grid_size),
+                              mixed=bool(mixed))
 
 
-@_reg("st_difference")
-@pandas_udf(BinaryType())
-def _difference(a: pd.Series, b: pd.Series, grid_size: pd.Series) -> pd.Series:
-    g = float(grid_size.iloc[0])
-    return _enc(algos.difference(_decode(a), _decode(b),
-                             grid_size=g if g > 0 else None))
+@_udf("st_difference", BinaryType(), "g", "g", "l")
+def _difference(ga, gb, grid_size):
+    return algos.difference(ga, gb, grid_size=_grid(grid_size))
 
 
 def _geom_class_np(names) -> np.ndarray:
@@ -629,242 +541,182 @@ def _geom_class_np(names) -> np.ndarray:
     return cls
 
 
-@_reg("st_intersection_overlay")
-@pandas_udf(BinaryType())
-def _intersection_overlay(a: pd.Series, b: pd.Series, mixed: pd.Series,
-                          keep: pd.Series) -> pd.Series:
+@_udf("st_intersection_overlay", BinaryType(), "G", "G", "l", "l")
+def _intersection_overlay(ga, gb, mixed, keep):
     """Fused overlay-intersection kernel: a ∩ b, returned as NULL when
     empty or (keep_geom_type) when the piece's geometry class differs
     from a's — ONE Arrow round trip where the unfused plan paid four
     (class probe, intersection, emptiness filter, class filter). The
     caller filters isNotNull natively (overlay.py)."""
-    ga, gb = _decode_dedup(a), _decode_dedup(b)
-    out = algos.intersection(ga, gb, mixed=bool(mixed.iloc[0]))
+    out = algos.intersection(ga, gb, mixed=bool(mixed))
     dead = out.is_empty() | out.is_missing()
-    if bool(keep.iloc[0]):
+    if keep:
         dead |= (_geom_class_np(algos.geom_type_name(ga)) !=
                  _geom_class_np(algos.geom_type_name(out)))
-    vals = np.array(wkb.encode(out), dtype=object)
-    vals[dead] = None
-    return pd.Series(vals, dtype=object)
+    return _null_where(wkb.encode_arrow(out), dead)
 
 
-@_reg("st_difference_residue")
-@pandas_udf(BinaryType())
-def _difference_residue(a: pd.Series, b: pd.Series) -> pd.Series:
+@_udf("st_difference_residue", BinaryType(), "G", "G")
+def _difference_residue(ga, gb):
     """Fused overlay-residue kernel: a − b with NULL b meaning "nothing
     to subtract" (a passes through) and empty results returned as NULL —
     the caller's native isNotNull filter replaces a per-row when() plus
     a second is_empty Arrow round trip (overlay.py residue branches)."""
-    ga, gb = _decode_dedup(a), _decode_dedup(b)
     miss_b = gb.is_missing()
     d = algos.difference(ga, gb)
-    enc_a = np.array(wkb.encode(ga), dtype=object)
-    enc_d = np.array(wkb.encode(d), dtype=object)
-    dead_a = ga.is_empty() | ga.is_missing()
-    dead_d = d.is_empty() | d.is_missing()
-    vals = np.where(miss_b, enc_a, enc_d)
-    vals[np.where(miss_b, dead_a, dead_d)] = None
-    return pd.Series(vals, dtype=object)
+    vals = pc.if_else(pa.array(miss_b), wkb.encode_arrow(ga),
+                      wkb.encode_arrow(d))
+    dead = np.where(miss_b, ga.is_empty() | ga.is_missing(),
+                    d.is_empty() | d.is_missing())
+    return _null_where(vals, dead)
 
 
-@_reg("st_union")
-@pandas_udf(BinaryType())
-def _union(a: pd.Series, b: pd.Series, grid_size: pd.Series) -> pd.Series:
-    g = float(grid_size.iloc[0])
-    return _enc(algos.union(_decode(a), _decode(b),
-                             grid_size=g if g > 0 else None))
+@_udf("st_union", BinaryType(), "g", "g", "l")
+def _union(ga, gb, grid_size):
+    return algos.union(ga, gb, grid_size=_grid(grid_size))
 
 
-@_reg("st_symdifference")
-@pandas_udf(BinaryType())
-def _symdifference(a: pd.Series, b: pd.Series, grid_size: pd.Series) -> pd.Series:
-    g = float(grid_size.iloc[0])
-    return _enc(algos.symmetric_difference(_decode(a), _decode(b),
-                             grid_size=g if g > 0 else None))
+@_udf("st_symdifference", BinaryType(), "g", "g", "l")
+def _symdifference(ga, gb, grid_size):
+    return algos.symmetric_difference(ga, gb, grid_size=_grid(grid_size))
 
 
-@_reg("st_translate")
-@pandas_udf(BinaryType())
-def _translate(s: pd.Series, xoff: pd.Series, yoff: pd.Series,
-               zoff: pd.Series) -> pd.Series:
-    ga = _decode(s)
-    out = algos.translate(ga, xoff.to_numpy(np.float64)[ga.coord_geom_index()]
-                          if len(ga.coords) else 0.0,
-                          yoff.to_numpy(np.float64)[ga.coord_geom_index()]
-                          if len(ga.coords) else 0.0,
-                          zoff=float(zoff.iloc[0]))
-    return _enc(out)
+@_udf("st_translate", BinaryType(), "g", "f", "f", "l")
+def _translate(ga, xoff, yoff, zoff):
+    ci = ga.coord_geom_index()
+    return algos.translate(ga, xoff[ci] if len(ga.coords) else 0.0,
+                           yoff[ci] if len(ga.coords) else 0.0,
+                           zoff=float(zoff))
 
 
-@_reg("st_scale")
-@pandas_udf(BinaryType())
-def _scale(s: pd.Series, xfact: pd.Series, yfact: pd.Series,
-           zfact: pd.Series) -> pd.Series:
-    ga = _decode(s)
-    return _enc(algos.scale(ga, float(xfact.iloc[0]), float(yfact.iloc[0]),
-                            zfact=float(zfact.iloc[0]),
-                            origin=(0.0, 0.0, 0.0)))
+@_udf("st_scale", BinaryType(), "g", "l", "l", "l")
+def _scale(ga, xfact, yfact, zfact):
+    return algos.scale(ga, float(xfact), float(yfact), zfact=float(zfact),
+                       origin=(0.0, 0.0, 0.0))
 
 
-@_reg("st_rotate")
-@pandas_udf(BinaryType())
-def _rotate(s: pd.Series, angle_deg: pd.Series) -> pd.Series:
-    ga = _decode(s)
-    return _enc(algos.rotate(ga, float(angle_deg.iloc[0]), origin=(0.0, 0.0)))
+@_udf("st_rotate", BinaryType(), "g", "l")
+def _rotate(ga, angle_deg):
+    return algos.rotate(ga, float(angle_deg), origin=(0.0, 0.0))
 
 
-@_reg("st_affine")
-@pandas_udf(BinaryType())
-def _affine(s: pd.Series, a: pd.Series, b: pd.Series, d: pd.Series,
-            e: pd.Series, xoff: pd.Series, yoff: pd.Series) -> pd.Series:
-    ga = _decode(s)
-    return _enc(algos.affine_transform(
-        ga, float(a.iloc[0]), float(b.iloc[0]), float(d.iloc[0]),
-        float(e.iloc[0]), float(xoff.iloc[0]), float(yoff.iloc[0])))
+@_udf("st_affine", BinaryType(), "g", "l", "l", "l", "l", "l", "l")
+def _affine(ga, a, b, d, e, xoff, yoff):
+    return algos.affine_transform(ga, *(float(v) for v in
+                                        (a, b, d, e, xoff, yoff)))
 
 
-@_reg("st_affine3d")
-@pandas_udf(BinaryType())
-def _affine3d(s: pd.Series, m: pd.Series) -> pd.Series:
+@_udf("st_affine3d", BinaryType(), "g", "l")
+def _affine3d(ga, m):
     """12-term 3-D affine; m is an array column [a b c d e f g h i
     xoff yoff zoff] (shapely matrix order, reference base.py:5970)."""
-    ga = _decode(s)
-    vals = [float(v) for v in m.iloc[0]]
-    return _enc(algos.affine_transform12(ga, *vals))
+    return algos.affine_transform12(ga, *(float(v) for v in m))
 
 
-@_reg("st_interpolate")
-@pandas_udf(BinaryType())
-def _interpolate(s: pd.Series, d: pd.Series,
-                 normalized: pd.Series) -> pd.Series:
-    return _enc(algos.interpolate(_decode(s), d.to_numpy(np.float64),
-                                  normalized=bool(normalized.iloc[0])))
+@_udf("st_interpolate", BinaryType(), "g", "f", "l")
+def _interpolate(ga, d, normalized):
+    return algos.interpolate(ga, d, normalized=bool(normalized))
 
 
-@_reg("st_lineinterpolatepoint")
-@pandas_udf(BinaryType())
-def _lineinterpolate_norm(s: pd.Series, frac: pd.Series) -> pd.Series:
-    return _enc(algos.interpolate(_decode(s), frac.to_numpy(np.float64),
-                                  normalized=True))
+@_udf("st_lineinterpolatepoint", BinaryType(), "g", "f")
+def _lineinterpolate_norm(ga, frac):
+    return algos.interpolate(ga, frac, normalized=True)
 
 
-@_reg("st_project")
-@pandas_udf(DoubleType())
-def _project(a: pd.Series, b: pd.Series,
-             normalized: pd.Series) -> pd.Series:
-    return pd.Series(algos.project(_decode(a), _decode(b),
-                                   normalized=bool(normalized.iloc[0])))
+@_udf("st_project", DoubleType(), "g", "g", "l")
+def _project(ga, gb, normalized):
+    return algos.project(ga, gb, normalized=bool(normalized))
 
 
 # ---------------------------------------------------------------------------
 # parts / coordinates
 # ---------------------------------------------------------------------------
 
-@_reg("st_dump")
-@pandas_udf(ArrayType(BinaryType()))
-def _dump(s: pd.Series) -> pd.Series:
+def _per_row(n, parent, items, missing) -> list:
+    """Children grouped by their parent row; missing rows are NULL."""
+    out = [[] for _ in range(n)]
+    for p, v in zip(parent, items):
+        out[p].append(v)
+    return [None if missing[i] else out[i] for i in range(n)]
+
+
+@_udf("st_dump", ArrayType(BinaryType()), "g")
+def _dump(ga):
     """Multi-part → array of single-part WKB; pair with posexplode for the
     reference's explode (geopandas/geoseries.py:1017)."""
-    ga = _decode(s)
     parts, parent, _ = algos.get_parts(ga)
-    blobs = wkb.encode(parts)
-    out = [[] for _ in range(len(ga))]
-    for k, p in enumerate(parent):
-        out[p].append(blobs[k])
-    miss = ga.is_missing()
-    return pd.Series([None if miss[i] else out[i] for i in range(len(ga))],
-                     dtype=object)
+    return _per_row(len(ga), parent, wkb.encode(parts), ga.is_missing())
 
 
 _COORD_SCHEMA = ArrayType(StructType(
     [StructField("x", DoubleType()), StructField("y", DoubleType())]))
 
 
-@_reg("st_dumpcoordinates")
-@pandas_udf(_COORD_SCHEMA)
-def _dumpcoords(s: pd.Series) -> pd.Series:
+@_udf("st_dumpcoordinates", _COORD_SCHEMA, "g")
+def _dumpcoords(ga):
     """get_coordinates analogue (reference: base.py:6242) — explode after."""
-    ga = _decode(s)
     coords, parent = algos.get_coordinates(ga)
-    out = [[] for _ in range(len(ga))]
-    for k in range(len(coords)):
-        out[parent[k]].append({"x": coords[k, 0], "y": coords[k, 1]})
-    miss = ga.is_missing()
-    return pd.Series([None if miss[i] else out[i] for i in range(len(ga))],
-                     dtype=object)
+    return _per_row(len(ga), parent,
+                    ({"x": x, "y": y} for x, y in coords.tolist()),
+                    ga.is_missing())
 
 
-@_reg("st_geometryn")
-@pandas_udf(BinaryType())
-def _geometryn(s: pd.Series, n: pd.Series) -> pd.Series:
-    ga = _decode(s)
+@_udf("st_geometryn", BinaryType(), "g", "i")
+def _geometryn(ga, want):
     parts, parent, ordinal = algos.get_parts(ga)
     blobs = wkb.encode(parts)
-    want = n.to_numpy(np.int64)
     out = [None] * len(ga)
     for k in range(len(parent)):
         if ordinal[k] == want[parent[k]]:
             out[parent[k]] = blobs[k]
-    return pd.Series(out, dtype=object)
+    return out
 
 
-@_reg("st_startpoint")
-@pandas_udf(BinaryType())
-def _startpoint(s: pd.Series) -> pd.Series:
-    return _enc(algos.interpolate(_decode(s), 0.0))
+@_udf("st_startpoint", BinaryType(), "g")
+def _startpoint(ga):
+    return algos.interpolate(ga, 0.0)
 
 
-@_reg("st_endpoint")
-@pandas_udf(BinaryType())
-def _endpoint(s: pd.Series) -> pd.Series:
-    return _enc(algos.interpolate(_decode(s), 1.0, normalized=True))
+@_udf("st_endpoint", BinaryType(), "g")
+def _endpoint(ga):
+    return algos.interpolate(ga, 1.0, normalized=True)
 
 
 # ---------------------------------------------------------------------------
 # grouped aggregates (dissolve/union_all building blocks, SURVEY §2.5)
 # ---------------------------------------------------------------------------
 
-@_reg("st_union_agg_grid")
-@pandas_udf(BinaryType())
-def _union_agg_grid(s: pd.Series, grid: pd.Series) -> bytes:
+@_udf("st_union_agg_grid", BinaryType(), "a", "l", agg=True)
+def _union_agg_grid(s, grid):
     """union_all with the grid_size robustness knob (base.py:2500,
     array.py:1002-1019): operands and result snapped to the grid."""
-    ga = wkb.decode(s.tolist())
-    g = float(grid.iloc[0]) if len(grid) else 0.0
-    return wkb.encode(algos.union_all(ga, grid_size=g if g > 0 else None))[0]
+    return algos.union_all(wkb.decode(s), grid_size=_grid(grid))
 
 
-@_reg("st_union_agg")
-@pandas_udf(BinaryType())
-def _union_agg(s: pd.Series) -> bytes:
+@_udf("st_union_agg", BinaryType(), "a", agg=True)
+def _union_agg(s):
     """Geometric union of a group (GROUPED_AGG). Point sets dedupe;
     disjoint polygons collect; overlapping polygons run the Martinez–Rueda
     merge tree (geom/clipping.py). For scale, prefer operators.dissolve
     which runs a two-phase partial union."""
-    ga = wkb.decode(s.tolist())
-    out = algos.union_all(ga)
-    return wkb.encode(out)[0]
+    return algos.union_all(wkb.decode(s))
 
 
-@_reg("st_union_agg_coverage")
-@pandas_udf(BinaryType())
-def _union_agg_coverage(s: pd.Series) -> bytes:
+@_udf("st_union_agg_coverage", BinaryType(), "a", agg=True)
+def _union_agg_coverage(s):
     """union_all(method="coverage") as a GROUPED_AGG: edge-cancellation
     fast path for edge-matched polygon groups (reference
     array.py:1002-1019; GEOS CoverageUnion). Detectable violations fall
     back to the full union; crossing overlaps that share no edge are
     undefined input, per the GEOS contract."""
-    ga = wkb.decode(s.tolist())
-    return wkb.encode(algos.union_all(ga, method="coverage"))[0]
+    return algos.union_all(wkb.decode(s), method="coverage")
 
 
-@_reg("st_intersection_all_agg")
-@pandas_udf(BinaryType())
-def _intersection_all_agg(s: pd.Series) -> bytes:
+@_udf("st_intersection_all_agg", BinaryType(), "a", agg=True)
+def _intersection_all_agg(s):
     """Reduction by intersection (GROUPED_AGG; reference base.py:2554).
     Associative — safe under Spark's partial aggregation."""
-    return wkb.encode(algos.intersection_all(wkb.decode(s.tolist())))[0]
+    return algos.intersection_all(wkb.decode(s))
 
 
 _SHAREDPATHS_T = StructType([
@@ -873,208 +725,130 @@ _SHAREDPATHS_T = StructType([
 ])
 
 
-@_reg("st_sharedpaths")
-@pandas_udf(_SHAREDPATHS_T)
-def _sharedpaths(a: pd.Series, b: pd.Series) -> pd.DataFrame:
+@_udf("st_sharedpaths", _SHAREDPATHS_T, "g", "g")
+def _sharedpaths(ga, gb):
     """Collinear shared portions of two lines (reference base.py:5152).
     GEOS wraps the two direction classes in a GEOMETRYCOLLECTION; we
     return a struct<same_direction, opposite_direction> of WKB instead
     (no collection type in the kernel — documented deviation)."""
-    same, opp = algos.shared_paths(_decode(a), _decode(b))
-    return pd.DataFrame({"same_direction": _enc(same),
-                         "opposite_direction": _enc(opp)})
+    return algos.shared_paths(ga, gb)
 
 
-@_reg("st_union_array")
-@pandas_udf(BinaryType())
-def _union_array(s: pd.Series) -> pd.Series:
+@_udf("st_union_array", BinaryType(), "p")
+def _union_array(s):
     """Union an array<binary> of WKB per row. The streaming-safe union
-    path: Structured Streaming cannot run GROUPED_AGG pandas UDFs, so
-    windowed aggregation collects natively (collect_list, partial-agg'd
-    and state-store-backed) and reduces here with one scalar UDF."""
-    out = []
-    for lst in s:
-        if lst is None or len(lst) == 0:
-            out.append(None)
-        else:
-            out.append(wkb.encode(algos.union_all(wkb.decode(list(lst))))[0])
-    return pd.Series(out, dtype=object)
+    path: Structured Streaming cannot run GROUPED_AGG UDFs, so windowed
+    aggregation collects natively (collect_list, partial-agg'd and
+    state-store-backed) and reduces here with one scalar UDF."""
+    return [wkb.encode(algos.union_all(wkb.decode(lst)))[0] if lst else None
+            for lst in s]
 
 
-@_reg("st_transform")
-@pandas_udf(BinaryType())
-def _transform(s: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Series:
+@_udf("st_transform", BinaryType(), "g", "l", "l")
+def _transform(ga, src, dst):
     """Reproject (reference to_crs, geopandas/array.py:1098-1187). One
     vectorized pass over the batch's flat coordinate buffer."""
-    return _enc(crsmod.transform(_decode(s), src.iloc[0], dst.iloc[0]))
+    return crsmod.transform(ga, src, dst)
 
 
-@_reg("st_makeline_array")
-@pandas_udf(BinaryType())
-def _makeline_array(s: pd.Series) -> pd.Series:
+@_udf("st_makeline_array", BinaryType(), "p")
+def _makeline_array(s):
     """array<binary> of WKB points (pre-ordered by the caller — e.g.
     sort_array over struct(ts, key, geom)) → one LINESTRING per row.
     The trajectory-assembly pattern: ordering and grouping stay native
     (collect_list is partial-aggregated and state-store-safe in
     streaming); only the final vertex stitch crosses into Python."""
-    from geopandas_spark.geom.array import GT_LINESTRING
-    out = []
+    b = GeometryBuilder()
     for lst in s:
-        if lst is None or len(lst) == 0:
-            out.append(None)
+        if not lst:
+            b.append_null()
             continue
-        ga = wkb.decode([bytes(v) for v in lst])
-        c = ga.coords
-        b = algos.GeometryBuilder()
+        c = wkb.decode(lst).coords
         if len(c) == 0:
             b.append_empty(GT_LINESTRING)
         elif len(c) == 1:
             b.append(GT_LINESTRING, [[np.repeat(c, 2, axis=0)]])
         else:
             b.append(GT_LINESTRING, [[c]])
-        out.append(wkb.encode(b.finish())[0])
-    return pd.Series(out, dtype=object)
+    return b.finish()
 
 
-@_reg("st_subdivide")
-@pandas_udf(ArrayType(BinaryType()))
-def _subdivide_udf(s: pd.Series, mv: pd.Series) -> pd.Series:
+@_udf("st_subdivide", ArrayType(BinaryType()), "g", "l")
+def _subdivide_udf(ga, mv):
     """PostGIS-style ST_Subdivide (engine-added): pieces with bounded
     vertex counts, as array<binary> for posexplode — the scale pattern
     for monster polygons (see algos.subdivide)."""
-    ga = _decode(s)
-    parts, parent = algos.subdivide(ga, int(mv.iloc[0]))
+    parts, parent = algos.subdivide(ga, int(mv))
     enc = wkb.encode(parts)
-    out = [None if b is None else [] for b in s]
-    for k, pi in enumerate(parent):
-        if enc[k] is not None and out[pi] is not None:
-            out[pi].append(enc[k])
-    return pd.Series(out, dtype=object)
+    keep = [k for k, b in enumerate(enc) if b is not None]
+    return _per_row(len(ga), [parent[k] for k in keep],
+                    [enc[k] for k in keep], ga.is_missing())
 
 
-@_reg("st_samplepoints")
-@pandas_udf(BinaryType())
-def _samplepoints(s: pd.Series, size: pd.Series, seed: pd.Series) -> pd.Series:
-    return _enc(algos.sample_points(_decode(s), size.to_numpy(np.int64),
-                                    int(seed.iloc[0])))
+@_udf("st_samplepoints", BinaryType(), "g", "i", "l")
+def _samplepoints(ga, size, seed):
+    return algos.sample_points(ga, size, int(seed))
 
 
-@_reg("st_samplepoints_cluster")
-@pandas_udf(BinaryType())
-def _samplepoints_cluster(s: pd.Series, size: pd.Series, seed: pd.Series,
-                          n_parents: pd.Series,
-                          radius: pd.Series) -> pd.Series:
-    npar = int(n_parents.iloc[0])
-    rad = float(radius.iloc[0])
-    return _enc(algos.sample_points(
-        _decode(s), size.to_numpy(np.int64), int(seed.iloc[0]),
-        method="cluster_poisson", n_parents=npar if npar > 0 else None,
-        cluster_radius=rad if rad > 0 else None))
+@_udf("st_samplepoints_cluster", BinaryType(), "g", "i", "l", "l", "l")
+def _samplepoints_cluster(ga, size, seed, n_parents, radius):
+    return algos.sample_points(
+        ga, size, int(seed), method="cluster_poisson",
+        n_parents=int(n_parents) if n_parents > 0 else None,
+        cluster_radius=float(radius) if radius > 0 else None)
 
 
-@_reg("st_polygonize_agg")
-@pandas_udf(BinaryType())
-def _polygonize_agg(s: pd.Series) -> bytes:
+@_udf("st_polygonize_agg", BinaryType(), "a", agg=True)
+def _polygonize_agg(s):
     """Faces enclosed by the group's linework, as one MULTIPOLYGON
     (GROUPED_AGG; reference base.py:6545). Whole-group semantics — lines
     must be grouped so related linework lands in one group (document scale
     limit, SURVEY §2.8); explode with st_dump."""
-    ga = wkb.decode(s.tolist())
-    faces = algos.polygonize(ga)
-    if len(faces) == 0:
-        return None
-    return wkb.encode(algos.collect(faces))[0]
+    faces = algos.polygonize(wkb.decode(s))
+    return algos.collect(faces) if len(faces) else None
 
 
-@_reg("st_polygonize_full_agg")
-@pandas_udf(ArrayType(BinaryType()))
-def _polygonize_full_agg(s: pd.Series) -> list:
+@_udf("st_polygonize_full_agg", ArrayType(BinaryType()), "a", agg=True)
+def _polygonize_full_agg(s):
     """polygonize(full=True) over the group's linework (reference
     base.py:6545): 4-element array of WKB collections — [polygons,
     cut edges (connected both ends, bounding nothing), dangles
     (free-ended after iterative pruning), invalid rings]. Elements are
     NULL when that class is empty. Input is always noded first
     (reference node=True default), so `invalid` is rarely non-empty.
-    (Array, not struct: Spark grouped-agg pandas UDFs cannot return
-    StructType.) Access with element_at(col, 1..4)."""
-    ga = wkb.decode(s.tolist())
-    polys, cuts, dangles, invalid = algos.polygonize_full(ga)
-
-    def enc(g):
-        return wkb.encode(algos.collect(g))[0] if len(g) else None
-    return [enc(polys), enc(cuts), enc(dangles), enc(invalid)]
+    Access with element_at(col, 1..4)."""
+    return [wkb.encode(algos.collect(g))[0] if len(g) else None
+            for g in algos.polygonize_full(wkb.decode(s))]
 
 
-@_reg("st_buildarea_agg")
-@pandas_udf(BinaryType())
-def _buildarea_agg(s: pd.Series) -> bytes:
+@_udf("st_buildarea_agg", BinaryType(), "a", agg=True)
+def _buildarea_agg(s):
     """Areal geometry from the group's linework (GROUPED_AGG; reference
     base.py:6484): enclosed faces nested by parity into shells + holes."""
-    ga = wkb.decode(s.tolist())
-    return wkb.encode(algos.build_area(ga))[0]
+    return algos.build_area(wkb.decode(s))
 
 
-@_reg("st_buildarea")
-@pandas_udf(BinaryType())
-def _buildarea(s: pd.Series) -> pd.Series:
+@_udf("st_buildarea", BinaryType(), "g")
+def _buildarea(ga):
     """Per-row build_area: each row's own linework assembled independently
     (scalar twin of st_buildarea_agg; reference base.py:6484)."""
-    from geopandas_spark.geom.array import GeometryBuilder
-    ga = _decode(s)
     b = GeometryBuilder()
     for i in range(len(ga)):
         if ga.types[i] == 0:
             b.append_null()
         else:
             b.append_from(algos.build_area(ga.take([i])), 0)
-    return _enc(b.finish())
+    return b.finish()
 
 
-@_reg("st_collect_agg")
-@pandas_udf(BinaryType())
-def _collect_agg(s: pd.Series) -> bytes:
-    ga = wkb.decode(s.tolist())
-    return wkb.encode(algos.collect(ga))[0]
+@_udf("st_collect_agg", BinaryType(), "a", agg=True)
+def _collect_agg(s):
+    return algos.collect(wkb.decode(s))
 
 
 # ---------------------------------------------------------------------------
 # Python column API (what `from geopandas_spark import st` exposes)
 # ---------------------------------------------------------------------------
-
-def _f64_bits(c: Column) -> Column:
-    """IEEE-754 bits of a double as bigint, in pure native expressions —
-    whole-stage-codegen'd, no Python eval node. floor(log2()) can be off
-    by one near powers of two (log2 = ln/ln2 in the JVM); one exact pow()
-    comparison corrects it, after which the mantissa arithmetic is exact:
-    a/2^e is an exact power-of-two division, (m-1) is Sterbenz-exact for
-    m in [1,2), and (m-1)*2^52 is an exact integer <= 2^52 (a carry into
-    the exponent field via plain addition stays bit-correct). Deviation:
-    -0.0 encodes as +0.0 (coordinate semantics treat them equal)."""
-    a = F.abs(c)
-    e0 = F.floor(F.log2(a))
-    p0 = F.pow(F.lit(2.0), e0.cast("double"))
-    e = (F.when(a >= p0 * 2.0, e0 + 1)
-          .when(a < p0, e0 - 1).otherwise(e0))
-    p = F.pow(F.lit(2.0), e.cast("double"))
-    mant = F.round((a / p - F.lit(1.0)) *
-                   F.lit(float(2 ** 52))).cast("bigint")
-    norm = (e.cast("bigint") + F.lit(1023)) * F.lit(2 ** 52) + mant
-    # denormals: bits = a * 2^1074 exactly, staged as two power-of-two
-    # factors (2^1074 itself overflows a double; each stage is exact)
-    sub = F.round((a * F.lit(2.0 ** 537)) *
-                  F.lit(2.0 ** 537)).cast("bigint")
-    mag = (F.when(F.isnan(c), F.lit(0x7FF8000000000000))
-            .when(a == F.lit(float("inf")), F.lit(0x7FF0000000000000))
-            .when(a < F.lit(2.0 ** -1022), sub)   # includes +-0 -> 0
-            .otherwise(norm))
-    return F.when(c < 0.0, mag + F.lit(-(2 ** 63))).otherwise(mag)
-
-
-def _f64_be(c: Column) -> Column:
-    """8 big-endian IEEE-754 bytes of a double (hex of the bits bigint is
-    already big-endian nibble order; negative bigints print all 16)."""
-    return F.unhex(F.lpad(F.hex(_f64_bits(c.cast("double"))), 16, "0"))
-
 
 # Expression-level peephole (r12, re-keyed r13): Columns produced by
 # st.point carry their coordinate expressions as an attribute on the
@@ -1092,15 +866,8 @@ _POINT_ARGS_ATTR = "_gps_point_args"
 
 
 def point(x, y) -> Column:
-    """WKB point constructor (Arrow-batched UDF — the measured default).
-
-    An all-expression JVM variant exists (``point_native``), but the
-    IEEE-754 bit extraction it needs (floor/log2/pow per coordinate; Spark
-    has no double->bits builtin, ANSI forbids bigint->binary cast, and
-    reflect() is Catalyst-nondeterministic) measured 3x SLOWER than this
-    Arrow-batched numpy encode at the 100x bench tier (1.25 s vs 0.40 s
-    per pass over 1.5M rows), and grid-join plans evaluate the constructor
-    several times (stats probe, sample, cell explode, refine)."""
+    """WKB point constructor (Arrow-batched UDF). A NULL or NaN coordinate
+    gives a NULL geometry."""
     xc, yc = _col(x), _col(y)
     out = _REGISTRY["st_point"](xc, yc)
     try:
@@ -1110,36 +877,10 @@ def point(x, y) -> Column:
     return out
 
 
-def point_native(x, y) -> Column:
-    """Pure-expression WKB point — big-endian ISO WKB (byte-order flag 0),
-    no Python eval node anywhere in the plan. Use when the plan must stay
-    JVM-only (SQL-only deployments, stateless streaming maps where a
-    Python worker round trip is unwanted); for throughput prefer
-    ``point``, which is ~3x faster per evaluation (see its docstring).
-    The decoder's vectorized bucket parse handles the big-endian batch
-    with one frombuffer, same as little-endian. NULL in either coordinate
-    propagates to a NULL geometry (concat null semantics)."""
-    return F.concat(F.lit(bytes.fromhex("0000000001")),
-                    _f64_be(_col(x)), _f64_be(_col(y)))
-
-
 def makebox(xmin, ymin, xmax, ymax) -> Column:
-    """WKB axis-aligned box constructor (Arrow-batched UDF — the measured
-    default; see ``point`` for why the all-expression variant lost)."""
+    """WKB axis-aligned box constructor (Arrow-batched UDF)."""
     return _REGISTRY["st_makebox"](_col(xmin), _col(ymin),
                                    _col(xmax), _col(ymax))
-
-
-def makebox_native(xmin, ymin, xmax, ymax) -> Column:
-    """Pure-expression WKB box: big-endian POLYGON, one CCW ring of 5
-    coords starting (xmin,ymin) — identical vertex order to
-    geom.array.boxes_from_bounds (shapely.box ccw=True). Same tradeoff
-    as ``point_native``."""
-    x0, y0 = _f64_be(_col(xmin)), _f64_be(_col(ymin))
-    x1, y1 = _f64_be(_col(xmax)), _f64_be(_col(ymax))
-    return F.concat(
-        F.lit(bytes.fromhex("00" + "00000003" + "00000001" + "00000005")),
-        x0, y0, x1, y0, x1, y1, x0, y1, x0, y0)
 
 
 # Identity-attached source expression for WKT-parse fusion, same
@@ -1390,10 +1131,10 @@ def distance(a, b) -> Column:
     pointwise workload (PostGIS: ST_Distance(ST_MakePoint(..), ..)).
 
     Degenerate input matches the Arrow kernel exactly: NaN coordinates
-    yield NULL on both paths (the kernel cannot return NaN through the
-    pandas→Arrow boundary — docs/geopandas-mapping.md — so the rewrite
-    wraps the sqrt in an isnan→NULL guard to keep st.distance
-    deterministic regardless of which path a plan takes)."""
+    yield NULL on both paths (the UDF boundary returns every NaN float
+    result as NULL — docs/geopandas-mapping.md — so the rewrite wraps
+    the sqrt in an isnan→NULL guard to keep st.distance deterministic
+    regardless of which path a plan takes)."""
     a, b = _col(a), _col(b)
     # NOTE: must read __dict__ directly — Column.__getattr__ turns any
     # unknown attribute into a field-access Column, so getattr() with a
@@ -1837,15 +1578,12 @@ def transform_coords(c, fn) -> Column:
     the batch's flat (N,2) float64 coordinate array and returns same-shape
     coordinates; geometry structure is preserved. The function is shipped in
     the task closure — it must be picklable."""
-    from geopandas_spark.geom.array import GeometryArray as _GA
 
-    @pandas_udf(BinaryType())
-    def _xform(s: pd.Series) -> pd.Series:
-        ga = _decode(s)
+    @_udf(None, BinaryType(), "g")
+    def _xform(ga):
         nc = np.asarray(fn(ga.coords.copy()), dtype=np.float64)
-        out = _GA(ga.types, ga.geom_offsets, ga.part_offsets,
-                  ga.ring_offsets, nc.reshape(-1, 2))
-        return _enc(out)
+        return GeometryArray(ga.types, ga.geom_offsets, ga.part_offsets,
+                             ga.ring_offsets, nc.reshape(-1, 2))
 
     return _xform(_col(c))
 
@@ -1855,19 +1593,17 @@ def apply(c, fn) -> Column:
     GeoSeries.apply, geoseries.py:806): ``fn(GeometryArray, i)`` returns
     (type, parts) appended via the builder, or None for null. Slow path —
     prefer the built-in st_* functions."""
-    from geopandas_spark.geom.array import GeometryBuilder as _GB
 
-    @pandas_udf(BinaryType())
-    def _apply(s: pd.Series) -> pd.Series:
-        ga = _decode(s)
-        b = _GB()
+    @_udf(None, BinaryType(), "g")
+    def _apply(ga):
+        b = GeometryBuilder()
         for i in range(len(ga)):
             res = fn(ga, i)
             if res is None:
                 b.append_null()
             else:
                 b.append(res[0], res[1])
-        return _enc(b.finish())
+        return b.finish()
 
     return _apply(_col(c))
 

@@ -1092,8 +1092,36 @@ def _trace_result(sorted_events, inside_fn):
         imb2 = np.nonzero(co != ci)[0]
         if not len(imb2):
             break
+        # the missed split can also sit at a BALANCED vertex: an
+        # unnoded near-collinear overlap leaves a chord between two
+        # unbalanced vertices whose interior passes through the first
+        # vertex of a balanced side chain (a vertex of a spike poking
+        # ~1e-3 out of the chord's line), and the leftmost-turn trace
+        # then takes the chord and drops the chain. So every vertex
+        # lying inside an edge incident to an unbalanced vertex is a
+        # split point too.
+        split_v = set(imb2.tolist())
+        allv = np.unique(np.concatenate([pe, qe]))
+        avx, avy = vx[allv], vy[allv]
+        amag = np.maximum(np.maximum(np.abs(avx), np.abs(avy)), 1.0)
+        for h in np.nonzero(np.isin(pe, imb2) | np.isin(qe, imb2))[0]:
+            ax_, ay_ = vx[pe[h]], vy[pe[h]]
+            ddx = vx[qe[h]] - ax_
+            ddy = vy[qe[h]] - ay_
+            L2 = ddx * ddx + ddy * ddy
+            if L2 == 0.0:
+                continue
+            w0 = avx - ax_
+            w1 = avy - ay_
+            tpar = (w0 * ddx + w1 * ddy) / L2
+            cxr = w0 - tpar * ddx
+            cyr = w1 - tpar * ddy
+            lnv = np.sqrt(L2)
+            on = ((cxr * cxr + cyr * cyr <= (1e-9 * amag) ** 2) &
+                  (tpar * lnv > 1e-9) & ((1.0 - tpar) * lnv > 1e-9))
+            split_v.update(allv[on].tolist())
         changed = False
-        for v in imb2:
+        for v in sorted(split_v):
             pxv, pyv = vx[v], vy[v]
             w0 = pxv - vx[pe]
             w1 = pyv - vy[pe]

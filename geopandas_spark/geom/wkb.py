@@ -13,13 +13,16 @@ Fast paths:
 - all-POINT batches decode via a single strided ``np.frombuffer`` pass —
   no per-row Python. Point-heavy workloads (the reference's own benchmark
   shapes, benchmarks/sjoin.py:9-35) never hit the generic parser.
-- all-POINT encode likewise builds one bytes buffer and slices it.
+- encode writes every row into one flat Arrow values buffer
+  (``encode_arrow``); uniform batches in one header-broadcast reshape.
 """
 
 from __future__ import annotations
 
 import struct
+
 import numpy as np
+import pyarrow as pa
 
 from geopandas_spark.geom.array import (
     GT_MISSING, GT_POINT, GT_LINESTRING, GT_POLYGON, GT_MULTIPOINT,
@@ -210,14 +213,10 @@ def decode(values) -> GeometryArray:
     entry skips both per-row conversions and materializes a Python list
     lazily, only for rows routed to the per-row fallback parser."""
     arr_in = None
-    try:
-        import pyarrow as _pa
-        if isinstance(values, _pa.ChunkedArray):
-            arr_in = values.combine_chunks()
-        elif isinstance(values, _pa.Array):
-            arr_in = values
-    except ImportError:
-        pass
+    if isinstance(values, pa.ChunkedArray):
+        arr_in = values.combine_chunks()
+    elif isinstance(values, pa.Array):
+        arr_in = values
     if arr_in is not None:
         vals = None
         n = len(arr_in)
@@ -238,7 +237,6 @@ def decode(values) -> GeometryArray:
     # data buffer + int offsets, so header bytes of every row are examined
     # with plain numpy indexing
     try:
-        import pyarrow as pa
         if arr_in is not None:
             arr = arr_in.cast(pa.large_binary())
         else:
@@ -506,15 +504,48 @@ def _encode_plain(buf, t, parts):
 
 
 def encode(ga: GeometryArray) -> list:
-    """Encode to a list of (bytes | None), little-endian ISO WKB 2-D.
+    """Encode to a list of (bytes | None): :func:`encode_arrow`'s rows,
+    sliced from its one values buffer (``to_pylist`` builds a scalar per
+    row, ~3x slower on points)."""
+    arr = encode_arrow(ga)
+    _, offsets, data = arr.buffers()
+    off = np.frombuffer(offsets, dtype=np.int64 if pa.types.is_large_binary(
+        arr.type) else np.int32, count=len(arr) + 1).tolist()
+    flat = data.to_pybytes() if data is not None else b""
+    out = [flat[a:b] for a, b in zip(off, off[1:])]
+    for i in np.flatnonzero(ga.is_missing()):
+        out[i] = None
+    return out
 
-    Vectorized for POINT / single-ring LINESTRING / single-ring POLYGON
-    rows (one numpy scatter into a single output buffer + per-row bytes
-    slicing); multi-part/holed/empty rows take the per-row writer."""
+
+def _binary_array(offsets: np.ndarray, data: np.ndarray,
+                  valid=None) -> pa.Array:
+    """Arrow binary array over one flat values buffer (no copy of
+    ``data``); ``large_binary`` only when the offsets overflow int32."""
+    n = len(offsets) - 1
+    large = int(offsets[-1]) > np.iinfo(np.int32).max
+    vbuf, nulls = None, 0
+    if valid is not None and not valid.all():
+        vbuf = pa.py_buffer(np.packbits(valid, bitorder="little"))
+        nulls = int(n - np.count_nonzero(valid))
+    return pa.Array.from_buffers(
+        pa.large_binary() if large else pa.binary(), n,
+        [vbuf, pa.py_buffer(offsets.astype(np.int64 if large else np.int32)),
+         pa.py_buffer(data)], null_count=nulls)
+
+
+def encode_arrow(ga: GeometryArray) -> pa.Array:
+    """Encode to an Arrow binary array of little-endian ISO WKB (2-D,
+    plus Z/M where present), NULL for missing rows.
+
+    Every row lands in one flat values buffer. POINT / single-ring
+    LINESTRING / single-ring POLYGON rows are written by one numpy
+    scatter; multi-part/holed/empty/3-D rows take the per-row writer and
+    are copied in."""
     n = len(ga)
     types = ga.types
     if n == 0:
-        return []
+        return _binary_array(np.zeros(1, np.int64), np.zeros(0, np.uint8))
     ppg = ga.parts_per_geom()
     rpg = ga.rings_per_geom()
     cpg = ga.coords_per_geom()
@@ -530,8 +561,8 @@ def encode(ga: GeometryArray) -> list:
         # row-ordered and contiguous, so the whole output is one 2-D
         # header-broadcast + reshape, ~3x faster than the general
         # scatter below (no dst index matrix, no fancy writes)
-        t0i = int(types[0]) if n else 0
-        nv0 = int(cpg[0]) if n else 0
+        t0i = int(types[0])
+        nv0 = int(cpg[0])
         if ((types == t0i).all() and (cpg == nv0).all()
                 and len(ga.coords) == n * nv0):
             hd = 5 if t0i == GT_POINT else 9 if t0i == GT_LINESTRING else 13
@@ -548,19 +579,23 @@ def encode(ga: GeometryArray) -> list:
                                              np.uint8)
             buf2[:, hd:] = np.ascontiguousarray(
                 ga.coords, dtype="<f8").view(np.uint8).reshape(n, 16 * nv0)
-            flat = buf2.tobytes()
-            return [flat[i * L:(i + 1) * L] for i in range(n)]
-    if fast.any():
-        rows = np.nonzero(fast)[0]
-        t = types[rows].astype(np.int64)
-        nv = cpg[rows]
-        hdrlen = np.where(t == GT_POINT, 5,
-                          np.where(t == GT_LINESTRING, 9, 13))
-        rowlen = hdrlen + 16 * nv
-        off = np.zeros(len(rows) + 1, dtype=np.int64)
-        np.cumsum(rowlen, out=off[1:])
-        buf = np.zeros(off[-1], dtype=np.uint8)
-        o = off[:-1]
+            return _binary_array(np.arange(n + 1, dtype=np.int64) * L,
+                                 buf2.reshape(-1))
+    slow = {int(i): _encode_row(ga, int(i), cpg, ppg, rpg, co)
+            for i in np.nonzero(~fast & (types != GT_MISSING))[0]}
+    rows = np.nonzero(fast)[0]
+    t = types[rows].astype(np.int64)
+    nv = cpg[rows]
+    hdrlen = np.where(t == GT_POINT, 5, np.where(t == GT_LINESTRING, 9, 13))
+    lens = np.zeros(n, dtype=np.int64)
+    lens[rows] = hdrlen + 16 * nv
+    for i, b in slow.items():
+        lens[i] = len(b)
+    off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    buf = np.zeros(off[-1], dtype=np.uint8)
+    if len(rows):
+        o = off[rows]
         buf[o] = 1
         buf[o + 1] = t.astype(np.uint8)
         ls_pg = t != GT_POINT
@@ -573,106 +608,97 @@ def encode(ga: GeometryArray) -> list:
         if pg.any():
             buf[o[pg] + 5] = 1
         # coords: scatter 16-byte pairs
-        reps = nv
-        crow = np.repeat(np.arange(len(rows)), reps)
-        within = np.arange(int(reps.sum())) - np.repeat(off_c := (np.cumsum(reps) - reps), reps)
+        crow = np.repeat(np.arange(len(rows)), nv)
+        within = np.arange(int(nv.sum())) - np.repeat(np.cumsum(nv) - nv, nv)
         src = co[rows][crow] + within
         dst = o[crow] + hdrlen[crow] + 16 * within
-        cb = np.ascontiguousarray(ga.coords[src], dtype="<f8")             .view(np.uint8).reshape(-1, 16)
+        cb = np.ascontiguousarray(ga.coords[src], dtype="<f8") \
+            .view(np.uint8).reshape(-1, 16)
         buf[dst[:, None] + np.arange(16, dtype=np.int64)[None, :]] = cb
-        flat = buf.tobytes()
-        out = [None] * n
-        offl = off.tolist()
-        for z, i in enumerate(rows.tolist()):
-            out[i] = flat[offl[z]:offl[z + 1]]
-        if fast.all():
-            return out
-        todo = np.nonzero(~fast)[0]
-    else:
-        out = [None] * n
-        todo = np.arange(n)
-    for i in todo:
-        t = int(types[i])
-        if t == GT_MISSING:
-            continue
-        zs = ga.dim_slice(ga.z, i) if ga.z is not None else None
-        ms = ga.dim_slice(ga.m, i) if ga.m is not None else None
-        iso = t + (_ISO_Z if zs is not None else 0) + \
-            (_ISO_M if ms is not None else 0)
-        if (t == GT_MULTIPOINT and zs is None and ms is None
-                and cpg[i] == ppg[i] == rpg[i] and cpg[i] > 0):
-            # vectorized writer for big 2-D multipoints (one point per
-            # part): the per-part loop below costs ~0.25 s per 100k parts
-            # — the union_all/collect point-dedupe hot path
-            npart = int(cpg[i])
-            k0 = int(co[i])
-            block = np.empty((npart, 21), dtype=np.uint8)
-            block[:, 0] = 1
-            block[:, 1] = GT_POINT
-            block[:, 2:5] = 0
-            block[:, 5:21] = np.ascontiguousarray(
-                ga.coords[k0:k0 + npart],
-                dtype="<f8").view(np.uint8).reshape(npart, 16)
-            out[i] = struct.pack("<BII", 1, GT_MULTIPOINT, npart) + \
-                block.tobytes()
-            continue
-        parts = ga.geom_slices(i)
-        if zs is not None or ms is not None:
-            # widen rings with the z / m columns (ISO WKB interleaved)
-            pos = 0
-            wparts = []
-            for p in parts:
-                wr = []
-                for ring in p:
-                    k = len(ring)
-                    cols = [ring]
-                    if zs is not None:
-                        cols.append(zs[pos:pos + k, None])
-                    if ms is not None:
-                        cols.append(ms[pos:pos + k, None])
-                    wr.append(np.hstack(cols))
-                    pos += k
-                wparts.append(wr)
-            parts = wparts
-        ndim = 2 + (zs is not None) + (ms is not None)
-        buf = [struct.pack("<BI", 1, iso)]
-        if t == GT_POINT:
-            if not parts:
-                buf.append(struct.pack("<" + "d" * ndim,
-                                       *([np.nan] * ndim)))
-            else:
-                buf.append(np.ascontiguousarray(parts[0][0], dtype="<f8").tobytes())
-        elif t == GT_LINESTRING:
-            _encode_ring(buf, parts[0][0] if parts else np.empty((0, 2)))
-        elif t == GT_POLYGON:
-            rings = parts[0] if parts else []
-            buf.append(struct.pack("<I", len(rings)))
-            for r in rings:
-                _encode_ring(buf, r)
-        elif t in (GT_MULTIPOINT, GT_MULTILINESTRING, GT_MULTIPOLYGON):
-            buf.append(struct.pack("<I", len(parts)))
-            sub_t = {GT_MULTIPOINT: GT_POINT, GT_MULTILINESTRING: GT_LINESTRING,
-                     GT_MULTIPOLYGON: GT_POLYGON}[t]
-            sub_iso = sub_t + (iso - t)
-            for p in parts:
-                buf.append(struct.pack("<BI", 1, sub_iso))
-                if sub_t == GT_POINT:
-                    buf.append(np.ascontiguousarray(p[0], dtype="<f8").tobytes())
-                elif sub_t == GT_LINESTRING:
-                    _encode_ring(buf, p[0])
-                else:
-                    buf.append(struct.pack("<I", len(p)))
-                    for r in p:
-                        _encode_ring(buf, r)
-        elif t == GT_GEOMETRYCOLLECTION:
-            children = ga.children_of(i)
-            buf.append(struct.pack("<I", len(children)))
-            for ct, cparts in children:
-                _encode_plain(buf, ct, cparts)
+    for i, b in slow.items():
+        buf[off[i]:off[i + 1]] = np.frombuffer(b, dtype=np.uint8)
+    return _binary_array(off, buf, types != GT_MISSING)
+
+
+def _encode_row(ga: GeometryArray, i: int, cpg, ppg, rpg, co) -> bytes:
+    """One row's WKB by the per-row writer (any type, Z/M, empties)."""
+    t = int(ga.types[i])
+    zs = ga.dim_slice(ga.z, i) if ga.z is not None else None
+    ms = ga.dim_slice(ga.m, i) if ga.m is not None else None
+    iso = t + (_ISO_Z if zs is not None else 0) + \
+        (_ISO_M if ms is not None else 0)
+    if (t == GT_MULTIPOINT and zs is None and ms is None
+            and cpg[i] == ppg[i] == rpg[i] and cpg[i] > 0):
+        # vectorized writer for big 2-D multipoints (one point per
+        # part): the per-part loop below costs ~0.25 s per 100k parts
+        # — the union_all/collect point-dedupe hot path
+        npart = int(cpg[i])
+        k0 = int(co[i])
+        block = np.empty((npart, 21), dtype=np.uint8)
+        block[:, 0] = 1
+        block[:, 1] = GT_POINT
+        block[:, 2:5] = 0
+        block[:, 5:21] = np.ascontiguousarray(
+            ga.coords[k0:k0 + npart],
+            dtype="<f8").view(np.uint8).reshape(npart, 16)
+        return struct.pack("<BII", 1, GT_MULTIPOINT, npart) + \
+            block.tobytes()
+    parts = ga.geom_slices(i)
+    if zs is not None or ms is not None:
+        # widen rings with the z / m columns (ISO WKB interleaved)
+        pos = 0
+        wparts = []
+        for p in parts:
+            wr = []
+            for ring in p:
+                k = len(ring)
+                cols = [ring]
+                if zs is not None:
+                    cols.append(zs[pos:pos + k, None])
+                if ms is not None:
+                    cols.append(ms[pos:pos + k, None])
+                wr.append(np.hstack(cols))
+                pos += k
+            wparts.append(wr)
+        parts = wparts
+    ndim = 2 + (zs is not None) + (ms is not None)
+    buf = [struct.pack("<BI", 1, iso)]
+    if t == GT_POINT:
+        if not parts:
+            buf.append(struct.pack("<" + "d" * ndim,
+                                   *([np.nan] * ndim)))
         else:
-            raise ValueError(f"cannot encode geometry type {t}")
-        out[i] = b"".join(buf)
-    return out
+            buf.append(np.ascontiguousarray(parts[0][0], dtype="<f8").tobytes())
+    elif t == GT_LINESTRING:
+        _encode_ring(buf, parts[0][0] if parts else np.empty((0, 2)))
+    elif t == GT_POLYGON:
+        rings = parts[0] if parts else []
+        buf.append(struct.pack("<I", len(rings)))
+        for r in rings:
+            _encode_ring(buf, r)
+    elif t in (GT_MULTIPOINT, GT_MULTILINESTRING, GT_MULTIPOLYGON):
+        buf.append(struct.pack("<I", len(parts)))
+        sub_t = {GT_MULTIPOINT: GT_POINT, GT_MULTILINESTRING: GT_LINESTRING,
+                 GT_MULTIPOLYGON: GT_POLYGON}[t]
+        sub_iso = sub_t + (iso - t)
+        for p in parts:
+            buf.append(struct.pack("<BI", 1, sub_iso))
+            if sub_t == GT_POINT:
+                buf.append(np.ascontiguousarray(p[0], dtype="<f8").tobytes())
+            elif sub_t == GT_LINESTRING:
+                _encode_ring(buf, p[0])
+            else:
+                buf.append(struct.pack("<I", len(p)))
+                for r in p:
+                    _encode_ring(buf, r)
+    elif t == GT_GEOMETRYCOLLECTION:
+        children = ga.children_of(i)
+        buf.append(struct.pack("<I", len(children)))
+        for ct, cparts in children:
+            _encode_plain(buf, ct, cparts)
+    else:
+        raise ValueError(f"cannot encode geometry type {t}")
+    return b"".join(buf)
 
 
 def encode_ewkb(ga: GeometryArray, srid: int) -> list:

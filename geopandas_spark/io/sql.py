@@ -21,12 +21,10 @@ from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType
 
+from geopandas_spark.functions.st import _udf
 from geopandas_spark.geom import wkb
 
 
@@ -68,10 +66,9 @@ def read_postgis(spark: SparkSession, url: str, query: str, *,
     return decode_geom(reader.load(), geom)
 
 
-@pandas_udf(BinaryType())
-def _to_ewkb_udf(s: pd.Series, srid: pd.Series) -> pd.Series:
-    ga = wkb.decode(s.tolist())
-    return pd.Series(wkb.encode_ewkb(ga, int(srid.iloc[0])), dtype=object)
+@_udf(None, BinaryType(), "g", "l")
+def _to_ewkb_udf(ga, srid):
+    return wkb.encode_ewkb(ga, int(srid))
 
 
 def to_ewkb(col, srid: int):

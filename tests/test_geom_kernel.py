@@ -600,6 +600,67 @@ class TestConstructive:
         assert abs(algos.length(u1)[0] - algos.length(u2)[0]) < 1e-9
         assert algos.count_geometries(u1)[0] == algos.count_geometries(u2)[0]
 
+    def test_union_keeps_spike_off_unnoded_collinear_edge(self):
+        """A vertex (19 15) pokes ~4e-3 out of an edge line that both
+        operands share up to float noise. The sweep leaves the
+        near-collinear overlap unnoded, and the trace used to take the
+        bare chord and drop the spike (area short by ~9e-6)."""
+        import numpy as np
+
+        import geopandas_spark.geom.clipping as mr
+
+        a = [np.array([
+            [6.764, 13.351], [6.764, 8.649], [11.236, 7.196],
+            [12.002903971868458, 7.528873426402055], [16.545, 5.245],
+            [20.0, 10.0], [19.8152810431211, 10.919823036060322],
+            [20.0, 11.0], [19.780003786104345, 11.095489000189305],
+            [18.09, 19.511], [13.184169495031835, 13.958400187231732],
+            [11.236, 14.804], [6.764, 13.351]])]
+        b = [np.array([
+            [6.764, 17.351], [6.764, 12.649], [11.545, 10.245],
+            [11.764, 10.384684104627766], [11.764, 7.649],
+            [16.236, 6.196], [20.0, 10.0],
+            [18.996365076605688, 14.997681547855137], [19.0, 15.0],
+            [18.995451995053482, 15.002228311542575], [18.09, 19.511],
+            [15.58342334595085, 16.67396414116473], [11.236, 18.804],
+            [6.764, 17.351]])]
+        for out in (mr.boolean_op(a, b, mr.UNION), mr.union_many([a, b])):
+            assert len(out) == 1 and len(out[0]) == 1
+            ring = out[0][0]
+            assert ((ring[:, 0] == 19.0) & (ring[:, 1] == 15.0)).any()
+            assert abs(mr._ring_signed_area(ring) - 135.0907715745811) < 1e-9
+
+    def test_union_tree_matches_union_many_on_star_stack(self):
+        """Five star polygons whose tips graze shared edge lines: the
+        pairwise merge tree used to lose a tip (147.965 against 147.991)."""
+        import numpy as np
+
+        import geopandas_spark.geom.clipping as mr
+
+        stars = [
+            [(20, 11), (11.236, 14.804), (6.764, 13.351), (6.764, 8.649),
+             (11.236, 7.196)],
+            [(14, 15), (12.163, 21.657), (6.764, 17.351), (6.764, 12.649),
+             (11.236, 11.196)],
+            [(19, 16), (11.236, 19.804), (6.764, 18.351), (6.764, 13.649),
+             (11.854, 10.294)],
+            [(20, 10), (18.09, 19.511), (11.764, 12.351), (11.764, 7.649),
+             (16.236, 6.196)],
+            [(20, 10), (18.09, 19.511), (11.764, 12.351), (11.764, 7.649),
+             (16.545, 5.245)]]
+        ga = ga_from_wkt(*["POLYGON ((" + ", ".join(
+            f"{x} {y}" for x, y in s + s[:1]) + "))" for s in stars])
+        u1 = algos.union_all(ga)
+        orig = mr.union_many
+        mr.union_many = lambda p: (_ for _ in ()).throw(ValueError())
+        try:
+            u2 = algos.union_all(ga)
+        finally:
+            mr.union_many = orig
+        assert abs(algos.area(u1)[0] - 147.991228152782) < 1e-9
+        assert abs(algos.area(u2)[0] - algos.area(u1)[0]) < 1e-9
+        assert abs(algos.length(u2)[0] - algos.length(u1)[0]) < 1e-9
+
     def test_union_many_holes_and_duplicates(self):
         ws = ["POLYGON ((0 0, 12 0, 12 12, 0 12, 0 0), "
               "(4 4, 8 4, 8 8, 4 8, 4 4))",          # donut
@@ -1018,6 +1079,18 @@ class TestRepairAndLinework:
         assert algos.is_valid(mv)[0]
         assert algos.area(mv)[0] == 2.0
         assert wkt.format_array(mv)[0].startswith("MULTIPOLYGON")
+        # vertex-pinched rings (a ring revisiting one of its own
+        # vertices): an inverted-notch hole and a figure-eight
+        for w, area in (
+                ("POLYGON ((0 0, 4 0, 4 4, 2 4, 3 2, 1 2, 2 4, 0 4, 0 0))",
+                 14.0),
+                ("POLYGON ((0 0, 2 0, 1 1, 2 2, 0 2, 1 1, 0 0))", 2.0)):
+            g = ga_from_wkt(w)
+            assert not algos.is_valid(g)[0]
+            for method in ("linework", "structure"):
+                mv = algos.make_valid(g, method=method)
+                assert algos.is_valid(mv)[0], (w, method)
+                assert algos.area(mv)[0] == area, (w, method)
 
     def test_make_valid_pinch_hole_on_pinch_point(self):
         # r10 ADVICE: a hole whose FIRST vertex is exactly the pinch

@@ -312,54 +312,6 @@ def test_line_merge_degree_rule_and_directed(spark):
     assert out[3][1].startswith("MULTILINESTRING")  # directed: no flip
 
 
-def test_native_constructors_bit_exact_and_jvm_only(spark):
-    """point_native / makebox_native: pure-expression big-endian ISO WKB,
-    bit-exact against struct.pack ground truth over adversarial doubles
-    (denormals, powers of two, huge/tiny, -0.0 -> +0.0 documented
-    deviation), value-identical to the Arrow-UDF default constructors
-    after decode, and whose plans contain no Python eval node."""
-    import struct
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from geopandas_spark.geom import wkb
-
-    vals = [0.0, -0.0, 1.0, 2.0, 0.5, 1e-308, 5e-324,
-            2.2250738585072014e-308, 1.7976931348623157e308, 123.456,
-            3.999999999999999, 2.0000000000000004, -180.0,
-            89.99999999999999, 2.0 ** 52 + 0.5, -(2.0 ** 53 - 1.0)]
-    rows = [(float(x), float(y)) for x in vals for y in vals[:4]] + \
-           [(None, 1.0), (1.0, None)]
-    df = spark.createDataFrame(rows, ["x", "y"])
-    out = df.select("x", "y", st.point_native("x", "y").alias("g"),
-                    st.point("x", "y").alias("gu")).collect()
-    for r in out:
-        if r.x is None or r.y is None:
-            assert r.g is None
-            continue
-        ex = 0.0 if r.x == 0.0 else r.x      # -0.0 -> +0.0 deviation
-        ey = 0.0 if r.y == 0.0 else r.y
-        exp = (bytes.fromhex("0000000001") + struct.pack(">d", ex) +
-               struct.pack(">d", ey))
-        assert bytes(r.g) == exp, (r.x, r.y, bytes(r.g).hex())
-        # value parity with the UDF constructor (bytes differ: LE vs BE)
-        ga = wkb.decode([bytes(r.g), bytes(r.gu)])
-        assert np.array_equal(ga.coords[0], ga.coords[1], equal_nan=True)
-    # makebox_native: decoded vertices identical to the UDF box
-    b = spark.createDataFrame([(1.5, -2.25, 7.75, 3.125)],
-                              ["x0", "y0", "x1", "y1"])
-    rb = b.select(st.makebox_native("x0", "y0", "x1", "y1").alias("g"),
-                  st.makebox("x0", "y0", "x1", "y1").alias("gu")).collect()[0]
-    ga = wkb.decode([bytes(rb.g), bytes(rb.gu)])
-    assert np.array_equal(
-        ga.coords[:len(ga.coords) // 2], ga.coords[len(ga.coords) // 2:])
-    # plan purity: no Python eval anywhere
-    plan = (df.select(st.point_native("x", "y").alias("g"))
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_polygonize_full_agg(spark):
     """polygonize(full=True) parity (reference base.py:6545): the
     4-way split into polygons / cut edges / dangles / invalid. Two
@@ -479,38 +431,33 @@ def test_length_from_text_fusion(spark):
 
 
 def test_decode_memo_identity_and_lifetime():
-    """r13: _decode/_decode_dedup memoize on Series OBJECT identity so
-    one ArrowEvalPython batch decodes each input column once across the
-    UDFs that share it. The memo must hit only for the SAME live Series
-    object, never across distinct (even equal-valued) Series, and dead
-    entries must be swept."""
-    import pandas as pd
+    """The decode memo keys on a column's buffers, not on its pa.Array
+    wrapper: every UDF of one ArrowEvalPython node gets a fresh wrapper
+    of the same batch column (``batch[0] is batch[0]`` is False), and
+    they must share one decode. An equal-valued array in other memory
+    must miss, and the memo never holds more than its bound."""
+    import pyarrow as pa
+
     from geopandas_spark.functions import st as stmod
     from geopandas_spark.geom import wkb as wkbmod
     from geopandas_spark.geom.array import points_from_xy
-    import numpy as np
 
-    raw = wkbmod.encode(points_from_xy(np.arange(5.0), np.arange(5.0)))
-    s1 = pd.Series(raw, dtype=object)
-    s2 = pd.Series(raw, dtype=object)          # equal values, new object
-    stmod._SERIES_MEMO.clear()
-    ga1 = stmod._decode_dedup(s1)
-    assert stmod._decode_dedup(s1) is ga1      # identity hit
-    assert stmod._decode(s1) is ga1            # shared across both paths
-    ga2 = stmod._decode(s2)
-    assert ga2 is not ga1                      # distinct object: no hit
-    # values identical either way
+    raw = wkbmod.encode_arrow(points_from_xy(np.arange(5.0), np.arange(5.0)))
+    batch = pa.record_batch([raw], names=["g"])
+    assert batch[0] is not batch[0]
+    stmod._DECODED.clear()
+    ga1 = stmod._decode(batch[0], dedup=True)
+    assert stmod._decode(batch[0], dedup=True) is ga1   # other wrapper: hit
+    assert stmod._decode(batch[0]) is ga1               # shared by both paths
+    copy = pa.array(raw.to_pylist(), pa.binary())       # equal values
+    ga2 = stmod._decode(copy)
+    assert ga2 is not ga1                               # other memory: miss
     assert wkbmod.encode(ga1) == wkbmod.encode(ga2)
-    n_before = len(stmod._SERIES_MEMO)
-    assert n_before >= 2
-    del s1, s2, ga1, ga2
-    # a store after death sweeps the dead entries
-    s3 = pd.Series(raw, dtype=object)
-    stmod._decode(s3)
-    alive = [k for k, (r, _) in stmod._SERIES_MEMO.items()
-             if r() is not None]
-    assert len(alive) == 1
-    stmod._SERIES_MEMO.clear()
+    assert stmod._decode(raw.slice(1)) is not ga1       # other offset: miss
+    for _ in range(3 * stmod._DECODED_MAX):
+        stmod._decode(pa.array(raw.to_pylist(), pa.binary()))
+        assert len(stmod._DECODED) <= stmod._DECODED_MAX
+    stmod._DECODED.clear()
 
 
 def test_predicates_share_one_decode(spark):
@@ -598,3 +545,49 @@ def test_worker_task_setup_skips_zip_rescans(spark):
         assert g["reads"] == 0, g
         assert ".zip" in g["linalg"], g
     assert zipimport.zipimporter in sys.path_hooks
+
+
+def test_null_nan_contract_at_the_udf_boundary(spark):
+    """NULL/NaN semantics of the st.* boundary: NaN float results are SQL
+    NULL; bounds of a NULL or EMPTY geometry are a struct of NULL fields
+    (the struct itself is not NULL); a NULL or NaN coordinate makes a
+    NULL point; predicates on a missing geometry are False; npoints of
+    NULL is 0; text and dump of NULL are NULL."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(0, None), (1, "POINT EMPTY"), (2, "POINT (1 2)"),
+         (3, "POINT Z (1 2 3)")], "id int, w string").select(
+        "id", st.geom_from_text("w").alias("g"))
+    box = st.makebox(F.lit(0.0), F.lit(0.0), F.lit(5.0), F.lit(5.0))
+    out = {r.id: r for r in df.select(
+        "id", st.x("g").alias("x"), st.z("g").alias("z"),
+        st.distance("g", box).alias("d"), st.bounds("g").alias("b"),
+        st.x_min("g").alias("x0"), st.y_min("g").alias("y0"),
+        st.x_max("g").alias("x1"), st.y_max("g").alias("y1"),
+        st.intersects(box, "g").alias("i"), st.contains(box, "g").alias("c"),
+        st.npoints("g").alias("n"), st.as_text("g").alias("t"),
+        st.dump("g").alias("p")).collect()}
+    null = out[0]
+    assert (null.x, null.z, null.d) == (None, None, None)
+    assert null.b is not None and tuple(null.b) == (None,) * 4
+    assert (null.x0, null.y0, null.x1, null.y1) == (None,) * 4
+    assert (null.i, null.c, null.n) == (False, False, 0)
+    assert (null.t, null.p) == (None, None)
+    empty = out[1]
+    assert (empty.x, empty.z) == (None, None)
+    assert empty.b is not None and tuple(empty.b) == (None,) * 4
+    assert (empty.x0, empty.y0, empty.x1, empty.y1) == (None,) * 4
+    assert (empty.i, empty.c, empty.n) == (False, False, 0)
+    flat = out[2]
+    assert (flat.x, flat.z, flat.d) == (1.0, None, 0.0)
+    assert tuple(flat.b) == (1.0, 2.0, 1.0, 2.0)
+    assert (flat.i, flat.c, flat.n) == (True, True, 1)
+    assert out[3].z == 3.0
+
+    pts = spark.createDataFrame(
+        [(0, 1.0, 2.0), (1, None, 2.0), (2, nan, 2.0), (3, 1.0, nan),
+         (4, 1.0, None)], "id int, x double, y double")
+    got = {r.id: r.g for r in pts.select(
+        "id", st.point("x", "y").alias("g")).collect()}
+    assert got[0] is not None
+    assert [got[i] for i in (1, 2, 3, 4)] == [None] * 4

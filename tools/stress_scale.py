@@ -12,7 +12,7 @@ constant immediately before it runs, resets cross-gate pressure first
 to RECOVER before every timed run (_recover / _bw_probe).
 
 ROOT CAUSE of the r10/r11 'in-session pressure mode' (VERDICT r12 #1,
-experiments in tools/pressure_probe.py / pressure_probe2.py): after
+r12 probe experiments): after
 any memory-heavy join stage, first-touch page-fault bandwidth in this
 guest collapses 20-30x (5.5 -> 0.15 GB/s canary) and recovers within
 seconds of idle. Plan choice is NOT involved (the instrumented probe
@@ -70,7 +70,7 @@ def _bw_probe():
     """First-touch memory-bandwidth canary: fault + stream a FRESH
     512 MB buffer, GB/s. This is the component the jvm-shuffle and
     small-Arrow calibrations cannot see (both run cache-resident):
-    r12 probe data (tools/pressure_probe2.py) shows this number
+    r12 probe data shows this number
     collapsing 20-30x (5.5 -> 0.15 GB/s) immediately after every
     memory-heavy join stage and recovering within seconds of idle —
     the 'in-session pressure mode' of the r10/r11 verdicts. Back-to-
