@@ -378,8 +378,7 @@ def q_sjoin_grid(spark, sf_dir):
     # this aggregate touches nothing from the left frame
     cust = _cust(spark, sf_dir).select("c_custkey", "geom")
     nat = _nat(spark, sf_dir).select("n_nationkey", "geom")
-    j = sjoin(cust, nat, predicate="intersects", strategy="grid",
-              grid_cells=16)
+    j = sjoin(cust, nat, predicate="intersects", strategy="grid")
     return (j.groupBy("n_nationkey").agg(F.count("*").alias("n"))
              .select(F.col("n_nationkey").alias("nationkey"), "n"))
 

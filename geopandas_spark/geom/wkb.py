@@ -249,12 +249,13 @@ def decode(values) -> GeometryArray:
                                 for v in vals), type=pa.large_binary(), size=n)
         offs = np.frombuffer(arr.buffers()[1], dtype=np.int64,
                              count=n + 1, offset=arr.offset * 8)
-        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)             if arr.buffers()[2] is not None else np.zeros(0, np.uint8)
+        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8) \
+            if arr.buffers()[2] is not None else np.zeros(0, np.uint8)
         nulls = np.zeros(n, dtype=bool)
         if arr.null_count:
-            nulls = np.array([v is None for v in arr.to_pylist()])                 if False else ~np.unpackbits(
-                    np.frombuffer(arr.buffers()[0], dtype=np.uint8),
-                    bitorder="little")[arr.offset:arr.offset + n].astype(bool)
+            nulls = ~np.unpackbits(
+                np.frombuffer(arr.buffers()[0], dtype=np.uint8),
+                bitorder="little")[arr.offset:arr.offset + n].astype(bool)
     except Exception:
         arr = offs = data = nulls = None
 
@@ -274,14 +275,16 @@ def decode(values) -> GeometryArray:
         hdr_ok = hdr_le | hdr_be
         L = lens[valid]
         good_pt = hdr_ok & (t == GT_POINT) & (L == 21)
-        good_ls = hdr_ok & (t == GT_LINESTRING) & (L >= 25) &             ((L - 9) % 16 == 0)
+        good_ls = hdr_ok & (t == GT_LINESTRING) & (L >= 25) & \
+            ((L - 9) % 16 == 0)
         ring1 = np.where(
             hdr_be,
             (data[s + 5] == 0) & (data[s + 6] == 0) &
             (data[s + 7] == 0) & (data[s + 8] == 1),
             (data[s + 5] == 1) & (data[s + 6] == 0) &
             (data[s + 7] == 0) & (data[s + 8] == 0))
-        good_pg = hdr_ok & (t == GT_POLYGON) & (L >= 29) &             ((L - 13) % 16 == 0) & ring1
+        good_pg = hdr_ok & (t == GT_POLYGON) & (L >= 29) & \
+            ((L - 13) % 16 == 0) & ring1
         tcode[valid[good_pt]] = GT_POINT
         tcode[valid[good_ls]] = GT_LINESTRING
         tcode[valid[good_pg]] = GT_POLYGON
@@ -408,7 +411,8 @@ def decode(values) -> GeometryArray:
                 sub = _decode_fallback([_vals()[i] for i in bad])
                 for z, i in enumerate(bad):
                     s, e = sub.coord_offsets_per_geom()[z:z + 2]
-                    coords[coord_start[i]:coord_start[i] + (e - s)] =                         sub.coords[s:e]
+                    coords[coord_start[i]:coord_start[i] + (e - s)] = \
+                        sub.coords[s:e]
                 rows = rows[ok]
                 raw = raw[ok]
                 k = len(rows)

@@ -34,8 +34,7 @@ def boxes(spark):
 
 @pytest.mark.parametrize("strategy", ["broadcast", "grid"])
 def test_sjoin_inner_counts(points, boxes, strategy):
-    out = sjoin(points, boxes, predicate="within", strategy=strategy,
-                grid_cells=8)
+    out = sjoin(points, boxes, predicate="within", strategy=strategy)
     counts = {r.bid: r.n for r in
               out.groupBy("bid").agg(F.count("*").alias("n")).collect()}
     # boxes span [10k, 10k+10]; within excludes boundaries, so points with
@@ -47,8 +46,7 @@ def test_sjoin_inner_counts(points, boxes, strategy):
 
 @pytest.mark.parametrize("strategy", ["broadcast", "grid"])
 def test_sjoin_intersects_boundary(points, boxes, strategy):
-    out = sjoin(points, boxes, predicate="intersects", strategy=strategy,
-                grid_cells=8)
+    out = sjoin(points, boxes, predicate="intersects", strategy=strategy)
     # boundary points x=10, x=20 match two boxes each
     assert out.count() == 30 + 2
 
@@ -665,6 +663,29 @@ def test_sjoin_on_attribute_null_never_matches(spark):
         assert got == want, (strat, got)
 
 
+def test_sjoin_array_key_matches_equi_join(spark):
+    """An array-typed on_attribute key: Arrow cannot compare list arrays
+    and Python cannot hash lists, so the broadcast path compares key
+    tuples per pair and keeps one location per right row. Both
+    strategies must still equal the DataFrame equi-join, duplicate right
+    rows included."""
+    box = st.makebox(F.lit(0.0), F.lit(0.0), F.lit(10.0), F.lit(10.0))
+    left = spark.createDataFrame(
+        [(0, [1, 2]), (1, [3]), (2, None), (3, [1])],
+        "lid int, k array<bigint>").select("lid", "k", box.alias("geom"))
+    right = spark.createDataFrame(
+        [(10, [1, 2]), (11, [1, 2]), (12, [3]), (13, None)],
+        "rid int, k array<bigint>").select("rid", "k", box.alias("geom"))
+    want = {(r.lid, r.rid) for r in
+            left.join(right.drop("geom"), on="k").collect()}
+    assert want == {(0, 10), (0, 11), (1, 12)}
+    for strat in ("broadcast", "grid"):
+        got = {(r.lid, r.rid) for r in sjoin(
+            left, right, predicate="intersects", strategy=strat,
+            on_attribute=["k"]).select("lid", "rid").collect()}
+        assert got == want, (strat, got)
+
+
 def test_sjoin_nearest_grid_with_monster_right(spark):
     """The nearest-grid path inherits the band routing through the
     shared dwithin candidate join — monster strips on the build side
@@ -759,7 +780,7 @@ def test_sjoin_strategies_agree_with_duplicate_geoms(spark):
     got = {}
     for strategy in ("broadcast", "grid"):
         out = sjoin(pts, boxes_df, predicate="intersects",
-                    strategy=strategy, grid_cells=8)
+                    strategy=strategy)
         got[strategy] = {(r.pid, r.bid) for r in
                          out.select("pid", "bid").collect()}
     assert got["broadcast"] == got["grid"]
@@ -1015,8 +1036,7 @@ def test_sjoin_full_outer(points, boxes, spark, strategy):
         .drop("x0")
     bxs = boxes.unionByName(lonely)
 
-    inner = sjoin(pts, bxs, predicate="within", strategy=strategy,
-                  grid_cells=8)
+    inner = sjoin(pts, bxs, predicate="within", strategy=strategy)
     in_pairs = {(r.pid, r.bid) for r in inner.collect()}
     matched_p = {p for p, _ in in_pairs}
     matched_b = {b for _, b in in_pairs}
@@ -1027,7 +1047,7 @@ def test_sjoin_full_outer(points, boxes, spark, strategy):
                if r.bid not in matched_b})
 
     full = sjoin(pts, bxs, predicate="within", how="full",
-                 strategy=strategy, grid_cells=8)
+                 strategy=strategy)
     got = {(r.pid, r.bid) for r in full.collect()}
     assert got == want, (strategy, sorted(got - want), sorted(want - got))
     # unmatched rows carry NULL geometry on the absent side
@@ -1137,13 +1157,13 @@ def test_sjoin_on_attribute_vectorized_eq_parity(spark):
 
 
 def test_sjoin_nearest_coincident_left_dedup_parity(spark):
-    """r13: the broadcast path probes one ring search per DISTINCT left
+    """The broadcast path probes one ring search per DISTINCT left
     location and fans pairs back out by the unique-inverse. Parity
     against a brute-force argmin reference on a coincident-heavy left
     (12 distinct locations x many duplicate rows — the dedup gate
-    fires), covering inner/left, max_distance, exclusive, and exact
-    ties; and against the same join on a unique-location left (gate
-    does not fire)."""
+    fires) and on a unique-location left (gate does not fire, every row
+    is its own location), each covering inner/left, max_distance,
+    exclusive, and exact ties."""
     import itertools
     import math
 
@@ -1165,7 +1185,7 @@ def test_sjoin_nearest_coincident_left_dedup_parity(spark):
     ldf = (spark.createDataFrame(lefts, ["pid", "x", "y"])
            .withColumn("geom", st.point("x", "y")).drop("x", "y"))
 
-    def brute(max_distance=None, exclusive=False, how="inner"):
+    def brute(lefts, max_distance=None, exclusive=False, how="inner"):
         exp = set()
         for pid, x, y in lefts:
             ds = []
@@ -1186,28 +1206,85 @@ def test_sjoin_nearest_coincident_left_dedup_parity(spark):
                     exp.add((pid, sid, d))
         return exp
 
-    for kw in ({}, {"max_distance": 3.0}, {"exclusive": True},
-               {"how": "left"}, {"max_distance": 3.0, "how": "left"}):
+    variants = ({}, {"max_distance": 3.0}, {"exclusive": True},
+                {"how": "left"}, {"max_distance": 3.0, "how": "left"})
+    for kw in variants:
         out = sjoin_nearest(ldf, rdf, distance_col="d", **kw)
         got = {(r.pid, r.sid, r.d) for r in out.collect()}
-        assert got == brute(**kw), f"mismatch for {kw}"
+        assert got == brute(lefts, **kw), f"mismatch for {kw}"
 
-    # unique-location left (gate off) stays correct too
-    uldf = (spark.createDataFrame(
-        [(k, 0.3 * k, 0.7 * k) for k in range(40)], ["pid", "x", "y"])
-        .withColumn("geom", st.point("x", "y")).drop("x", "y"))
-    out = sjoin_nearest(uldf, rdf, distance_col="d")
-    got = {(r.pid, r.sid, round(r.d, 12)) for r in out.collect()}
-    exp = set()
-    for k in range(40):
-        x, y = 0.3 * k, 0.7 * k
-        best = min(math.sqrt((x - rx) ** 2 + (y - ry) ** 2)
-                   for _, rx, ry in rights)
-        for sid, rx, ry in rights:
-            d = math.sqrt((x - rx) ** 2 + (y - ry) ** 2)
-            if d == best:
-                exp.add((k, sid, round(d, 12)))
-    assert got == exp
+    # unique-location left (gate off) through the same variants; (0, 0)
+    # sits on a right point, so exclusive skips a 0-distance match
+    ulefts = [(k, 0.3 * k, 0.7 * k) for k in range(40)]
+    uldf = (spark.createDataFrame(ulefts, ["pid", "x", "y"])
+            .withColumn("geom", st.point("x", "y")).drop("x", "y"))
+
+    def rounded(pairs):
+        return {(p, s, None if d is None else round(d, 12))
+                for p, s, d in pairs}
+
+    for kw in variants:
+        out = sjoin_nearest(uldf, rdf, distance_col="d", **kw)
+        got = rounded((r.pid, r.sid, r.d) for r in out.collect())
+        assert got == rounded(brute(ulefts, **kw)), f"unique: {kw}"
+
+
+def test_sjoin_nearest_broadcast_duplicated_polygons(spark):
+    """A right side of polygons, each repeated 5x under distinct ids: the
+    broadcast path probes each distinct geometry once and fans the tied
+    copies back out. It must give every copy of every nearest box, equal
+    to the grid strategy and to a brute-force all-ties reference, for an
+    inner join and for a left join whose max_distance leaves rows
+    unmatched."""
+    import math
+
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    boxes = []
+    for k in range(15):
+        x0, y0 = rng.uniform(0, 60, 2).round(1)
+        w, h = rng.uniform(1, 6, 2).round(1)
+        for c in range(5):
+            boxes.append((10 * k + c, float(x0), float(y0),
+                          float(x0 + w), float(y0 + h)))
+    pts = [(i, float(x), float(y))
+           for i, (x, y) in enumerate(rng.uniform(-10, 75, (120, 2)))]
+    rdf = (spark.createDataFrame(boxes, ["bid", "x0", "y0", "x1", "y1"])
+           .withColumn("geom", st.makebox("x0", "y0", "x1", "y1"))
+           .select("bid", "geom"))
+    ldf = (spark.createDataFrame(pts, ["pid", "x", "y"])
+           .withColumn("geom", st.point("x", "y")).select("pid", "geom"))
+
+    def brute(max_distance=None, how="inner"):
+        exp = set()
+        for pid, x, y in pts:
+            ds = [(math.hypot(max(x0 - x, 0.0, x - x1),
+                              max(y0 - y, 0.0, y - y1)), bid)
+                  for bid, x0, y0, x1, y1 in boxes]
+            ds = [(d, b) for d, b in ds
+                  if max_distance is None or d <= max_distance]
+            if not ds:
+                if how == "left":
+                    exp.add((pid, None, None))
+                continue
+            mind = min(d for d, _ in ds)
+            exp |= {(pid, b, round(d, 9)) for d, b in ds if d == mind}
+        return exp
+
+    for kw in ({"how": "inner"}, {"how": "left", "max_distance": 4.0}):
+        want = brute(**kw)
+        assert len({p for p, b, _ in want if b is not None}) > 20
+        for strategy in ("broadcast", "grid"):
+            out = sjoin_nearest(ldf, rdf, distance_col="d",
+                                strategy=strategy, **kw)
+            got = {(r.pid, r.bid, None if r.d is None else round(r.d, 9))
+                   for r in out.collect()}
+            assert got == want, (strategy, kw, sorted(got ^ want)[:6])
+    # every nearest box arrives with all five copies
+    assert all(n % 5 == 0 for n in np.unique(
+        [p for p, b, _ in brute() if b is not None],
+        return_counts=True)[1])
 
 
 @pytest.mark.parametrize("n, distinct, fires", [
