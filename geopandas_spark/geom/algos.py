@@ -1510,18 +1510,19 @@ def _vectorized_vertex_in_poly(vx, vy, v_tgt, s0, s1, s_tgt, cnt_v_full,
 
 
 def _vec_classify_points(vx, vy, v_tgt, s0, s1, s_tgt, cnt_v_full,
-                         cnt_s_full, sel, nrows):
+                         cnt_s_full, sel, nrows, budget=1 << 22):
     """Per-POINT classification of each selected row's probe points
     against the row's polygon (0 exterior / 1 boundary / 2 interior —
     global even-odd parity + on-segment boundary, identical formulas to
     _pairwise_point_in_poly). Returns int8[len(vx)]; points of
-    unselected rows keep 0."""
+    unselected rows keep 0. ``budget`` caps the (segment, point) entries
+    expanded per chunk (a row is never split across chunks)."""
     cls = np.zeros(len(vx), dtype=np.int8)
     off_s = np.concatenate([[0], np.cumsum(cnt_s_full)])[:-1]
     off_v = np.concatenate([[0], np.cumsum(cnt_v_full)])[:-1]
     cnt_s = np.where(sel, cnt_s_full, 0)
     cnt_v = np.where(sel, cnt_v_full, 0)
-    for lo, hi in _cross_chunks(cnt_s, cnt_v):
+    for lo, hi in _cross_chunks(cnt_s, cnt_v, budget):
         isg, iv, row = _expand_pairs(cnt_s, cnt_v, lo, hi, off_s, off_v)
         if len(row) == 0:
             continue

@@ -263,7 +263,7 @@ def dissolve(df: DataFrame, by, aggfunc=None, *, geom: str = "geom",
         [StructField(geom, BinaryType(), True)] +
         [_agg_out_field(in_fields[c], fn, name) for c, fn, name in aggs])
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ga = wkb.decode(pdf[geom].tolist())
         u = wkb.encode(algos.union_all(ga, method=method))[0]
         row = {k: [v] for k, v in zip(by, key)}
@@ -287,7 +287,7 @@ def dissolve(df: DataFrame, by, aggfunc=None, *, geom: str = "geom",
     # per-key merge of partial rows (phase 2 of the two-phase plan, and
     # the only Python stage of the dedupe plan): combiner semantics —
     # sum of sums, min of mins, count -> sum, mean -> psum/pcnt
-    def finish(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def finish(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ga = wkb.decode(pdf[geom].tolist())
         parts, parent, _ = algos.get_parts(ga)
         u = wkb.encode(algos.union_all(parts, method=method))[0]

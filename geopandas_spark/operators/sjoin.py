@@ -247,6 +247,23 @@ def _right_exceeds(df: DataFrame, threshold: int,
         return df.limit(threshold + 1).count() > threshold
 
 
+def _bounds_np(col: pa.ChunkedArray) -> np.ndarray:
+    """An Arrow bounds struct column (xmin, ymin, xmax, ymax) as an
+    (n, 4) float64 array, NaN where the struct or a field is NULL."""
+    return np.column_stack(
+        [f.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+         for f in col.combine_chunks().flatten()])
+
+
+def _extent(df: DataFrame, b) -> np.ndarray:
+    """[xmin, ymin, xmax, ymax] over the bounds struct column ``b`` of
+    ``df`` in one aggregate job; NaN when no row has bounds."""
+    agg = df.select(b.alias("b")).agg(F.struct(
+        F.min("b.xmin").alias("xmin"), F.min("b.ymin").alias("ymin"),
+        F.max("b.xmax").alias("xmax"), F.max("b.ymax").alias("ymax")))
+    return _bounds_np(agg.toArrow().column(0))[0]
+
+
 def sjoin(left: DataFrame, right: DataFrame, *, predicate: str = "intersects",
           how: str = "inner", geom_left: str = "geom", geom_right: str = "geom",
           distance: Optional[float] = None, on_attribute=None,
@@ -351,11 +368,23 @@ _BATCH_PREDICATES = {
 }
 
 
+# Point x polygon refine: right geometries whose (points x segments)
+# product is below _PIP_GROUP_CAP share one grouped expansion; larger
+# ones take one points_in_geom call each. Measured on regular n-gons
+# with 1-256 points each (4-core host), the expansion costs ~0.13 us per
+# entry and a call ~0.05 us per entry plus ~100 us, so they break even
+# between 1k and 4k entries. _PIP_CHUNK bounds the expansion's peak
+# memory (~140 B per entry); larger chunks were no faster on a
+# 1M-entry batch.
+_PIP_GROUP_CAP = 1 << 11
+_PIP_CHUNK = 1 << 16
+
+
 def _refine_pairs(lga, rga, li, rj, predicate, distance):
     """Batch refine of candidate pairs. Point-left × polygon-right pairs
-    (the common broadcast shape) run the vectorized point-in-polygon
-    kernel per right geometry with NO pair materialization; everything
-    else goes through the pairwise batch kernels (which carry their own
+    (the common broadcast shape) are classified point-in-polygon with NO
+    pair materialization, grouped by right geometry; everything else
+    goes through the pairwise batch kernels (which carry their own
     vectorized fast paths)."""
     ok = np.zeros(len(li), dtype=bool)
     if len(li) == 0:
@@ -372,18 +401,21 @@ def _refine_pairs(lga, rga, li, rj, predicate, distance):
         ok[fast] = False
     elif fast.any():
         fi = np.nonzero(fast)[0]
-        order = np.argsort(rj[fi], kind="stable")
-        fi = fi[order]
+        fi = fi[np.argsort(rj[fi], kind="stable")]
         px = lga.coords[off[li[fi]], 0]
         py = lga.coords[off[li[fi]], 1]
-        interior_only = predicate == "within"
-        start = 0
-        for end in np.flatnonzero(
-                np.diff(rj[fi], append=-1) != 0) + 1:
-            j = int(rj[fi[start]])
-            cls = algos.points_in_geom(px[start:end], py[start:end], rga, j)
-            ok[fi[start:end]] = cls == 2 if interior_only else cls > 0
-            start = end
+        uj, start, cnt_v = np.unique(rj[fi], return_index=True,
+                                     return_counts=True)
+        s0, s1, s_tgt = algos._row_segments(rga, uj)
+        cnt_s = np.bincount(s_tgt, minlength=len(uj))
+        small = cnt_v * cnt_s < _PIP_GROUP_CAP
+        cls = algos._vec_classify_points(px, py, None, s0, s1, s_tgt, cnt_v,
+                                         cnt_s, small, len(uj),
+                                         budget=_PIP_CHUNK)
+        for g in np.flatnonzero(~small):
+            k = slice(start[g], start[g] + cnt_v[g])
+            cls[k] = algos.points_in_geom(px[k], py[k], rga, int(uj[g]))
+        ok[fi] = cls == 2 if predicate == "within" else cls > 0
     slow = ~fast
     if predicate == "contains":
         slow = np.ones(len(li), dtype=bool) & ~(lpts & rpoly)
@@ -421,43 +453,64 @@ def _ensure_parallelism(df, min_rows: int = 100_000):
     return df.repartition(cores) if n < max(2, cores // 2) else df
 
 
+def _locations(tbl, cols):
+    """``(first, loc)`` for the rows of Arrow table ``tbl``: the first
+    row of each distinct combination of the ``cols`` values, and each
+    row's location id. Each column is dictionary-encoded (NULL is one
+    value); columns Arrow cannot encode (list, map, struct) give every
+    row its own location."""
+    n = tbl.num_rows
+    code = np.zeros(n, dtype=np.int64)
+    try:
+        for c in cols:
+            enc = pc.dictionary_encode(tbl.column(c).combine_chunks())
+            idx = pc.fill_null(enc.indices, -1).to_numpy().astype(np.int64)
+            code = code * (len(enc.dictionary) + 1) + idx + 1
+            code = np.unique(code, return_inverse=True)[1].reshape(-1)
+    except pa.ArrowNotImplementedError:
+        return np.arange(n), np.arange(n)
+    _, first, loc = np.unique(code, return_index=True, return_inverse=True)
+    return first, loc.reshape(-1)
+
+
 def _broadcast_probe(left, right, geom_left, geom_right, how, make_pairs, *,
                      attrs=(), dist_col=None, lsuffix="left",
                      rsuffix="right"):
     """The broadcast strategy of ``sjoin`` and ``sjoin_nearest``.
 
-    The right side is collected once and deduped on (WKB bytes, ``attrs``
-    values): identical bytes are an identical geometry, so each distinct
-    location is probed once and its duplicate rows fan back out in the
-    broadcast equi-join on the location id that ends the plan (shared
-    admin boundaries and repeated dimension rows refine once).
-    ``make_pairs(rga, urows)`` runs on the driver with the decoded
-    locations and the first right row of each, and returns the per-batch
-    kernel ``pairs(batch, lga) -> (li, loc, dist)``: the matched left row
-    and location ids of one left Arrow batch, and their distances when
+    The right side is collected once as an Arrow table and deduped on
+    (WKB bytes, ``attrs`` values): identical bytes are an identical
+    geometry, so each distinct location is probed once and its duplicate
+    rows fan back out in the broadcast equi-join on the location id that
+    ends the plan (shared admin boundaries and repeated dimension rows
+    refine once). ``make_pairs(rga, rkeys)`` runs on the driver with the
+    decoded locations and, per ``attrs`` column, an Arrow array of the
+    location values, and returns the per-batch kernel
+    ``pairs(batch, lga) -> (li, loc, dist)``: the matched left row and
+    location ids of one left Arrow batch, and their distances when
     ``dist_col`` is set (else None). Left rows without a match are emitted
     with location -1 (NULL distance) when ``how`` keeps them.
 
     The probe is a ``mapInArrow``: the left columns ride through as
     untouched Arrow buffers (``take``), which keeps NaN attribute values
-    bit-exact where a pandas round trip would turn them into NULLs."""
+    bit-exact where a pandas round trip would turn them into NULLs.
+
+    The collected table goes back into the plan as the same Arrow table
+    plus a location-id column, which plans as a ``LocalTableScan``. Built
+    from Python rows instead, it would plan as a Python RDD
+    (``Scan ExistingRDD``): every execution of the join would start
+    Python tasks only to re-read rows the driver already holds, and
+    every value would round-trip through a Python object."""
     spark = left.sparkSession
     left = _ensure_parallelism(left)
-    rows = right.collect()
+    tbl = right.toArrow()
     gpos = right.columns.index(geom_right)
     apos = [right.columns.index(a) for a in attrs]
-    loc_of, urows, loc = {}, [], []
-    try:
-        for r in rows:
-            g = loc_of.setdefault((r[gpos], *[r[p] for p in apos]),
-                                  len(urows))
-            if g == len(urows):
-                urows.append(r)
-            loc.append(g)
-    except TypeError:
-        # unhashable key values (array-typed attrs): one location per row
-        urows, loc = rows, list(range(len(rows)))
-    pairs = make_pairs(wkb.decode([r[gpos] for r in urows]), urows)
+    first, loc = _locations(tbl, [gpos, *apos])
+    ti = pa.array(first, type=pa.int64())
+    pairs = make_pairs(wkb.decode(tbl.column(gpos).take(ti)),
+                       [tbl.column(p).take(ti).combine_chunks()
+                        for p in apos])
 
     ridx = "__sjoin_ridx__"
     ridx_field = StructField(ridx, LongType(), True)
@@ -490,7 +543,7 @@ def _broadcast_probe(left, right, geom_left, geom_right, how, make_pairs, *,
 
     matched = left.mapInArrow(run, schema=out_schema)
     right_i = spark.createDataFrame(
-        [tuple(r) + (g,) for r, g in zip(rows, loc)],
+        tbl.append_column(ridx, pa.array(loc, type=pa.int64())),
         StructType(right.schema.fields + [ridx_field]))
     lefts, rights = _with_suffixes(matched, right_i, lsuffix, rsuffix,
                                    skip=(ridx, dist_col, *attrs))
@@ -498,26 +551,27 @@ def _broadcast_probe(left, right, geom_left, geom_right, how, make_pairs, *,
     return res.drop(ridx)
 
 
-def _attrs_equal(b, on_attribute, rarrs, rkeys, li, rj):
+def _attrs_equal(b, on_attribute, rarrs, li, rj):
     """SQL ``=`` on every ``on_attribute`` column of each candidate pair
-    (left batch row ``li``, right location ``rj``), the oracle equi-join's
-    semantics: NULL on either side never matches, NaN never equals NaN,
-    -0.0 equals 0.0. Arrow ``take`` + ``equal`` per key column; key types
-    Arrow cannot compare (``rarrs`` None, or an Arrow error) use a per-pair
-    compare of the ``rkeys`` tuples, None-gated the same way."""
-    if rarrs is not None:
-        try:
-            ti = pa.array(li, type=pa.int64())
-            tj = pa.array(rj, type=pa.int64())
-            keep = np.ones(len(li), dtype=bool)
-            for c, rv in zip(on_attribute, rarrs):
-                eq = pc.fill_null(
-                    pc.equal(b.column(c).take(ti), rv.take(tj)), False)
-                keep &= eq.to_numpy(zero_copy_only=False)
-            return keep
-        except pa.ArrowException:
-            pass
+    (left batch row ``li``, right location ``rj``, whose values are the
+    Arrow arrays ``rarrs``), the oracle equi-join's semantics: NULL on
+    either side never matches, NaN never equals NaN, -0.0 equals 0.0.
+    Arrow ``take`` + ``equal`` per key column; key types Arrow cannot
+    compare (an Arrow error) use a per-pair compare of the key tuples,
+    None-gated the same way."""
+    try:
+        ti = pa.array(li, type=pa.int64())
+        tj = pa.array(rj, type=pa.int64())
+        keep = np.ones(len(li), dtype=bool)
+        for c, rv in zip(on_attribute, rarrs):
+            eq = pc.fill_null(
+                pc.equal(b.column(c).take(ti), rv.take(tj)), False)
+            keep &= eq.to_numpy(zero_copy_only=False)
+        return keep
+    except pa.ArrowException:
+        pass
     lkeys = list(zip(*[b.column(c).to_pylist() for c in on_attribute]))
+    rkeys = list(zip(*[rv.to_pylist() for rv in rarrs]))
     return np.fromiter((lkeys[i] == rkeys[j] and None not in lkeys[i]
                         for i, j in zip(li, rj)), dtype=bool, count=len(li))
 
@@ -526,15 +580,9 @@ def _sjoin_broadcast(left, right, predicate, how, geom_left, geom_right,
                      distance, on_attribute, lsuffix, rsuffix):
     pad = float(distance or 0.0)
 
-    def make_pairs(rga, urows):
+    def make_pairs(rga, rkeys):
         rbounds = algos.bounds(rga)
         index = _bcast_cell_index(rbounds, pad)
-        rkeys = [tuple(r[a] for a in on_attribute) for r in urows]
-        try:
-            rarrs = [pa.array(list(v)) for v in zip(*rkeys)] \
-                if on_attribute and rkeys else None
-        except (pa.ArrowException, TypeError):
-            rarrs = None
 
         def pairs(b, lga):
             if index is None:
@@ -542,7 +590,7 @@ def _sjoin_broadcast(left, right, predicate, how, geom_left, geom_right,
             li, rj = _bcast_candidates(algos.bounds(lga), rbounds, index,
                                        pad)
             if on_attribute and len(li):
-                keep = _attrs_equal(b, on_attribute, rarrs, rkeys, li, rj)
+                keep = _attrs_equal(b, on_attribute, rkeys, li, rj)
                 li, rj = li[keep], rj[keep]
             if len(li):
                 ok = _refine_pairs(lga, rga, li, rj, predicate, distance)
@@ -872,25 +920,22 @@ def _sjoin_grid(left, right, predicate, how, geom_left, geom_right, distance,
                     .select(F.lit(0).alias("__s__"),
                             st.bounds(gr).alias("__b__"),
                             F.xxhash64(*hcols).alias("__h__")))
-                .collect())
-
-        def _bb(rows):
-            return np.array([[r["__b__"][k] for k in range(4)]
-                             for r in rows], dtype=np.float64)
-
-        lrows = [r for r in samp if r["__s__"] == 1
-                 and r["__b__"] is not None and r["__b__"][0] is not None]
-        rrows = [r for r in samp if r["__s__"] == 0
-                 and r["__b__"] is not None and r["__b__"][0] is not None]
-        sl, sr = _bb(lrows), _bb(rrows)
+                .toArrow())
+        side = samp.column("__s__").to_numpy()
+        sb = _bounds_np(samp.column("__b__"))
+        has_b = ~np.isnan(sb[:, 0])
+        sl = sb[has_b & (side == 1)]
+        rmask = has_b & (side == 0)
+        sr = sb[rmask]
+        rh = pc.fill_null(samp.column("__h__"), 0).to_numpy()[rmask]
         # duplicate-heavy right geometries (repeated dim rows, shared
         # admin boundaries): dedupe BEFORE cell explosion so every
         # (cell, geometry) candidate is refined once, then fan matches
         # back out with a native equi-join on the WKB bytes.
-        if len(rrows):
-            d_n = len({r["__h__"] for r in rrows})
-            nd_right = (d_n if fr >= 1.0
-                        else _invert_sample_distinct(len(rrows), d_n, nr))
+        if len(sr):
+            _, hfirst = np.unique(rh, return_index=True)
+            nd_right = (len(hfirst) if fr >= 1.0 else
+                        _invert_sample_distinct(len(sr), len(hfirst), nr))
             dedup_right = bool(nd_right and nr >= 4 * nd_right)
         if dedup_right:
             rb = (rights.select(gr, *on_attribute).distinct()
@@ -900,12 +945,7 @@ def _sjoin_grid(left, right, predicate, how, geom_left, geom_right, distance,
             # by the duplication factor (ADVICE r5); dedupe the sampled
             # bboxes by hash to match
             nr = max(int(nd_right), 1)
-            seen, uniq = set(), []
-            for r in rrows:
-                if r["__h__"] not in seen:
-                    seen.add(r["__h__"])
-                    uniq.append(r)
-            sr = _bb(uniq)
+            sr = sr[np.sort(hfirst)]
         if len(sl) and len(sr):
             x0 = float(min(sl[:, 0].min(), sr[:, 0].min()))
             y0 = float(min(sl[:, 1].min(), sr[:, 1].min()))
@@ -934,15 +974,12 @@ def _sjoin_grid(left, right, predicate, how, geom_left, geom_right, distance,
         # hardcoded unit square, whose 1/64..1/4096-of-a-UNIT cells made
         # real bboxes explode F.sequence into millions of cells per row
         # (r10 ADVICE).
-        ext = (lb.select("__b__").unionByName(rb.select("__b__"))
-               .agg(F.min("__b__.xmin").alias("a"),
-                    F.min("__b__.ymin").alias("b"),
-                    F.max("__b__.xmax").alias("c"),
-                    F.max("__b__.ymax").alias("d")).collect()[0])
-        if ext["a"] is not None:
-            x0, y0 = float(ext["a"]), float(ext["b"])
-            X = max(float(ext["c"]) - x0, 0.0) or 1.0
-            Y = max(float(ext["d"]) - y0, 0.0) or 1.0
+        ext = _extent(lb.select("__b__").unionByName(rb.select("__b__")),
+                      F.col("__b__"))
+        if not np.isnan(ext[0]):
+            x0, y0 = float(ext[0]), float(ext[1])
+            X = max(float(ext[2]) - x0, 0.0) or 1.0
+            Y = max(float(ext[3]) - y0, 0.0) or 1.0
     if w is None:
         w, hgt = _pick_cell_size(X, Y, nl, nr,
                                  wlx + pad, wly + pad, wrx, wry)
@@ -1121,12 +1158,14 @@ def _sjoin_grid(left, right, predicate, how, geom_left, geom_right, distance,
         key_cols = (["__band__", "__cx__", "__cy__"] if monster_active
                     else ["__cx__", "__cy__"])
         if salt_rows:
-            spark = left.sparkSession
-            rows = (salt_rows if monster_active
-                    else [r[1:] for r in salt_rows])
-            sdf = F.broadcast(spark.createDataFrame(
-                rows, ("__band__ int, " if monster_active else "")
-                + "__cx__ bigint, __cy__ bigint, __k__ int"))
+            # an Arrow table plans as a LocalTableScan (Python rows would
+            # plan a Python RDD, re-read by Python tasks on every run)
+            band, cx, cy, k = np.array(salt_rows, dtype=np.int64).T
+            salts = pa.table({"__band__": pa.array(band, pa.int32()),
+                              "__cx__": cx, "__cy__": cy,
+                              "__k__": pa.array(k, pa.int32())})
+            sdf = F.broadcast(left.sparkSession.createDataFrame(
+                salts.select([*key_cols, "__k__"])))
             lc = lc.join(sdf, on=key_cols, how="left")
             rc = rc.join(sdf, on=key_cols, how="left")
         else:
@@ -1318,7 +1357,7 @@ def sjoin_nearest(left: DataFrame, right: DataFrame, *,
         return _sjoin_nearest_grid(left, right, geom_left, geom_right, how,
                                    max_distance, distance_col, exclusive)
 
-    def make_pairs(rga, _urows):
+    def make_pairs(rga, _rkeys):
         rbounds = algos.bounds(rga)
         grid = (_point_grid_build(rga.coords) if len(rga) and
                 (rga.types == 1).all() and rga.n_coords == len(rga)
@@ -1477,23 +1516,16 @@ def _sjoin_nearest_grid_expanding(left, right, geom_left, geom_right, how,
     returning — no storage leak outlives the call."""
     import math
 
-    from geopandas_spark.functions import st
-
     dcol = distance_col or "__xnn_dist__"
 
-    def _tb(df, g):
-        return df.select(st.bounds(g).alias("b")).agg(
-            F.min("b.xmin").alias("x0"), F.min("b.ymin").alias("y0"),
-            F.max("b.xmax").alias("x1"), F.max("b.ymax").alias("y1"),
-        ).collect()[0]
-
-    lb, rb = _tb(left, geom_left), _tb(right, geom_right)
-    if rb["x0"] is None or lb["x0"] is None:
+    lb = _extent(left, st.bounds(geom_left))
+    rb = _extent(right, st.bounds(geom_right))
+    if np.isnan(rb[0]) or np.isnan(lb[0]):
         # one side empty/all-null: the bounded path handles the how= cases
         return _sjoin_nearest_grid(left, right, geom_left, geom_right, how,
                                    1.0, distance_col, exclusive)
-    diag = math.hypot(max(lb["x1"], rb["x1"]) - min(lb["x0"], rb["x0"]),
-                      max(lb["y1"], rb["y1"]) - min(lb["y0"], rb["y0"]))
+    diag = math.hypot(max(lb[2], rb[2]) - min(lb[0], rb[0]),
+                      max(lb[3], rb[3]) - min(lb[1], rb[1]))
     if diag <= 0:
         diag = 1.0
     cap = diag * 1.001            # >= any nearest distance (+ float slack)
@@ -1513,17 +1545,16 @@ def _sjoin_nearest_grid_expanding(left, right, geom_left, geom_right, how,
         fr = min(1.0, 20000.0 / max(n_right, 1))
         n_left = left.count()
         fl = min(1.0, 4000.0 / max(n_left, 1))
-        rs = (right.sample(fr, seed=11)
-              .select(st.bounds(geom_right).alias("b")).collect())
-        ls = (left.sample(fl, seed=13)
-              .select(st.bounds(geom_left).alias("b")).collect())
+        rs = _bounds_np(right.sample(fr, seed=11)
+                        .select(st.bounds(geom_right).alias("b"))
+                        .toArrow().column(0))
+        ls = _bounds_np(left.sample(fl, seed=13)
+                        .select(st.bounds(geom_left).alias("b"))
+                        .toArrow().column(0))
         if len(rs) >= 4 and len(ls) >= 4:
-            rc = np.array([[(b["b"]["xmin"] + b["b"]["xmax"]) / 2.0,
-                            (b["b"]["ymin"] + b["b"]["ymax"]) / 2.0]
-                           for b in rs if b["b"]["xmin"] is not None])
-            lc = np.array([[(b["b"]["xmin"] + b["b"]["xmax"]) / 2.0,
-                            (b["b"]["ymin"] + b["b"]["ymax"]) / 2.0]
-                           for b in ls if b["b"]["xmin"] is not None])
+            rs, ls = rs[~np.isnan(rs[:, 0])], ls[~np.isnan(ls[:, 0])]
+            rc = (rs[:, :2] + rs[:, 2:]) / 2.0
+            lc = (ls[:, :2] + ls[:, 2:]) / 2.0
             if len(rc) >= 4 and len(lc) >= 1:
                 grid = _point_grid_build(rc)
                 _li, _ri, dm = _point_grid_nearest(lc, grid, None, False)

@@ -961,11 +961,13 @@ def test_sjoin_grid_forced_salting_matches_brute_force(spark):
     """r8: hot-cell salting and the pinned candidate-join parallelism
     are probabilistic scale paths that the small oracle datasets never
     trigger — force the salt table on (factor=1, floor=0) over skewed
-    data and require the EXACT brute-force pair set."""
-    import functools
+    data and require the EXACT brute-force pair set. The inputs and the
+    salt table are Arrow tables, so the executed plan must hold no
+    Python RDD scan (``ExistingRDD``)."""
     import sys
 
     import numpy as np
+    import pyarrow as pa
 
     import geopandas_spark.operators.sjoin  # noqa: F401 (register module)
     sjmod = sys.modules["geopandas_spark.operators.sjoin"]
@@ -985,14 +987,12 @@ def test_sjoin_grid_forced_salting_matches_brute_force(spark):
     bw = rng.uniform(0.5, 4.0, n_box)
     bh = rng.uniform(0.5, 4.0, n_box)
 
-    pts = (spark.createDataFrame(
-        [(i, float(px[i]), float(py[i])) for i in range(n_pts)],
-        ["pid", "x", "y"])
+    pts = (spark.createDataFrame(pa.table(
+        {"pid": np.arange(n_pts), "x": px, "y": py}))
         .withColumn("geom", st.point("x", "y")).drop("x", "y"))
-    boxes = (spark.createDataFrame(
-        [(k, float(bx[k]), float(by[k]), float(bx[k] + bw[k]),
-          float(by[k] + bh[k])) for k in range(n_box)],
-        ["bid", "x0", "y0", "x1", "y1"])
+    boxes = (spark.createDataFrame(pa.table(
+        {"bid": np.arange(n_box), "x0": bx, "y0": by, "x1": bx + bw,
+         "y1": by + bh}))
         .withColumn("geom", st.makebox("x0", "y0", "x1", "y1"))
         .drop("x0", "y0", "x1", "y1"))
 
@@ -1008,11 +1008,13 @@ def test_sjoin_grid_forced_salting_matches_brute_force(spark):
     try:
         j = sjmod.sjoin(pts, boxes, predicate="intersects",
                         strategy="grid")
-        got = {(r["pid"], r["bid"])
-               for r in j.select("pid", "bid").collect()}
+        pairs = j.select("pid", "bid")
+        got = {(r["pid"], r["bid"]) for r in pairs.collect()}
     finally:
         sjmod._hot_cell_salts = orig
     assert calls["salted"] > 0, "salting path was not exercised"
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
 
     inx = (px[:, None] >= bx[None, :]) & (px[:, None] <= (bx + bw)[None, :])
     iny = (py[:, None] >= by[None, :]) & (py[:, None] <= (by + bh)[None, :])
@@ -1344,3 +1346,239 @@ def test_sjoin_grid_bounds_once_per_side_and_null_geometries(spark):
     got = sorted(((r.pid, r.bid) for r in left.select("pid", "bid").collect()),
                  key=lambda t: (t[0], -1 if t[1] is None else t[1]))
     assert got == want + [(98, None), (99, None)]
+
+
+def _broadcast_scans(plan: str):
+    """(LocalTableScan directly under a BroadcastExchange?, any Python
+    RDD scan?) for an executed-plan string."""
+    lines = plan.splitlines()
+    under = any("BroadcastExchange" in a and "LocalTableScan" in b
+                for a, b in zip(lines, lines[1:]))
+    return under, "ExistingRDD" in plan
+
+
+def test_broadcast_side_plans_as_local_relation(spark):
+    """The broadcast strategies of sjoin and sjoin_nearest put the
+    collected right side back into the plan as an Arrow local relation:
+    the executed plan broadcasts a LocalTableScan and holds no Python
+    RDD scan (which would start Python tasks on every execution only to
+    re-read rows the driver already holds)."""
+    pts = spark.range(40).select(
+        F.col("id").alias("pid"),
+        st.point((F.col("id") % 10).cast("double") + 0.5,
+                 (F.col("id") / 10).cast("int").cast("double") + 0.5)
+        .alias("geom"))
+    bx = spark.range(3).select(
+        F.col("id").alias("bid"),
+        st.makebox((F.col("id") * 3).cast("double"), F.lit(0.0),
+                   (F.col("id") * 3 + 3).cast("double"), F.lit(4.0))
+        .alias("geom"))
+    sites = spark.range(5).select(
+        F.col("id").alias("sid"),
+        st.point((F.col("id") * 2).cast("double"), F.lit(1.0))
+        .alias("geom"))
+    for out, n in ((sjoin(pts, bx, strategy="broadcast"), 36),
+                   (sjoin_nearest(pts, sites, strategy="broadcast"), 40)):
+        assert len(out.collect()) == n
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert _broadcast_scans(plan) == (True, False), plan
+
+
+def test_broadcast_right_side_round_trips_every_type(spark):
+    """The broadcast right side goes driver → Arrow → local relation.
+    NaN and -0.0 doubles, NULL attributes, timestamp, decimal, array,
+    map and struct columns, field metadata on the geometry column, a
+    NULL geometry and a duplicated geometry must come out exactly as the
+    grid strategy (which never collects) gives them, for every ``how``;
+    the output schema keeps every right field, its type and metadata."""
+    import datetime
+    import decimal
+
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, DecimalType, DoubleType, IntegerType,
+        LongType, MapType, StringType, StructField, StructType,
+        TimestampType)
+
+    from geopandas_spark.geom import wkb, wkt
+
+    def box(x0, y0, x1, y1):
+        return (f"POLYGON (({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, "
+                f"{x0} {y0}))")
+
+    geoms = wkb.encode(wkt.parse_array(
+        [box(0, 0, 3, 3), box(2, 2, 6, 6), box(0, 0, 3, 3),
+         box(20, 20, 21, 21)]))
+    rschema = StructType([
+        StructField("rid", LongType()), StructField("d", DoubleType()),
+        StructField("ts", TimestampType()),
+        StructField("dec", DecimalType(12, 3)),
+        StructField("arr", ArrayType(DoubleType())),
+        StructField("m", MapType(StringType(), DoubleType())),
+        StructField("s", StructType([StructField("a", IntegerType()),
+                                     StructField("b", StringType())])),
+        StructField("geom", BinaryType(), metadata={"crs": "EPSG:3857"}),
+    ])
+    nan = float("nan")
+    right = spark.createDataFrame([
+        (0, nan, datetime.datetime(2020, 1, 1, 3, 4, 5, 123456),
+         decimal.Decimal("1.250"), [nan, None], {"k": nan}, (1, "x"),
+         geoms[0]),
+        (1, -0.0, None, None, None, None, None, geoms[1]),
+        (2, 1.0, datetime.datetime(1969, 12, 31, 23, 59, 59),
+         decimal.Decimal("-3.000"), [], {}, (None, None), None),
+        (3, None, None, decimal.Decimal("0.001"), [-0.0], {"z": -0.0},
+         (2, None), geoms[2]),
+        (4, 2.5, None, None, [1.0], None, None, geoms[3]),
+    ], rschema)
+    left = spark.range(30).select(
+        F.col("id").alias("pid"),
+        st.point((F.col("id") % 6).cast("double") + 0.5,
+                 (F.col("id") / 6).cast("int").cast("double") + 0.5)
+        .alias("geom"))
+
+    def canon(df):
+        return sorted(repr(tuple(r)) for r in
+                      df.select(*sorted(df.columns)).collect())
+
+    for how in ("inner", "left", "right", "full"):
+        b = sjoin(left, right, how=how, strategy="broadcast")
+        g = sjoin(left, right, how=how, strategy="grid")
+        assert canon(b) == canon(g), how
+        fields = {f.name: f for f in b.schema.fields}
+        for f in rschema.fields:
+            name = "geom_right" if f.name == "geom" else f.name
+            assert fields[name].dataType == f.dataType, (how, name)
+            assert fields[name].metadata == f.metadata, (how, name)
+    # the matched NaN / -0.0 values and the duplicated geometry's rows
+    got = {r.rid: r for r in sjoin(left, right, strategy="broadcast")
+           .select("pid", "rid", "d", "m").collect() if r.pid == 0}
+    assert set(got) == {0, 3}
+    assert got[0].d != got[0].d and got[3].d is None
+    assert str(got[3].m["z"]) == "-0.0"
+
+
+@pytest.mark.parametrize("regime", ["grouped", "per_geometry"])
+def test_refine_pairs_point_in_polygon_regimes(monkeypatch, regime):
+    """Point × polygon refine: right geometries with few (points ×
+    segments) share one grouped vectorized pass; large ones take one
+    ``points_in_geom`` call each. Both regimes must give exactly the
+    per-pair ``points_in_geom`` answer for intersects, within,
+    covered_by and contains, on random points plus points placed on
+    vertices and on edges — and each regime must take its own branch."""
+    import sys
+
+    import numpy as np
+
+    import geopandas_spark.operators.sjoin  # noqa: F401
+    from geopandas_spark.geom import algos, wkt
+    from geopandas_spark.geom.array import points_from_xy
+
+    sjmod = sys.modules["geopandas_spark.operators.sjoin"]
+    rng = np.random.default_rng(11)
+
+    def ring(cx, cy, r, n, star=False):
+        t = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
+        rr = np.where(np.arange(n) % 2, 0.5 * r, r) if star else \
+            np.full(n, float(r))
+        xy = np.column_stack([cx + rr * np.cos(t), cy + rr * np.sin(t)])
+        return np.vstack([xy, xy[:1]])
+
+    def fmt(*rings):
+        return "(" + ", ".join(
+            "(" + ", ".join(f"{float(x)!r} {float(y)!r}" for x, y in r)
+            + ")"
+            for r in rings) + ")"
+
+    if regime == "grouped":
+        shapes = []
+        for k in range(300):
+            x0, y0 = rng.uniform(0, 100, 2)
+            w, h = rng.uniform(0.5, 3.0, 2)
+            if k % 2:
+                shapes.append([np.array([[x0, y0], [x0 + w, y0],
+                                         [x0 + w, y0 + h], [x0, y0 + h],
+                                         [x0, y0]])])
+            else:
+                shapes.append([ring(x0, y0, w, 4)])
+        per = 3
+        wkts = ["POLYGON " + fmt(*s) for s in shapes]
+    else:
+        holed = [ring(30, 0, 10, 500), ring(30, 0, 4, 40)]
+        holed2 = [ring(60, 0, 10, 50), ring(60, 0, 3, 8)]
+        part_a = [ring(90, 0, 10, 64), ring(90, 0, 4, 32)]
+        part_b = [ring(120, 0, 5, 16)]
+        shapes = [[ring(0, 0, 10, 2000, star=True)], holed, holed2,
+                  part_a + part_b]
+        per = 200
+        wkts = ["POLYGON " + fmt(*s) for s in shapes[:3]]
+        wkts.append("MULTIPOLYGON (" + fmt(*part_a) + ", " + fmt(*part_b)
+                    + ")")
+    rga = wkt.parse_array(wkts)
+    b = algos.bounds(rga)
+    px, py, rj = [], [], []
+    for j in range(len(rga)):
+        verts = np.vstack([r[:-1] for r in shapes[j]])
+        r0 = shapes[j][0]
+        mids = (r0[:-1] + r0[1:]) / 2.0
+        pad = 0.1 * (b[j, 2] - b[j, 0])
+        n_rand = per * 4
+        xs = rng.uniform(b[j, 0] - pad, b[j, 2] + pad, n_rand)
+        ys = rng.uniform(b[j, 1] - pad, b[j, 3] + pad, n_rand)
+        pick_v = rng.integers(0, len(verts), per)
+        pick_m = rng.integers(0, len(mids), per)
+        px += [xs, verts[pick_v, 0], mids[pick_m, 0]]
+        py += [ys, verts[pick_v, 1], mids[pick_m, 1]]
+        rj.append(np.full(n_rand + 2 * per, j))
+    px, py, rj = np.concatenate(px), np.concatenate(py), np.concatenate(rj)
+    perm = rng.permutation(len(px))
+    px, py, rj = px[perm], py[perm], rj[perm]
+    lga = points_from_xy(px, py)
+    li = np.arange(len(px))
+    cls = np.empty(len(px), dtype=np.int8)
+    for j in range(len(rga)):
+        k = rj == j
+        cls[k] = algos.points_in_geom(px[k], py[k], rga, j)
+    assert (cls == 1).sum() >= per * len(rga) and (cls == 2).any()
+
+    calls = {"loop": 0, "grouped": 0}
+    orig_pig, orig_vec = algos.points_in_geom, algos._vec_classify_points
+
+    def pig(*a):
+        calls["loop"] += 1
+        return orig_pig(*a)
+
+    def vec(*a, **kw):
+        calls["grouped"] += int(np.count_nonzero(a[8]))
+        return orig_vec(*a, **kw)
+
+    monkeypatch.setattr(algos, "points_in_geom", pig)
+    monkeypatch.setattr(algos, "_vec_classify_points", vec)
+    want = {"intersects": cls > 0, "covered_by": cls > 0,
+            "within": cls == 2, "contains": np.zeros(len(px), bool)}
+    for pred, exp in want.items():
+        got = sjmod._refine_pairs(lga, rga, li, rj, pred, None)
+        np.testing.assert_array_equal(got, exp, err_msg=pred)
+    # three predicates take the point-in-polygon path; contains never
+    # classifies (a point cannot contain a polygon)
+    if regime == "grouped":
+        assert calls == {"loop": 0, "grouped": 3 * len(rga)}, calls
+    else:
+        assert calls == {"loop": 3 * len(rga), "grouped": 0}, calls
+
+
+def test_dissolve_plans_infer_eval_type_without_warning(points, boxes):
+    """PySpark infers a grouped-map function's eval type from its type
+    hints and warns on every plan when a parameter has none: both
+    dissolve merge functions (single- and two-phase plans) hint every
+    parameter, so building a dissolve plan emits no such warning."""
+    import warnings
+
+    tagged = sjoin(points, boxes, predicate="intersects",
+                   strategy="broadcast")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        for two_phase in (False, True):
+            dissolve(tagged, "bid", {"pid": "count"}, geom="geom_left",
+                     two_phase=two_phase)
+    msgs = [str(w.message) for w in caught]
+    assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs
