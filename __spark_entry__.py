@@ -4097,7 +4097,7 @@ def q_dissolve_aggfuncs(spark, sf_dir):
     """dissolve aggfunc parity (reference geodataframe.py:2305): a LIST of
     aggs on one column (sum+count+nunique on c_custkey), holistic named
     aggs (median), and an arbitrary Python callable — holistic presence
-    routes the whole dissolve through the single-phase applyInPandas
+    routes the whole dissolve through the single-phase applyInArrow
     plan."""
     cust = _cust(spark, sf_dir)
     dis = dissolve(cust, "c_nationkey",

@@ -1381,16 +1381,24 @@ def _row_vertices(g, rows):
     return g.coords[sel], tgt[sel]
 
 
-def _cross_chunks(cnt_a, cnt_b, budget=1 << 22):
+# Expanded (segment, point) entries per chunk of a cross-product kernel.
+# An entry costs ~140 B of temporaries, so a chunk holds ~10 MB (1 << 22
+# entries would hold ~0.6 GB per Python worker); on a 1M-entry
+# point-in-polygon batch (4-core host) larger chunks were no faster.
+_CHUNK = 1 << 16
+
+
+def _cross_chunks(cnt_a, cnt_b):
     """Split row positions [0, R) into chunks whose per-row cross-product
-    totals (cnt_a*cnt_b) each stay under `budget` expanded entries."""
+    totals (cnt_a*cnt_b) each stay under ``_CHUNK`` expanded entries (a
+    row is never split, so one row may exceed it)."""
     reps = (cnt_a * cnt_b).astype(np.int64)
     cum = np.cumsum(reps)
     out = []
     lo = 0
     while lo < len(reps):
         base = cum[lo - 1] if lo else 0
-        hi = int(np.searchsorted(cum, base + budget, side="right"))
+        hi = int(np.searchsorted(cum, base + _CHUNK, side="right"))
         hi = max(hi, lo + 1)
         out.append((lo, hi))
         lo = hi
@@ -1499,30 +1507,30 @@ def _vectorized_vertex_in_poly(vx, vy, v_tgt, s0, s1, s_tgt, cnt_v_full,
         with np.errstate(divide="ignore", invalid="ignore"):
             xint = x0 + (Y - y0) * dx / np.where(dy == 0, 1.0, dy)
         crossing = cond & (X < xint)
-        # parity per (row, vertex): vertices are globally numbered by iv
-        ncross = np.bincount(iv, weights=crossing, minlength=len(vx))
+        # parity per (row, vertex), tallied over the chunk's vertices
+        # [v0, v0 + m) only, so a chunk costs O(chunk)
+        v0 = int(off_v[lo])
+        m = int(off_v[hi - 1] + cnt_v[hi - 1]) - v0
+        ncross = np.bincount(iv - v0, weights=crossing, minlength=m)
         inside_v = ncross.astype(np.int64) % 2 == 1
-        on_v = np.bincount(iv[on], minlength=len(vx)) > 0
-        vhit = inside_v | on_v
-        if vhit.any():
-            out |= np.bincount(v_tgt[vhit], minlength=nrows) > 0
+        on_v = np.bincount(iv[on] - v0, minlength=m) > 0
+        out[v_tgt[v0:v0 + m][inside_v | on_v]] = True
     return out
 
 
 def _vec_classify_points(vx, vy, v_tgt, s0, s1, s_tgt, cnt_v_full,
-                         cnt_s_full, sel, nrows, budget=1 << 22):
+                         cnt_s_full, sel, nrows):
     """Per-POINT classification of each selected row's probe points
     against the row's polygon (0 exterior / 1 boundary / 2 interior —
     global even-odd parity + on-segment boundary, identical formulas to
     _pairwise_point_in_poly). Returns int8[len(vx)]; points of
-    unselected rows keep 0. ``budget`` caps the (segment, point) entries
-    expanded per chunk (a row is never split across chunks)."""
+    unselected rows keep 0. Expanded in ``_cross_chunks`` chunks."""
     cls = np.zeros(len(vx), dtype=np.int8)
     off_s = np.concatenate([[0], np.cumsum(cnt_s_full)])[:-1]
     off_v = np.concatenate([[0], np.cumsum(cnt_v_full)])[:-1]
     cnt_s = np.where(sel, cnt_s_full, 0)
     cnt_v = np.where(sel, cnt_v_full, 0)
-    for lo, hi in _cross_chunks(cnt_s, cnt_v, budget):
+    for lo, hi in _cross_chunks(cnt_s, cnt_v):
         isg, iv, row = _expand_pairs(cnt_s, cnt_v, lo, hi, off_s, off_v)
         if len(row) == 0:
             continue
@@ -1539,11 +1547,12 @@ def _vec_classify_points(vx, vy, v_tgt, s0, s1, s_tgt, cnt_v_full,
         with np.errstate(divide="ignore", invalid="ignore"):
             xint = x0 + (Y - y0) * dx / np.where(dy == 0, 1.0, dy)
         crossing = cond & (X < xint)
-        ncross = np.bincount(iv, weights=crossing, minlength=len(vx))
-        inside_v = ncross.astype(np.int64) % 2 == 1
-        on_v = np.bincount(iv[on], minlength=len(vx)) > 0
-        cls[inside_v] = 2
-        cls[on_v] = 1
+        v0 = int(off_v[lo])          # the chunk's points: [v0, v0 + m)
+        m = int(off_v[hi - 1] + cnt_v[hi - 1]) - v0
+        ncross = np.bincount(iv - v0, weights=crossing, minlength=m)
+        win = cls[v0:v0 + m]
+        win[ncross.astype(np.int64) % 2 == 1] = 2
+        win[np.bincount(iv[on] - v0, minlength=m) > 0] = 1
     return cls
 
 
@@ -1857,9 +1866,7 @@ def _poly_line_intersects_fast(ga, gb):
         ia, ib, row = _expand_pairs(cz, czb, lo, hi, off_a, off_b)
         if len(row) == 0:
             continue
-        h = _seg_pairs_hit(a0[ia], a1[ia], b0[ib], b1[ib])
-        if h.any():
-            hit |= np.bincount(row[h], minlength=nrows) > 0
+        hit[row[_seg_pairs_hit(a0[ia], a1[ia], b0[ib], b1[ib])]] = True
     # containment: only live rows not yet hit, only polygonal sides
     rem = ~hit & ~big & live
     if rem.any():
@@ -2200,9 +2207,8 @@ def _covers_screen(ga, gb, require_interior):
             ia, ib, row = _expand_pairs(ca, cb, lo, hi, off_a, off_b)
             if len(row) == 0:
                 continue
-            h = _seg_pairs_proper(a0[ia], a1[ia], b0[ib], b1[ib])
-            if h.any():
-                proper |= np.bincount(row[h], minlength=nn) > 0
+            proper[row[_seg_pairs_proper(a0[ia], a1[ia], b0[ib],
+                                         b1[ib])]] = True
         decided[rows[proper & live]] = True   # proper cross → False
         live &= ~proper
     # rectangle-A rows decide exactly

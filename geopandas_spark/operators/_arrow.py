@@ -1,0 +1,20 @@
+"""The grouped Arrow stage shared by the operators."""
+
+from __future__ import annotations
+
+from pyspark.sql.pandas.types import to_arrow_schema
+
+
+def apply_in_arrow(df, by, fn, schema):
+    """``df.groupBy(by).applyInArrow`` of ``fn`` (one group's
+    ``pa.Table`` in, a ``pa.Table`` out), each result cast to
+    ``schema``'s Arrow form.
+
+    Spark hands timestamps to ``fn`` labelled with the session time zone
+    (say ``Etc/UTC``) but requires a grouped result's timestamps to be
+    labelled ``UTC``; both hold UTC instants, so the cast relabels the
+    type and copies no value. Every other passed-through column already
+    has its exact type."""
+    target = to_arrow_schema(schema)
+    return df.groupBy(*([by] if isinstance(by, str) else by)).applyInArrow(
+        lambda t: fn(t).cast(target), schema=schema)

@@ -4,8 +4,10 @@ a polygonal coverage.
 Reference: is_valid_coverage (geopandas/base.py:378), invalid_coverage_edges
 (:450), simplify_coverage (:5536) — GEOS≥3.12 coverage machinery. These are
 inherently group-scoped (a "coverage" is a set of rows), so they run as
-``applyInPandas`` over user-chosen partition keys: one shuffle, then the
-kernel sees each coverage whole.
+``applyInArrow`` over user-chosen partition keys: one shuffle, then the
+kernel sees each coverage whole. Geometry is decoded from and encoded to
+Arrow WKB; every other column passes through as its Arrow buffers, so
+NaN and NULL values come out as they went in.
 
 Scale note: the grouping key IS the unit of memory — a coverage group must
 fit one task. For planet-scale layers, key by a spatial partition (e.g.
@@ -16,18 +18,11 @@ cell boundaries follow coverage edges (document per use).
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import BinaryType, StructField, StructType
 
 from geopandas_spark.geom import algos, wkb
-
-
-def _grouped(df: DataFrame, by):
-    if isinstance(by, str):
-        by = [by]
-    return df.groupBy(*by)
+from geopandas_spark.operators._arrow import apply_in_arrow
 
 
 def invalid_coverage_edges(df: DataFrame, by, *, geom: str = "geom",
@@ -40,14 +35,12 @@ def invalid_coverage_edges(df: DataFrame, by, *, geom: str = "geom",
     schema = StructType(df.schema.fields +
                         [StructField(out, BinaryType(), True)])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        ga = wkb.decode(pdf[geom].tolist())
-        pdf = pdf.copy()
-        pdf[out] = wkb.encode(
-            algos.invalid_coverage_edges(ga, gap_width=gap_width))
-        return pdf
+    def fn(t):
+        ga = wkb.decode(t.column(geom))
+        return t.append_column(out, wkb.encode_arrow(
+            algos.invalid_coverage_edges(ga, gap_width=gap_width)))
 
-    return _grouped(df, by).applyInPandas(fn, schema=schema)
+    return apply_in_arrow(df, by, fn, schema)
 
 
 def simplify_coverage(df: DataFrame, tolerance: float, by, *,
@@ -57,10 +50,9 @@ def simplify_coverage(df: DataFrame, tolerance: float, by, *,
     coverages stay valid and edges stay coincident."""
     schema = df.schema
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        ga = wkb.decode(pdf[geom].tolist())
-        pdf = pdf.copy()
-        pdf[geom] = wkb.encode(algos.simplify_coverage(ga, tolerance))
-        return pdf
+    def fn(t):
+        i = t.schema.get_field_index(geom)
+        return t.set_column(i, t.schema.field(i), wkb.encode_arrow(
+            algos.simplify_coverage(wkb.decode(t.column(i)), tolerance)))
 
-    return _grouped(df, by).applyInPandas(fn, schema=schema)
+    return apply_in_arrow(df, by, fn, schema)

@@ -3,35 +3,51 @@
 Reference: GeoDataFrame.dissolve (geopandas/geodataframe.py:2172-2327) =
 groupby over attribute columns + per-group geometric union.
 
-Spark cannot mix a GROUPED_AGG pandas UDF with native aggregates in one
-``agg``, so dissolve runs as a single ``applyInPandas`` per group: one
-shuffle, geometry union + attribute aggs in the same pass (same cost shape
-as the reference's groupby-apply closure, geodataframe.py:2310-2316).
+Every Python stage is an Arrow one: the per-key merge is a grouped
+``applyInArrow`` (geometry union and attribute aggregates in one pass,
+since Spark cannot mix a Python grouped aggregate with native ones in
+one ``agg``), and the two-phase plan's partition-local combine is a
+``mapInArrow``. Geometry goes through ``wkb.decode`` / ``wkb.encode_arrow``
+and key values are copied as Arrow values, so the output keys are
+exactly Spark's grouping keys (NaN and NULL are different keys). Each
+attribute column goes to pandas on its own for its aggfunc
+(``_apply_one``), so every plan skips NaN and NULL as the reference's
+pandas groupby does.
 
-Scale note: ``two_phase=True`` pre-aggregates per (key, input partition)
-before the final per-key pass — union is associative/commutative, so this
-is the map-side combine that bounds any single task's group size."""
+``_plan`` picks one of three plans per call:
+
+* ``single``: exchange on the keys, one merge per key;
+* ``two_phase``: union within each input partition first (no shuffle),
+  then merge the partials per key — one hot key never holds its whole
+  group in one task;
+* ``dedupe``: a native (key, geometry) hash aggregate collapses
+  byte-identical rows before any Arrow transfer, then the same per-key
+  merge of partials."""
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (BinaryType, DoubleType, LongType, StructField,
-                               StructType)
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (BinaryType, DoubleType, FloatType, LongType,
+                               StructField, StructType)
 
 from geopandas_spark.functions import st
 from geopandas_spark.geom import algos, wkb
+from geopandas_spark.operators._arrow import apply_in_arrow
+from geopandas_spark.operators.sjoin import _bounds_np, _ensure_parallelism
 
 _PARTIAL = {"sum": "sum", "min": "min", "max": "max", "count": "sum",
             "first": "first"}
 # named aggs that can't split into associative partials (run single-phase)
 _HOLISTIC = {"median", "std", "var", "nunique"}
 
-# duplication-probe memo keyed by (plan semanticHash, by, geom): the probe
-# result is a perf-only plan choice, so a (rare) hash collision costs
-# speed, never correctness
-_DUP_PROBE_CACHE: dict = {}
+# plan memo keyed by (plan semanticHash, by, geom, two_phase): the plan is
+# a perf-only choice, so a (rare) hash collision costs speed, never
+# correctness
+_PLAN_CACHE: dict = {}
 
 
 def _probe_duplication(df: DataFrame, by, geom: str) -> bool:
@@ -57,25 +73,20 @@ def _probe_duplication(df: DataFrame, by, geom: str) -> bool:
         return False
 
 
-_PHASE_PROBE_CACHE: dict = {}
-
-
 def _probe_phase1_gain(df: DataFrame, by, geom: str, nparts: int) -> bool:
     """Sampled bbox-overlap density → should the two-phase combine run?
 
     Phase-1's per-(partition, key) union only pays for itself when it
     actually MERGES geometry; on sparse inputs the partials are as big
     as the input and phase 2 redoes the entire union — the combine is a
-    pure second sweep (measured 5.5 s vs 4.0 s single-phase on the
-    600k-box stress). Single-phase is memory-safe exactly in that
+    pure second sweep (measured 5.5 s vs 4.0 s single-phase on a
+    600k-box dissolve). Single-phase is memory-safe exactly in that
     regime: no reduction means the phase-2 task holds the same bytes
     either way. Estimate: bbox-overlap pairs in a ≤10k-row sample give
     the global per-row partner count; scaled to one phase-1 group
     (n / (partitions × keys) rows drawn ~randomly) it must reach ~0.5
     partners per row for the combine to shrink anything. Estimation
     error only ever costs speed, never correctness or memory."""
-    import numpy as np
-
     try:
         stats = df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -86,9 +97,9 @@ def _probe_phase1_gain(df: DataFrame, by, geom: str, nparts: int) -> bool:
         s_target = 10_000
         samp = (df.sample(fraction=min(1.0, 3.0 * s_target / n), seed=7)
                 .limit(s_target).select(st.bounds(geom).alias("b"))
-                .collect())
-        bbs = np.array([[r["b"][j] for j in range(4)] for r in samp
-                        if r["b"] is not None and r["b"][0] is not None])
+                .toArrow().column(0))
+        bbs = _bounds_np(samp)
+        bbs = bbs[~np.isnan(bbs[:, 0])]
         s = len(bbs)
         if s < 100:
             return True          # too little signal: keep the safe default
@@ -112,6 +123,60 @@ def _probe_phase1_gain(df: DataFrame, by, geom: str, nparts: int) -> bool:
         return False
     except Exception:
         return True
+
+
+def _plan(df: DataFrame, by, geom: str, holistic: bool, two_phase) -> str:
+    """``"single" | "dedupe" | "two_phase"``, probed at most once per
+    (plan, keys, geometry, two_phase).
+
+    Holistic aggfuncs, ``two_phase=False`` and (when ``two_phase`` is
+    None) a single input partition take ``single``. Otherwise the
+    duplication probe runs first: a sparse but duplicate-heavy input
+    has few overlap partners per phase-1 group, yet its winning plan is
+    the native dedupe, so the phase probe must not decide it away.
+    Without duplication, ``two_phase=True`` takes ``two_phase`` and
+    ``None`` asks the phase probe."""
+    if holistic or two_phase is False:
+        return "single"
+    nparts = None
+    if two_phase is None:
+        try:
+            nparts = df.rdd.getNumPartitions()
+        except Exception:
+            nparts = 2
+        if nparts <= 1:
+            return "single"
+    try:
+        ck = (df.semanticHash(), tuple(by), geom, two_phase)
+    except Exception:
+        ck = None
+    if ck is not None and ck in _PLAN_CACHE:
+        return _PLAN_CACHE[ck]
+    if _probe_duplication(df, by, geom):
+        plan = "dedupe"
+    elif two_phase or _probe_phase1_gain(df, by, geom, nparts):
+        plan = "two_phase"
+    else:
+        plan = "single"
+    if ck is not None:
+        if len(_PLAN_CACHE) > 256:
+            _PLAN_CACHE.clear()
+        _PLAN_CACHE[ck] = plan
+    return plan
+
+
+def _exchange(df: DataFrame, by) -> DataFrame:
+    """Hash-partition on the keys, wider than the default shuffle: with
+    ~#cores keys, default-width hash collisions put 2-3 heavy per-key
+    unions on one task and they serialize (measured 2x on a 600k-box
+    dissolve, 25 keys into 32 partitions). The partitioning satisfies
+    the grouped stage's required distribution, so no second exchange
+    is added."""
+    try:
+        cores = df.sparkSession.sparkContext.defaultParallelism
+        return df.repartition(max(4 * cores, 64), *by)
+    except Exception:
+        return df
 
 
 def _fn_label(fn) -> str:
@@ -152,22 +217,40 @@ def _agg_out_field(field, fn, name):
     return StructField(name, field.dataType, True)
 
 
-def _apply_one(s: pd.Series, fn):
+def _apply_one(col, fn):
+    """``fn`` over one attribute column (Arrow) by pandas' rules: NaN and
+    NULL are both skipped."""
+    s = col.to_pandas()
     if callable(fn):
         return float(fn(s))
-    if fn == "count":
-        return int(s.count())
-    if fn == "nunique":
-        return int(s.nunique())
-    if fn in ("sum", "mean", "median", "std", "var"):
-        return float(getattr(s, fn)())
-    if fn == "min":
-        return s.min()
-    if fn == "max":
-        return s.max()
     if fn == "first":
         return s.iloc[0]
-    raise ValueError(f"unsupported aggfunc {fn!r}")
+    v = getattr(s, fn)()
+    return int(v) if fn in ("count", "nunique") else \
+        v if fn in ("min", "max") else float(v)
+
+
+def _union(col, method: str, explode: bool = False) -> pa.Array:
+    """The union of one group's WKB column as a one-row WKB array;
+    ``explode`` unions the parts of the rows (partials of a merge)."""
+    ga = wkb.decode(col)
+    if explode:
+        ga = algos.get_parts(ga)[0]
+    return wkb.encode_arrow(algos.union_all(ga, method=method))
+
+
+def _rows(groups, by, geom, method, explode, outs, names) -> pa.Table:
+    """One row per table in ``groups`` (each one key's rows): the key
+    values of its first row, copied as Arrow values, the union of its
+    geometry, then ``outs`` = [(Arrow type, table -> Python value)].
+    A NaN aggregate becomes NULL, as a pandas result column would."""
+    keys = pa.concat_tables([g.select(by).slice(0, 1) for g in groups])
+    cols = [c.combine_chunks() for c in keys.columns]
+    cols.append(pa.concat_arrays(
+        [_union(g.column(geom), method, explode) for g in groups]))
+    cols += [pa.array([f(g) for g in groups], type=t, from_pandas=True)
+             for t, f in outs]
+    return pa.Table.from_arrays(cols, names=names)
 
 
 def dissolve(df: DataFrame, by, aggfunc=None, *, geom: str = "geom",
@@ -188,9 +271,9 @@ def dissolve(df: DataFrame, by, aggfunc=None, *, geom: str = "geom",
     crossing overlaps that share no edge are undefined input.
 
     ``two_phase`` pre-unions WITHIN each input partition (shuffle-free
-    mapInPandas combine) before the final per-key merge, so one hot key
-    never concentrates its whole group in a single task's memory — the
-    scale-safe plan. Default ``None`` = auto: two-phase whenever the input
+    ``mapInArrow`` combine) before the final per-key merge, so one hot
+    key never concentrates its whole group in a single task's memory —
+    the scale-safe plan. Default ``None`` = auto: probed when the input
     has more than one partition (with a single partition the combine is
     pure overhead and the plans are identical). ``mean`` splits into
     sum+count partials and divides at the end. Holistic aggs (median/std/
@@ -205,7 +288,7 @@ def dissolve(df: DataFrame, by, aggfunc=None, *, geom: str = "geom",
     holistic = any(callable(fn) or fn in _HOLISTIC for _, fn, _ in aggs)
     # Project to the columns dissolve actually reads (keys + geometry +
     # aggfunc inputs) BEFORE any shuffle or Python stage: the grouped
-    # pandas ops below are opaque to Catalyst, so without this every
+    # Arrow ops below are opaque to Catalyst, so without this every
     # input column — however wide the frame — is shuffled in the
     # exchange and serialized through Arrow, only to be dropped by the
     # output schema (guide §2.3 "project before the exchange", §4.1
@@ -213,206 +296,103 @@ def dissolve(df: DataFrame, by, aggfunc=None, *, geom: str = "geom",
     need = list(dict.fromkeys([*by, geom, *(c for c, _, _ in aggs)]))
     if set(need) != {f.name for f in df.schema.fields}:
         df = df.select(*need)
-    if two_phase is None:
-        try:
-            nparts = df.rdd.getNumPartitions()
-        except Exception:
-            nparts = 2
-        two_phase = nparts > 1
-        if two_phase:
-            # dup probe FIRST: a sparse-but-duplicate-heavy input (the
-            # 100x duplicated-dim shape) has few overlap partners per
-            # phase-1 group, but its winning plan — the native
-            # (key, geom) pre-dedup — lives on the two-phase path and
-            # must not be probed away
-            dup_first = False
-            if not holistic:
-                try:
-                    dck = (df.semanticHash(), tuple(by), geom)
-                except Exception:
-                    dck = None
-                if dck is not None and dck in _DUP_PROBE_CACHE:
-                    dup_first = _DUP_PROBE_CACHE[dck]
-                else:
-                    dup_first = _probe_duplication(df, by, geom)
-                    if dck is not None:
-                        if len(_DUP_PROBE_CACHE) > 256:
-                            _DUP_PROBE_CACHE.clear()
-                        _DUP_PROBE_CACHE[dck] = dup_first
-            if not dup_first:
-                # overlap probe (memoized — perf-only): single-phase
-                # when the phase-1 combine cannot reduce
-                try:
-                    ck = (df.semanticHash(), tuple(by), geom, "p1")
-                except Exception:
-                    ck = None
-                if ck is not None and ck in _PHASE_PROBE_CACHE:
-                    two_phase = _PHASE_PROBE_CACHE[ck]
-                else:
-                    two_phase = _probe_phase1_gain(df, by, geom, nparts)
-                    if ck is not None:
-                        if len(_PHASE_PROBE_CACHE) > 256:
-                            _PHASE_PROBE_CACHE.clear()
-                        _PHASE_PROBE_CACHE[ck] = two_phase
-    if holistic:
-        two_phase = False
+    plan = _plan(df, by, geom, holistic, two_phase)
 
     in_fields = {f.name: f for f in df.schema.fields}
-    out_schema = StructType(
-        [in_fields[k] for k in by] +
-        [StructField(geom, BinaryType(), True)] +
-        [_agg_out_field(in_fields[c], fn, name) for c, fn, name in aggs])
+    head = [in_fields[k] for k in by] + [StructField(geom, BinaryType(), True)]
+    fields = [_agg_out_field(in_fields[c], fn, name) for c, fn, name in aggs]
+    out_schema = StructType(head + fields)
 
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ga = wkb.decode(pdf[geom].tolist())
-        u = wkb.encode(algos.union_all(ga, method=method))[0]
-        row = {k: [v] for k, v in zip(by, key)}
-        row[geom] = [u]
-        for c, fn, name in aggs:
-            row[name] = [_apply_one(pdf[c], fn)]
-        return pd.DataFrame(row)
+    def grouped(outs, explode):
+        """The Arrow function of one stage: one output row per group,
+        with ``outs`` = [(StructField, table -> value)] after the key and
+        geometry columns."""
+        names = by + [geom] + [f.name for f, _ in outs]
+        spec = [(to_arrow_type(f.dataType), v) for f, v in outs]
+        return lambda groups: _rows(groups, by, geom, method, explode,
+                                    spec, names)
 
-    if not two_phase:
-        # same wide key-hash pre-partitioning as phase 2: with ~#cores
-        # keys, default-shuffle hash collisions serialize 2-3 heavy
-        # per-key unions on one task; repartition on the keys satisfies
-        # applyInPandas' required distribution, so no second exchange
-        try:
-            cores = df.sparkSession.sparkContext.defaultParallelism
-            df = df.repartition(max(4 * cores, 64), *by)
-        except Exception:
-            pass
-        return df.groupBy(*by).applyInPandas(merge, schema=out_schema)
+    # the aggfunc over the raw rows of a key (single plan) or of a
+    # (key, partition) group (partials of the two-phase plan)
+    direct = [(f, lambda g, c=c, fn=fn: _apply_one(g.column(c), fn))
+              for (c, fn, _), f in zip(aggs, fields)]
+    if plan == "single":
+        merge = grouped(direct, explode=False)
+        return apply_in_arrow(_exchange(df, by), by, lambda t: merge([t]),
+                              out_schema)
 
-    # per-key merge of partial rows (phase 2 of the two-phase plan, and
-    # the only Python stage of the dedupe plan): combiner semantics —
-    # sum of sums, min of mins, count -> sum, mean -> psum/pcnt
-    def finish(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ga = wkb.decode(pdf[geom].tolist())
-        parts, parent, _ = algos.get_parts(ga)
-        u = wkb.encode(algos.union_all(parts, method=method))[0]
-        row = {k: [v] for k, v in zip(by, key)}
-        row[geom] = [u]
-        for c, fn, name in aggs:
-            if fn == "mean":
-                cnt = pdf[f"{name}__pcnt"].sum()
-                row[name] = [float(pdf[f"{name}__psum"].sum()) / cnt
-                             if cnt else float("nan")]
-                continue
-            s = pdf[name]
-            comb = _PARTIAL[fn]
-            row[name] = [s.sum() if comb == "sum" else s.min()
-                         if comb == "min" else s.max() if comb == "max"
-                         else s.iloc[0]]
-        return pd.DataFrame(row)
-
-    # Duplicate-heavy inputs (e.g. point dissolve where many rows share a
-    # location): union is idempotent over byte-identical geometries, so a
-    # NATIVE (key, geom) hash aggregate — map-side combined in Tungsten,
-    # never touching Python — collapses the data before any Arrow
-    # transfer, and only the distinct rows reach the per-key merge. The
-    # decomposable aggfuncs become native partials on the same pass. One
-    # cheap probe gates it: a single no-shuffle agg job comparing total
-    # vs approx-distinct rows (same pattern as sjoin's stats probe);
-    # below 4x duplication the extra shuffle of full geometry bytes buys
-    # nothing and the partition-local phase-1 combine wins.
-    if not holistic:
-        try:
-            ck = (df.semanticHash(), tuple(by), geom)
-        except Exception:
-            ck = None
-        if ck is not None and ck in _DUP_PROBE_CACHE:
-            dup_heavy = _DUP_PROBE_CACHE[ck]
-        else:
-            dup_heavy = _probe_duplication(df, by, geom)
-            if ck is not None:
-                if len(_DUP_PROBE_CACHE) > 256:
-                    _DUP_PROBE_CACHE.clear()
-                _DUP_PROBE_CACHE[ck] = dup_heavy
-        if dup_heavy:
-            nat = []
-            for c, fn, name in aggs:
-                if fn == "mean":
-                    nat += [F.sum(c).cast("double").alias(f"{name}__psum"),
-                            F.count(c).alias(f"{name}__pcnt")]
-                elif fn == "sum":
-                    nat.append(F.sum(c).cast("double").alias(name))
-                elif fn == "count":
-                    nat.append(F.count(c).alias(name))
-                elif fn == "min":
-                    nat.append(F.min(c).alias(name))
-                elif fn == "max":
-                    nat.append(F.max(c).alias(name))
-                else:  # first
-                    nat.append(F.first(c).alias(name))
-            deduped = (df.groupBy(*by, geom).agg(*nat) if nat
-                       else df.select(*by, geom).distinct())
-            try:
-                cores = df.sparkSession.sparkContext.defaultParallelism
-                deduped = deduped.repartition(max(4 * cores, 64), *by)
-            except Exception:
-                pass
-            return deduped.groupBy(*by).applyInPandas(finish, out_schema)
-
-    # thin scans (few parquet splits) would run the whole phase-1 union
-    # on a handful of tasks — fan out first (measured: the 600k-box
-    # stress dissolve spent ~14 of 18.5s in 4 phase-1 tasks)
-    from geopandas_spark.operators.sjoin import _ensure_parallelism
-    df = _ensure_parallelism(df)
-
-    # -- phase 1: per (key, input-partition) combine ----------------------
-    partial_fields = []
-    for c, fn, name in aggs:
+    # partial columns, and their per-key merge: sum of sums, min of mins,
+    # count -> sum, mean -> psum / pcnt
+    partial_outs, final_outs = [], []
+    for (c, fn, name), f, d in zip(aggs, fields, direct):
         if fn == "mean":
-            partial_fields += [
-                StructField(f"{name}__psum", DoubleType(), True),
-                StructField(f"{name}__pcnt", LongType(), False)]
+            psum, pcnt = f"{name}__psum", f"{name}__pcnt"
+            partial_outs += [
+                (StructField(psum, DoubleType(), True),
+                 lambda g, c=c: _apply_one(g.column(c), "sum")),
+                (StructField(pcnt, LongType(), False),
+                 lambda g, c=c: _apply_one(g.column(c), "count"))]
+
+            def ratio(g, psum=psum, pcnt=pcnt):
+                n = _apply_one(g.column(pcnt), "sum")
+                return _apply_one(g.column(psum), "sum") / n if n \
+                    else float("nan")
+            final_outs.append((f, ratio))
         else:
-            partial_fields.append(_agg_out_field(in_fields[c], fn, name))
-    partial_schema = StructType(
-        [in_fields[k] for k in by] +
-        [StructField(geom, BinaryType(), True)] + partial_fields)
+            partial_outs.append(d)
+            final_outs.append((f, lambda g, name=name, comb=_PARTIAL[fn]:
+                               _apply_one(g.column(name), comb)))
+    partial_schema = StructType(head + [f for f, _ in partial_outs])
 
-    def partial(batches):
-        # map-side combine: pandas groupby WITHIN each input partition —
-        # no shuffle; the only shuffle in the whole plan is phase 2's
-        # per-key merge of the (bounded) partials
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {name: [] for name in
-                    [*by, geom] + [f.name for f in partial_fields]}
-            for key, grp in pdf.groupby(by, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                ga = wkb.decode(grp[geom].tolist())
-                u = wkb.encode(algos.union_all(ga, method=method))[0]
-                for k, v in zip(by, key):
-                    rows[k].append(v)
-                rows[geom].append(u)
-                for c, fn, name in aggs:
-                    s = grp[c]
-                    if fn == "mean":
-                        rows[f"{name}__psum"].append(float(s.sum()))
-                        rows[f"{name}__pcnt"].append(int(s.count()))
-                    else:
-                        rows[name].append(_apply_one(s, fn))
-            yield pd.DataFrame(rows)
+    if plan == "dedupe":
+        # union is idempotent over byte-identical geometries, so a NATIVE
+        # (key, geom) hash aggregate — map-side combined in Tungsten,
+        # never touching Python — collapses the duplicates before any
+        # Arrow transfer; the decomposable aggfuncs become native
+        # partials on the same pass. NaN is nulled first so that the
+        # native aggregates skip it as pandas does.
+        nat = []
+        for c, fn, name in aggs:
+            v = F.col(c)
+            if fn != "first" and isinstance(in_fields[c].dataType,
+                                            (FloatType, DoubleType)):
+                v = F.nanvl(v, F.lit(None))
+            if fn == "mean":
+                nat += [F.sum(v).cast("double").alias(f"{name}__psum"),
+                        F.count(v).alias(f"{name}__pcnt")]
+            else:   # sum, count, min, max, first
+                a = getattr(F, fn)(v)
+                nat.append((a.cast("double") if fn == "sum" else a)
+                           .alias(name))
+        staged = (df.groupBy(*by, geom).agg(*nat) if nat
+                  else df.select(*by, geom).distinct())
+    else:
+        combine = grouped(partial_outs, explode=False)
 
-    staged = df.mapInPandas(partial, schema=partial_schema)
+        def partial(batches):
+            # map-side combine: Arrow groupby WITHIN each input batch (NaN
+            # and NULL keys apart, as in Spark) — no shuffle; the only
+            # shuffle of the plan is the per-key merge of the partials
+            for b in batches:
+                if b.num_rows == 0:
+                    continue
+                t = pa.Table.from_batches([b])
+                rows = (t.select(by)
+                        .append_column("__row__",
+                                       pa.array(np.arange(b.num_rows)))
+                        .group_by(by, use_threads=False)
+                        .aggregate([("__row__", "list")])
+                        .column("__row___list").combine_chunks())
+                yield from combine(
+                    [t.take(ix.values) for ix in rows]).to_batches()
 
-    # -- phase 2: merge partials per key (finish, defined above) ----------
-    # pre-partition the (small) partials WIDER than the default shuffle
-    # partition count: with ~#cores keys, hash collisions put 2-3 groups
-    # on one task and the heavy per-key merge serializes (measured 2x on
-    # the 600k-box stress dissolve, 25 keys into 32 partitions). Hash
-    # partitioning on the keys satisfies applyInPandas' required
-    # distribution, so no second exchange is added.
-    try:
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        staged = staged.repartition(max(4 * cores, 64), *by)
-    except Exception:
-        pass
-    return staged.groupBy(*by).applyInPandas(finish, schema=out_schema)
+        # thin scans (few parquet splits) would run the whole phase-1
+        # union on a handful of tasks — fan out first (measured: a
+        # 600k-box dissolve spent ~14 of 18.5 s in 4 phase-1 tasks)
+        staged = _ensure_parallelism(df).mapInArrow(partial, partial_schema)
+    finish = grouped(final_outs, explode=True)
+    return apply_in_arrow(_exchange(staged, by), by, lambda t: finish([t]),
+                          out_schema)
 
 
 def total_bounds(df: DataFrame, geom: str = "geom"):

@@ -2,10 +2,11 @@
 
 The reference calls an external geopy service; no network exists here, so
 the PROVIDER is injectable and the default is a clearly-marked
-deterministic STUB. Everything engine-side is real: Arrow-batched
-mapInPandas, per-executor provider construction, optional per-row rate
-limiting (the reference wraps providers in geopy RateLimiter likewise),
-null passthrough, WKB point output.
+deterministic STUB. Everything engine-side is real: a ``mapInArrow``
+pass whose other columns ride through as their Arrow buffers (NaN stays
+NaN, NULL stays NULL), optional per-row rate limiting (the reference
+wraps providers in geopy RateLimiter likewise), null passthrough, WKB
+point output.
 
 At cluster scale the rate limit matters more than the compute: each
 executor throttles independently, so the aggregate request rate is
@@ -18,11 +19,10 @@ import hashlib
 import time
 from typing import Callable, Optional
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (BinaryType, DoubleType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from geopandas_spark.geom import wkb as _wkb
 from geopandas_spark.geom.array import GeometryBuilder
@@ -41,6 +41,14 @@ def _stub_reverse(x: float, y: float) -> str:
            f"{'E' if x >= 0 else 'W'}"
 
 
+def _with_column(b, name: str, arr) -> pa.RecordBatch:
+    """Batch ``b`` without its column ``name`` (if any), then ``arr`` as
+    ``name`` at the end."""
+    keep = [n for n in b.schema.names if n != name]
+    return pa.RecordBatch.from_arrays([b.column(n) for n in keep] + [arr],
+                                      names=keep + [name])
+
+
 def geocode(df: DataFrame, address_col: str = "address", *,
             provider: Optional[Callable] = None,
             rate_limit_s: float = 0.0,
@@ -52,9 +60,9 @@ def geocode(df: DataFrame, address_col: str = "address", *,
     fwd = provider or _stub_forward
 
     def run(batches):
-        for pdf in batches:
+        for b in batches:
             bb = GeometryBuilder()
-            for a in pdf[address_col]:
+            for a in b.column(address_col).to_pylist():
                 if rate_limit_s:
                     time.sleep(rate_limit_s)
                 loc = fwd(a) if a is not None else None
@@ -62,11 +70,9 @@ def geocode(df: DataFrame, address_col: str = "address", *,
                     bb.append_null()
                 else:
                     bb.append_point(float(loc[0]), float(loc[1]))
-            pdf = pdf.copy()
-            pdf[out_col] = _wkb.encode(bb.finish())
-            yield pdf[[f.name for f in out_schema.fields]]
+            yield _with_column(b, out_col, _wkb.encode_arrow(bb.finish()))
 
-    return df.mapInPandas(run, schema=out_schema)
+    return df.mapInArrow(run, schema=out_schema)
 
 
 def reverse_geocode(df: DataFrame, geom: str = "geom", *,
@@ -80,20 +86,19 @@ def reverse_geocode(df: DataFrame, geom: str = "geom", *,
     rev = provider or _stub_reverse
 
     def run(batches):
-        for pdf in batches:
-            ga = _wkb.decode(pdf[geom])
+        for b in batches:
+            ga = _wkb.decode(b.column(geom))
             off = ga.coord_offsets_per_geom()
+            miss = ga.is_missing()
             adds = []
             for i in range(len(ga)):
-                if ga.is_missing()[i] or off[i] == off[i + 1]:
+                if miss[i] or off[i] == off[i + 1]:
                     adds.append(None)
                     continue
                 if rate_limit_s:
                     time.sleep(rate_limit_s)
                 x, y = ga.coords[off[i]]
                 adds.append(rev(float(x), float(y)))
-            pdf = pdf.copy()
-            pdf[out_col] = adds
-            yield pdf[[f.name for f in out_schema.fields]]
+            yield _with_column(b, out_col, pa.array(adds, pa.string()))
 
-    return df.mapInPandas(run, schema=out_schema)
+    return df.mapInArrow(run, schema=out_schema)

@@ -373,11 +373,8 @@ _BATCH_PREDICATES = {
 # ones take one points_in_geom call each. Measured on regular n-gons
 # with 1-256 points each (4-core host), the expansion costs ~0.13 us per
 # entry and a call ~0.05 us per entry plus ~100 us, so they break even
-# between 1k and 4k entries. _PIP_CHUNK bounds the expansion's peak
-# memory (~140 B per entry); larger chunks were no faster on a
-# 1M-entry batch.
+# between 1k and 4k entries.
 _PIP_GROUP_CAP = 1 << 11
-_PIP_CHUNK = 1 << 16
 
 
 def _refine_pairs(lga, rga, li, rj, predicate, distance):
@@ -410,8 +407,7 @@ def _refine_pairs(lga, rga, li, rj, predicate, distance):
         cnt_s = np.bincount(s_tgt, minlength=len(uj))
         small = cnt_v * cnt_s < _PIP_GROUP_CAP
         cls = algos._vec_classify_points(px, py, None, s0, s1, s_tgt, cnt_v,
-                                         cnt_s, small, len(uj),
-                                         budget=_PIP_CHUNK)
+                                         cnt_s, small, len(uj))
         for g in np.flatnonzero(~small):
             k = slice(start[g], start[g] + cnt_v[g])
             cls[k] = algos.points_in_geom(px[k], py[k], rga, int(uj[g]))

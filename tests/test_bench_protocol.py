@@ -1,21 +1,20 @@
-"""r13 regression pin for the bench measurement protocol (VERDICT r12 #1).
+"""Regression pin for the benchmark's measurement protocol.
 
-The r12 bench-integrity find: timing ``df.count()`` lets Catalyst's
-ColumnPruning delete every projected expression count() never reads —
-including ArrowEvalPython nodes — so a query whose UDF work sits in pure
-projection times only its scan/join skeleton. ``bench._consume`` (noop
-v2 sink) is the fix: it must force EVERY output column of the plan
-through evaluation. These tests make sure the protocol can never be
-quietly swapped back:
+Timing ``df.count()`` lets Catalyst's ColumnPruning delete every
+projected expression count() never reads — including ArrowEvalPython
+nodes — so a query whose UDF work sits in pure projection times only its
+scan/join skeleton. ``perfbench.run.drain`` (noop v2 sink) is the fix:
+it must force EVERY output column of the plan through evaluation. These
+tests make sure the protocol can never be quietly swapped back:
 
 * an accumulator inside a pandas UDF counts exactly the rows evaluated —
-  under ``_consume`` it must see ALL rows;
+  under ``drain`` it must see ALL rows;
 * the same probe under ``count()`` documents the 0-row pruning (asserted
   loosely: strictly fewer rows than the data has, so a future Spark
   version that stops pruning flips this test and the protocol can be
   revisited rather than silently drifting);
 * a representative headline-shaped plan (parse WKT → compute distance in
-  a projection) evaluates its UDF for every row under ``_consume``.
+  a projection) evaluates its UDF for every row under ``drain``.
 """
 
 import os
@@ -28,7 +27,7 @@ from pyspark.sql.functions import pandas_udf
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # noqa: E402
+from perfbench.run import drain  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -50,7 +49,7 @@ def _probe_df(spark, acc, n=1000):
 def test_consume_evaluates_every_row(spark, acc):
     df = _probe_df(spark, acc, 1000)
     before = acc.value
-    bench._consume(df)
+    drain(df)
     assert acc.value - before == 1000
 
 
@@ -66,23 +65,7 @@ def test_count_prunes_projected_udfs(spark, acc):
     seen = acc.value - before
     assert seen < 1000, (
         "count() no longer prunes projected pandas UDFs — re-examine "
-        "bench._consume vs count() (see VERDICT r12)")
-
-
-def test_no_pre_run_bandwidth_canary():
-    """r13: the timed region must NOT be preceded by an allocation-probe
-    'bandwidth recovery' wait. A mid-build r13 commit added one; A/B
-    measurement showed it INFLATES the runs it precedes (sjoin_nearest
-    100x tier: 46-53 s on every canary-preceded run vs 2.7-5.8 s warm
-    without — the pre-run allocation hammering leaves the guest
-    allocator collapsed exactly when the job starts). The protocol is
-    r12's: gc + min-of-N with the spread reported. This test pins the
-    removal so the canary cannot quietly return."""
-    import inspect
-
-    assert not hasattr(bench, "_bw_recover")
-    src = inspect.getsource(bench.run_tier)
-    assert "_bw_recover" not in src
+        "perfbench.run.drain vs count()")
 
 
 def test_consume_materializes_headline_shaped_plan(spark, acc):
@@ -106,37 +89,12 @@ def test_consume_materializes_headline_shaped_plan(spark, acc):
         st.length(st.geom_from_text(wktcol)).alias("len"),
         row_witness(F.col("x")).alias("wx"))
     before = acc.value
-    bench._consume(out)
+    drain(out)
     assert acc.value - before == n
     # and the plan really contains Python evaluation nodes (the UDF
     # didn't get constant-folded away)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan or "EvalPython" in plan
-
-
-def test_alloc_env_pins_worker_malloc(monkeypatch):
-    """r13: bench pins the Python workers' large allocations to the
-    glibc arena (MALLOC_MMAP_THRESHOLD_/MALLOC_TRIM_THRESHOLD_) before
-    the JVM launches, so per-batch numpy buffers are not munmap'd and
-    first-touch re-faulted every batch (the dominant cost of
-    Python-heavy stages inside this guest's bandwidth-collapse
-    windows). Values already present, and the explicit opt-out, are
-    respected."""
-    monkeypatch.delenv("MALLOC_MMAP_THRESHOLD_", raising=False)
-    monkeypatch.delenv("MALLOC_TRIM_THRESHOLD_", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_MALLOC_TUNING", raising=False)
-    bench._alloc_env()
-    assert os.environ["MALLOC_MMAP_THRESHOLD_"] == "1073741824"
-    assert os.environ["MALLOC_TRIM_THRESHOLD_"] == "1073741824"
-
-    monkeypatch.setenv("MALLOC_MMAP_THRESHOLD_", "123")
-    bench._alloc_env()               # pre-set value wins
-    assert os.environ["MALLOC_MMAP_THRESHOLD_"] == "123"
-
-    monkeypatch.delenv("MALLOC_MMAP_THRESHOLD_", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_MALLOC_TUNING", "0")
-    bench._alloc_env()               # opt-out sets nothing
-    assert "MALLOC_MMAP_THRESHOLD_" not in os.environ
 
 
 def test_coband_residue_join_equivalence(spark):

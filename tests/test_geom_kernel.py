@@ -2717,3 +2717,37 @@ def test_intersection_rect_fast_path_parity():
         eq = algos.geom_equals(fast, slow)
         both_empty = fast.is_empty() & slow.is_empty()
         assert (eq | both_empty).all(), int((~(eq | both_empty)).sum())
+
+
+def test_vec_classify_points_peak_memory_is_chunked():
+    """A 1M-entry point-in-polygon expansion (8,000 16-gons x 8 probe
+    points) runs in bounded chunks: its tracemalloc peak stays far below
+    the ~140 MB the whole expansion would take at once, and the answers
+    are the exact ones (centre interior, vertex boundary, far exterior)."""
+    import tracemalloc
+
+    n, ns, nv = 8000, 16, 8
+    ang = 2 * np.pi * np.arange(ns + 1) / ns
+    ring = np.column_stack([np.cos(ang), np.sin(ang)])
+    shift = np.column_stack([3.0 * np.arange(n), np.zeros(n)])
+    pts = ring[None, :, :] + shift[:, None, :]
+    s0 = pts[:, :-1].reshape(-1, 2)
+    s1 = pts[:, 1:].reshape(-1, 2)
+    s_tgt = np.repeat(np.arange(n), ns)
+    probe = np.array([[0.0, 0.0], [1.0, 0.0], [5.0, 5.0], [0.1, 0.1],
+                      [-0.2, 0.3], [0.0, 2.0], [0.5, -0.5], [9.0, 0.0]])
+    px = (probe[None, :, 0] + shift[:, :1]).ravel()
+    py = (probe[None, :, 1] + shift[:, 1:]).ravel()
+    cnt = np.full(n, nv), np.full(n, ns)
+    sel = np.ones(n, dtype=bool)
+    tracemalloc.start()
+    try:
+        cls = algos._vec_classify_points(px, py, None, s0, s1, s_tgt,
+                                         cnt[0], cnt[1], sel, n)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert n * nv * ns >= 1_000_000
+    assert peak < 40 * 2 ** 20, peak
+    want = np.array([2, 1, 0, 2, 2, 0, 2, 0], dtype=np.int8)
+    np.testing.assert_array_equal(cls.reshape(n, nv), np.tile(want, (n, 1)))

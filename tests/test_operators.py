@@ -914,7 +914,7 @@ def test_dissolve_duplicate_heavy_dedupe_plan_matches(spark):
     and the exact pandas aggregates."""
     import numpy as np
 
-    from geopandas_spark.operators.dissolve import (_DUP_PROBE_CACHE,
+    from geopandas_spark.operators.dissolve import (_PLAN_CACHE,
                                                     _probe_duplication,
                                                     dissolve)
 
@@ -929,10 +929,10 @@ def test_dissolve_duplicate_heavy_dedupe_plan_matches(spark):
           .withColumn("geom", st.point("x", "y"))
           .drop("x", "y").repartition(8))
     assert _probe_duplication(df, ["g"], "geom") is True
-    _DUP_PROBE_CACHE.clear()
+    _PLAN_CACHE.clear()
     dup_plan = dissolve(df, "g", {"v": ["sum", "mean", "count"],
                                   "w": "min"})
-    _DUP_PROBE_CACHE.clear()
+    _PLAN_CACHE.clear()
     # low-duplication control: the probe must NOT fire on distinct rows
     distinct_df = df.dropDuplicates(["g", "geom"])
     assert _probe_duplication(distinct_df, ["g"], "geom") is False
@@ -1582,3 +1582,186 @@ def test_dissolve_plans_infer_eval_type_without_warning(points, boxes):
                      two_phase=two_phase)
     msgs = [str(w.message) for w in caught]
     assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs
+
+
+def _forced_dissolves(monkeypatch, df, by, aggfunc):
+    """{plan: dissolve output} for each of dissolve's three plans, forced
+    by patching its probes; each output's executed plan is checked to
+    have that plan's shape."""
+    import importlib
+
+    dmod = importlib.import_module("geopandas_spark.operators.dissolve")
+    out = {}
+    for plan, dup, two_phase in (("single", False, False),
+                                 ("two_phase", False, True),
+                                 ("dedupe", True, True)):
+        monkeypatch.setattr(dmod, "_probe_duplication",
+                            lambda *a, dup=dup: dup)
+        dmod._PLAN_CACHE.clear()
+        res = dmod.dissolve(df, by, aggfunc, two_phase=two_phase)
+        dmod._PLAN_CACHE.clear()
+        shape = res._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInArrow" in shape, (plan, shape)
+        assert "Pandas" not in shape, (plan, shape)
+        assert ("MapInArrow" in shape.replace("FlatMapGroupsInArrow", "")) \
+            == (plan == "two_phase"), (plan, shape)
+        out[plan] = res
+    return out
+
+
+def _nan_key(v):
+    return "NaN" if isinstance(v, float) and v != v else v
+
+
+def _nan_val(v):
+    """One value per missing result: NULL (NaN results come out NULL)."""
+    if v is None or (isinstance(v, float) and v != v):
+        return None
+    return float(v)
+
+
+def test_dissolve_plans_skip_nan_values_like_pandas(spark, monkeypatch):
+    """The dedupe plan's native partials skip NaN as pandas does: a NaN
+    value duplicated at one location must not turn the group's sum, mean
+    or max into NaN, nor count. Every plan equals the pandas groupby."""
+    nan = float("nan")
+    rows = [(1, v, x) for v, x in ((nan, 0.0), (5.0, 0.0), (1.0, 1.0))] * 4
+    df = (spark.createDataFrame(rows, "k long, v double, x double")
+          .withColumn("geom", st.point("x", "x")).drop("x").repartition(3))
+    fns = ["sum", "mean", "max", "min", "count"]
+    want = df.toPandas().groupby("k")["v"].agg(fns)
+    for plan, res in _forced_dissolves(monkeypatch, df, "k",
+                                       {"v": fns}).items():
+        got = {r.k: r for r in res.collect()}
+        assert set(got) == set(want.index), plan
+        for k, exp in want.iterrows():
+            for fn in fns:
+                assert got[k][f"v_{fn}"] == pytest.approx(exp[fn]), \
+                    (plan, fn, got[k], exp)
+
+
+def test_dissolve_plans_keep_spark_keys_and_pandas_values(spark,
+                                                           monkeypatch):
+    """Parity of the three dissolve plans on a NaN key, a NULL key, an
+    all-NULL attribute group, a NULL geometry and NaN/NULL values: the
+    output keys are df.groupBy(by)'s keys (NaN and NULL apart), each
+    aggregate is pandas' NaN-skipping value, and the union covers every
+    distinct non-NULL location of the group."""
+    import math
+
+    import pandas as pd
+
+    nan = float("nan")
+    raw = []      # (k, v, w, x) ; x None -> NULL geometry
+    for k, vals in ((1.0, [1.0, nan, 3.0, None]), (nan, [2.0, 4.0, nan]),
+                    (None, [7.0, None, 1.0]), (2.0, [None, None]),
+                    (3.0, [nan, nan, 5.0])):
+        for i, v in enumerate(vals):
+            w = None if v is None else i
+            for _ in range(3):                   # duplicated locations
+                raw.append((k, v, w, float(i % 2) if i != 1 else None))
+    df = (spark.createDataFrame(raw, "k double, v double, w long, x double")
+          .withColumn("geom", st.point("x", F.lit(0.0))).drop("x")
+          .repartition(4))
+    keys = {_nan_key(r.k) for r in df.groupBy("k").count().collect()}
+    fns = {"v": ["sum", "min", "max", "count", "mean"],
+           "w": ["sum", "min", "max", "count", "mean"]}
+    hol = {"v": ["median", "std", "var", "nunique",
+                 lambda s: float(s.count())]}
+    groups = {}
+    for k, v, w, x in raw:
+        g = groups.setdefault(_nan_key(k), ([], [], set()))
+        g[0].append(v)
+        g[1].append(w)
+        if x is not None:
+            g[2].add(x)
+
+    def want(col, fn, key):
+        s = pd.Series(groups[key][0 if col == "v" else 1], dtype=float)
+        return _nan_val(fn(s) if callable(fn) else getattr(s, fn)())
+
+    runs = dict(_forced_dissolves(monkeypatch, df, "k", fns))
+    runs["holistic"] = dissolve(df, "k", hol)
+    for plan, res in runs.items():
+        spec = hol if plan == "holistic" else fns
+        got = {_nan_key(r.k): r for r in res.withColumn(
+            "n", st.ngeometries("geom")).collect()}
+        assert set(got) == keys == set(groups), plan
+        for key, r in got.items():
+            assert (r.n or 0) == len(groups[key][2]), (plan, key, r)
+            for col, fl in spec.items():
+                for fn in fl:
+                    name = f"{col}_agg" if callable(fn) else f"{col}_{fn}"
+                    exp, val = want(col, fn, key), _nan_val(r[name])
+                    assert (exp is None and val is None) or (
+                        exp is not None and val is not None
+                        and math.isclose(val, exp, rel_tol=1e-12)), \
+                        (plan, key, name, val, exp)
+
+
+_PASS_DDL = ("id long, layer string, d double, s struct<a:double,b:string>,"
+             " ts timestamp, dec decimal(10,2), arr array<double>,"
+             " m map<string,double>")
+
+
+def _pass_through_rows():
+    import datetime as dt
+    from decimal import Decimal
+
+    nan = float("nan")
+    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
+    return [
+        (0, "a", nan, (nan, "x"), t0, Decimal("1.25"), [1.0, None],
+         {"p": nan}),
+        (1, "a", None, (None, None), None, None, None, None),
+        (2, "b", -0.0, (2.5, "y"), t0, Decimal("-3.10"), [nan, None, 2.0],
+         {"q": None, "r": 1.5}),
+        (3, "b", 4.5, None, t0, Decimal("99999999.99"), [], {}),
+    ]
+
+
+def _assert_passes_through(inp, out, own):
+    """``out`` has ``inp``'s rows and fields, apart from column ``own``,
+    with NaN and NULL (and -0.0) values as they went in."""
+    keep = [f for f in out.schema.fields if f.name != own]
+    assert keep == [f for f in inp.schema.fields if f.name != own]
+    cols = [f.name for f in keep]
+    # repr tells NaN, NULL and -0.0 apart, also inside structs and maps
+    want = sorted(repr(r) for r in inp.select(*cols).collect())
+    got = sorted(repr(r) for r in out.select(*cols).collect())
+    assert got == want
+
+
+def test_coverage_ops_pass_columns_through_bit_exact(spark):
+    """simplify_coverage and invalid_coverage_edges hand every column but
+    their own back unchanged: NaN stays NaN and NULL stays NULL at the
+    top level and inside struct, array and map values."""
+    from geopandas_spark.geom import wkb as wkbmod, wkt as wktmod
+    from geopandas_spark.operators import (invalid_coverage_edges,
+                                           simplify_coverage)
+
+    boxes = ["POLYGON ((0 0, 2 0, 2.1 1, 2 2, 0 2, 0 0))",
+             "POLYGON ((2 0, 4 0, 4 2, 2 2, 2.1 1, 2 0))",
+             "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))",
+             "POLYGON ((1 0, 3 0, 3 2, 1 2, 1 0))"]
+    geoms = wkbmod.encode(wktmod.parse_array(boxes))
+    df = spark.createDataFrame(
+        [r + (g,) for r, g in zip(_pass_through_rows(), geoms)],
+        _PASS_DDL + ", geom binary")
+    _assert_passes_through(df, simplify_coverage(df, 0.5, "layer"), "geom")
+    _assert_passes_through(df, invalid_coverage_edges(df, "layer"),
+                           "invalid_edges")
+
+
+def test_geocoding_passes_columns_through_bit_exact(spark):
+    """geocode and reverse_geocode hand every column but their output
+    column back unchanged, NaN and NULL values included."""
+    from geopandas_spark.operators.geocoding import geocode, reverse_geocode
+
+    df = spark.createDataFrame(
+        [r + (a,) for r, a in zip(_pass_through_rows(),
+                                   ["1 Main St", None, "2 High St", "x"])],
+        _PASS_DDL + ", address string")
+    g = geocode(df)
+    _assert_passes_through(df, g, "geom")
+    _assert_passes_through(g, reverse_geocode(g), "address")

@@ -31,9 +31,17 @@ def _write_input(spark, path):
 
 
 def _run(stream_df, name, mode="append"):
+    """Run an availableNow query to its end: it stops by itself once
+    every input file is processed, so the sink is complete when this
+    returns. A failed query raises; a query still running after 30 min
+    is stopped and raises rather than leaving a half-drained sink."""
     q = (stream_df.writeStream.format("memory").queryName(name)
          .outputMode(mode).trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    if not q.awaitTermination(1800):
+        q.stop()
+        raise TimeoutError(f"streaming query {name} did not finish")
+    if q.exception() is not None:
+        raise q.exception()
     return q
 
 

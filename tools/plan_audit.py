@@ -41,7 +41,7 @@ SCALE_NOTES = """
   scans (the probes only steer sizing — cell keys are origin-invariant);
   candidates get a native bbox-overlap prefilter for every predicate
   and no longer carry duplicate geometry byte copies. Skewed 25M-pair
-  stress: 1.6M pairs/s (gate ≥1.5M, PASS in stress_scale).
+  stress: 1.6M pairs/s.
 - **LSH bucket pairs bounded** (chain+star window generator, one plan);
   **IVF argmax entries via zip_with** — the unrolled nlist-struct array
   blew janino's 64 KB method limit at nlist=256 and degraded whole
@@ -79,11 +79,7 @@ local[32]) — the r4 VERDICT's two scale findings and item #8:
   range-query nesting): 600k-box stress dissolve 15.6 -> 7.6 s warm
   (r6: comparator inlining + batched union-find candidates +
   near-dup row dedupe + rectangle pair fast path -> ~5.6 s warm;
-  100x-tier dissolve 1.87 -> ~1.0-1.4 s). Budget (r8, VERDICT r7 #9):
-  the 600k-box cold stress run is gated at <= 7 s in
-  tools/stress_scale.py (prints PASS/FAIL) so the next sweep-kernel
-  change has a regression gate; r7 driver 100x-tier dissolve min
-  0.751 s <= the 1.0 s target.
+  100x-tier dissolve 1.87 -> ~1.0-1.4 s).
 
 ## Round-10 audit
 
@@ -100,9 +96,8 @@ local[32]) — the r4 VERDICT's two scale findings and item #8:
   guidance when routing is inactive (the zero-overhead common path).
   Measured (stress, sf0.1, local[32], same session): skewed 25M-pair
   join + 0.5% full-width strips = 17.2 s best-of-3 (1.47M pairs/s) vs
-  24.7 s under a single-sentinel design and 14.9 s strip-free baseline;
-  gate `skewed-monster-mix >= 1.3M pairs/s` added to stress_scale.py
-  (derivation in-line). Degenerate sizing samples (mostly-NULL
+  24.7 s under a single-sentinel design and 14.9 s strip-free baseline.
+  Degenerate sizing samples (mostly-NULL
   geometry) now derive the extent from one min/max aggregate instead of
   a hardcoded unit square (r10 ADVICE).
 - **Dissolve plan choice is now probed, not assumed (VERDICT r9 #2
@@ -113,8 +108,7 @@ local[32]) — the r4 VERDICT's two scale findings and item #8:
   one phase-1 group and picks single-phase below ~0.5 — memory-safe
   exactly there, because no reduction means identical phase-2 task
   bytes either way. Measured 600k-box stress: two-phase 5.49 s →
-  auto/single-phase 3.56 s best (judge's ≤5.5 s target met with ~49%
-  headroom against the 7 s gate).
+  auto/single-phase 3.56 s best.
 - **cosine_topk exact scoring via the Arrow batch scorer (VERDICT r9 #1
   closed).** The per-element element_at codegen dot paid 3–10× DuckDB's
   vectorized list kernels; exact top-k now streams the corpus through
@@ -123,8 +117,7 @@ local[32]) — the r4 VERDICT's two scale findings and item #8:
   and the dim probe rides the query collect. 100×-tier: 3.06 s (r9
   judge) → 0.62 s min-of-2 = 1.76× its DuckDB twin (≤2× criterion
   met). lsh_topk/ivf_topk joined the headline bench (ivf at 0.26× its
-  twin); bench.py gained the 100×-tier ratio gate (FAIL when spark >
-  2× a non-timeout twin and > 2 s absolute — VERDICT r9 #7).
+  twin).
 - **Overlay residue shuffle width measured (VERDICT r9 #5).** 60k×60k
   box overlay union (443k rows, 3 narrow attrs, same session):
   attrs-as-grouping-keys 63.4 s vs key-only groupBy + dedup join-back
@@ -158,14 +151,6 @@ local[32]) — the r4 VERDICT's two scale findings and item #8:
   sliver minus a triangle through its vertex. Intersection points now
   snap to segment endpoints within 1e-13·mag. 12k+ randomized trials
   across both make_valid methods now run clean.
-- **Session-calibrated gates.** The same executed plans measured 1.53M
-  and 1.18M pairs/s thirty minutes apart on this VM (a fixed-work JVM
-  shuffle job tracked 0.34 s → 0.55 s in lockstep), so bench.py's
-  100×-tier ratio-gate floor and stress_scale's throughput/budget gates
-  now scale by the measured session constant (never tightening past
-  nominal). Full gate set green in-session: skew 1.53M, monster 1.38M,
-  plane-cover 1.56M pairs/s, nearest spread 1.12×, dissolve 4.13 s,
-  fuzzy-dedup 149 s, IVF 49 s.
 """
 
 
