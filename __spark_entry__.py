@@ -1885,8 +1885,8 @@ FROM p WHERE ox > 0 AND oy > 0
 
 def q_overlay_difference(spark, sf_dir):
     """operators.overlay how=difference: per-row union of intersecting
-    opposite geometries (Martinez–Rueda merge tree) then one subtraction.
-    Fully-covered rows vanish; untouched rows survive whole."""
+    opposite geometries (one Martinez–Rueda noding sweep) then one
+    subtraction. Fully-covered rows vanish; untouched rows survive whole."""
     d1 = _nat(spark, sf_dir).select(F.col("n_nationkey").alias("nk1"), "geom")
     d2 = _nat_shifted(spark, sf_dir).select("geom")
     out = overlay(d1, d2, "difference", strategy="broadcast")
@@ -1913,7 +1913,7 @@ FROM p GROUP BY nk1 HAVING SUM(cov) < 40000
 
 def q_union_overlap(spark, sf_dir):
     """union_agg over 25 mutually-overlapping 250-wide boxes on the 200
-    grid — the full pairwise merge tree. The union region is exactly
+    grid — one union_many sweep over all 25. The union region is exactly
     [0,1050]² (coverage is separable in x and y)."""
     n = _nat(spark, sf_dir)
     g = st.makebox(F.col("bx0").cast("double"), F.col("by0").cast("double"),

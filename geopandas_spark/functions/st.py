@@ -696,9 +696,10 @@ def _union_agg_grid(s, grid):
 @_udf("st_union_agg", BinaryType(), "a", agg=True)
 def _union_agg(s):
     """Geometric union of a group (GROUPED_AGG). Point sets dedupe;
-    disjoint polygons collect; overlapping polygons run the Martinez–Rueda
-    merge tree (geom/clipping.py). For scale, prefer operators.dissolve
-    which runs a two-phase partial union."""
+    disjoint polygons collect; overlapping polygons are unioned in one
+    Martinez–Rueda noding sweep (geom/clipping.py ``union_many``). For
+    scale, prefer operators.dissolve which runs a two-phase partial
+    union."""
     return algos.union_all(wkb.decode(s))
 
 

@@ -3131,20 +3131,42 @@ def _seg_rect(p0, p1, d):
                      [p0[0] + nx, p0[1] + ny]])
 
 
-def _union_ring_sets(items):
-    """Pairwise Martinez–Rueda merge tree over flat even-odd ring sets."""
-    items = [it for it in items if it]
-    if not items:
+def _union_polys(polys):
+    """Union of oriented polygons (each ``[shell(CCW), hole(CW), ...]``,
+    closed rings) in one ``clipping.union_many`` sweep. If the sweep
+    raises ``ValueError`` or returns nothing, the pairwise Martinez–Rueda
+    tree over the byte-distinct operands gives the result; that tree is
+    also the reference the union cross-check tests force (by patching
+    ``union_many`` to raise)."""
+    if not polys:
         return []
+    try:
+        out = _mr.union_many(polys)
+        if out:
+            return out
+    except ValueError:
+        pass
+    # byte-identical operands add nothing to a union, and stacked copies
+    # cascaded through the tree leave near-parallel fragments the probe
+    # tracer cannot separate (union_many dedupes its directed segments)
+    items = list({b"".join(r.tobytes() for r in p): p
+                  for p in polys}.values())
     while len(items) > 1:
         nxt = []
         for k in range(0, len(items) - 1, 2):
-            polys = _mr.boolean_op(items[k], items[k + 1], _mr.UNION)
-            nxt.append([r for poly in polys for r in poly])
+            res = _mr.boolean_op(items[k], items[k + 1], _mr.UNION)
+            nxt.append([r for poly in res for r in poly])
         if len(items) % 2:
             nxt.append(items[-1])
         items = nxt
     return _mr.assemble_rings(items[0])
+
+
+def _union_ring_sets(items):
+    """Union of flat even-odd ring sets: each is nested into oriented
+    polygons, then all go through one ``_union_polys``."""
+    return _union_polys([poly for it in items if it
+                         for poly in _mr.assemble_rings(it)])
 
 
 def _dilation_rings(parts, d, nseg):
@@ -3305,7 +3327,7 @@ def buffer(ga: GeometryArray, dist, quad_segs: int = 16,
     and translated back.  The Minkowski/offset constructions intersect
     irrational arc chords with polygon edges; at web-mercator
     magnitudes those crossings land within an ULP (~1e-8) of each
-    other and the merge tree mis-assembles (r8 translate-invariance
+    other and the union mis-assembles (r8 translate-invariance
     fuzz find: buffer(+1) at |x| ≈ 6.7e7 returned HALF the area).
     Integer shifts keep small-coordinate rows bit-identical (they skip
     the wrapper entirely) and cost one add per coordinate otherwise."""
@@ -3349,8 +3371,8 @@ def _buffer_impl(ga: GeometryArray, dist, quad_segs: int = 16,
     Fast paths: points (regular 4*quad_segs-gon), single convex rings,
     negative buffer of axis-aligned boxes. General path (any polygon /
     line, positive d): Minkowski decomposition — union of the geometry
-    with per-segment rectangles and per-vertex disks via the
-    Martinez–Rueda merge tree. General negative d: erosion as
+    with per-segment rectangles and per-vertex disks in one
+    ``_union_polys`` sweep. General negative d: erosion as
     A − dilation(boundary(A), |d|), the set-theoretic identity
     A ⊖ D = A − (∂A ⊕ D). Round joins are polygonized (full 4*quad_segs
     circle per vertex) — areas agree with GEOS to the same chord error,
@@ -5336,13 +5358,72 @@ def _lineal_union(ga: GeometryArray, idx) -> GeometryArray:
     return b.finish()
 
 
+def _bbox_pairs(bb, cap):
+    """Index pairs ``(i, j)`` of the boxes in ``bb`` (rows minx, miny,
+    maxx, maxy) that overlap or touch, from one x-sorted sweep; None
+    once more than ``cap`` pairs are found.
+
+    The sweep is batched: one searchsorted for all x-windows, one
+    flattened candidate build and one y-mask (a per-box searchsorted +
+    nonzero loop was ~25% of a 30k-box union). A dense input, whose
+    x-windows total more than 8M candidates, takes the early-exiting
+    per-box loop instead of a quadratic candidate array."""
+    n = len(bb)
+    order = np.argsort(bb[:, 0], kind="stable")
+    x0, x1 = bb[order, 0], bb[order, 2]
+    y0, y1 = bb[order, 1], bb[order, 3]
+    his = np.searchsorted(x0, x1, side="right")
+    cnt = his - np.arange(1, n + 1)
+    np.maximum(cnt, 0, out=cnt)
+    tot = int(cnt.sum())
+    if tot <= 8_000_000:
+        aa = np.repeat(np.arange(n), cnt)
+        cc = (np.arange(tot, dtype=np.int64)
+              - np.repeat(np.cumsum(cnt) - cnt, cnt)) + aa + 1
+        m = (y0[cc] <= y1[aa]) & (y1[cc] >= y0[aa])
+        if int(m.sum()) > cap:
+            return None
+        return list(zip(order[aa[m]].tolist(), order[cc[m]].tolist()))
+    pairs = []
+    for a in range(n):
+        hi = his[a]
+        if hi <= a + 1:
+            continue
+        cand = np.nonzero((y0[a + 1:hi] <= y1[a]) &
+                          (y1[a + 1:hi] >= y0[a]))[0]
+        pairs.extend((int(order[a]), int(order[a + 1 + c])) for c in cand)
+        if len(pairs) > cap:
+            return None
+    return pairs
+
+
+def _components(n, pairs):
+    """Union-find over ``n`` items joined by ``pairs``: the root of each
+    item's component."""
+    uf = list(range(n))
+
+    def find(a):
+        root = a
+        while uf[root] != root:
+            root = uf[root]
+        while uf[a] != root:
+            uf[a], a = root, uf[a]
+        return root
+
+    for a, c in pairs:
+        ra, rc = find(a), find(c)
+        if ra != rc:
+            uf[rc] = ra
+    return [find(a) for a in range(n)]
+
+
 def union_all(ga: GeometryArray, method: str = "unary") -> GeometryArray:
     """Union of all rows (reference: geopandas/base.py:2500-2553).
 
     Point sets: coordinate dedupe. Pairwise-disjoint polygons/lines: plain
-    collect (matches GEOS). Overlapping polygons: Martinez–Rueda pairwise
-    merge tree (associative → same result as GEOS's cascaded union up to
-    ring ordering).
+    collect (matches GEOS). Overlapping polygons: the parts of every
+    interacting component go through one ``_union_polys`` sweep (same
+    result as GEOS's cascaded union up to ring ordering).
 
     ``method`` mirrors the reference (array.py:1002-1019): "coverage"
     takes the O(E log E) edge-cancellation fast path for edge-matched
@@ -5490,107 +5571,54 @@ def union_all(ga: GeometryArray, method: str = "unary") -> GeometryArray:
                 idx = [int(v) for v in ii0[keep]]
                 dropped_dups = True
     n = len(idx)
-    uf = list(range(n))
-
-    def find(a):
-        root = a
-        while uf[root] != root:
-            root = uf[root]
-        while uf[a] != root:
-            uf[a], a = root, uf[a]
-        return root
-
-    pairs = []
     PAIR_CAP = 500_000
-    row_cap = False
-    if n > 1:
-        ii = np.asarray(idx)
-        order = np.argsort(bb[ii, 0], kind="stable")
-        x0, x1 = bb[ii[order], 0], bb[ii[order], 2]
-        y0, y1 = bb[ii[order], 1], bb[ii[order], 3]
-        # batch the x-sweep: one searchsorted for ALL windows, then one
-        # flattened repeat/arange candidate build + one y-mask (the per-a
-        # searchsorted + nonzero loop was ~25% of a 30k-box union).
-        # Guarded by total x-window size: a dense regime falls back to
-        # the early-exiting scalar loop rather than materializing a
-        # quadratic candidate array.
-        his = np.searchsorted(x0, x1, side="right")
-        cnt = his - np.arange(1, n + 1)
-        np.maximum(cnt, 0, out=cnt)
-        tot = int(cnt.sum())
-        if tot <= 8_000_000:
-            aa = np.repeat(np.arange(n), cnt)
-            cc = (np.arange(tot, dtype=np.int64)
-                  - np.repeat(np.cumsum(cnt) - cnt, cnt)) + aa + 1
-            m = (y0[cc] <= y1[aa]) & (y1[cc] >= y0[aa])
-            aa, cc = aa[m], cc[m]
-            oa, oc = order[aa], order[cc]
-            pairs = list(zip(oa.tolist(), oc.tolist()))
-        else:
-            for a in range(n):
-                hi = his[a]
-                if hi <= a + 1:
-                    continue
-                cand = np.nonzero((y0[a + 1:hi] <= y1[a]) &
-                                  (y1[a + 1:hi] >= y0[a]))[0]
-                for c in cand:
-                    pairs.append((int(order[a]), int(order[a + 1 + c])))
-                if len(pairs) > PAIR_CAP:
-                    break
-        if len(pairs) > PAIR_CAP:
-            # dense regime: one global component (conservative, correct)
-            row_cap = True
-            for a in range(1, n):
-                uf[a] = 0
-            pairs = [(0, 1)] if n > 1 else []
-        else:
-            # small inputs: exact per-pair test keeps the passthrough set
-            # maximal (bbox overlap without true intersection stays
-            # disjoint, preserving the reference's collect semantics).
-            # Beyond the cap the per-pair Python tests cost more than the
-            # extra MR work they would avoid (measured on 8k dense boxes:
-            # 29k exact tests ≈ +6 s vs ~0 saved) — bbox components are
-            # conservative but correct.
-            if len(pairs) <= 2_000:
-                # per-pair exact test cost scales with the coord-count
-                # product; two multi-hundred-part MultiPolygon rows per
-                # pair (dissolve partials) took minutes for ~500 pairs —
-                # heavy pairs stay conservatively joined instead
-                cpg = ga.coords_per_geom()
-                co_g = ga.coord_offsets_per_geom()
-                rpg_g = ga.rings_per_geom()
-                C_g = ga.coords
-                rect_cache = {}
+    pairs = (_bbox_pairs(bb[np.asarray(idx, dtype=np.int64)], PAIR_CAP)
+             if n > 1 else [])
+    if pairs is None:
+        # dense regime: one global component (conservative, correct)
+        pairs = [(0, a) for a in range(1, n)]
+    elif len(pairs) <= 2_000:
+        # small inputs: exact per-pair test keeps the passthrough set
+        # maximal (bbox overlap without true intersection stays
+        # disjoint, preserving the reference's collect semantics).
+        # Beyond the cap the per-pair Python tests cost more than the
+        # extra MR work they would avoid (measured on 8k dense boxes:
+        # 29k exact tests ≈ +6 s vs ~0 saved) — bbox components are
+        # conservative but correct. The per-pair exact test cost scales
+        # with the coord-count product; two multi-hundred-part
+        # MultiPolygon rows per pair (dissolve partials) took minutes
+        # for ~500 pairs — heavy pairs stay conservatively joined instead
+        cpg = ga.coords_per_geom()
+        co_g = ga.coord_offsets_per_geom()
+        rpg_g = ga.rings_per_geom()
+        C_g = ga.coords
+        rect_cache = {}
 
-                def _isrect(gi):
-                    # geometry == its own bbox (axis-aligned rectangle):
-                    # the already-verified bbox overlap IS the exact
-                    # intersection test, so skip _pair_intersects — the
-                    # dissolve merge phase is wall-to-wall boxes and the
-                    # exact filter was ~half its union_all time
-                    v = rect_cache.get(gi)
-                    if v is None:
-                        v = False
-                        if cpg[gi] == 5 and rpg_g[gi] == 1:
-                            c5 = C_g[co_g[gi]:co_g[gi] + 5]
-                            bx = bb[gi]
-                            if (c5[0, 0] == c5[4, 0] and
-                                    c5[0, 1] == c5[4, 1]):
-                                pts = {(c5[k, 0], c5[k, 1])
-                                       for k in range(4)}
-                                v = pts == {(bx[0], bx[1]), (bx[2], bx[1]),
-                                            (bx[2], bx[3]), (bx[0], bx[3])}
-                        rect_cache[gi] = v
-                    return v
+        def _isrect(gi):
+            # geometry == its own bbox (axis-aligned rectangle):
+            # the already-verified bbox overlap IS the exact
+            # intersection test, so skip _pair_intersects — the
+            # dissolve merge phase is wall-to-wall boxes and the
+            # exact filter was ~half its union_all time
+            v = rect_cache.get(gi)
+            if v is None:
+                v = False
+                if cpg[gi] == 5 and rpg_g[gi] == 1:
+                    c5 = C_g[co_g[gi]:co_g[gi] + 5]
+                    bx = bb[gi]
+                    if (c5[0, 0] == c5[4, 0] and
+                            c5[0, 1] == c5[4, 1]):
+                        pts = {(c5[k, 0], c5[k, 1])
+                               for k in range(4)}
+                        v = pts == {(bx[0], bx[1]), (bx[2], bx[1]),
+                                    (bx[2], bx[3]), (bx[0], bx[3])}
+                rect_cache[gi] = v
+            return v
 
-                pairs = [(a, c) for a, c in pairs
-                         if cpg[idx[a]] * cpg[idx[c]] > 250_000
-                         or (_isrect(idx[a]) and _isrect(idx[c]))
-                         or _pair_intersects(ga, idx[a], ga, idx[c])]
-            for a, c in pairs:
-                ra, rc = find(a), find(c)
-                if ra != rc:
-                    uf[rc] = ra
+        pairs = [(a, c) for a, c in pairs
+                 if cpg[idx[a]] * cpg[idx[c]] > 250_000
+                 or (_isrect(idx[a]) and _isrect(idx[c]))
+                 or _pair_intersects(ga, idx[a], ga, idx[c])]
     if not pairs:
         # after a dedupe, collect only the surviving rows — collect(ga)
         # would resurrect the dropped duplicates; a single survivor
@@ -5617,12 +5645,9 @@ def union_all(ga: GeometryArray, method: str = "unary") -> GeometryArray:
     # seam parts. Union semantics are unchanged (union of parts = union
     # of rows); parts of a self-overlapping row resolve against each
     # other, matching GEOS unary_union.
-    if row_cap:
-        involved = np.ones(n, dtype=bool)
-    else:
-        involved = np.zeros(n, dtype=bool)
-        for a, c in pairs:
-            involved[a] = involved[c] = True
+    involved = np.zeros(n, dtype=bool)
+    for a, c in pairs:
+        involved[a] = involved[c] = True
     parts = []      # oriented closed ring-lists, one per involved part
     prow_of = []    # originating row position (ascending)
     pb_list = []
@@ -5649,128 +5674,33 @@ def union_all(ga: GeometryArray, method: str = "unary") -> GeometryArray:
                             max(r[:, 1].max() for r in rings)))
     m = len(parts)
     pb = np.asarray(pb_list, dtype=np.float64).reshape(m, 4)
-    pcomps = {}
     multipart = m and bool(
         (ga.parts_per_geom()[np.asarray(idx)[involved]] > 1).any())
     if not multipart:
         # every involved row is a single polygon: parts ↔ rows 1:1, so the
-        # row-level union-find already IS the part component structure —
-        # skip the redundant second bbox sweep (the dissolve merge phase
-        # explodes partials with get_parts before union_all, landing here)
-        for p in range(m):
-            pcomps.setdefault(find(prow_of[p]), []).append(p)
+        # row-level components already ARE the part components — skip
+        # the second bbox sweep (the dissolve merge phase explodes
+        # partials with get_parts before union_all, landing here)
+        root = _components(n, pairs)
+        proot = [root[a] for a in prow_of]
     else:
-        puf = list(range(m))
-
-        def pfind(a):
-            root = a
-            while puf[root] != root:
-                root = puf[root]
-            while puf[a] != root:
-                puf[a], a = root, puf[a]
-            return root
-
-        porder = np.argsort(pb[:, 0], kind="stable")
-        px0, px1 = pb[porder, 0], pb[porder, 2]
-        py0, py1 = pb[porder, 1], pb[porder, 3]
-        npairs = 0
-        for a in range(m):
-            hi = np.searchsorted(px0, px1[a], side="right")
-            if hi <= a + 1:
-                continue
-            cand = np.nonzero((py0[a + 1:hi] <= py1[a]) &
-                              (py1[a + 1:hi] >= py0[a]))[0]
-            for c in cand:
-                ra, rc = pfind(int(porder[a])), pfind(int(porder[a + 1 + c]))
-                if ra != rc:
-                    puf[rc] = ra
-            npairs += len(cand)
-            if npairs > PAIR_CAP:
-                for k in range(1, m):
-                    puf[k] = 0
-                break
-        for p in range(m):
-            pcomps.setdefault(pfind(p), []).append(p)
+        ppairs = _bbox_pairs(pb, PAIR_CAP)
+        if ppairs is None:
+            ppairs = [(0, k) for k in range(1, m)]
+        proot = _components(m, ppairs)
+    pcomps = {}
+    for p in range(m):
+        pcomps.setdefault(proot[p], []).append(p)
     single_parts = {v[0] for v in pcomps.values() if len(v) == 1}
     multi_comps = sorted((v for v in pcomps.values() if len(v) > 1),
                          key=lambda v: min(v))
 
-    def _merge_parts(comp):
-        """One-sweep N-way union of a part component (Martinez–Rueda
-        noding + winding probe, clipping.union_many) — O((E+I) log E)
-        for the whole component instead of the pairwise tree's
-        O(tree-levels × E) re-sweeps. The pairwise Morton-ordered merge
-        tree remains as the fallback for the rare degenerate sweeps
-        union_many still rejects (empty result / internal ValueError).
-        Byte-identical duplicate parts contribute nothing to a union and
-        are the main trigger of near-parallel cascade fragments the probe
-        tracer can't separate — the fallback drops them first (union_many
-        itself dedupes identical directed segments up front and is
-        immune)."""
-        try:
-            out = _mr.union_many([parts[p] for p in comp])
-            if out:
-                return out
-        except ValueError:
-            pass
-        seen_keys = set()
-        uniq = []
-        for p in comp:
-            key = b"".join(r.tobytes() for r in parts[p])
-            if key in seen_keys:
-                continue
-            seen_keys.add(key)
-            uniq.append(p)
-        if len(uniq) == 1:
-            return [parts[uniq[0]]]
-        if len(uniq) > 2:
-            ua = np.asarray(uniq)
-            cxs = (pb[ua, 0] + pb[ua, 2]) * 0.5
-            cys = (pb[ua, 1] + pb[ua, 3]) * 0.5
-            qx = np.clip(((cxs - cxs.min()) /
-                          max(cxs.max() - cxs.min(), 1e-300) *
-                          65535).astype(np.int64), 0, 65535)
-            qy = np.clip(((cys - cys.min()) /
-                          max(cys.max() - cys.min(), 1e-300) *
-                          65535).astype(np.int64), 0, 65535)
-            code = np.zeros(len(ua), dtype=np.int64)
-            for bit in range(16):
-                code |= ((qx >> bit) & 1) << (2 * bit)
-                code |= ((qy >> bit) & 1) << (2 * bit + 1)
-            uniq = [uniq[k] for k in np.argsort(code, kind="stable")]
-        items = [parts[p] for p in uniq]
-        while len(items) > 1:
-            nxt = []
-            for k in range(0, len(items) - 1, 2):
-                polys = _mr.boolean_op(items[k], items[k + 1], _mr.UNION)
-                nxt.append([r for poly in polys for r in poly])
-            if len(items) % 2:
-                nxt.append(items[-1])
-            items = nxt
-        return _mr.assemble_rings(items[0])
-
-    # ONE global sweep across every interacting part component:
-    # components are mutually disjoint, so union_many resolves them all
-    # in a single noding pass. The per-call setup (event stream, segment
-    # index, trace, winding probe) dominated the former per-component
-    # loop on sparse many-component inputs — 24k stress boxes form ~10k
-    # 2-3-member components, and 10k× setup was ~90% of a 9.3 s union.
-    # Degenerate sweeps fall back to the per-component path (which
-    # itself falls back to the pairwise merge tree).
-    merged = None
-    if multi_comps:
-        if len(multi_comps) > 1:
-            try:
-                merged = _mr.union_many(
-                    [parts[p] for comp in multi_comps for p in comp])
-            except ValueError:
-                merged = None
-            if not merged:
-                merged = None
-        if merged is None:
-            merged = []
-            for comp in multi_comps:
-                merged.extend(_merge_parts(comp))
+    # ONE sweep across every interacting part component: components are
+    # mutually disjoint, so union_many resolves them all in a single
+    # noding pass (per-component calls paid the event stream, segment
+    # index and trace setup once per component — ~90% of a 9.3 s union
+    # of 24k boxes in ~10k 2-3-member components)
+    merged = _union_polys([parts[p] for comp in multi_comps for p in comp])
 
     all_polys = []
     pi = 0
@@ -7600,44 +7530,27 @@ def make_valid(ga: GeometryArray, method: str = "linework") -> GeometryArray:
             continue
         # structure: union of repaired shells minus union of repaired holes
 
-        def _dissolve_face_tiling(faces):
-            # one ring's repaired faces jointly cover its enclosed
-            # region, mostly as edge-adjacent tiles but sometimes
-            # OVERLAPPING (a pinch-touching island lobe walks as its
-            # own face AND sits inside the big face's ring — r10
-            # enclosed-region oracle find), so a true boolean union is
-            # required; handing the raw faces to the nesting assembler
-            # misread an edge-adjacent tile as a hole, and a coverage
-            # dissolve double-counted the overlapping lobe. The
-            # enclosed region is hole-free by construction (every
-            # bounded face is enclosed), so the result flattens back
-            # to plain shell rings.
-            if len(faces) <= 1:
-                return faces
-            acc = [_mr._close(faces[0])]
-            for f in faces[1:]:
-                acc = [r for poly in _mr.boolean_op(
-                    acc, [_mr._close(f)], _mr.UNION) for r in poly]
-            return acc
+        def _union_sets(sets):
+            # the union of even-odd ring sets, flattened to one ring set
+            if len(sets) <= 1:
+                return sets[0] if sets else []
+            return [r for poly in _union_ring_sets(sets) for r in poly]
 
+        # one ring's repaired faces jointly cover its enclosed region,
+        # mostly as edge-adjacent tiles but sometimes OVERLAPPING (a
+        # pinch-touching island lobe walks as its own face AND sits
+        # inside the big face's ring — r10 enclosed-region oracle find),
+        # so a true boolean union is required; handing the raw faces to
+        # the nesting assembler misread an edge-adjacent tile as a hole,
+        # and a coverage dissolve double-counted the overlapping lobe.
+        # The enclosed region is hole-free by construction (every
+        # bounded face is enclosed), so the union is plain shell rings.
         shell_sets, hole_sets = [], []
         for p in ga.geom_slices(i):
-            sh = _dissolve_face_tiling(_repair_ring_faces(p[0]))
-            if sh:
-                shell_sets.append(sh)
-            for h in p[1:]:
-                hf = _dissolve_face_tiling(_repair_ring_faces(h))
-                if hf:
-                    hole_sets.append(hf)
-
-        def _union_sets(sets):
-            if not sets:
-                return []
-            acc = sets[0]
-            for nxt in sets[1:]:
-                acc = [r for poly in _mr.boolean_op(acc, nxt, _mr.UNION)
-                       for r in poly]
-            return acc
+            for k, ring in enumerate(p):
+                faces = _union_sets([[f] for f in _repair_ring_faces(ring)])
+                if faces:
+                    (hole_sets if k else shell_sets).append(faces)
 
         shells = _union_sets(shell_sets)
         holes = _union_sets(hole_sets)

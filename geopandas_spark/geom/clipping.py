@@ -5,7 +5,10 @@ Clean-room implementation of the Martinez–Rueda–Feito sweep-line algorithm
 Geosciences 35, 2009) — the same algorithm family GEOS uses for overlay.
 Chosen over Greiner–Hormann because it handles the degenerate cases our
 integer-grid fixtures are full of: shared edges, vertex-on-edge touching,
-identical rings.
+identical rings. The sweep is used only as a noder (``_node``, shared by
+``boolean_op`` and the N-way ``union_many``): membership probes against
+the inputs pick and orient the result's edges (``_trace_result``), so the
+paper's per-edge in/out flags are not kept.
 
 This is the per-pair slow path used inside Arrow-batched pandas UDFs; the
 vectorized bbox prefilter in callers (algos.intersection / operators.overlay)
@@ -34,46 +37,15 @@ UNION = 1
 DIFFERENCE = 2
 XOR = 3
 
-# edge annotation types
-NORMAL = 0
-NON_CONTRIBUTING = 1
-SAME_TRANSITION = 2
-DIFFERENT_TRANSITION = 3
-
-
-def _signed_area(p0, p1, p2) -> float:
-    return (p0[0] - p2[0]) * (p1[1] - p2[1]) - (p1[0] - p2[0]) * (p0[1] - p2[1])
-
 
 class _SweepEvent:
-    __slots__ = ("point", "left", "other", "is_subject", "type",
-                 "in_out", "other_in_out", "in_result", "pos")
+    __slots__ = ("point", "left", "other", "is_subject")
 
     def __init__(self, point, left, other, is_subject):
         self.point = point
         self.left = left
         self.other = other
         self.is_subject = is_subject
-        self.type = NORMAL
-        self.in_out = False
-        self.other_in_out = False
-        self.in_result = False
-        self.pos = -1
-
-    def is_below(self, p) -> bool:
-        # inlined _signed_area (hot: status comparisons + result flags);
-        # the not-left case is the exact negation of the left case (same
-        # two products, reversed subtraction), so one expression serves
-        sp, op = self.point, self.other.point
-        px, py = p[0], p[1]
-        sa = (sp[0] - px) * (op[1] - py) - (op[0] - px) * (sp[1] - py)
-        return sa > 0 if self.left else sa < 0
-
-    def is_above(self, p) -> bool:
-        return not self.is_below(p)
-
-    def is_vertical(self) -> bool:
-        return self.point[0] == self.other.point[0]
 
     def __lt__(self, o) -> bool:  # heapq ordering
         return _compare_events(self, o) < 0
@@ -85,9 +57,8 @@ def _compare_events(e1, e2) -> int:
     polygon id int (union_many) — higher sorts first either way, matching
     the original subject-before-clipping boolean behavior.
 
-    _signed_area / is_below are inlined (hot path: every queue pop and
-    status probe funnels here); arithmetic order is identical, so the
-    results are bit-exact vs the original."""
+    The signed-area test "e1 lies below e2.other.point" is inlined (hot
+    path: every queue pop and status probe funnels here)."""
     p1, p2 = e1.point, e2.point
     x1, x2 = p1[0], p2[0]
     if x1 != x2:
@@ -108,10 +79,11 @@ def _compare_events(e1, e2) -> int:
 
 def _compare_segments(le1, le2) -> int:
     """Sweep-line (status) order: which segment is below at the sweep
-    position. _signed_area / is_below / is_above are inlined with the
-    identical arithmetic order (bit-exact vs the original) — this is the
-    status insert/remove comparator, the single hottest call site of the
-    sweep."""
+    position. The signed-area below/above tests are inlined — this is
+    the status insert/remove comparator, the single hottest call site of
+    the sweep. A segment "is below" point p when the signed area of
+    (point, other.point, p) is positive for a left event (negative for a
+    right one)."""
     if le1 is le2:
         return 0
     p1, o1 = le1.point, le1.other.point
@@ -125,15 +97,15 @@ def _compare_segments(le1, le2) -> int:
     if sa_p2 != 0 or sa_o2 != 0:
         # not collinear
         if p1x == p2x and p1y == p2y:
-            # le1.is_below(le2.other.point)
+            # le1 below le2.other.point
             return -1 if (sa_o2 > 0 if le1.left else sa_o2 < 0) else 1
         if p1x == p2x:
             return -1 if p1y < p2y else 1
         if _compare_events(le1, le2) == 1:
-            # le2.is_above(le1.point)
+            # le2 above le1.point
             sb = (p2x - p1x) * (o2y - p1y) - (o2x - p1x) * (p2y - p1y)
             return -1 if not (sb > 0 if le2.left else sb < 0) else 1
-        # le1.is_below(le2.point)
+        # le1 below le2.point
         return -1 if (sa_p2 > 0 if le1.left else sa_p2 < 0) else 1
     # collinear
     if le1.is_subject == le2.is_subject:
@@ -439,12 +411,12 @@ def _possible_intersection(se1, se2, queue) -> int:
                            se1.other.point == se2.other.point)):
         return 0  # meet at a common endpoint only
     # NOTE: same-side collinear overlaps are processed like cross-side
-    # ones (splits aligned, one edge NON_CONTRIBUTING). They arise
-    # legitimately from the near-collinear cascade splits above (a
-    # fragment re-aligned onto a sibling fragment of the same operand);
-    # the probe-based tracer then classifies the doubled edge by its
-    # side membership, which is exactly even-odd semantics. (This branch
-    # used to raise "invalid input", which aborted whole unions.)
+    # ones (splits aligned). They arise legitimately from the
+    # near-collinear cascade splits above (a fragment re-aligned onto a
+    # sibling fragment of the same operand); the probe-based tracer then
+    # classifies the doubled edge by its side membership, which is
+    # exactly even-odd semantics. (This branch used to raise "invalid
+    # input", which aborted whole unions.)
     if len(pts) == 1:
         p = pts[0]
         if se1.point != p and se1.other.point != p:
@@ -467,9 +439,6 @@ def _possible_intersection(se1, se2, queue) -> int:
         else:
             events.extend((se1.other, se2.other))
     if left_coincide:
-        se2.type = NON_CONTRIBUTING
-        se1.type = (SAME_TRANSITION if se2.in_out == se1.in_out
-                    else DIFFERENT_TRANSITION)
         if not right_coincide:
             _divide_segment(events[1].other, events[0].point, queue)
         return 2
@@ -483,36 +452,6 @@ def _possible_intersection(se1, se2, queue) -> int:
     _divide_segment(events[0], events[1].point, queue)
     _divide_segment(events[3].other, events[2].point, queue)
     return 3
-
-
-def _in_result(event, op) -> bool:
-    if event.type == NORMAL:
-        if op == INTERSECTION:
-            return not event.other_in_out
-        if op == UNION:
-            return event.other_in_out
-        if op == DIFFERENCE:
-            return ((event.is_subject and event.other_in_out) or
-                    (not event.is_subject and not event.other_in_out))
-        return True  # XOR
-    if event.type == SAME_TRANSITION:
-        return op in (INTERSECTION, UNION)
-    if event.type == DIFFERENT_TRANSITION:
-        return op == DIFFERENCE
-    return False
-
-
-def _compute_fields(event, prev, op):
-    if prev is None:
-        event.in_out = False
-        event.other_in_out = True
-    elif event.is_subject == prev.is_subject:
-        event.in_out = not prev.in_out
-        event.other_in_out = prev.other_in_out
-    else:
-        event.in_out = not prev.other_in_out
-        event.other_in_out = (not prev.in_out) if prev.is_vertical() else prev.in_out
-    event.in_result = _in_result(event, op)
 
 
 def _rings_to_events(rings, is_subject, events):
@@ -618,24 +557,16 @@ def _rings_bbox(rings):
     return mnx, mny, mxx, mxy
 
 
-def _subdivide(subject_rings, clipping_rings, op):
-    """Phase 1+2: sweep, subdivide at all intersections, flag result edges.
+def _node(initial, rightbound=np.inf):
+    """The noding sweep: pop events in queue order, keep the status line,
+    and split every pair of status-adjacent segments at their crossings
+    (``_possible_intersection``). The sweep only nodes; which noded edges
+    bound the result is decided later by membership probes
+    (``_trace_result``). Events beyond x = ``rightbound`` cannot touch the
+    result and end the sweep early.
 
-    Returns the processed events in sweep order.
-    """
-    initial = []
-    _rings_to_events(subject_rings, True, initial)
-    _rings_to_events(clipping_rings, False, initial)
+    Returns the processed events in sweep order."""
     queue = _EventStream(initial)
-    sbb = _rings_bbox(subject_rings)
-    cbb = _rings_bbox(clipping_rings)
-    if op == INTERSECTION:
-        rightbound = min(sbb[2], cbb[2])
-    elif op == DIFFERENCE:
-        rightbound = sbb[2]
-    else:
-        rightbound = np.inf
-
     sweep = _SweepLine()
     sorted_events = []
     while queue:
@@ -645,29 +576,35 @@ def _subdivide(subject_rings, clipping_rings, op):
         sorted_events.append(event)
         if event.left:
             idx = sweep.insert(event)
-            prev = sweep.items[idx - 1] if idx > 0 else None
-            nxt = sweep.items[idx + 1] if idx + 1 < len(sweep.items) else None
-            _compute_fields(event, prev, op)
-            if nxt is not None:
-                if _possible_intersection(event, nxt, queue) == 2:
-                    _compute_fields(event, prev, op)
-                    _compute_fields(nxt, event, op)
-            if prev is not None:
-                if _possible_intersection(prev, event, queue) == 2:
-                    pidx = sweep.index(prev)
-                    pprev = sweep.items[pidx - 1] if pidx > 0 else None
-                    _compute_fields(prev, pprev, op)
-                    _compute_fields(event, prev, op)
+            if idx + 1 < len(sweep.items):
+                _possible_intersection(event, sweep.items[idx + 1], queue)
+            if idx > 0:
+                _possible_intersection(sweep.items[idx - 1], event, queue)
         else:
-            left = event.other
-            idx = sweep.index(left)
+            idx = sweep.index(event.other)
             if idx >= 0:
-                prev = sweep.items[idx - 1] if idx > 0 else None
-                nxt = sweep.items[idx + 1] if idx + 1 < len(sweep.items) else None
                 del sweep.items[idx]
-                if prev is not None and nxt is not None:
-                    _possible_intersection(prev, nxt, queue)
+                if 0 < idx < len(sweep.items):
+                    _possible_intersection(sweep.items[idx - 1],
+                                           sweep.items[idx], queue)
     return sorted_events
+
+
+def _subdivide(subject_rings, clipping_rings, op):
+    """Node the two operands; INTERSECTION and DIFFERENCE stop the sweep
+    past the right edge of the region their result can occupy."""
+    initial = []
+    _rings_to_events(subject_rings, True, initial)
+    _rings_to_events(clipping_rings, False, initial)
+    sbb = _rings_bbox(subject_rings)
+    cbb = _rings_bbox(clipping_rings)
+    if op == INTERSECTION:
+        rightbound = min(sbb[2], cbb[2])
+    elif op == DIFFERENCE:
+        rightbound = sbb[2]
+    else:
+        rightbound = np.inf
+    return _node(initial, rightbound)
 
 
 class _SegIndex:
@@ -786,8 +723,8 @@ def union_many(polygons):
 
     ``polygons``: list of polygons, each a list of CLOSED rings with
     shells CCW and holes CW (the winding probe relies on orientation —
-    callers orient; union_all does). Returns the boolean_op output shape:
-    list of polygons, each ``[shell(CCW), hole(CW), ...]``.
+    callers orient, e.g. with ``assemble_rings``). Returns the boolean_op
+    output shape: list of polygons, each ``[shell(CCW), hole(CW), ...]``.
     """
     # offset datum, same rationale and gates as boolean_op: sweep at
     # local magnitude, translate back after
@@ -813,12 +750,12 @@ def union_many(polygons):
                     [[np.asarray(r, np.float64) - t for r in rings]
                      for rings in polygons])
                 return [[r + t for r in poly] for poly in out]
+    # ulp-twin vertices across operands break the sweep as in boolean_op
+    polygons = _weld_ulp_twins([[np.asarray(r, dtype=np.float64)
+                                 for r in rings if len(r) >= 3]
+                                for rings in polygons])
     initial = []
-    ring_count = 0
     for pid, rings in enumerate(polygons):
-        rings = [np.asarray(r, dtype=np.float64) for r in rings
-                 if len(r) >= 3]
-        ring_count += len(rings)
         _rings_to_events(rings, pid, initial)
     if not initial:
         return []
@@ -839,43 +776,17 @@ def union_many(polygons):
         seen_dir.add(key)
         dedup.append(e1)
         dedup.append(e2)
-    initial = dedup
-    queue = _EventStream(initial)
-    all_rings = [_close(np.asarray(r, dtype=np.float64))
-                 for poly in polygons for r in poly if len(r) >= 3]
-
-    # noding sweep: identical status walk to _subdivide, minus the 2-op
-    # flag computation (_trace_result never reads the flags)
-    sweep = _SweepLine()
-    sorted_events = []
-    while queue:
-        event = queue.pop()
-        sorted_events.append(event)
-        if event.left:
-            idx = sweep.insert(event)
-            nxt = sweep.items[idx + 1] if idx + 1 < len(sweep.items) else None
-            if nxt is not None:
-                _possible_intersection(event, nxt, queue)
-            prev = sweep.items[idx - 1] if idx > 0 else None
-            if prev is not None:
-                _possible_intersection(prev, event, queue)
-        else:
-            left = event.other
-            idx = sweep.index(left)
-            if idx >= 0:
-                prev = sweep.items[idx - 1] if idx > 0 else None
-                nxt = (sweep.items[idx + 1]
-                       if idx + 1 < len(sweep.items) else None)
-                del sweep.items[idx]
-                if prev is not None and nxt is not None:
-                    _possible_intersection(prev, nxt, queue)
-
+    all_rings = [_close(r) for poly in polygons for r in poly]
+    sorted_events = _node(dedup)
     segs = _ringset_segments(all_rings)
 
     def inside(xs, ys):
         return _points_winding(xs, ys, segs) != 0
 
-    rings = _trace_result(sorted_events, inside)
+    # strict: an open boundary raises, so algos._union_polys can fall
+    # back to the pairwise tree (near-coincident vertex disks of a
+    # buffer left a crossing unnoded and lost the outer ring)
+    rings = _trace_result(sorted_events, inside, strict=True)
     return _assemble_polygons(rings)
 
 
@@ -888,20 +799,8 @@ def _point_in_ringset(px, py, rings) -> bool:
     return odd
 
 
-def _in_op_region(px, py, subject_rings, clipping_rings, op) -> bool:
-    ina = _point_in_ringset(px, py, subject_rings)
-    inb = _point_in_ringset(px, py, clipping_rings)
-    if op == INTERSECTION:
-        return ina and inb
-    if op == UNION:
-        return ina or inb
-    if op == DIFFERENCE:
-        return ina and not inb
-    return ina != inb
-
-
 def _walk_rings(sorted_events, subject_rings, clipping_rings, op):
-    """Phase 3: chain flagged result edges into closed rings.
+    """Phase 3: chain the result's boundary edges into closed rings.
 
     Robust planar-graph face trace instead of the original paper's
     event-position chaining (which mispairs edges where two result regions
@@ -912,10 +811,10 @@ def _walk_rings(sorted_events, subject_rings, clipping_rings, op):
     once; touching regions stay separate because the leftmost-turn pairing
     never crosses a vertex fan."""
     # Membership probes decide BOTH which noded edges bound the result and
-    # their orientation — the sweep is used only for noding (robust); the
-    # in_out/in_result flag propagation (fragile on near-parallel edges) is
-    # bypassed entirely. An edge bounds the op region iff exactly one of
-    # its two side-probes lands inside; it is oriented region-on-left.
+    # their orientation — the sweep is used only for noding (robust; the
+    # paper's in/out flag propagation is fragile on near-parallel edges).
+    # An edge bounds the op region iff exactly one of its two side-probes
+    # lands inside; it is oriented region-on-left.
     ssegs = _ringset_segments(subject_rings)
     csegs = _ringset_segments(clipping_rings)
 
@@ -933,11 +832,14 @@ def _walk_rings(sorted_events, subject_rings, clipping_rings, op):
     return _trace_result(sorted_events, region)
 
 
-def _trace_result(sorted_events, inside_fn):
+def _trace_result(sorted_events, inside_fn, strict=False):
     """Noded sweep events + a vectorized membership oracle → result rings.
 
     Shared by the 2-op boolean path (even-odd oracle per operand) and
-    union_many (winding oracle over all operands)."""
+    union_many (winding oracle over all operands). A vertex whose result
+    edges stay unbalanced after the repair loop marks a crossing the
+    sweep missed: the boolean path drops the dangling chain, ``strict``
+    raises ValueError instead."""
     # vertex quantization: crossing points computed from different edge
     # pairs can differ in the last ulp — unify them so graph adjacency
     # holds (snap radius 1e-9, far below any real feature size). All
@@ -1148,6 +1050,8 @@ def _trace_result(sorted_events, inside_fn):
         hi = np.maximum(pe, qe)
         _, ui = np.unique(lo * np.int64(len(uv)) + hi, return_index=True)
         pe, qe = pe[ui], qe[ui]
+    if strict and len(imb2):
+        raise ValueError("result boundary left open by the noding sweep")
     ang = np.arctan2(vy[dto] - vy[dfrm], vx[dto] - vx[dfrm])
     nd = len(dfrm)
     out_map = {}
@@ -1268,8 +1172,10 @@ def _assemble_polygons(rings):
     return [polys[i] for i in sorted(polys)]
 
 
-def _weld_ulp_twins(subject_rings, clipping_rings):
-    """Weld distinct-but-ulp-close vertices across both operands.
+def _weld_ulp_twins(ring_sets):
+    """Weld distinct-but-ulp-close vertices across all the operands of
+    one sweep (``ring_sets``: one list of rings per operand; returned in
+    the same shape, rings left with fewer than 3 vertices dropped).
 
     Two vertices a few ulps apart sit INSIDE every robustness quantum of
     the sweep (endpoint snap and _divide_segment no-op guard, both
@@ -1280,9 +1186,11 @@ def _weld_ulp_twins(subject_rings, clipping_rings):
     crossing discovered through that adjacency is missed (r13 subdivide
     fuzz find: a clip-box corner 2 ulps from a subject vertex lying on a
     collinear edge made INTERSECTION return empty for BOTH bbox halves
-    of a concave polygon). Welding each twin group to one representative
-    (its lexicographically smallest member) restores the exact equality
-    the degenerate-case machinery assumes.
+    of a concave polygon; in union_many, two buffer rectangles meeting
+    a third at a corner 1 ulp apart made the union of all three empty).
+    Welding each twin group to one representative (its lexicographically
+    smallest member) restores the exact equality the degenerate-case
+    machinery assumes.
 
     The weld threshold is ~1e-12 relative to the pair's own magnitude —
     an order above the 1e-13 snap quantum, three below the tracer's
@@ -1290,10 +1198,13 @@ def _weld_ulp_twins(subject_rings, clipping_rings):
     specified for. Inputs with no twins (every clean / integer-grid
     operand) are returned unchanged, and the scan is a few vectorized
     passes over the distinct-vertex set."""
+    rings = [r for rs in ring_sets for r in rs]
+    if not rings:
+        return ring_sets
     pts = np.concatenate([np.asarray(r, dtype=np.float64)[:, :2]
-                          for r in subject_rings + clipping_rings], axis=0)
+                          for r in rings], axis=0)
     if len(pts) < 2:
-        return subject_rings, clipping_rings
+        return ring_sets
     # Fast reject (the common, clean-input case): a twin pair (unequal,
     # both coords within eps) forces SOME lexsort-adjacent pair with
     # 0 < dx <= eps (x-unequal twins: every x step between them is
@@ -1309,11 +1220,11 @@ def _weld_ulp_twins(subject_rings, clipping_rings):
     if not (((dx > 0.0) & (dx <= feps)) |
             ((dx == 0.0) & (np.abs(dy) > 0.0) &
              (np.abs(dy) <= feps))).any():
-        return subject_rings, clipping_rings
+        return ring_sets
     uq, inv = np.unique(pts, axis=0, return_inverse=True)
     m = len(uq)
     if m < 2:
-        return subject_rings, clipping_rings
+        return ring_sets
     gmag = max(1.0, float(np.abs(uq).max()))
     geps = 1e-12 * gmag
     # candidate generation: x-runs of lexicographically-sorted distinct
@@ -1331,7 +1242,7 @@ def _weld_ulp_twins(subject_rings, clipping_rings):
             (np.abs(np.diff(xu)) <= leps) &
             ((np.diff(xu) != 0.0) | (np.diff(yu) != 0.0)))
     if not near.any():
-        return subject_rings, clipping_rings
+        return ring_sets
     parent = np.arange(m)
 
     def _find(i):
@@ -1350,10 +1261,12 @@ def _weld_ulp_twins(subject_rings, clipping_rings):
                 parent[ri] = rj
     rep = np.array([_find(i) for i in range(m)], dtype=np.int64)
     new_pts = uq[rep][inv]
-    out_s, out_c = [], []
+    out = []
     pos = 0
-    for dst, rings in ((out_s, subject_rings), (out_c, clipping_rings)):
-        for r in rings:
+    for rs in ring_sets:
+        dst = []
+        out.append(dst)
+        for r in rs:
             k = len(r)
             nr = new_pts[pos:pos + k]
             pos += k
@@ -1363,7 +1276,7 @@ def _weld_ulp_twins(subject_rings, clipping_rings):
                 nr = nr[keep]
             if len(nr) >= 3:
                 dst.append(nr)
-    return out_s, out_c
+    return out
 
 
 def boolean_op(subject_rings, clipping_rings, op):
@@ -1445,8 +1358,8 @@ def boolean_op(subject_rings, clipping_rings, op):
             out = boolean_op([r - t for r in subject_rings],
                              [r - t for r in clipping_rings], op)
             return [[r + t for r in poly] for poly in out]
-    subject_rings, clipping_rings = _weld_ulp_twins(subject_rings,
-                                                    clipping_rings)
+    subject_rings, clipping_rings = _weld_ulp_twins([subject_rings,
+                                                     clipping_rings])
     if not subject_rings or not clipping_rings:
         # a degenerate (sub-eps) ring dropped by the weld
         if not subject_rings and not clipping_rings:
@@ -1472,6 +1385,6 @@ def _close(r):
 
 
 def assemble_rings(rings):
-    """Nest a flat list of mutually non-crossing closed rings into polygons
-    (used by union_all's merge tree to re-nest the final ring set)."""
+    """Nest a flat list of mutually non-crossing closed rings (an
+    even-odd ring set) into polygons ``[shell(CCW), hole(CW), ...]``."""
     return _assemble_polygons([_close(r) for r in rings])

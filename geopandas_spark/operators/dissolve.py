@@ -219,12 +219,13 @@ def _agg_out_field(field, fn, name):
 
 def _apply_one(col, fn):
     """``fn`` over one attribute column (Arrow) by pandas' rules: NaN and
-    NULL are both skipped."""
+    NULL are both skipped (``first`` is the first non-missing value)."""
     s = col.to_pandas()
     if callable(fn):
         return float(fn(s))
     if fn == "first":
-        return s.iloc[0]
+        s = s.dropna()
+        return s.iloc[0] if len(s) else None
     v = getattr(s, fn)()
     return int(v) if fn in ("count", "nunique") else \
         v if fn in ("min", "max") else float(v)
@@ -350,18 +351,19 @@ def dissolve(df: DataFrame, by, aggfunc=None, *, geom: str = "geom",
         # never touching Python — collapses the duplicates before any
         # Arrow transfer; the decomposable aggfuncs become native
         # partials on the same pass. NaN is nulled first so that the
-        # native aggregates skip it as pandas does.
+        # native aggregates (``first`` with ignorenulls) skip it as
+        # pandas does.
         nat = []
         for c, fn, name in aggs:
             v = F.col(c)
-            if fn != "first" and isinstance(in_fields[c].dataType,
-                                            (FloatType, DoubleType)):
+            if isinstance(in_fields[c].dataType, (FloatType, DoubleType)):
                 v = F.nanvl(v, F.lit(None))
             if fn == "mean":
                 nat += [F.sum(v).cast("double").alias(f"{name}__psum"),
                         F.count(v).alias(f"{name}__pcnt")]
             else:   # sum, count, min, max, first
-                a = getattr(F, fn)(v)
+                a = (F.first(v, ignorenulls=True) if fn == "first"
+                     else getattr(F, fn)(v))
                 nat.append((a.cast("double") if fn == "sum" else a)
                            .alias(name))
         staged = (df.groupBy(*by, geom).agg(*nat) if nat

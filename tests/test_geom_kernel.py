@@ -579,8 +579,11 @@ class TestConstructive:
 
     def test_union_many_one_sweep_matches_pairwise(self):
         """The N-way single-sweep union (clipping.union_many) must agree
-        with the pairwise Morton merge tree on overlapping, touching,
-        duplicated and holed inputs."""
+        with the pairwise Martinez–Rueda tree (the fallback of
+        algos._union_polys, forced by making union_many raise) on
+        overlapping, touching, duplicated and holed inputs, and on the
+        dilation pieces of buffer (a line, a concave polygon with a hole
+        and a multipoint, round and flat caps)."""
         import numpy as np
 
         import geopandas_spark.geom.clipping as mr
@@ -589,16 +592,34 @@ class TestConstructive:
         x = rng.uniform(0, 40, 300)
         y = rng.uniform(0, 40, 300)
         ga = boxes_from_bounds(x, y, x + 4.0, y + 4.0)
-        u1 = algos.union_all(ga)
+        shapes = ga_from_wkt(
+            "LINESTRING (0 0, 6 1, 3 5, 9 7)",
+            "POLYGON ((0 0, 20 0, 20 20, 10 8, 0 20, 0 0), "
+            "(3 2, 17 2, 17 6, 3 6, 3 2))",
+            "MULTIPOINT (0 0, 1.5 0.5, 3 0, 2 2)")
+
+        def run():
+            return [algos.union_all(ga)] + [
+                algos.buffer(shapes, 1.0, cap_style=cap)
+                for cap in ("round", "flat")]
+
+        sweep = run()
         orig = mr.union_many
         mr.union_many = lambda p: (_ for _ in ()).throw(ValueError())
         try:
-            u2 = algos.union_all(ga)
+            tree = run()
         finally:
             mr.union_many = orig
+        u1, u2 = sweep[0], tree[0]
         assert abs(algos.area(u1)[0] - algos.area(u2)[0]) < 1e-9
         assert abs(algos.length(u1)[0] - algos.length(u2)[0]) < 1e-9
         assert algos.count_geometries(u1)[0] == algos.count_geometries(u2)[0]
+        for b1, b2 in zip(sweep[1:], tree[1:]):
+            np.testing.assert_allclose(algos.area(b1), algos.area(b2),
+                                       rtol=0, atol=1e-9)
+            np.testing.assert_array_equal(algos.count_geometries(b1),
+                                          algos.count_geometries(b2))
+            assert algos.is_valid(b1).all() and algos.is_valid(b2).all()
 
     def test_union_keeps_spike_off_unnoded_collinear_edge(self):
         """A vertex (19 15) pokes ~4e-3 out of an edge line that both
@@ -629,6 +650,38 @@ class TestConstructive:
             ring = out[0][0]
             assert ((ring[:, 0] == 19.0) & (ring[:, 1] == 15.0)).any()
             assert abs(mr._ring_signed_area(ring) - 135.0907715745811) < 1e-9
+
+    def test_union_many_welds_ulp_twin_vertices(self):
+        """Three buffer rectangles, two of whose corners are 1 ulp apart
+        (7.294 against 7.2940000000000005): the unwelded sweep missed
+        the crossings behind the twin pair and the union came back
+        empty (a holed star's opening lost 93% of its area)."""
+        import numpy as np
+
+        import geopandas_spark.geom.clipping as mr
+
+        rects = [
+            [(23.861712266039746, 11.082269003264049),
+             (22.704822453095964, 8.31430838925472), (25.146, 7.294),
+             (26.302889812943782, 10.06196061400933)],
+            [(26.361150798347463, 10.036142891988852),
+             (25.08773901459632, 7.319817722020477),
+             (25.203111831107005, 7.2657310074792365),
+             (26.47652361485815, 9.982056177447614)],
+            [(27.159504753229548, 9.517915153220105),
+             (25.146, 7.2940000000000005),
+             (29.17983878478333, 3.6418131999943824),
+             (31.193343538012876, 5.865728353214488)]]
+        polys = [[np.array(r + r[:1])] for r in rects]
+        out = mr.union_many(polys)
+        tree = mr.boolean_op(
+            [r for p in mr.boolean_op(polys[0], polys[1], mr.UNION)
+             for r in p], polys[2], mr.UNION)
+        area = sum(mr._ring_signed_area(r) for p in out for r in p)
+        assert len(out) == len(tree) == 1
+        assert abs(area - 24.589833486454) < 1e-9
+        assert abs(area - sum(mr._ring_signed_area(r)
+                              for p in tree for r in p)) < 1e-9
 
     def test_union_tree_matches_union_many_on_star_stack(self):
         """Five star polygons whose tips graze shared edge lines: the

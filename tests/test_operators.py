@@ -1640,6 +1640,21 @@ def test_dissolve_plans_skip_nan_values_like_pandas(spark, monkeypatch):
                     (plan, fn, got[k], exp)
 
 
+def test_dissolve_plans_first_skips_missing_like_pandas(spark, monkeypatch):
+    """"first" is the group's first non-missing value, as in pandas'
+    groupby: a group whose first row holds NULL and a group whose first
+    row holds NaN both get their second row's value, on every plan. One
+    input partition keeps each group's rows in input order."""
+    rows = [(1, None), (1, 2.0), (2, float("nan")), (2, 3.0)]
+    df = (spark.createDataFrame(rows, "k long, v double").coalesce(1)
+          .withColumn("geom", st.point(F.lit(0.0), F.lit(0.0))))
+    want = df.toPandas().groupby("k")["v"].agg("first").to_dict()
+    assert want == {1: 2.0, 2: 3.0}
+    for plan, res in _forced_dissolves(monkeypatch, df, "k",
+                                       {"v": "first"}).items():
+        assert {r.k: r.v_first for r in res.collect()} == want, plan
+
+
 def test_dissolve_plans_keep_spark_keys_and_pandas_values(spark,
                                                            monkeypatch):
     """Parity of the three dissolve plans on a NaN key, a NULL key, an

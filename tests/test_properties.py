@@ -10,7 +10,7 @@ double, so the identities must hold exactly:
 """
 
 import numpy as np
-from hypothesis import given, settings, strategies as st_
+from hypothesis import example, given, settings, strategies as st_
 
 from geopandas_spark.geom import algos, wkb, wkt
 from geopandas_spark.geom.array import boxes_from_bounds
@@ -564,7 +564,8 @@ def test_boolean_identities_multipolygons(pa, pb):
 @settings(max_examples=40, deadline=None)
 def test_union_many_matches_pairwise_tree(polys):
     """The one-sweep N-way union (clipping.union_many) must agree with
-    the pairwise Morton merge tree on random (optionally holed) star
+    the pairwise Martinez–Rueda tree (the fallback of algos._union_polys,
+    forced by making union_many raise) on random (optionally holed) star
     polygons — area, perimeter, and part count, exactly up to fp noise.
 
     The pairwise side runs on DEDUPLICATED operands (union semantics
@@ -572,8 +573,8 @@ def test_union_many_matches_pairwise_tree(polys):
     multi-level cascades can produce near-parallel boundary fragments
     ~1e-7 apart, which sit beyond the probe tracer's design envelope —
     union_many (the production path) handles them via its own
-    directed-segment dedupe; the fallback tree documents the
-    limitation in _merge_component."""
+    directed-segment dedupe; the fallback drops byte-identical
+    operands before its tree for the same reason."""
     import geopandas_spark.geom.clipping as mr
     from geopandas_spark.geom.array import GT_POLYGON, GeometryBuilder
 
@@ -699,8 +700,28 @@ def test_clip_by_rect_matches_intersection(ra, x0, y0, w, h):
     assert abs(a1 - a2) < 1e-6 * max(a2, 1.0)
 
 
+def _rings(*rings):
+    return [np.array(r + r[:1], dtype=np.float64) for r in rings]
+
+
 @given(_star_polygon(holes=True), st_.floats(0.3, 1.5))
 @settings(max_examples=30, deadline=None)
+# the dilation's one-sweep union once met an ulp-twin vertex pair (kept
+# 7.8 of 104) and left a near-tangent disk crossing unnoded (kept 16 of
+# 243): both openings must stay inside A
+@example(ra=_rings(
+    [(32, 13), (30.236, 15.351), (28.545, 17.755), (25.764, 16.804),
+     (22.146, 16.527), (23, 13), (21.337, 8.886), (25.146, 7.294),
+     (30.399, 2.538), (34.281, 7.71)],
+    [(28.82, 11.677), (27.85, 10.385), (26.536, 11.573), (25.584, 11.971),
+     (26, 13), (25.786, 13.882), (26.691, 13.951), (27.386, 14.189),
+     (27.809, 13.588), (28.25, 13)]), d=1.5)
+@example(ra=_rings(
+    [(25, 22), (27.485, 30.485), (19, 30), (10.515, 30.485), (7, 22),
+     (13.343, 16.343), (19, 14), (27.485, 13.515)],
+    [(21.121, 19.879), (19, 20), (17.586, 20.586), (16, 22),
+     (16.879, 24.121), (19, 24), (21.121, 24.121), (20.5, 22)]),
+    d=1.05442364820576)
 def test_erosion_dilation_sandwich(ra, d):
     """Morphology sandwich: dilate(erode(A, d), d) ⊆ A ⊆ erode(dilate(A,
     d), d) — the opening/closing containment identities that tie the
