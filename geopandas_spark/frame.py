@@ -549,6 +549,7 @@ def from_features(spark, features, geometry: str = "geom",
     already in driver memory); large data belongs in read_file."""
     import json as _json
 
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from geopandas_spark.functions import st as _st
@@ -556,19 +557,25 @@ def from_features(spark, features, geometry: str = "geom",
         features = features.__geo_interface__
     if isinstance(features, dict):
         features = features.get("features", [])
-    rows, keys = [], []
+    props, gjs, keys = [], [], {}
     for f in features:
         if hasattr(f, "__geo_interface__"):
             f = f.__geo_interface__
-        props = dict(f.get("properties") or {})
-        for k in props:
-            if k not in keys:
-                keys.append(k)
-        rows.append((props, _json.dumps(f.get("geometry"))
-                     if f.get("geometry") is not None else None))
-    data = [tuple(props.get(k) for k in keys) + (gj,)
-            for props, gj in rows]
-    df = spark.createDataFrame(data, keys + ["__gj__"])
+        props.append(f.get("properties") or {})
+        keys.update(dict.fromkeys(props[-1]))
+        gjs.append(_json.dumps(f["geometry"])
+                   if f.get("geometry") is not None else None)
+
+    def column(k):
+        # Arrow infers each property's type (ints with floats → double);
+        # a property that is NULL everywhere is a string column, as in
+        # read_geojson's JSON inference
+        arr = pa.array([p.get(k) for p in props])
+        return arr.cast(pa.string()) if pa.types.is_null(arr.type) else arr
+
+    df = spark.createDataFrame(pa.table(
+        {**{k: column(k) for k in keys},
+         "__gj__": pa.array(gjs, pa.string())}))
     df = (df.withColumn(geometry, _st.geom_from_geojson(F.col("__gj__")))
             .drop("__gj__"))
     return GeoFrame(df, geometry=geometry,

@@ -12,8 +12,9 @@ through ``mapInArrow``:
   ``part-NNNNN.feather`` file (IPC file format, zstd-compressible), with
   the ``geo`` metadata embedded in every file's schema — workers never
   collect to the driver.
-- read: the file list becomes a one-column DataFrame, repartitioned so
-  each task IPC-streams one file's batches straight back out. Column
+- read: one task per file (``spark.range`` + ``mapInArrow``, the range
+  scan the shapefile/GeoPackage/FlatGeobuf readers share), each
+  IPC-streaming its file's batches straight back out. Column
   pruning happens inside the reader (feather supports per-column reads).
 
 At 100 TB this is the same shape as any file-list-driven source: parallelism
@@ -28,6 +29,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from geopandas_spark.io._arrow import scan
 from geopandas_spark.io.geoparquet import _geo_metadata
 from geopandas_spark.functions import st
 
@@ -123,17 +125,12 @@ def read_feather(spark: SparkSession, path: str, *,
         keep = None
     spark_schema = from_arrow_schema(arrow_schema)
 
-    def read_parts(batches):
+    def read_part(fp):
         import pyarrow.feather as feather
 
-        for batch in batches:
-            for fp in batch.column("path").to_pylist():
-                table = feather.read_table(fp, columns=keep)
-                yield from table.to_batches()
+        return feather.read_table(fp, columns=keep)
 
-    fdf = spark.createDataFrame([(f,) for f in files], "path string") \
-               .repartition(len(files))
-    return fdf.mapInArrow(read_parts, schema=spark_schema)
+    return scan(spark, files, read_part, spark_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -278,7 +275,9 @@ def from_arrow(spark: SparkSession, table) -> DataFrame:
             table = table.set_column(
                 idx, pa.field(fld.name, pa.binary(), metadata=keep or None),
                 pa.array(blobs, pa.binary()))
-    # strip extension metadata so Spark sees plain binary
+    # strip extension metadata so Spark sees plain binary, and widen the
+    # types Spark takes no Arrow column of (unsigned ints, float16, date64)
+    # to the bigint / double / date they have through Python values
     fields = []
     for fld in table.schema:
         md = fld.metadata or {}
@@ -286,6 +285,12 @@ def from_arrow(spark: SparkSession, table) -> DataFrame:
             fld = fld.with_metadata(
                 {k: v for k, v in md.items()
                  if not k.startswith(b"ARROW:extension")})
+        if pa.types.is_unsigned_integer(fld.type):
+            fld = fld.with_type(pa.int64())
+        elif pa.types.is_float16(fld.type):
+            fld = fld.with_type(pa.float64())
+        elif pa.types.is_date64(fld.type):
+            fld = fld.with_type(pa.date32())
         fields.append(fld)
     table = table.cast(pa.schema(fields, metadata=table.schema.metadata))
-    return spark.createDataFrame(table.to_pandas())
+    return spark.createDataFrame(table)

@@ -26,7 +26,7 @@ Scale design:
   independently. ``bbox=`` pushes down into the packed R-tree so only
   intersecting features are ever assigned to tasks.
 - **write** renders each feature's FlatBuffer *on executors* in one
-  mapInPandas pass (Hilbert-ordered via the engine's spatial key so the
+  mapInArrow pass (Hilbert-ordered via the engine's spatial key so the
   index is valid); the driver streams fragments into the single output
   file. Single-file formats are inherently single-writer — the driver
   holds fragment (bbox, size) metadata per feature for the index, so the
@@ -40,10 +40,11 @@ from __future__ import annotations
 import json
 import os
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -57,6 +58,7 @@ from geopandas_spark.geom.array import (
     GT_MULTIPOINT, GT_MULTIPOLYGON, GT_POINT, GT_POLYGON, GeometryArray,
     GeometryBuilder,
 )
+from geopandas_spark.io._arrow import missing, ranges, scan, values
 
 MAGIC = bytes([0x66, 0x67, 0x62, 0x03, 0x66, 0x67, 0x62, 0x00])
 
@@ -456,9 +458,9 @@ def _spark_type(ct: int):
 def _pack_properties(cols, row: int) -> bytes:
     """cols: list of (index, ColumnType, values)."""
     out = bytearray()
-    for idx, ct, values in cols:
-        v = values[row]
-        if v is None or (isinstance(v, float) and np.isnan(v)):
+    for idx, ct, vals in cols:
+        v = vals[row]
+        if missing(v):
             continue
         out += struct.pack("<H", idx)
         if ct in _CT_FMT:
@@ -717,42 +719,35 @@ def read_fgb(spark: SparkSession, path: str, *, geom: str = "geom",
     nfeat = len(offsets)
     if num_partitions is None:
         num_partitions = max(1, min(32, nfeat // 4096 or 1))
-    bnds = np.linspace(0, nfeat, num_partitions + 1, dtype=int)
-    ranges = [(int(a), int(b)) for a, b in zip(bnds[:-1], bnds[1:])
-              if b > a] or [(0, 0)]
-    rdf = spark.createDataFrame(ranges, StructType([
-        StructField("start", LongType()), StructField("stop", LongType())]))
     default_type = meta["geometry_type"]
     names = [nm for nm, _ in meta["columns"]]
 
-    def read_range(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start, stop in zip(pdf["start"], pdf["stop"]):
-                start, stop = int(start), int(stop)
-                bb = GeometryBuilder()
-                rows = {nm: [] for nm in names}
-                with open(path, "rb") as fh:
-                    for off in offsets[start:stop]:
-                        fh.seek(data_start + off)
-                        (sz,) = struct.unpack("<I", fh.read(4))
-                        fbuf = fh.read(sz)
-                        tpos = _indirect(fbuf, 0)
-                        gp = _tbl_field(fbuf, tpos, 0)
-                        if gp:
-                            _decode_geometry(fbuf, _indirect(fbuf, gp),
-                                             default_type, bb)
-                        else:
-                            bb.append_null()
-                        pp, pn = _read_vector(fbuf, tpos, 1)
-                        props = (_unpack_properties(
-                            fbuf[pp:pp + pn], col_types) if pn else {})
-                        for k, nm in enumerate(names):
-                            rows[nm].append(props.get(k))
-                rows[geom] = _wkb.encode(bb.finish())
-                yield pd.DataFrame(
-                    rows, columns=[fld.name for fld in out_schema.fields])
+    def read_range(part):
+        start, stop = part
+        bb = GeometryBuilder()
+        rows = {nm: [] for nm in names}
+        with open(path, "rb") as fh:
+            for off in offsets[start:stop]:
+                fh.seek(data_start + off)
+                (sz,) = struct.unpack("<I", fh.read(4))
+                fbuf = fh.read(sz)
+                tpos = _indirect(fbuf, 0)
+                gp = _tbl_field(fbuf, tpos, 0)
+                if gp:
+                    _decode_geometry(fbuf, _indirect(fbuf, gp),
+                                     default_type, bb)
+                else:
+                    bb.append_null()
+                pp, pn = _read_vector(fbuf, tpos, 1)
+                props = (_unpack_properties(fbuf[pp:pp + pn], col_types)
+                         if pn else {})
+                for k, nm in enumerate(names):
+                    rows[nm].append(props.get(k))
+        rows[geom] = _wkb.encode_arrow(bb.finish())
+        return rows
 
-    out = rdf.mapInPandas(read_range, schema=out_schema)
+    out = scan(spark, ranges(0, nfeat, num_partitions), read_range,
+               out_schema)
     if envelope_filter is not None:
         from geopandas_spark.functions import st
         xmin, ymin, xmax, ymax = envelope_filter
@@ -770,8 +765,9 @@ def to_fgb(df: DataFrame, path: str, *, geom: str = "geom",
            crs: Optional[str] = None, index: bool = True,
            node_size: int = 16, name: Optional[str] = None) -> int:
     """Write a single FlatGeobuf file. Per-feature FlatBuffer rendering is
-    distributed (one mapInPandas pass over Hilbert-ordered input so the
-    packed R-tree is valid); the driver streams fragments into the file.
+    distributed (one mapInArrow pass over Hilbert-ordered input so the
+    packed R-tree is valid); the driver gathers the fragments as one Arrow
+    table and writes them into the file.
     Driver memory holds the rendered byte stream + one 40-byte node per
     feature — ceiling is tens of millions of features; use GeoParquet
     beyond that."""
@@ -795,14 +791,9 @@ def to_fgb(df: DataFrame, path: str, *, geom: str = "geom",
 
     col_specs = [(k, _column_type(f), f.name)
                  for k, f in enumerate(fields)]
-    frag_schema = StructType([
-        StructField("frag", BinaryType()), StructField("gt", IntegerType()),
-        StructField("hz", BooleanType()),
-        StructField("xmin", DoubleType()), StructField("ymin", DoubleType()),
-        StructField("xmax", DoubleType()), StructField("ymax", DoubleType()),
-    ])
+    frag_names = ["frag", "gt", "hz", "xmin", "ymin", "xmax", "ymax"]
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def render(batches):
         from geopandas_spark.geom import algos
 
         # template fast path for 2-D point features: the FlatBuffer layout
@@ -833,10 +824,10 @@ def to_fgb(df: DataFrame, path: str, *, geom: str = "geom",
             templates[plen] = t
             return t
 
-        for pdf in batches:
-            ga = _wkb.decode(pdf[geom].tolist())
+        for batch in batches:
+            ga = _wkb.decode(batch.column(geom))
             bb = algos.bounds(ga)
-            cols = [(idx, ct, pdf[nm].tolist())
+            cols = [(idx, ct, values(batch.column(nm)))
                     for idx, ct, nm in col_specs]
             frags, gts, hzs = [], [], []
             hasz = ga.row_has_z()
@@ -868,41 +859,28 @@ def to_fgb(df: DataFrame, path: str, *, geom: str = "geom",
                 frags.append(struct.pack("<I", len(body)) + body)
                 gts.append(int(ga.types[i]))
                 hzs.append(bool(hasz[i]))
-            yield pd.DataFrame({
-                "frag": frags, "gt": gts, "hz": hzs,
-                "xmin": bb[:, 0], "ymin": bb[:, 1],
-                "xmax": bb[:, 2], "ymax": bb[:, 3]})
-
-    parts = df.mapInPandas(render, schema=frag_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(frags, pa.binary()), pa.array(gts, pa.int32()),
+                 pa.array(hzs, pa.bool_())]
+                + [pa.array(bb[:, k]) for k in range(4)], frag_names)
 
     # one parallel job + Arrow-batched transfer, not toLocalIterator():
     # the driver buffers every fragment for the index pass anyway, and
     # toLocalIterator executes one sequential job per partition — it
     # serialized the whole distributed render (115 s -> ~15 s on a
-    # 1.5M-feature write); Row-based collect() pays py4j per-row cost
-    try:
-        spark = df.sparkSession
-        prev = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled",
-                              None)
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        pdf_all = parts.toPandas()
-        if prev is not None:
-            spark.conf.set("spark.sql.execution.arrow.pyspark.enabled",
-                           prev)
-    except Exception:
-        pdf_all = pd.DataFrame(
-            [tuple(r) for r in parts.collect()],
-            columns=["frag", "gt", "hz", "xmin", "ymin", "xmax", "ymax"])
-    frags = [bytes(fr) for fr in pdf_all["frag"]]
-    gtypes = set(int(g) for g in pdf_all["gt"].unique() if g)
-    has_z = bool(pdf_all["hz"].any()) if len(pdf_all) else False
-
+    # 1.5M-feature write)
+    parts = df.mapInArrow(render, "frag binary, gt int, hz boolean, "
+                          "xmin double, ymin double, xmax double, "
+                          "ymax double").toArrow()
+    frags = parts.column("frag").to_pylist()
+    gtypes = set(parts.column("gt").to_pylist()) - {0}
+    has_z = bool(pc.any(parts.column("hz")).as_py())
+    bb = np.column_stack([parts.column(c).to_numpy()
+                          for c in frag_names[3:]]).reshape(-1, 4)
     n = len(frags)
     gtype = gtypes.pop() if len(gtypes) == 1 else 0    # Unknown when mixed
     sizes = np.array([len(fr) for fr in frags], dtype=np.int64)
     offsets = np.concatenate([[0], np.cumsum(sizes)[:-1]]) if n else []
-    bb = (pdf_all[["xmin", "ymin", "xmax", "ymax"]]
-          .to_numpy(dtype=np.float64).reshape(-1, 4))
     finite = bb[np.isfinite(bb[:, 0])] if n else bb
     envelope = ([float(finite[:, 0].min()), float(finite[:, 1].min()),
                  float(finite[:, 2].max()), float(finite[:, 3].max())]

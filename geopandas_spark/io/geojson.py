@@ -19,41 +19,19 @@ from __future__ import annotations
 
 import json
 
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from geopandas_spark.functions import st
-
-
-_FC_MAX_BYTES = 512 * 1024 * 1024  # FeatureCollection driver-read ceiling
-
-
-def _input_bytes(spark: SparkSession, path: str) -> int:
-    """Total size of the files matched by ``path`` (Hadoop glob), or -1 if
-    the filesystem probe fails (non-fatal — caller skips the guard)."""
-    try:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        hp = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hp.getFileSystem(conf)
-        statuses = fs.globStatus(hp) or []
-        total = 0
-        for s in statuses:
-            if s.isDirectory():
-                it = fs.listFiles(s.getPath(), True)
-                while it.hasNext():
-                    total += it.next().getLen()
-            else:
-                total += s.getLen()
-        return total
-    except Exception:
-        return -1
+from geopandas_spark.io import _arrow
 
 
 def read_geojson(spark: SparkSession, path: str, *,
                  geom: str = "geom",
                  expand_properties: bool = True,
-                 max_collection_bytes: int = _FC_MAX_BYTES) -> DataFrame:
+                 max_collection_bytes: int = _arrow.MAX_DOCUMENT_BYTES
+                 ) -> DataFrame:
     """Read GeoJSONSeq (one Feature per line) or a FeatureCollection file
     into a DataFrame with property columns + a WKB geometry column.
 
@@ -71,7 +49,7 @@ def read_geojson(spark: SparkSession, path: str, *,
         # single-document collection: driver-side parse (small files only
         # — a FeatureCollection is one JSON object, so the parse cannot
         # distribute; guard before pulling it onto the driver)
-        nbytes = _input_bytes(spark, path)
+        nbytes = _arrow.input_bytes(spark, path)
         if nbytes > max_collection_bytes:
             raise ValueError(
                 f"FeatureCollection input is {nbytes >> 20} MiB, above the "
@@ -84,11 +62,11 @@ def read_geojson(spark: SparkSession, path: str, *,
         feats = []
         for doc in sc_files:
             feats.extend(json.loads(doc).get("features", []))
-        rows = [(json.dumps(f.get("properties", {})),
-                 json.dumps(f.get("geometry"))) for f in feats]
-        raw = spark.createDataFrame(
-            rows, StructType([StructField("properties", StringType()),
-                              StructField("__geojson__", StringType())]))
+        raw = spark.createDataFrame(pa.table({
+            "properties": pa.array([json.dumps(f.get("properties", {}))
+                                    for f in feats], pa.string()),
+            "__geojson__": pa.array([json.dumps(f.get("geometry"))
+                                     for f in feats], pa.string())}))
     else:
         lines = spark.read.text(path).withColumnRenamed("value", "line")
         raw = lines.select(
@@ -97,25 +75,7 @@ def read_geojson(spark: SparkSession, path: str, *,
     out = (raw.withColumn(geom, st.geom_from_geojson("__geojson__"))
               .drop("__geojson__"))
     if expand_properties:
-        # union the schema over a bounded sample (not just the first
-        # feature) so rows whose first-feature properties are sparse still
-        # surface every column seen in the sample
-        sample = [r[0] for r in out.select("properties").filter(
-            F.col("properties").isNotNull()).limit(200).collect()
-            if r[0] and r[0] != "{}"]
-        if sample:
-            schema = spark.read.json(
-                spark.sparkContext.parallelize(sample, 1)).schema
-            fields = [f for f in schema.fields
-                      if not f.name.startswith("_corrupt")]
-            if fields:
-                out = (out.withColumn(
-                    "__p__", F.from_json("properties", StructType(fields)))
-                    .select("__p__.*", geom))
-            else:
-                out = out.drop("properties")
-        else:
-            out = out.drop("properties")
+        return _arrow.expand_properties(out, [], geom)
     return out
 
 

@@ -146,15 +146,16 @@ def _make_write_task(path: str, geom: str, crs: Optional[str],
             if not partition_cols:
                 add("", batch)
                 continue
-            # hive-style split: group the batch by partition values
-            keys = pa.Table.from_batches([batch]).select(
-                list(partition_cols)).to_pandas()
-            grouped = keys.groupby(list(partition_cols), dropna=False,
-                                   sort=False).indices
-            for kv, idx in grouped.items():
-                vals = kv if isinstance(kv, tuple) else (kv,)
-                sub = batch.take(pa.array(idx))
-                add(_hive_part_dir(partition_cols, vals), sub)
+            # hive-style split: group the batch's rows by their partition
+            # directory, read from the Arrow values (exact ints, NULL apart
+            # from NaN), in order of first appearance
+            groups = {}
+            for i, kv in enumerate(zip(*(batch.column(c).to_pylist()
+                                         for c in partition_cols))):
+                groups.setdefault(_hive_part_dir(partition_cols, kv),
+                                  []).append(i)
+            for dirkey, idx in groups.items():
+                add(dirkey, batch.take(pa.array(idx)))
 
         for dk in list(bufs):
             flush(dk)

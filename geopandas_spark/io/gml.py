@@ -12,29 +12,25 @@ Covers the GML 3.2 simple-features profile most WFS exports use:
 text becomes a property.
 
 Same distribution contract as the KML driver: file = parse unit
-(binaryFile scan + mapInPandas), fragments rendered distributed on write,
+(binaryFile scan + mapInArrow), fragments rendered distributed on write,
 driver streams the single document."""
 
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (BinaryType, StringType, StructField,
-                               StructType)
+from pyspark.sql import DataFrame, SparkSession
 
 from geopandas_spark.geom import wkb
 from geopandas_spark.geom.array import (GT_LINESTRING, GT_MULTILINESTRING,
                                         GT_MULTIPOINT, GT_MULTIPOLYGON,
                                         GT_POINT, GT_POLYGON,
                                         GeometryBuilder)
+from geopandas_spark.io._arrow import (MAX_DOCUMENT_BYTES, read_documents,
+                                        write_document)
 from geopandas_spark.io.kml import _local, _xml_escape
-
-_GML_MAX_BYTES = 512 * 1024 * 1024
 
 _GEOM_TAGS = frozenset({"Point", "LineString", "Polygon", "MultiPoint",
                         "MultiCurve", "MultiLineString", "MultiSurface",
@@ -158,47 +154,11 @@ def _parse_gml_bytes(data: bytes):
 
 def read_gml(spark: SparkSession, path: str, *, geom: str = "geom",
              expand_properties: bool = True,
-             max_file_bytes: int = _GML_MAX_BYTES) -> DataFrame:
+             max_file_bytes: int = MAX_DOCUMENT_BYTES) -> DataFrame:
     """Read GML featureMembers into ([property cols], geom). Parallelism
     unit = file; properties expand via the sampled from_json pass."""
-    from geopandas_spark.io.geojson import _input_bytes
-
-    nbytes = _input_bytes(spark, path)
-    if nbytes > max_file_bytes:
-        raise ValueError(
-            f"GML input is {nbytes >> 20} MiB, above the "
-            f"{max_file_bytes >> 20} MiB per-document ceiling (one XML "
-            "document cannot parse distributed). Split the export or "
-            "raise max_file_bytes= explicitly.")
-
-    files = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
-    schema = StructType([StructField("properties", StringType()),
-                         StructField(geom, BinaryType())])
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for data in pdf["content"]:
-                out.extend(_parse_gml_bytes(bytes(data)))
-            yield pd.DataFrame(out, columns=["properties", geom])
-
-    out = files.mapInPandas(parse, schema)
-    if expand_properties:
-        sample = [r[0] for r in out.select("properties")
-                  .filter(F.col("properties").isNotNull()).limit(200)
-                  .collect()]
-        if sample:
-            pschema = spark.read.json(
-                spark.sparkContext.parallelize(sample, 1)).schema
-            fields = [f for f in pschema.fields
-                      if not f.name.startswith("_corrupt")]
-            if fields:
-                return (out.withColumn(
-                    "__p__", F.from_json("properties", StructType(fields)))
-                    .select("__p__.*", geom))
-        out = out.drop("properties")
-    return out
+    return read_documents(spark, path, _parse_gml_bytes, [], geom,
+                          expand_properties, max_file_bytes, "GML")
 
 
 def _pos_str(ring) -> str:
@@ -249,31 +209,17 @@ def to_gml(df: DataFrame, path: str, *, geom: str = "geom",
            feature_name: str = "feature"):
     """Write a single GML FeatureCollection document (distributed fragment
     render + driver-streamed assembly, like to_kml)."""
-    props = [c for c in df.columns if c != geom]
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ga = wkb.decode(pdf[geom].tolist())
-            frags = []
-            for i in range(len(ga)):
-                s = [f"<gml:featureMember><{feature_name}>"]
-                for c in props:
-                    v = pdf[c].iloc[i]
-                    if v is None or (isinstance(v, float) and np.isnan(v)):
-                        continue
-                    s.append(f"<{c}>{_xml_escape(str(v))}</{c}>")
-                if int(ga.types[i]) != 0:
-                    s.append(f"<the_geom>{_gml_geom(ga, i)}</the_geom>")
-                s.append(f"</{feature_name}></gml:featureMember>")
-                frags.append("".join(s))
-            yield pd.DataFrame({"frag": frags})
+    def feature(ga, i, row):
+        s = [f"<gml:featureMember><{feature_name}>"]
+        s.extend(f"<{c}>{_xml_escape(str(v))}</{c}>" for c, v in row.items())
+        if int(ga.types[i]) != 0:
+            s.append(f"<the_geom>{_gml_geom(ga, i)}</the_geom>")
+        s.append(f"</{feature_name}></gml:featureMember>")
+        return "".join(s)
 
-    frags = df.mapInPandas(render,
-                           StructType([StructField("frag", StringType())]))
-    with open(path, "w", encoding="utf-8") as f:
-        f.write('<?xml version="1.0" encoding="UTF-8"?>\n'
-                '<gml:FeatureCollection '
-                'xmlns:gml="http://www.opengis.net/gml/3.2">')
-        for row in frags.toLocalIterator(prefetchPartitions=True):
-            f.write(row["frag"])
-        f.write("</gml:FeatureCollection>\n")
+    write_document(df, geom, path,
+                   '<?xml version="1.0" encoding="UTF-8"?>\n'
+                   '<gml:FeatureCollection '
+                   'xmlns:gml="http://www.opengis.net/gml/3.2">',
+                   feature, "</gml:FeatureCollection>\n")

@@ -15,18 +15,18 @@ bounded by I/O not by the driver. Write streams through the driver
 
 from __future__ import annotations
 
-import os
 import sqlite3
 import struct
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
                                FloatType, IntegerType, LongType, ShortType,
                                StringType, StructField, StructType)
+
+from geopandas_spark.io._arrow import ranges, scan
 
 _GP_MAGIC = b"GP"
 
@@ -99,30 +99,19 @@ def read_gpkg(spark: SparkSession, path: str, *, table: Optional[str] = None,
 
     if num_partitions is None:
         num_partitions = max(1, min(32, n // 8192 or 1))
-    bounds = np.linspace(lo, hi + 1, num_partitions + 1, dtype=np.int64)
-    ranges = [(int(a), int(b)) for a, b in zip(bounds[:-1], bounds[1:])
-              if b > a] or [(0, 1)]
-    rdf = spark.createDataFrame(ranges, StructType([
-        StructField("a", LongType()), StructField("b", LongType())]))
-
     sel = ", ".join(f'"{c}"' for c in attrs + [gcol])
 
-    def read_range(batches):
-        for pdf in batches:
-            for a, b in zip(pdf["a"], pdf["b"]):
-                c = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-                rows = c.execute(
-                    f'SELECT {sel} FROM "{table}" '
-                    f"WHERE rowid >= ? AND rowid < ?",
-                    (int(a), int(b))).fetchall()
-                c.close()
-                data = {col: [r[i] for r in rows]
-                        for i, col in enumerate(attrs)}
-                data[geom] = [_gpkg_blob_to_wkb(r[len(attrs)]) for r in rows]
-                yield pd.DataFrame(
-                    data, columns=[f.name for f in out_schema.fields])
+    def read_range(part):
+        c = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
+        rows = c.execute(f'SELECT {sel} FROM "{table}" '
+                         "WHERE rowid >= ? AND rowid < ?", part).fetchall()
+        c.close()
+        data = {col: [r[i] for r in rows] for i, col in enumerate(attrs)}
+        data[geom] = [_gpkg_blob_to_wkb(r[len(attrs)]) for r in rows]
+        return data
 
-    return rdf.mapInPandas(read_range, schema=out_schema)
+    return scan(spark, ranges(lo, hi + 1, num_partitions), read_range,
+                out_schema)
 
 
 def _sqlite_type(field: StructField) -> str:

@@ -4,13 +4,13 @@ clean-room stdlib ``xml.etree`` implementation, no OGR).
 
 Read: KML files are single XML documents, so the parse unit is a file —
 ``spark.read.format("binaryFile")`` distributes the file list across
-executors and each file's Placemarks are parsed in a ``mapInPandas`` batch
+executors and each file's Placemarks are parsed in a ``mapInArrow`` batch
 (namespace-agnostic local-name matching; Point / LineString / Polygon with
 holes / MultiGeometry; ``lon,lat[,alt]`` coordinate tuples, altitude → Z).
 Many small files parallelize perfectly; one giant file is bounded by the
 same driver-style ceiling as a GeoJSON FeatureCollection and is guarded.
 
-Write: Placemark fragments are rendered *distributed* (one mapInPandas
+Write: Placemark fragments are rendered *distributed* (one mapInArrow
 batch pass: WKB decode → KML geometry XML); the driver only streams the
 fragments into the single output document via ``toLocalIterator`` (one
 partition in memory at a time) — a single .kml file is inherently one
@@ -19,22 +19,18 @@ document, same single-writer shape as the reference."""
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (BinaryType, StringType, StructField,
-                               StructType)
+from pyspark.sql import DataFrame, SparkSession
 
 from geopandas_spark.geom import wkb
 from geopandas_spark.geom.array import (GT_LINESTRING, GT_MULTILINESTRING,
                                         GT_MULTIPOINT, GT_MULTIPOLYGON,
                                         GT_POINT, GT_POLYGON,
                                         GeometryBuilder)
-
-_KML_MAX_BYTES = 512 * 1024 * 1024
+from geopandas_spark.io._arrow import (MAX_DOCUMENT_BYTES, read_documents,
+                                        write_document)
 
 
 def _local(tag: str) -> str:
@@ -174,55 +170,14 @@ def _parse_kml_bytes(data: bytes):
 
 def read_kml(spark: SparkSession, path: str, *, geom: str = "geom",
              expand_properties: bool = True,
-             max_file_bytes: int = _KML_MAX_BYTES) -> DataFrame:
+             max_file_bytes: int = MAX_DOCUMENT_BYTES) -> DataFrame:
     """Read KML Placemarks into (name, description, [property cols], geom).
 
     Parallelism unit = file; ExtendedData fields expand into typed columns
     via the same sampled-schema from_json pass as the GeoJSON reader."""
-    from geopandas_spark.io.geojson import _input_bytes
-
-    nbytes = _input_bytes(spark, path)
-    if nbytes > max_file_bytes:
-        raise ValueError(
-            f"KML input is {nbytes >> 20} MiB, above the "
-            f"{max_file_bytes >> 20} MiB per-document ceiling (a KML file "
-            "is one XML document — the parse cannot distribute within a "
-            "file). Split the export into multiple .kml files, or raise "
-            "max_file_bytes= explicitly.")
-
-    files = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
-    schema = StructType([
-        StructField("name", StringType()),
-        StructField("description", StringType()),
-        StructField("properties", StringType()),
-        StructField(geom, BinaryType()),
-    ])
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for data in pdf["content"]:
-                out.extend(_parse_kml_bytes(bytes(data)))
-            yield pd.DataFrame(out, columns=["name", "description",
-                                             "properties", geom])
-
-    out = files.mapInPandas(parse, schema)
-    if expand_properties:
-        sample = [r[0] for r in out.select("properties")
-                  .filter(F.col("properties").isNotNull()).limit(200)
-                  .collect()]
-        if sample:
-            pschema = spark.read.json(
-                spark.sparkContext.parallelize(sample, 1)).schema
-            fields = [f for f in pschema.fields
-                      if not f.name.startswith("_corrupt")]
-            if fields:
-                return (out.withColumn(
-                    "__p__", F.from_json("properties", StructType(fields)))
-                    .select("name", "description", "__p__.*", geom))
-        out = out.drop("properties")
-    return out
+    return read_documents(spark, path, _parse_kml_bytes,
+                          ["name", "description"], geom, expand_properties,
+                          max_file_bytes, "KML")
 
 
 def _xml_escape(s: str) -> str:
@@ -285,49 +240,28 @@ def _kml_geom(ga, i: int) -> str:
 def to_kml(df: DataFrame, path: str, *, geom: str = "geom",
            name_col: str = None, document_name: str = None):
     """Write a single KML document. Fragment rendering (WKB → Placemark
-    XML) runs distributed in one mapInPandas pass; the driver streams the
+    XML) runs distributed in one mapInArrow pass; the driver streams the
     fragments into the file via toLocalIterator (bounded by one partition
     of rendered strings, not the dataset)."""
-    props = [c for c in df.columns if c != geom]
-    if name_col is None and "name" in props:
+    if name_col is None and "name" in df.columns and geom != "name":
         name_col = "name"
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ga = wkb.decode(pdf[geom].tolist())
-            frags = []
-            for i in range(len(ga)):
-                s = ["<Placemark>"]
-                if name_col is not None:
-                    v = pdf[name_col].iloc[i]
-                    if v is not None and not (isinstance(v, float)
-                                              and np.isnan(v)):
-                        s.append(f"<name>{_xml_escape(str(v))}</name>")
-                ext = []
-                for c in props:
-                    if c == name_col:
-                        continue
-                    v = pdf[c].iloc[i]
-                    if v is None or (isinstance(v, float) and np.isnan(v)):
-                        continue
-                    ext.append(f'<Data name="{_xml_escape(c)}"><value>'
-                               f"{_xml_escape(str(v))}</value></Data>")
-                if ext:
-                    s.append("<ExtendedData>" + "".join(ext)
-                             + "</ExtendedData>")
-                if int(ga.types[i]) != 0:
-                    s.append(_kml_geom(ga, i))
-                s.append("</Placemark>")
-                frags.append("".join(s))
-            yield pd.DataFrame({"frag": frags})
+    def placemark(ga, i, row):
+        s = ["<Placemark>"]
+        if name_col in row:
+            s.append(f"<name>{_xml_escape(str(row[name_col]))}</name>")
+        ext = [f'<Data name="{_xml_escape(c)}"><value>'
+               f"{_xml_escape(str(v))}</value></Data>"
+               for c, v in row.items() if c != name_col]
+        if ext:
+            s.append("<ExtendedData>" + "".join(ext) + "</ExtendedData>")
+        if int(ga.types[i]) != 0:
+            s.append(_kml_geom(ga, i))
+        s.append("</Placemark>")
+        return "".join(s)
 
-    frags = df.mapInPandas(render,
-                           StructType([StructField("frag", StringType())]))
-    with open(path, "w", encoding="utf-8") as f:
-        f.write('<?xml version="1.0" encoding="UTF-8"?>\n'
-                '<kml xmlns="http://www.opengis.net/kml/2.2"><Document>')
-        if document_name:
-            f.write(f"<name>{_xml_escape(document_name)}</name>")
-        for row in frags.toLocalIterator(prefetchPartitions=True):
-            f.write(row["frag"])
-        f.write("</Document></kml>\n")
+    head = ('<?xml version="1.0" encoding="UTF-8"?>\n'
+            '<kml xmlns="http://www.opengis.net/kml/2.2"><Document>')
+    if document_name:
+        head += f"<name>{_xml_escape(document_name)}</name>"
+    write_document(df, geom, path, head, placemark, "</Document></kml>\n")

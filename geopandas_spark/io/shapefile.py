@@ -27,7 +27,6 @@ import struct
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (BinaryType, BooleanType, DoubleType, LongType,
@@ -38,6 +37,7 @@ from geopandas_spark.geom.array import (GT_LINESTRING, GT_MISSING,
                                         GT_MULTILINESTRING, GT_MULTIPOINT,
                                         GT_MULTIPOLYGON, GT_POINT, GT_POLYGON,
                                         GeometryArray, GeometryBuilder)
+from geopandas_spark.io._arrow import ranges, scan
 
 SHP_NULL, SHP_POINT, SHP_POLYLINE, SHP_POLYGON, SHP_MULTIPOINT = 0, 1, 3, 5, 8
 
@@ -219,29 +219,20 @@ def read_shapefile(spark: SparkSession, path: str, *, geom: str = "geom",
 
     if num_partitions is None:
         num_partitions = max(1, min(32, n // 4096 or 1))
-    bounds = np.linspace(0, n, num_partitions + 1, dtype=int)
-    ranges = [(int(a), int(b)) for a, b in zip(bounds[:-1], bounds[1:])
-              if b > a]
-    rdf = spark.createDataFrame(ranges, StructType([
-        StructField("start", LongType()), StructField("stop", LongType())]))
 
-    def read_range(batches):
-        for pdf in batches:
-            for start, stop in zip(pdf["start"], pdf["stop"]):
-                start, stop = int(start), int(stop)
-                bb = GeometryBuilder()
-                with open(path, "rb") as f:
-                    for off, clen in idx[start:stop]:
-                        f.seek(off)
-                        _parse_shp_record(f.read(clen), bb)
-                cols = (_parse_dbf_records(dbf_path, hsize, rsize, fields,
-                                           start, stop)
-                        if have_dbf else {})
-                cols[geom] = _wkb.encode(bb.finish())
-                yield pd.DataFrame(
-                    cols, columns=[f.name for f in out_schema.fields])
+    def read_range(part):
+        start, stop = part
+        bb = GeometryBuilder()
+        with open(path, "rb") as f:
+            for off, clen in idx[start:stop]:
+                f.seek(off)
+                _parse_shp_record(f.read(clen), bb)
+        cols = (_parse_dbf_records(dbf_path, hsize, rsize, fields,
+                                   start, stop) if have_dbf else {})
+        cols[geom] = _wkb.encode_arrow(bb.finish())
+        return cols
 
-    return rdf.mapInPandas(read_range, schema=out_schema)
+    return scan(spark, ranges(0, n, num_partitions), read_range, out_schema)
 
 
 # ---------------------------------------------------------------------------

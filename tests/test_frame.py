@@ -219,6 +219,17 @@ def test_from_features_and_to_wkt_wkb(spark):
     r = g2.df.withColumn("w", st.as_text("geom")).collect()[0]
     assert r.w == "POINT (7 8)" and r.k == 9
 
+    # property types: ints with floats widen to double; a property that
+    # is NULL everywhere is a string column of NULLs (read_geojson's JSON
+    # inference gives the same)
+    g3 = from_features(spark, [
+        {"properties": {"v": 1, "z": None}, "geometry": None},
+        {"properties": {"v": 2.5}, "geometry": None}])
+    assert g3.df.schema["v"].dataType.typeName() == "double"
+    assert g3.df.schema["z"].dataType.typeName() == "string"
+    assert [(r.v, r.z) for r in g3.df.collect()] == [(1.0, None),
+                                                     (2.5, None)]
+
 
 def test_sjoin_nearest_method_form(spark):
     from pyspark.sql import functions as F

@@ -82,6 +82,18 @@ def test_geoparquet_partitioned_write(geodf, spark, tmp_path):
              if f.endswith(".parquet"))
     assert "k" not in pq.read_schema(f).names
     assert b"geo" in (pq.read_schema(f).metadata or {})
+    # a NULL key shares a batch with integer keys: it goes to the hive
+    # default partition and the others keep their integer text (k=1, not
+    # the k=1.0 / k=nan a float64 hop gives)
+    nk = geodf.withColumn("k", F.when(F.col("id") % 3 == 0, None)
+                          .otherwise(F.col("id") % 2)).coalesce(1)
+    path2 = str(tmp_path / "pts_nullkey")
+    to_parquet(nk, path2, partition_by=["k"])
+    assert {d for d in os.listdir(path2) if d.startswith("k=")} == {
+        "k=0", "k=1", "k=__HIVE_DEFAULT_PARTITION__"}
+    back = spark.read.parquet(path2)
+    assert back.schema["k"].dataType.typeName() in ("integer", "long")
+    assert back.filter("k IS NULL").count() == 7
 
 
 def test_geoparquet_empty_and_append(geodf, spark, tmp_path):
@@ -395,9 +407,19 @@ def test_gpkg_distributed_read(spark, sf_dir, tmp_path):
     p = str(tmp_path / "c.gpkg")
     n = to_gpkg(c, p, table="customer")
     back = read_gpkg(spark, p, num_partitions=8)
+    assert back.rdd.getNumPartitions() == 8
     assert back.count() == n == c.count()
     assert (back.select(F.sum(st.x("geom"))).collect()[0][0]
             == c.select(F.sum(st.x("geom"))).collect()[0][0])
+    # column types come from the first 64 rows: a REAL beyond them in the
+    # integer column fails the read instead of being truncated into it
+    import sqlite3
+    con = sqlite3.connect(p)
+    con.execute('UPDATE "customer" SET c_custkey = 0.5 WHERE fid = 100')
+    con.commit()
+    con.close()
+    with pytest.raises(Exception, match="truncated"):
+        read_gpkg(spark, p).collect()
 
 
 def test_read_to_file_dispatch(spark, tmp_path):
@@ -770,3 +792,121 @@ def test_to_parquet_hilbert_clustered_write(spark, tmp_path):
     exp = df.filter((st.x("geom") >= 100) & (st.x("geom") <= 150) &
                     (st.y("geom") >= 100) & (st.y("geom") <= 150)).count()
     assert got == exp > 0
+
+
+# ---------------------------------------------------------------------------
+# Arrow boundary of the file formats (io/_arrow.py)
+# ---------------------------------------------------------------------------
+
+def test_exact_bigint_roundtrip_through_readers_and_arrow(spark, tmp_path):
+    """A bigint column with a NULL in its batch comes back exact and still
+    bigint from the range-scan readers and from to_arrow/from_arrow: no
+    pandas float64 hop turns 2**53 + 1 into 2**53 or the column into
+    double."""
+    import pyarrow as pa
+    from pyspark.sql.types import LongType
+
+    from geopandas_spark.io import from_arrow, read_file, to_arrow, to_file
+
+    big = 2 ** 53 + 1
+    df = (spark.createDataFrame(pa.table({
+        "v": pa.array([big, None, 7], pa.int64()), "x": [0.0, 1.0, 2.0]}))
+        .select("v", st.point("x", "x").alias("geom")).coalesce(1))
+    for ext in ("shp", "gpkg", "fgb"):
+        p = str(tmp_path / f"big.{ext}")
+        to_file(df, p)
+        back = read_file(spark, p)
+        assert back.schema["v"].dataType == LongType(), ext
+        assert sorted((r.v for r in back.collect()), key=str) == \
+            [7, big, None], ext
+    # an unsigned column (no Spark Arrow type) arrives widened to bigint
+    t = to_arrow(df).append_column(
+        "u", pa.array([2 ** 32 - 1, None, 0], pa.uint32()))
+    back = from_arrow(spark, t)
+    assert back.schema["v"].dataType == LongType()
+    assert back.schema["u"].dataType == LongType()
+    assert [(r.v, r.u) for r in back.collect()] == [
+        (big, 2 ** 32 - 1), (None, None), (7, 0)]
+
+
+def test_writer_value_text(spark, tmp_path):
+    """to_kml/to_gml/to_fgb write each value's own text: a bigint with a
+    NULL in its batch as ``3`` (not ``3.0``), an array as ``[1, 2, 3]``,
+    a timestamp as its naive session-zone wall clock, and leave NaN
+    doubles out. to_fgb leaves the session conf as it found it."""
+    from geopandas_spark.io import read_fgb, to_fgb, to_gml, to_kml
+
+    df = spark.sql("""
+        SELECT * FROM VALUES
+          (3L, 1.5D, TIMESTAMP'2020-01-02 03:04:05', array(1L, 2L, 3L),
+           'POINT (1 2)'),
+          (NULL, CAST('NaN' AS DOUBLE), NULL, NULL, 'POINT (3 4)')
+        AS t(n, d, ts, arr, w)""").select(
+        "n", "d", "ts", "arr", st.geom_from_text("w").alias("geom")) \
+        .coalesce(1)
+    kml = tmp_path / "v.kml"
+    to_kml(df, str(kml))
+    text = kml.read_text()
+    assert '<Data name="n"><value>3</value></Data>' in text
+    assert '<Data name="d"><value>1.5</value></Data>' in text
+    assert text.count('<Data name="d">') == 1
+    assert "<value>2020-01-02 03:04:05</value>" in text
+    assert "<value>[1, 2, 3]</value>" in text
+
+    gml = tmp_path / "v.gml"
+    to_gml(df, str(gml))
+    text = gml.read_text()
+    assert "<n>3</n>" in text and text.count("<d>") == 1
+    assert "<ts>2020-01-02 03:04:05</ts>" in text
+    assert "<arr>[1, 2, 3]</arr>" in text
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        p = str(tmp_path / "v.fgb")
+        to_fgb(df, p, index=False)
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, prev)
+    rows = read_fgb(spark, p).orderBy(F.col("n").asc_nulls_last()).collect()
+    assert [(r.n, r.d, r.ts, r.arr) for r in rows] == [
+        (3, 1.5, "2020-01-02 03:04:05", "[1, 2, 3]"),
+        (None, None, None, None)]
+
+
+def test_readers_plan_ranges_not_python_rdds(spark, tmp_path):
+    """``num_partitions=k`` gives exactly k non-empty partitions for the
+    shapefile, GeoPackage and FlatGeobuf readers, and no reader (nor
+    from_arrow / from_features) plans a Python RDD scan
+    (``ExistingRDD``), which reruns Python tasks on every execution."""
+    from geopandas_spark import from_features
+    from geopandas_spark.io import from_arrow, read_file, to_arrow, to_file
+
+    df = spark.range(40).select(
+        "id", st.point(F.col("id"), F.col("id")).alias("geom"))
+    frames = {}
+    for ext in ("shp", "gpkg", "fgb"):
+        p = str(tmp_path / f"k.{ext}")
+        to_file(df, p)
+        for k in (1, 8):
+            back = read_file(spark, p, num_partitions=k)
+            sizes = back.rdd.glom().map(len).collect()
+            assert len(sizes) == k and min(sizes) > 0, (ext, k, sizes)
+        frames[ext] = read_file(spark, p)
+    for ext in ("feather", "geojsonl", "kml", "gml"):
+        p = str(tmp_path / f"k.{ext}")
+        to_file(df, p)
+        frames[ext] = read_file(spark, p)
+        assert frames[ext].count() == 40, ext
+    fc = tmp_path / "fc.geojson"
+    fc.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {"id": 1},
+         "geometry": {"type": "Point", "coordinates": [1.0, 2.0]}}]}))
+    frames["geojson"] = read_file(spark, str(fc))
+    frames["from_arrow"] = from_arrow(spark, to_arrow(df))
+    frames["from_features"] = from_features(
+        spark, [{"properties": {"id": 1}, "geometry": None}]).df
+    for name, f in frames.items():
+        plan = f._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan)
