@@ -863,37 +863,47 @@ def _any_segment_hit(p, r, q0, q1, proper_only=False) -> bool:
 # point-in-polygon primitive
 # ---------------------------------------------------------------------------
 
+def _on_and_crossing(X, Y, x0, y0, x1, y1):
+    """The one point-vs-segment test of every point-in-polygon path,
+    elementwise over broadcast arrays (a dense points × segments grid or
+    flat expanded pairs). Returns (on, crossing): the point lies on the
+    segment within _EPS, and the rightward ray from the point crosses it
+    (even-odd, half-open in y so a vertex is counted once). A zero-length
+    segment (a repeated vertex) is a point: ``on`` only within _EPS of it,
+    and it never crosses."""
+    dx, dy = x1 - x0, y1 - y0
+    ex, ey = X - x0, Y - y0
+    cross = ex * dy - ey * dx
+    dot = ex * dx + ey * dy
+    sq = dx * dx + dy * dy
+    on = (np.abs(cross) <= _EPS * np.maximum(1.0, sq)) & \
+        (dot >= -_EPS) & (dot <= sq + _EPS)
+    point = sq == 0
+    if point.any():
+        on &= ~point | (ex * ex + ey * ey <= _EPS * _EPS)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = x0 + ey * dx / np.where(dy == 0, 1.0, dy)
+    crossing = ((y0 > Y) != (y1 > Y)) & (X < xint)
+    return on, crossing
+
+
 def points_in_rings(px: np.ndarray, py: np.ndarray, rings: list) -> np.ndarray:
     """Classify points against one polygon (list of rings, ring 0 = shell).
 
     Returns int8 per point: 0 = exterior, 1 = boundary, 2 = interior.
-    Vectorized over points × segments (even-odd ray casting + on-segment
-    boundary detection) — the distributed analogue of the reference's
-    prepared-geometry predicate refine (geopandas/sindex.py:128-130).
+    Vectorized over points × segments (dense grid, `_on_and_crossing`) —
+    the distributed analogue of the reference's prepared-geometry
+    predicate refine (geopandas/sindex.py:128-130).
     """
     inside = np.zeros(len(px), dtype=np.int64)
     boundary = np.zeros(len(px), dtype=bool)
+    X, Y = px[:, None], py[:, None]
     for ring in rings:
-        x0 = ring[:-1, 0][None, :]
-        y0 = ring[:-1, 1][None, :]
-        x1 = ring[1:, 0][None, :]
-        y1 = ring[1:, 1][None, :]
-        X = px[:, None]
-        Y = py[:, None]
-        # boundary: point on segment
-        dx = x1 - x0
-        dy = y1 - y0
-        cross = (X - x0) * dy - (Y - y0) * dx
-        dot = (X - x0) * dx + (Y - y0) * dy
-        sq = dx * dx + dy * dy
-        on = (np.abs(cross) <= _EPS * np.maximum(1.0, np.abs(sq))) & \
-             (dot >= -_EPS) & (dot <= sq + _EPS)
+        on, crossing = _on_and_crossing(X, Y, ring[:-1, 0][None, :],
+                                        ring[:-1, 1][None, :],
+                                        ring[1:, 0][None, :],
+                                        ring[1:, 1][None, :])
         boundary |= on.any(axis=1)
-        # even-odd crossings (half-open rule avoids double counting vertices)
-        cond = (y0 > Y) != (y1 > Y)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = x0 + (Y - y0) * dx / np.where(dy == 0, 1.0, dy)
-        crossing = cond & (X < xint)
         inside += crossing.sum(axis=1)
     out = np.where(inside % 2 == 1, 2, 0).astype(np.int8)
     out[boundary] = 1
@@ -1303,49 +1313,21 @@ def _pip_rows(pts_ga, poly_gb):
 
 def _pairwise_point_in_poly(pts_ga, poly_gb, rows):
     """Vectorized pairwise point-in-polygon classification for `rows`
-    (each row's point vs that row's OWN polygon). One numpy pass over a
-    segment-gather: every ring segment of every selected polygon is tested
-    against its row's point via even-odd crossings + on-segment boundary
-    detection — no per-row Python loop. This is the distributed refine hot
-    path of the grid spatial join (SURVEY §2.4)."""
+    (each row's point vs that row's OWN polygon). One numpy pass over the
+    selected polygons' segments (`_row_segments`): each is tested against
+    its row's point by `_on_and_crossing` — no per-row Python loop. This
+    is the distributed refine hot path of the grid spatial join (SURVEY
+    §2.4)."""
     rows = np.asarray(rows)
     if len(rows) == 0:
         return rows, np.zeros(0, dtype=np.int8)
-    pos_of_row = np.full(len(poly_gb), -1, dtype=np.int64)
-    pos_of_row[rows] = np.arange(len(rows))
     poff = pts_ga.coord_offsets_per_geom()
     px = pts_ga.coords[poff[rows], 0]
     py = pts_ga.coords[poff[rows], 1]
-    # all outgoing segments of poly_gb: every coord except each ring's last
-    starts = poly_gb.ring_offsets[:-1]
-    ends = poly_gb.ring_offsets[1:]
-    n_coords = poly_gb.n_coords
-    valid = np.ones(n_coords, dtype=bool)
-    lasts = ends[ends > starts] - 1
-    valid[lasts] = False
-    seg_idx = np.nonzero(valid)[0]
-    seg_row = poly_gb.coord_geom_index()[seg_idx]
-    tgt = pos_of_row[seg_row]
-    sel = tgt >= 0
-    seg_idx, tgt = seg_idx[sel], tgt[sel]
-    x0 = poly_gb.coords[seg_idx, 0]
-    y0 = poly_gb.coords[seg_idx, 1]
-    x1 = poly_gb.coords[seg_idx + 1, 0]
-    y1 = poly_gb.coords[seg_idx + 1, 1]
-    X, Y = px[tgt], py[tgt]
-    dx, dy = x1 - x0, y1 - y0
-    # boundary: point on segment
-    cross = (X - x0) * dy - (Y - y0) * dx
-    dot = (X - x0) * dx + (Y - y0) * dy
-    sq = dx * dx + dy * dy
-    on = (np.abs(cross) <= _EPS * np.maximum(1.0, np.abs(sq))) & \
-         (dot >= -_EPS) & (dot <= sq + _EPS)
+    s0, s1, tgt = _row_segments(poly_gb, rows)
+    on, crossing = _on_and_crossing(px[tgt], py[tgt], s0[:, 0], s0[:, 1],
+                                    s1[:, 0], s1[:, 1])
     boundary = np.bincount(tgt[on], minlength=len(rows)) > 0
-    # even-odd ray crossings (half-open rule)
-    cond = (y0 > Y) != (y1 > Y)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x0 + (Y - y0) * dx / np.where(dy == 0, 1.0, dy)
-    crossing = cond & (X < xint)
     inside = np.bincount(tgt[crossing], minlength=len(rows)) % 2 == 1
     cls = np.where(inside, 2, 0).astype(np.int8)
     cls[boundary] = 1
@@ -1367,7 +1349,9 @@ def _row_segments(g, rows):
     tgt = pos_of_row[g.coord_geom_index()[idx]]
     sel = tgt >= 0
     idx, tgt = idx[sel], tgt[sel]
-    return g.coords[idx], g.coords[idx + 1], tgt
+    # np.take: a row gather by fancy index costs ~8x more on (n, 2)
+    return (np.take(g.coords, idx, axis=0),
+            np.take(g.coords, idx + 1, axis=0), tgt)
 
 
 def _row_vertices(g, rows):
@@ -1475,56 +1459,13 @@ def _seg_pairs_hit(p0, p1, q0, q1):
     return hit
 
 
-def _vectorized_vertex_in_poly(vx, vy, v_tgt, s0, s1, s_tgt, cnt_v_full,
-                               cnt_s_full, sel, nrows):
-    """Per selected row: any of the row's partner vertices strictly
-    inside OR on the boundary of the row's polygon (global even-odd
-    parity over all the polygon's segments + on-segment boundary —
-    identical formulas to _pairwise_point_in_poly). Returns bool[nrows].
-    Expansion = segments × vertices per row, chunked by _cross_chunks;
-    offsets derive from the FULL per-row counts (they index the
-    concatenated element arrays) while unselected rows contribute zero
-    expansion."""
-    out = np.zeros(nrows, dtype=bool)
-    off_s = np.concatenate([[0], np.cumsum(cnt_s_full)])[:-1]
-    off_v = np.concatenate([[0], np.cumsum(cnt_v_full)])[:-1]
-    cnt_s = np.where(sel, cnt_s_full, 0)
-    cnt_v = np.where(sel, cnt_v_full, 0)
-    for lo, hi in _cross_chunks(cnt_s, cnt_v):
-        isg, iv, row = _expand_pairs(cnt_s, cnt_v, lo, hi, off_s, off_v)
-        if len(row) == 0:
-            continue
-        x0, y0 = s0[isg, 0], s0[isg, 1]
-        x1, y1 = s1[isg, 0], s1[isg, 1]
-        X, Y = vx[iv], vy[iv]
-        dx, dy = x1 - x0, y1 - y0
-        cross = (X - x0) * dy - (Y - y0) * dx
-        dot = (X - x0) * dx + (Y - y0) * dy
-        sq = dx * dx + dy * dy
-        on = (np.abs(cross) <= _EPS * np.maximum(1.0, np.abs(sq))) & \
-             (dot >= -_EPS) & (dot <= sq + _EPS)
-        cond = (y0 > Y) != (y1 > Y)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = x0 + (Y - y0) * dx / np.where(dy == 0, 1.0, dy)
-        crossing = cond & (X < xint)
-        # parity per (row, vertex), tallied over the chunk's vertices
-        # [v0, v0 + m) only, so a chunk costs O(chunk)
-        v0 = int(off_v[lo])
-        m = int(off_v[hi - 1] + cnt_v[hi - 1]) - v0
-        ncross = np.bincount(iv - v0, weights=crossing, minlength=m)
-        inside_v = ncross.astype(np.int64) % 2 == 1
-        on_v = np.bincount(iv[on] - v0, minlength=m) > 0
-        out[v_tgt[v0:v0 + m][inside_v | on_v]] = True
-    return out
-
-
-def _vec_classify_points(vx, vy, v_tgt, s0, s1, s_tgt, cnt_v_full,
-                         cnt_s_full, sel, nrows):
+def _vec_classify_points(vx, vy, s0, s1, cnt_v_full, cnt_s_full, sel):
     """Per-POINT classification of each selected row's probe points
     against the row's polygon (0 exterior / 1 boundary / 2 interior —
-    global even-odd parity + on-segment boundary, identical formulas to
-    _pairwise_point_in_poly). Returns int8[len(vx)]; points of
-    unselected rows keep 0. Expanded in ``_cross_chunks`` chunks."""
+    global even-odd parity + on-segment boundary by `_on_and_crossing`).
+    Points and segments are grouped by row, ``cnt_*_full`` per row.
+    Returns int8[len(vx)]; points of unselected rows keep 0. Expanded in
+    ``_cross_chunks`` chunks."""
     cls = np.zeros(len(vx), dtype=np.int8)
     off_s = np.concatenate([[0], np.cumsum(cnt_s_full)])[:-1]
     off_v = np.concatenate([[0], np.cumsum(cnt_v_full)])[:-1]
@@ -1534,19 +1475,8 @@ def _vec_classify_points(vx, vy, v_tgt, s0, s1, s_tgt, cnt_v_full,
         isg, iv, row = _expand_pairs(cnt_s, cnt_v, lo, hi, off_s, off_v)
         if len(row) == 0:
             continue
-        x0, y0 = s0[isg, 0], s0[isg, 1]
-        x1, y1 = s1[isg, 0], s1[isg, 1]
-        X, Y = vx[iv], vy[iv]
-        dx, dy = x1 - x0, y1 - y0
-        cross = (X - x0) * dy - (Y - y0) * dx
-        dot = (X - x0) * dx + (Y - y0) * dy
-        sq = dx * dx + dy * dy
-        on = (np.abs(cross) <= _EPS * np.maximum(1.0, np.abs(sq))) & \
-             (dot >= -_EPS) & (dot <= sq + _EPS)
-        cond = (y0 > Y) != (y1 > Y)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = x0 + (Y - y0) * dx / np.where(dy == 0, 1.0, dy)
-        crossing = cond & (X < xint)
+        on, crossing = _on_and_crossing(vx[iv], vy[iv], s0[isg, 0],
+                                        s0[isg, 1], s1[isg, 0], s1[isg, 1])
         v0 = int(off_v[lo])          # the chunk's points: [v0, v0 + m)
         m = int(off_v[hi - 1] + cnt_v[hi - 1]) - v0
         ncross = np.bincount(iv - v0, weights=crossing, minlength=m)
@@ -1627,7 +1557,9 @@ def _sat_rows(g, rows):
     """(eligible bool[nrows], ccw_sign float[nrows]) — single-ring
     convex polygon rows, the convex-SAT precondition. Vectorized
     mirror of _is_convex (wrap-around edge pair included); degenerate
-    zero-area rings are ineligible."""
+    zero-area rings are ineligible, and so are rings with a repeated
+    vertex, whose zero-length edge would hide a reflex turn between
+    its neighbours (they take the generic path)."""
     n = len(rows)
     ok = np.zeros(n, dtype=bool)
     sign = np.zeros(n)
@@ -1654,7 +1586,8 @@ def _sat_rows(g, rows):
     conv = (mn >= -_EPS) | (mx <= _EPS)
     area2 = np.add.reduceat(
         c0[:, 0] * c1[:, 1] - c1[:, 0] * c0[:, 1], off)
-    good = conv & (area2 != 0)
+    zero = np.add.reduceat((v[:, 0] == 0) & (v[:, 1] == 0), off)
+    good = conv & (area2 != 0) & (zero == 0)
     ok[cand[good]] = True
     sign[cand[good]] = np.sign(area2[good])
     return ok, sign
@@ -1671,8 +1604,7 @@ def _sat_lin(s0, s1, s_tgt, sign):
     Dx = (s1[:, 0] - s0[:, 0]) * sgnseg
     Dy = (s1[:, 1] - s0[:, 1]) * sgnseg
     C = Dx * s0[:, 1] - Dy * s0[:, 0]
-    zseg = (s1[:, 0] == s0[:, 0]) & (s1[:, 1] == s0[:, 1])
-    return Dx, Dy, C, zseg
+    return Dx, Dy, C
 
 
 def _sat_center_probe(lin, s_tgt, cnt_s_full, cx, cy, sel, nrows):
@@ -1683,13 +1615,12 @@ def _sat_center_probe(lin, s_tgt, cnt_s_full, cx, cy, sel, nrows):
     amortization, ~3M combos/s measured); this specialization is one
     vectorized pass over the segments: no expansion, no chunking.
     +inf where unselected (callers mask by their own sel)."""
-    Dx, Dy, C, zseg = lin
+    Dx, Dy, C = lin
     if len(Dx) == 0:
         return np.full(nrows, np.inf)
     s = Dx * cy[s_tgt]
     s -= Dy * cx[s_tgt]
     s -= C
-    s[zseg] = np.inf
     off = np.concatenate([[0], np.cumsum(cnt_s_full)])[:-1]
     mn = np.minimum.reduceat(s, np.minimum(off, len(s) - 1))
     return np.where(sel & (cnt_s_full > 0), mn, np.inf)
@@ -1702,9 +1633,9 @@ def _sat_best(lin, s_tgt, cnt_s_full, vx, vy, cnt_v_full,
     convex SAT. For a CCW convex polygon, its extreme projection on an
     edge's outward normal IS that edge, so 'all partner verts strictly
     outside some edge' == 'a separating axis exists among this side's
-    normals'. +inf where unselected; zero-length edges contribute +inf
-    (their axis is meaningless). ``lin`` is the shared _sat_lin output."""
-    Dx, Dy, C, zseg = lin
+    normals'. +inf where unselected. ``lin`` is the shared _sat_lin
+    output."""
+    Dx, Dy, C = lin
     best = np.full(nrows, np.inf)
     off_s = np.concatenate([[0], np.cumsum(cnt_s_full)])[:-1]
     off_v = np.concatenate([[0], np.cumsum(cnt_v_full)])[:-1]
@@ -1724,7 +1655,6 @@ def _sat_best(lin, s_tgt, cnt_s_full, vx, vy, cnt_v_full,
         gs = np.nonzero(ng)[0]
         smax = np.maximum.reduceat(s, gs)
         segid = isg[gs]
-        smax[zseg[segid]] = np.inf
         # per-row min: segid (hence its row) is sorted within the chunk
         rt = s_tgt[segid]
         rg_ = np.empty(len(rt), dtype=bool)
@@ -1877,15 +1807,15 @@ def _poly_line_intersects_fast(ga, gb):
         cva = np.bincount(tva, minlength=nrows)
         cvb = np.bincount(tvb, minlength=nrows)
         sel = rem & pa_poly
-        if sel.any():   # B's vertices vs polygon A
-            hit |= _vectorized_vertex_in_poly(
-                vb[:, 0], vb[:, 1], tvb, a0, a1, ta_,
-                cvb, cnt_a_full, sel, nrows)
+        if sel.any():   # B's vertices inside-or-on polygon A
+            cls = _vec_classify_points(vb[:, 0], vb[:, 1], a0, a1,
+                                       cvb, cnt_a_full, sel)
+            hit |= np.bincount(tvb[cls > 0], minlength=nrows) > 0
         sel = rem & pb_poly & ~hit
-        if sel.any():   # A's vertices vs polygon B
-            hit |= _vectorized_vertex_in_poly(
-                va[:, 0], va[:, 1], tva, b0, b1, tb_,
-                cva, cnt_b_full, sel, nrows)
+        if sel.any():   # A's vertices inside-or-on polygon B
+            cls = _vec_classify_points(va[:, 0], va[:, 1], b0, b1,
+                                       cva, cnt_b_full, sel)
+            hit |= np.bincount(tva[cls > 0], minlength=nrows) > 0
     res[rows[~big]] = hit[~big] | rect_pair[~big] | sat_true[~big]
     return fast, res
 
@@ -2187,8 +2117,7 @@ def _covers_screen(ga, gb, require_interior):
     order = np.argsort(ptgt, kind="stable")
     px, py, ptgt = px[order], py[order], ptgt[order]
     cnt_p = np.bincount(ptgt, minlength=nn)
-    cls = _vec_classify_points(px, py, ptgt, a0, a1, ta_,
-                               cnt_p, cnt_sa, live, nn)
+    cls = _vec_classify_points(px, py, a0, a1, cnt_p, cnt_sa, live)
     out_rows = np.zeros(nn, dtype=bool)
     oz = ptgt[cls == 0]
     if len(oz):
@@ -2340,19 +2269,10 @@ def _pairwise_point_dist(pts_ga, gb, rows):
     np.minimum.at(best, tv, np.hypot(gb.coords[selv, 0] - px[tv],
                                      gb.coords[selv, 1] - py[tv]))
     # segment distances (line/polygon rows): clamped projection
-    starts = gb.ring_offsets[:-1]
-    ends = gb.ring_offsets[1:]
-    valid = np.ones(gb.n_coords, dtype=bool)
-    valid[ends[ends > starts] - 1] = False
-    seg_idx = np.nonzero(valid)[0]
-    tgt = pos_of_row[gb.coord_geom_index()[seg_idx]]
-    sel = tgt >= 0
-    seg_idx, tgt = seg_idx[sel], tgt[sel]
-    if len(seg_idx):
-        x0 = gb.coords[seg_idx, 0]
-        y0 = gb.coords[seg_idx, 1]
-        dx = gb.coords[seg_idx + 1, 0] - x0
-        dy = gb.coords[seg_idx + 1, 1] - y0
+    s0, s1, tgt = _row_segments(gb, rows)
+    if len(tgt):
+        x0, y0 = s0[:, 0], s0[:, 1]
+        dx, dy = s1[:, 0] - x0, s1[:, 1] - y0
         X, Y = px[tgt], py[tgt]
         denom = dx * dx + dy * dy
         t = np.clip(((X - x0) * dx + (Y - y0) * dy) /
@@ -2646,9 +2566,13 @@ def _multipoint_crosses(pt_ga, i, other, j) -> bool:
     if t in POLYGON_TYPES:
         cls = points_in_geom(pts[:, 0], pts[:, 1], other, j)
         return bool((cls == 2).any() and (cls == 0).any())
-    segs = _geom_segments(other, j)
-    d = _point_seg_dist(pts, segs)
-    return bool((d <= _EPS).any() and (d > _EPS).any())
+    # a line's interior excludes its mod-2 boundary: a point on an
+    # endpoint touches the line, it does not cross it
+    on = _point_seg_dist(pts, _geom_segments(other, j)) <= _EPS
+    ends = _line_endpoints(other, j)
+    at_end = np.hypot(pts[:, None, 0] - ends[None, :, 0],
+                      pts[:, None, 1] - ends[None, :, 1]) <= _EPS
+    return bool((on & ~at_end.any(axis=1)).any() and (~on).any())
 
 
 def overlaps(ga, gb):
@@ -2934,18 +2858,6 @@ def _points_with_empties(cx, cy, missing, empty) -> GeometryArray:
     ppr = np.arange(npts + 1, dtype=np.int64)
     coords = np.column_stack([np.asarray(cx)[val], np.asarray(cy)[val]])
     return GeometryArray(types, geom_offsets, ppr, ppr.copy(), coords)
-
-
-def _with_nulls(ga: GeometryArray, null_mask) -> GeometryArray:
-    if not null_mask.any():
-        return ga
-    b = GeometryBuilder()
-    for i in range(len(ga)):
-        if null_mask[i]:
-            b.append_null()
-        else:
-            b.append_from(ga, i)
-    return b.finish()
 
 
 def envelope(ga: GeometryArray) -> GeometryArray:
@@ -3742,8 +3654,10 @@ def _is_convex(ring: np.ndarray) -> bool:
     starting vertex is otherwise misclassified as convex, which sent
     such polygons down the Sutherland–Hodgman / convex-buffer fast paths
     and produced wrong boolean results (caught by the star-polygon
-    property fuzz)."""
+    property fuzz). A repeated vertex (zero-length edge) has no turn of
+    its own, so it is dropped before the edges are paired."""
     v = np.diff(ring, axis=0)
+    v = v[(v != 0).any(axis=1)]
     cr = np.cross(v, np.roll(v, -1, axis=0))
     return bool((cr >= -_EPS).all() or (cr <= _EPS).all())
 

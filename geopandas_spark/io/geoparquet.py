@@ -22,6 +22,7 @@ the dataset on one machine) is gone.
 from __future__ import annotations
 
 import json
+import math
 import os
 from typing import Optional, Sequence
 
@@ -64,12 +65,19 @@ def _resolve_fs(path: str):
     return pafs.LocalFileSystem(), os.path.abspath(path)
 
 
+def _hive_value(v) -> str:
+    """A partition value as Spark spells it, so Spark parses it back:
+    NULL is the hive default partition and a non-finite double is
+    NaN / Infinity / -Infinity (Python's nan / inf read back as text)."""
+    if v is None:
+        return "__HIVE_DEFAULT_PARTITION__"
+    if isinstance(v, float) and not math.isfinite(v):
+        return "NaN" if v != v else ("Infinity" if v > 0 else "-Infinity")
+    return str(v)
+
+
 def _hive_part_dir(cols, values) -> str:
-    segs = []
-    for c, v in zip(cols, values):
-        s = "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
-        segs.append(f"{c}={s}")
-    return "/".join(segs)
+    return "/".join(f"{c}={_hive_value(v)}" for c, v in zip(cols, values))
 
 
 def _make_write_task(path: str, geom: str, crs: Optional[str],

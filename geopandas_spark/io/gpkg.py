@@ -26,7 +26,7 @@ from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
                                FloatType, IntegerType, LongType, ShortType,
                                StringType, StructField, StructType)
 
-from geopandas_spark.io._arrow import ranges, scan
+from geopandas_spark.io._arrow import local_chunks, ranges, scan
 
 _GP_MAGIC = b"GP"
 
@@ -188,26 +188,17 @@ def to_gpkg(df: DataFrame, path: str, *, table: str = "layer",
         n = 0
         minx = miny = float("inf")
         maxx = maxy = float("-inf")
-        from geopandas_spark.geom import wkb as _wkb
-        batch = []
-        for row in df.toLocalIterator(prefetchPartitions=True):
-            w = row[geom]
-            if w is not None:
-                ga = _wkb.decode(np.array([w], dtype=object))
-                if not ga.is_empty()[0]:
-                    c = ga.coords
-                    minx = min(minx, float(c[:, 0].min()))
-                    miny = min(miny, float(c[:, 1].min()))
-                    maxx = max(maxx, float(c[:, 0].max()))
-                    maxy = max(maxy, float(c[:, 1].max()))
-            batch.append(tuple(row[c] for c in names)
-                         + (_wkb_to_gpkg_blob(w, srs_id),))
-            n += 1
-            if len(batch) >= 2000:
-                con.executemany(ins, batch)
-                batch = []
-        if batch:
-            con.executemany(ins, batch)
+        for chunk, ga in local_chunks(df, geom):
+            if ga.n_coords:
+                c = ga.coords
+                minx = min(minx, float(c[:, 0].min()))
+                miny = min(miny, float(c[:, 1].min()))
+                maxx = max(maxx, float(c[:, 0].max()))
+                maxy = max(maxy, float(c[:, 1].max()))
+            con.executemany(ins, [
+                tuple(row[c] for c in names)
+                + (_wkb_to_gpkg_blob(row[geom], srs_id),) for row in chunk])
+            n += len(chunk)
         if not np.isfinite(minx):
             minx = miny = maxx = maxy = None
         con.execute(

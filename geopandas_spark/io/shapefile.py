@@ -32,12 +32,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (BinaryType, BooleanType, DoubleType, LongType,
                                StringType, StructField, StructType)
 
-from geopandas_spark.geom import wkb as _wkb
+from geopandas_spark.geom import algos, wkb as _wkb
 from geopandas_spark.geom.array import (GT_LINESTRING, GT_MISSING,
                                         GT_MULTILINESTRING, GT_MULTIPOINT,
                                         GT_MULTIPOLYGON, GT_POINT, GT_POLYGON,
                                         GeometryArray, GeometryBuilder)
-from geopandas_spark.io._arrow import ranges, scan
+from geopandas_spark.io._arrow import local_chunks, ranges, scan
 
 SHP_NULL, SHP_POINT, SHP_POLYLINE, SHP_POLYGON, SHP_MULTIPOINT = 0, 1, 3, 5, 8
 
@@ -49,16 +49,6 @@ SHP_NULL, SHP_POINT, SHP_POLYLINE, SHP_POLYGON, SHP_MULTIPOINT = 0, 1, 3, 5, 8
 def _ring_signed_area(ring: np.ndarray) -> float:
     x, y = ring[:, 0], ring[:, 1]
     return 0.5 * float(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1)))
-
-
-def _point_in_ring(pt, ring: np.ndarray) -> bool:
-    x, y = pt
-    x0, y0 = ring[:-1, 0], ring[:-1, 1]
-    x1, y1 = ring[1:, 0], ring[1:, 1]
-    cond = (y0 > y) != (y1 > y)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xs = x0 + (y - y0) * (x1 - x0) / (y1 - y0)
-    return bool(np.count_nonzero(cond & (x < xs)) % 2)
 
 
 def _parse_shp_record(content: bytes, bb: GeometryBuilder) -> None:
@@ -93,7 +83,7 @@ def _parse_shp_record(content: bytes, bb: GeometryBuilder) -> None:
             polys = [[s[::-1].copy()] for s in shells]  # kernel shells CCW
             for h in holes:
                 for k, s in enumerate(shells):
-                    if _point_in_ring(h[0], s):
+                    if algos.points_in_rings(h[:1, 0], h[:1, 1], [s])[0]:
                         polys[k].append(h[::-1].copy())
                         break
                 else:
@@ -242,9 +232,10 @@ def read_shapefile(spark: SparkSession, path: str, *, geom: str = "geom",
 def _shape_record(ga: GeometryArray, i: int) -> tuple:
     """(shape_type, payload bytes) for row i."""
     t = int(ga.types[i])
-    if t == GT_MISSING:
+    parts = [] if t == GT_MISSING else ga.geom_slices(i)
+    if not any(len(r) for p in parts for r in p):
+        # NULL and EMPTY rows are both the null shape (as OGR writes them)
         return SHP_NULL, struct.pack("<i", SHP_NULL)
-    parts = ga.geom_slices(i)
     if t == GT_POINT:
         p = parts[0][0][0]
         return SHP_POINT, struct.pack("<i2d", SHP_POINT, p[0], p[1])
@@ -324,23 +315,23 @@ def to_shapefile(df: DataFrame, path: str, *, geom: str = "geom") -> int:
     stype_seen = SHP_NULL
     minx = miny = np.inf
     maxx = maxy = -np.inf
-    for row in df.toLocalIterator(prefetchPartitions=True):
-        ga = _wkb.decode(np.array([row[geom]], dtype=object))
-        st_, payload = _shape_record(ga, 0)
-        if st_ != SHP_NULL:
-            stype_seen = st_
-            b = payload
-            if st_ == SHP_POINT:
-                x, y = struct.unpack_from("<2d", b, 4)
-                x0, y0, x1, y1 = x, y, x, y
-            else:
-                x0, y0, x1, y1 = struct.unpack_from("<4d", b, 4)
-            minx, miny = min(minx, x0), min(miny, y0)
-            maxx, maxy = max(maxx, x1), max(maxy, y1)
-        records.append(payload)
-        dbf_rows.append(b" " + b"".join(
-            _dbf_format(row[name], ft, fl, fd)
-            for name, ft, fl, fd in specs))
+    for chunk, ga in local_chunks(df, geom):
+        for i, row in enumerate(chunk):
+            st_, payload = _shape_record(ga, i)
+            if st_ != SHP_NULL:
+                stype_seen = st_
+                b = payload
+                if st_ == SHP_POINT:
+                    x, y = struct.unpack_from("<2d", b, 4)
+                    x0, y0, x1, y1 = x, y, x, y
+                else:
+                    x0, y0, x1, y1 = struct.unpack_from("<4d", b, 4)
+                minx, miny = min(minx, x0), min(miny, y0)
+                maxx, maxy = max(maxx, x1), max(maxy, y1)
+            records.append(payload)
+            dbf_rows.append(b" " + b"".join(
+                _dbf_format(row[name], ft, fl, fd)
+                for name, ft, fl, fd in specs))
 
     if not np.isfinite(minx):
         minx = miny = maxx = maxy = 0.0

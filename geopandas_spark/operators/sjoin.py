@@ -406,8 +406,7 @@ def _refine_pairs(lga, rga, li, rj, predicate, distance):
         s0, s1, s_tgt = algos._row_segments(rga, uj)
         cnt_s = np.bincount(s_tgt, minlength=len(uj))
         small = cnt_v * cnt_s < _PIP_GROUP_CAP
-        cls = algos._vec_classify_points(px, py, None, s0, s1, s_tgt, cnt_v,
-                                         cnt_s, small, len(uj))
+        cls = algos._vec_classify_points(px, py, s0, s1, cnt_v, cnt_s, small)
         for g in np.flatnonzero(~small):
             k = slice(start[g], start[g] + cnt_v[g])
             cls[k] = algos.points_in_geom(px[k], py[k], rga, int(uj[g]))

@@ -166,10 +166,6 @@ def lsh_bucket_topk(df: DataFrame, queries: DataFrame, k: int = 5, *,
                   .select("q_id", "c_id", "score", "rank"))
 
 
-def _lit_vec(vals) -> Column:
-    return F.array(*[F.lit(float(v)) for v in vals])
-
-
 def centroid_scores(df: DataFrame, cents, *, vec_col: str, dim: int,
                     scores_col: str = "__cs__",
                     norm_out: str = "__vn__",

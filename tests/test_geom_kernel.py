@@ -2786,7 +2786,6 @@ def test_vec_classify_points_peak_memory_is_chunked():
     pts = ring[None, :, :] + shift[:, None, :]
     s0 = pts[:, :-1].reshape(-1, 2)
     s1 = pts[:, 1:].reshape(-1, 2)
-    s_tgt = np.repeat(np.arange(n), ns)
     probe = np.array([[0.0, 0.0], [1.0, 0.0], [5.0, 5.0], [0.1, 0.1],
                       [-0.2, 0.3], [0.0, 2.0], [0.5, -0.5], [9.0, 0.0]])
     px = (probe[None, :, 0] + shift[:, :1]).ravel()
@@ -2795,8 +2794,8 @@ def test_vec_classify_points_peak_memory_is_chunked():
     sel = np.ones(n, dtype=bool)
     tracemalloc.start()
     try:
-        cls = algos._vec_classify_points(px, py, None, s0, s1, s_tgt,
-                                         cnt[0], cnt[1], sel, n)
+        cls = algos._vec_classify_points(px, py, s0, s1, cnt[0], cnt[1],
+                                         sel)
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
@@ -2804,3 +2803,73 @@ def test_vec_classify_points_peak_memory_is_chunked():
     assert peak < 40 * 2 ** 20, peak
     want = np.array([2, 1, 0, 2, 2, 0, 2, 0], dtype=np.int8)
     np.testing.assert_array_equal(cls.reshape(n, nv), np.tile(want, (n, 1)))
+
+
+REPEATED_VERTEX = "POLYGON ((0 0, 0 0, 4 0, 4 4, 0 4, 0 0))"
+UNREPEATED = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
+PROBES = ["POINT (6 5.5)", "POINT (2 2)", "POINT (-3 -3)"]
+
+
+def test_repeated_vertex_is_a_point_not_a_boundary_everywhere():
+    """A repeated ring vertex is a zero-length edge: a point, not a
+    segment that every point lies on. Every point-in-polygon path gives
+    exterior / interior / exterior, as for the polygon without the
+    repeat, and the predicates, distance and relate agree with it."""
+    rep = ga_from_wkt(*[REPEATED_VERTEX] * 3)
+    plain = ga_from_wkt(*[UNREPEATED] * 3)
+    pts = ga_from_wkt(*PROBES)
+    px, py = pts.coords[:, 0], pts.coords[:, 1]
+    want = [0, 2, 0]
+    assert algos.points_in_geom(px, py, rep, 0).tolist() == want
+    assert algos._pairwise_point_in_poly(pts, rep, np.arange(3))[1] \
+        .tolist() == want
+    s0, s1, tgt = algos._row_segments(rep, np.array([0]))
+    cls = algos._vec_classify_points(px, py, s0, s1, np.array([3]),
+                                     np.bincount(tgt), np.array([True]))
+    assert cls.tolist() == want
+    for name in ("intersects", "within", "covered_by", "touches",
+                 "disjoint", "crosses", "overlaps"):
+        f = getattr(algos, name)
+        np.testing.assert_array_equal(f(pts, rep), f(pts, plain), name)
+        np.testing.assert_array_equal(f(rep, pts), f(plain, pts), name)
+    np.testing.assert_array_equal(algos.distance(pts, rep),
+                                  [2.5, 0.0, np.hypot(3, 3)])
+    assert algos.relate(rep, pts) == algos.relate(plain, pts)
+    assert algos.relate(rep.take([0]), pts.take([0])) == ["FF2FF10F2"]
+
+
+def test_multipoint_on_line_endpoint_does_not_cross():
+    """A line's interior excludes its (mod-2) boundary: a multipoint that
+    meets a line only at an endpoint touches it (DE-9IM F00FFF102), in
+    either argument order; a point on the interior, or on a closed
+    line (which has no boundary), does cross."""
+    mps = ga_from_wkt("MULTIPOINT ((7.5 3), (6.5 1.5), (5 0.5))",
+                      "MULTIPOINT ((3 2), (1 3), (6 7))",
+                      "MULTIPOINT ((4.5 2.75), (0 0))",
+                      "MULTIPOINT ((0 0), (9 9))")
+    lines = ga_from_wkt("LINESTRING (1.5 2.5, 7.5 3)",
+                        "LINESTRING (1.5 6.5, 5.5 6.5, 3 2)",
+                        "LINESTRING (1.5 2.5, 7.5 3)",
+                        "LINESTRING (0 0, 4 0, 4 4, 0 0)")
+    want = [False, False, True, True]
+    assert algos.crosses(mps, lines).tolist() == want
+    assert algos.crosses(lines, mps).tolist() == want
+    assert algos.relate(mps, lines)[:2] == ["F00FFF102"] * 2
+
+
+def test_repeated_vertex_does_not_hide_a_reflex_turn():
+    """A zero-length edge has no turn of its own: the convexity tests
+    must look past it, or a reflex star vertex next to a repeated one
+    sends the polygon down the convex buffer, clip and SAT paths."""
+    ring = ("14 10, 12.828 12.828, 10 14, 7.172 12.828, 2 10, "
+            "7.172 7.172{}, 10 5, 12.828 7.172, 14 10")
+    stars = ga_from_wkt(f"POLYGON (({ring.format('')}))",
+                        f"POLYGON (({ring.format(', 7.172 7.172')}))")
+    box = ga_from_wkt(*["POLYGON ((5 6, 9 6, 9 9, 5 9, 5 6))"] * 2)
+    touching = ga_from_wkt(*["POLYGON ((0 0, 2 0, 2 10, 0 10, 0 0))"] * 2)
+    assert not algos._is_convex(stars.coords[9:])
+    assert not algos._sat_rows(stars, np.arange(2))[0].any()
+    for got in (algos.area(algos.buffer(stars, np.array([1.0, 1.0]))),
+                algos.area(algos.intersection(box, stars))):
+        np.testing.assert_allclose(got[1], got[0], rtol=1e-12)
+    assert algos.intersects(touching, stars).all()

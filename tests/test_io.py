@@ -96,6 +96,30 @@ def test_geoparquet_partitioned_write(geodf, spark, tmp_path):
     assert back.filter("k IS NULL").count() == 7
 
 
+def test_geoparquet_nan_partition_key_reads_back_as_double(geodf, spark,
+                                                         tmp_path):
+    """A double partition key holding NaN is written as Spark spells it
+    (k=NaN, the directory Spark's own writer makes), so 1.5, NaN and
+    NULL read back as one double column, not as the strings '1.5',
+    'nan' and NULL."""
+    nk = geodf.withColumn(
+        "k", F.when(F.col("id") % 3 == 0, F.lit(None).cast("double"))
+        .when(F.col("id") % 3 == 1, F.lit(float("nan")))
+        .otherwise(F.lit(1.5))).coalesce(1)
+    path = str(tmp_path / "pts_nankey")
+    to_parquet(nk, path, partition_by=["k"])
+    ours = {d for d in os.listdir(path) if d.startswith("k=")}
+    assert ours == {"k=1.5", "k=NaN", "k=__HIVE_DEFAULT_PARTITION__"}
+    spark_path = str(tmp_path / "pts_nankey_spark")
+    nk.write.partitionBy("k").parquet(spark_path)
+    assert ours == {d for d in os.listdir(spark_path) if d.startswith("k=")}
+    back = spark.read.parquet(path)
+    assert back.schema["k"].dataType.typeName() == "double"
+    assert back.filter("k = 1.5").count() == 6
+    assert back.filter("isnan(k)").count() == 7
+    assert back.filter("k IS NULL").count() == 7
+
+
 def test_geoparquet_empty_and_append(geodf, spark, tmp_path):
     path = str(tmp_path / "pts_empty")
     meta = to_parquet(geodf.filter("id < 0"), path)
@@ -369,6 +393,66 @@ def test_shapefile_lines_points(spark, tmp_path):
     got = read_shapefile(spark, p2).withColumn(
         "t", st.as_text("geom")).orderBy("k").collect()
     assert [r.t for r in got] == [f"POINT ({i} {-i})" for i in range(5)]
+
+
+_WRITER_WKTS = [
+    "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 2 1, 2 2, 1 2, 1 1))",
+    "MULTIPOLYGON (((10 10, 14 10, 14 14, 10 14, 10 10)), "
+    "((20 20, 22 20, 22 22, 20 22, 20 20)))",
+    None, "LINESTRING (0 0, 1 1, 2 0)", "MULTIPOINT ((0 0), (1 1))",
+    "POINT (7 8)"]
+
+
+def _writer_frame(spark, wkts):
+    return spark.createDataFrame(
+        [(i, i * 0.5, f"s{i}", w) for i, w in enumerate(wkts)],
+        ["k", "v", "s", "w"]) \
+        .withColumn("geom", st.geom_from_text("w")).drop("w")
+
+
+def test_shp_gpkg_writers_decode_by_chunk(spark, tmp_path, monkeypatch):
+    """The shapefile and GeoPackage writers decode WKB one chunk of rows
+    at a time. With 4-row chunks (so a chunk ends mid-input) the
+    shapefile is byte-identical to the one a decode per row wrote
+    (pinned digests), an EMPTY row is the null shape, like NULL, and the
+    GeoPackage keeps each row's WKB behind its header and the extent of
+    every coordinate."""
+    import hashlib
+    import sqlite3
+
+    from geopandas_spark.io import _arrow, to_gpkg, to_shapefile
+    from geopandas_spark.io.gpkg import _wkb_to_gpkg_blob
+
+    monkeypatch.setattr(_arrow, "LOCAL_CHUNK_ROWS", 4)
+    df = _writer_frame(spark, _WRITER_WKTS)
+    assert to_shapefile(df, str(tmp_path / "n.shp")) == 6
+    digest = {e: hashlib.sha256((tmp_path / f"n{e}").read_bytes())
+              .hexdigest() for e in (".shp", ".shx", ".dbf")}
+    assert digest == {
+        ".shp": "fdc5faf9e48a5b62f89716ba5c72c69b"
+                "52c8d1aea09b2dee8294a9eec0c19bfb",
+        ".shx": "a4538c7565fc38613b2db8e96843d954"
+                "d27812a806fed82ece2725deca6e3ff9",
+        ".dbf": "fb20950c9bf11662ef2216d28ce44bba"
+                "b3b7ecb811125c7670a0a60687628ddb"}
+    empty = _writer_frame(spark, [w or "POINT EMPTY" for w in _WRITER_WKTS])
+    to_shapefile(empty, str(tmp_path / "e.shp"))
+    for e in (".shp", ".shx", ".dbf"):
+        assert (tmp_path / f"e{e}").read_bytes() == \
+            (tmp_path / f"n{e}").read_bytes(), e
+    mixed = _writer_frame(spark, _WRITER_WKTS + ["POLYGON EMPTY"])
+    p = str(tmp_path / "m.gpkg")
+    assert to_gpkg(mixed, p, table="m") == 7
+    con = sqlite3.connect(p)
+    got = con.execute('SELECT k, geom FROM "m" ORDER BY fid').fetchall()
+    ext = con.execute("SELECT min_x, min_y, max_x, max_y FROM "
+                      "gpkg_contents").fetchone()
+    con.close()
+    want = [(r.k, _wkb_to_gpkg_blob(None if r.geom is None
+                                    else bytes(r.geom), 0))
+            for r in mixed.orderBy("k").collect()]
+    assert got == want
+    assert ext == (0.0, 0.0, 22.0, 22.0)
 
 
 def test_gpkg_roundtrip(spark, tmp_path):

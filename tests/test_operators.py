@@ -1548,7 +1548,7 @@ def test_refine_pairs_point_in_polygon_regimes(monkeypatch, regime):
         return orig_pig(*a)
 
     def vec(*a, **kw):
-        calls["grouped"] += int(np.count_nonzero(a[8]))
+        calls["grouped"] += int(np.count_nonzero(a[6]))
         return orig_vec(*a, **kw)
 
     monkeypatch.setattr(algos, "points_in_geom", pig)
@@ -1780,3 +1780,17 @@ def test_geocoding_passes_columns_through_bit_exact(spark):
     g = geocode(df)
     _assert_passes_through(df, g, "geom")
     _assert_passes_through(g, reverse_geocode(g), "address")
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "grid"])
+def test_sjoin_within_polygon_with_repeated_vertex(spark, strategy):
+    """A polygon that repeats a vertex joins like the same polygon
+    without the repeat: only the interior point is within it."""
+    pts = spark.createDataFrame(
+        [(1, 6.0, 5.5), (2, 2.0, 2.0), (3, -3.0, -3.0)], ["pid", "x", "y"]) \
+        .withColumn("geom", st.point("x", "y")).drop("x", "y")
+    polys = spark.createDataFrame(
+        [(1, "POLYGON ((0 0, 0 0, 4 0, 4 4, 0 4, 0 0))")], ["rid", "w"]) \
+        .withColumn("geom", st.geom_from_text("w")).drop("w")
+    out = sjoin(pts, polys, predicate="within", strategy=strategy)
+    assert [r.pid for r in out.select("pid").collect()] == [2]

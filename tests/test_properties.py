@@ -487,6 +487,96 @@ def test_predicate_consistency_polygons(ra, rb):
     assert (ia <= 1e-6) or inter
 
 
+def _rings(*rings):
+    return [np.array(r + r[:1], dtype=np.float64) for r in rings]
+
+
+_half = st_.integers(-4, 88).map(lambda v: v / 2)
+
+
+@st_.composite
+def _partner_wkt(draw):
+    """A point, box, line or star polygon on a half-unit grid around the
+    star generator's extent, so vertices and edges are often shared."""
+    kind = draw(st_.sampled_from(["point", "box", "line", "star"]))
+    if kind == "point":
+        return f"POINT ({draw(_half)} {draw(_half)})"
+    if kind == "box":
+        x0, y0 = draw(_half), draw(_half)
+        x1, y1 = x0 + draw(sizes) / 2, y0 + draw(sizes) / 2
+        return f"POLYGON (({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, " \
+               f"{x0} {y0}))"
+    if kind == "line":
+        pts = draw(st_.lists(st_.tuples(_half, _half), min_size=2,
+                             max_size=4, unique=True))
+        return "LINESTRING (" + ", ".join(f"{x} {y}" for x, y in pts) + ")"
+    ring = draw(_star_polygon(holes=False))[0]
+    return "POLYGON ((" + ", ".join(f"{x!r} {y!r}" for x, y in ring) + "))"
+
+
+def _reform_ring(rings, form, ring, k):
+    """The same point set written another way: ring `ring` gets vertex k
+    repeated, its start rotated to vertex k, or its orientation reversed."""
+    out = [r.copy() for r in rings]
+    r = out[ring % len(out)][:-1]
+    k %= len(r)
+    if form == "repeat":
+        r = np.insert(r, k, r[k], axis=0)
+    elif form == "rotate":
+        r = np.roll(r, -k, axis=0)
+    else:
+        r = r[::-1]
+    out[ring % len(out)] = np.concatenate([r, r[:1]], axis=0)
+    return out
+
+
+_NAMED_PREDICATES = ("intersects", "disjoint", "contains", "within",
+                     "covers", "covered_by", "touches", "crosses",
+                     "overlaps", "geom_equals", "contains_properly")
+
+
+@given(_star_polygon(), _partner_wkt(),
+       st_.sampled_from(["repeat", "rotate", "reverse"]),
+       st_.integers(0, 1), st_.integers(0, 11))
+@settings(max_examples=60, deadline=None)
+# a repeated vertex once put every point on the polygon's boundary: a
+# zero-length edge passed the on-segment test for any point
+@example(ra=_rings([(0, 0), (4, 0), (4, 4), (0, 4)]),
+         other="POINT (6 5.5)", form="repeat", ring=0, k=0)
+@example(ra=_rings([(0, 0), (4, 0), (4, 4), (0, 4)]),
+         other="POINT (2 2)", form="repeat", ring=0, k=0)
+# ... and hid the reflex turn at the repeated vertex from the convexity
+# test, so the convex separating-axis path rejected a touching box
+@example(ra=_rings([(14, 10), (12.828, 12.828), (10, 14), (7.172, 12.828),
+                    (2, 10), (7.172, 7.172), (10, 5), (12.828, 7.172)]),
+         other="POLYGON ((0 0, 2 0, 2 10, 0 10, 0 0))", form="repeat",
+         ring=0, k=5)
+def test_ring_form_invariance(ra, other, form, ring, k):
+    """Repeating a ring vertex, rotating a ring's start or reversing its
+    orientation keeps the point set, so every named predicate (both
+    argument orders), distance, area, length and is_valid must not
+    change, and the two forms must be equal."""
+    from geopandas_spark.geom.array import GT_POLYGON, GeometryBuilder
+
+    b = GeometryBuilder()
+    b.append(GT_POLYGON, [ra])
+    b.append(GT_POLYGON, [_reform_ring(ra, form, ring, k)])
+    ga = b.finish()
+    A, A2 = ga.take([0]), ga.take([1])
+    B = wkt.parse_array([other])
+    for name in _NAMED_PREDICATES:
+        f = getattr(algos, name)
+        assert f(A2, B)[0] == f(A, B)[0], (name, "A, B")
+        assert f(B, A2)[0] == f(B, A)[0], (name, "B, A")
+    assert algos.geom_equals(A, A2)[0]
+    for f in (algos.distance, lambda a, b: algos.distance(b, a)):
+        np.testing.assert_allclose(f(A2, B), f(A, B), rtol=1e-12,
+                                   atol=1e-12)
+    for f in (algos.area, algos.length):
+        np.testing.assert_allclose(f(A2), f(A), rtol=1e-12)
+    assert algos.is_valid(A2)[0] == algos.is_valid(A)[0]
+
+
 @given(_star_polygon(holes=False),
        st_.lists(st_.tuples(st_.integers(-5, 45), st_.integers(-5, 45)),
                  min_size=2, max_size=5))
@@ -698,10 +788,6 @@ def test_clip_by_rect_matches_intersection(ra, x0, y0, w, h):
     a1 = float(algos.area(fast)[0])
     a2 = float(algos.area(exact)[0])
     assert abs(a1 - a2) < 1e-6 * max(a2, 1.0)
-
-
-def _rings(*rings):
-    return [np.array(r + r[:1], dtype=np.float64) for r in rings]
 
 
 @given(_star_polygon(holes=True), st_.floats(0.3, 1.5))

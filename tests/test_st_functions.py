@@ -591,3 +591,26 @@ def test_null_nan_contract_at_the_udf_boundary(spark):
         "id", st.point("x", "y").alias("g")).collect()}
     assert got[0] is not None
     assert [got[i] for i in (1, 2, 3, 4)] == [None] * 4
+
+
+def test_sql_repeated_vertex_polygon_matches_unrepeated(spark):
+    """SQL predicates and distance against a polygon with a repeated
+    vertex give the answers of the same polygon without the repeat (the
+    zero-length edge once put every point on the boundary)."""
+    register_sql(spark)
+    rows = spark.sql("""
+        SELECT p.x, p.y,
+               st_intersects(st_geomfromtext(r.w), st_point(p.x, p.y)) AS ri,
+               st_intersects(st_geomfromtext(u.w), st_point(p.x, p.y)) AS ui,
+               st_contains(st_geomfromtext(r.w), st_point(p.x, p.y)) AS rc,
+               st_contains(st_geomfromtext(u.w), st_point(p.x, p.y)) AS uc,
+               st_distance(st_geomfromtext(r.w), st_point(p.x, p.y)) AS rd,
+               st_distance(st_geomfromtext(u.w), st_point(p.x, p.y)) AS ud
+        FROM VALUES (6D, 5.5D), (2D, 2D), (-3D, -3D) AS p(x, y),
+             VALUES ('POLYGON ((0 0, 0 0, 4 0, 4 4, 0 4, 0 0))') AS r(w),
+             VALUES ('POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))') AS u(w)
+        ORDER BY p.x""").collect()
+    assert [(r.ri, r.rc, r.rd) for r in rows] == [
+        (r.ui, r.uc, r.ud) for r in rows]
+    assert [(r.ri, r.rc) for r in rows] == [
+        (False, False), (True, True), (False, False)]
