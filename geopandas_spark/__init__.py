@@ -7,9 +7,10 @@ Data model (SURVEY.md §1): geometry travels as WKB ``BinaryType`` columns;
 CRS is carried in column metadata. There is no GEOS/shapely in this
 environment, so the geometry kernel itself (``geopandas_spark.geom``) is a
 pure-numpy columnar implementation (GeoArrow-style offset layout) executed
-inside Arrow-batched pandas UDFs — the same plan shape the reference uses at
-its own I/O boundaries (reference: geopandas/array.py:217-252), but with our
-own computational-geometry kernels instead of GEOS ufuncs.
+inside Arrow UDFs and ``mapInArrow`` stages — the same plan shape the
+reference uses at its own I/O boundaries (reference:
+geopandas/array.py:217-252), but with our own computational-geometry
+kernels instead of GEOS ufuncs.
 
 Public surface:
 - ``geopandas_spark.st`` — column functions (st_area, st_buffer, ...)

@@ -870,14 +870,17 @@ def _on_and_crossing(X, Y, x0, y0, x1, y1):
     segment within _EPS, and the rightward ray from the point crosses it
     (even-odd, half-open in y so a vertex is counted once). A zero-length
     segment (a repeated vertex) is a point: ``on`` only within _EPS of it,
-    and it never crosses."""
+    and it never crosses. The tolerance on ``cross`` and ``dot`` (length
+    times distance) is _EPS·max(L, L²) for a segment of length L: an
+    absolute _EPS below length 1, relative to L above it, so a very short
+    segment has no halo wider than _EPS."""
     dx, dy = x1 - x0, y1 - y0
     ex, ey = X - x0, Y - y0
     cross = ex * dy - ey * dx
     dot = ex * dx + ey * dy
     sq = dx * dx + dy * dy
-    on = (np.abs(cross) <= _EPS * np.maximum(1.0, sq)) & \
-        (dot >= -_EPS) & (dot <= sq + _EPS)
+    tol = _EPS * np.maximum(np.sqrt(sq), sq)
+    on = (np.abs(cross) <= tol) & (dot >= -tol) & (dot <= sq + tol)
     point = sq == 0
     if point.any():
         on &= ~point | (ex * ex + ey * ey <= _EPS * _EPS)

@@ -68,7 +68,8 @@ def read_gpkg(spark: SparkSession, path: str, *, table: Optional[str] = None,
             "SELECT column_name FROM gpkg_geometry_columns "
             "WHERE table_name = ?", (table,)).fetchone()
         gcol = gcol_row[0] if gcol_row else geom
-        cols = [r[1] for r in con.execute(f'PRAGMA table_info("{table}")')]
+        cols = [(r[1], r[2])
+                for r in con.execute(f'PRAGMA table_info("{table}")')]
         lo_hi = con.execute(
             f'SELECT MIN(rowid), MAX(rowid), COUNT(*) FROM "{table}"'
         ).fetchone()
@@ -76,25 +77,9 @@ def read_gpkg(spark: SparkSession, path: str, *, table: Optional[str] = None,
         con.close()
     lo, hi, n = (lo_hi[0] or 0), (lo_hi[1] or 0), lo_hi[2]
 
-    attrs = [c for c in cols if c != gcol]
-    probe = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-    type_rows = probe.execute(
-        f'SELECT {", ".join(chr(34) + c + chr(34) for c in attrs) or "1"} '
-        f'FROM "{table}" LIMIT 64').fetchall()
-    probe.close()
-
-    def spark_type(ci):
-        seen = {type(r[ci]) for r in type_rows} - {type(None)}
-        if seen <= {int}:
-            return LongType()
-        if seen <= {int, float}:
-            return DoubleType()
-        if seen <= {bytes}:
-            return BinaryType()
-        return StringType()
-
+    attrs = [c for c, _ in cols if c != gcol]
     out_schema = StructType(
-        [StructField(c, spark_type(i), True) for i, c in enumerate(attrs)]
+        [StructField(c, _spark_type(t), True) for c, t in cols if c != gcol]
         + [StructField(geom, BinaryType(), True)])
 
     if num_partitions is None:
@@ -112,6 +97,25 @@ def read_gpkg(spark: SparkSession, path: str, *, table: Optional[str] = None,
 
     return scan(spark, ranges(lo, hi + 1, num_partitions), read_range,
                 out_schema)
+
+
+def _spark_type(declared: str):
+    """The Spark type of a column from its declared SQLite type, by
+    SQLite's affinity rules: BOOLEAN reads as an integer (0/1, as a
+    boolean column written by ``to_gpkg`` does) and the rest of NUMERIC
+    affinity (DATE, DATETIME, ...) as text. A value the type cannot hold
+    (a REAL in an INTEGER column) fails the read instead of being
+    truncated."""
+    t = declared.upper()
+    if "INT" in t or t == "BOOLEAN":
+        return LongType()
+    if any(s in t for s in ("CHAR", "CLOB", "TEXT")):
+        return StringType()
+    if "BLOB" in t:
+        return BinaryType()
+    if any(s in t for s in ("REAL", "FLOA", "DOUB")):
+        return DoubleType()
+    return StringType()
 
 
 def _sqlite_type(field: StructField) -> str:

@@ -1,8 +1,18 @@
-"""The grouped Arrow stage shared by the operators."""
+"""The Arrow stages shared by the operators and the pipeline stages."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+
 from pyspark.sql.pandas.types import to_arrow_schema
+
+
+def with_column(b: pa.RecordBatch, name: str, arr) -> pa.RecordBatch:
+    """Batch ``b`` without its column ``name`` (if any), then ``arr`` as
+    ``name`` at the end."""
+    keep = [n for n in b.schema.names if n != name]
+    return pa.RecordBatch.from_arrays([b.column(n) for n in keep] + [arr],
+                                      names=keep + [name])
 
 
 def apply_in_arrow(df, by, fn, schema):

@@ -26,6 +26,7 @@ from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from geopandas_spark.geom import wkb as _wkb
 from geopandas_spark.geom.array import GeometryBuilder
+from geopandas_spark.operators._arrow import with_column
 
 
 def _stub_forward(address: str):
@@ -39,14 +40,6 @@ def _stub_forward(address: str):
 def _stub_reverse(x: float, y: float) -> str:
     return f"{abs(y):.3f}{'N' if y >= 0 else 'S'} {abs(x):.3f}" \
            f"{'E' if x >= 0 else 'W'}"
-
-
-def _with_column(b, name: str, arr) -> pa.RecordBatch:
-    """Batch ``b`` without its column ``name`` (if any), then ``arr`` as
-    ``name`` at the end."""
-    keep = [n for n in b.schema.names if n != name]
-    return pa.RecordBatch.from_arrays([b.column(n) for n in keep] + [arr],
-                                      names=keep + [name])
 
 
 def geocode(df: DataFrame, address_col: str = "address", *,
@@ -70,7 +63,7 @@ def geocode(df: DataFrame, address_col: str = "address", *,
                     bb.append_null()
                 else:
                     bb.append_point(float(loc[0]), float(loc[1]))
-            yield _with_column(b, out_col, _wkb.encode_arrow(bb.finish()))
+            yield with_column(b, out_col, _wkb.encode_arrow(bb.finish()))
 
     return df.mapInArrow(run, schema=out_schema)
 
@@ -99,6 +92,6 @@ def reverse_geocode(df: DataFrame, geom: str = "geom", *,
                     time.sleep(rate_limit_s)
                 x, y = ga.coords[off[i]]
                 adds.append(rev(float(x), float(y)))
-            yield _with_column(b, out_col, pa.array(adds, pa.string()))
+            yield with_column(b, out_col, pa.array(adds, pa.string()))
 
     return df.mapInArrow(run, schema=out_schema)

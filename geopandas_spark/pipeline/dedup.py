@@ -17,7 +17,8 @@ Design for 100 TB:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
@@ -100,15 +101,15 @@ def _minhash_sig_udf(num_hashes: int, k: int):
     ~2 s. The DuckDB oracle computes the same polynomial + mix with the
     same embedded constants, so cross-engine parity holds by
     construction (see __spark_entry__._SQL_HV)."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    return pandas_udf("array<long>")(_sig_kernel(num_hashes, k))
+    return arrow_udf(_sig_kernel(num_hashes, k), "array<long>")
 
 
 def _sig_kernel(num_hashes: int, k: int):
-    """Raw batch kernel behind ``_minhash_sig_udf``: pd.Series[str] →
-    pd.Series[list[int] | None]. Kept Spark-free so tests can call it
-    directly.
+    """Raw batch kernel behind ``_minhash_sig_udf``: a ``pa.Array`` of
+    strings → a ``list<int64>`` array (NULL for a NULL text). Kept
+    Spark-free so tests can call it directly.
 
     Bounded transient footprint (r13, guide §5): the first cut of this
     kernel allocated every intermediate fresh per batch — codes/H/mask/
@@ -139,15 +140,10 @@ def _sig_kernel(num_hashes: int, k: int):
             bufs[name] = b
         return b[:n]
 
-    def sig(texts: pd.Series) -> pd.Series:
-        out = [None] * len(texts)
-        pos, strs = [], []
-        for i, s in enumerate(texts):
-            if isinstance(s, str):
-                pos.append(i)
-                strs.append(s if len(s) >= k else s + "\0" * (k - len(s)))
-        if not strs:
-            return pd.Series(out, dtype=object)
+    def sig(texts: pa.Array) -> pa.Array:
+        valid = pc.is_valid(texts).to_numpy(zero_copy_only=False)
+        strs = [s if len(s) >= k else s + "\0" * (k - len(s))
+                for s in texts.drop_null().to_pylist()]
         nn = len(strs)
         plens = np.fromiter(map(len, strs), dtype=np.int64, count=nn)
         m = plens - (k - 1)                  # windows per row (>= 1)
@@ -206,9 +202,11 @@ def _sig_kernel(num_hashes: int, k: int):
         # normal chunks are never swept and are reused across batches.
         for nm in [nm for nm, b in bufs.items() if len(b) > CH + 1]:
             del bufs[nm]
-        for r, i in enumerate(pos):
-            out[i] = res[r].tolist()
-        return pd.Series(out, dtype=object)
+        offsets = np.zeros(len(texts) + 1, dtype=np.int32)
+        np.cumsum(valid * np.int32(num_hashes), out=offsets[1:])
+        return pa.ListArray.from_arrays(pa.array(offsets),
+                                        pa.array(res.ravel()),
+                                        mask=pa.array(~valid))
 
     return sig
 

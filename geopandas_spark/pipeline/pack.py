@@ -9,11 +9,12 @@ onto one reducer — the classic 100 TB trap. Here:
 
 1. range-repartition + sort by the order key (one shuffle, the same cost
    class as any global sort);
-2. pass 1 collects per-partition token totals (one tiny row per
-   partition);
+2. pass 1 collects per-partition token totals (a native aggregate over
+   ``spark_partition_id()``, one tiny row per partition);
 3. the driver prefix-sums those totals (a ~thousand-element Python loop)
-   and broadcasts the per-partition offsets;
-4. pass 2 adds local cumsum + partition offset, map-side.
+   and ships the per-partition offsets in the pass-2 closure;
+4. pass 2 adds local cumsum + partition offset, map-side, in one
+   ``mapInArrow``.
 
 Output is independent of where the sampled range boundaries fall — the
 cumsum depends only on the global order — so results are deterministic
@@ -22,12 +23,13 @@ and the DuckDB oracle twin is a plain ``SUM(...) OVER (ORDER BY ...)``.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from geopandas_spark.operators._arrow import with_column
 
 
 def distributed_cumsum(df: DataFrame, order_col: str, val_col: str,
@@ -35,46 +37,43 @@ def distributed_cumsum(df: DataFrame, order_col: str, val_col: str,
                        num_partitions: int = None) -> DataFrame:
     """Exclusive prefix sum of ``val_col`` in global ``order_col`` order
     (out_col = sum of all strictly-earlier rows). Scales: no single-reducer
-    window, one range shuffle + a per-partition-totals collect."""
+    window, one range shuffle + a per-partition-totals collect. A NULL
+    value counts as 0 and gets a NULL ``out_col``; every other column
+    passes through as its Arrow buffers.
+
+    The sorted partitions are a lazy local checkpoint: pass 1 materializes
+    them, pass 2 reads the same partitions (so the offsets match), and
+    nothing stays in the cache manager once the result is dropped."""
     from pyspark import TaskContext
 
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
     parts = (df.repartitionByRange(n, F.col(order_col))
-               .sortWithinPartitions(order_col))
-    parts.persist()
+               .sortWithinPartitions(order_col)
+               .localCheckpoint(eager=False))
 
-    tot_schema = StructType([StructField("pid", LongType()),
-                             StructField("total", LongType())])
+    rows = (parts.groupBy(F.spark_partition_id().alias("pid"))
+                 .agg(F.sum(val_col).alias("total")).collect())
+    acc, offsets = 0, {}
+    for pid, total in sorted(rows):
+        offsets[pid] = acc
+        acc += int(total or 0)
 
-    def totals(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        t = 0
-        for pdf in batches:
-            t += int(pdf[val_col].sum())
-        yield pd.DataFrame({"pid": [pid], "total": [t]})
+    out_schema = StructType(
+        [f for f in df.schema.fields if f.name != out_col]
+        + [StructField(out_col, LongType())])
 
-    rows = parts.mapInPandas(totals, tot_schema).collect()
-    offsets = {}
-    acc = 0
-    for r in sorted(rows, key=lambda r: r["pid"]):
-        offsets[r["pid"]] = acc
-        acc += r["total"]
+    def add_cumsum(batches):
+        run = offsets.get(TaskContext.get().partitionId(), 0)
+        for b in batches:
+            v = b.column(val_col).cast(pa.int64())
+            z = pc.fill_null(v, 0)
+            excl = pc.add(pc.subtract(pc.cumulative_sum(z), z), run)
+            run += pc.sum(z).as_py() or 0
+            yield with_column(b, out_col,
+                              pc.if_else(pc.is_valid(v), excl, None))
 
-    out_schema = StructType(df.schema.fields +
-                            [StructField(out_col, LongType())])
-
-    def add_cumsum(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        run = offsets.get(pid, 0)
-        for pdf in batches:
-            c = pdf[val_col].cumsum()
-            pdf = pdf.copy()
-            pdf[out_col] = (c - pdf[val_col]) + run   # exclusive prefix
-            run += int(pdf[val_col].sum())
-            yield pdf
-
-    return parts.mapInPandas(add_cumsum, out_schema)
+    return parts.mapInArrow(add_cumsum, out_schema)
 
 
 def pack_sequences(df: DataFrame, budget: int, *,

@@ -12,6 +12,16 @@
   reduces with one scalar ``st_union_array`` call per window.
 - ``filter_stream_bbox``: predicate filtering against a literal box —
   pure column expression, here only to name the pattern.
+
+The two stateful stages (``cell_stats_stream``, ``lsh_dedup_stream``) are
+the engine's only pandas UDF stages; everything else crosses into Python
+as Arrow. They stay on ``applyInPandasWithState`` because PySpark 4.1's
+non-pandas ``transformWithState`` is documented with the RocksDB
+state-store provider set as a session conf
+(``spark.sql.streaming.stateStore.providerClass``), and a library call
+must not flip a session conf under its caller — the reason ``to_fgb`` no
+longer sets one. It also needs ``protobuf`` on the workers, which PySpark
+does not install.
 """
 
 from __future__ import annotations
@@ -105,7 +115,6 @@ def cell_stats_stream(stream: DataFrame, cell_size: float, *,
     vectorized numpy over the batch, and the cell key is the shuffle key —
     the same partitioning a 1000-executor cluster would use.
     """
-    import pandas as pd  # noqa: F401 (worker-side)
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (DoubleType, LongType, StringType,
                                    StructField, StructType)
@@ -254,11 +263,11 @@ def lsh_dedup_stream(stream: DataFrame, *, id_col: str = "doc_id",
                      bands: int = 4, k: int = 5) -> DataFrame:
     """Streaming near-duplicate detection: MinHash-LSH bucket state.
 
-    The streaming face of the batch ``minhash_lsh_pairs``: signatures and
-    band keys are pure native expressions (no Python until the stateful
-    stage); per LSH bucket, ``applyInPandasWithState`` keeps only the
-    FIRST-seen document id. Every later document landing in an
-    already-claimed bucket emits a candidate row
+    The streaming face of the batch ``minhash_lsh_pairs``: signatures are
+    one Arrow UDF pass and band keys native expressions; per LSH bucket,
+    ``applyInPandasWithState`` keeps only the FIRST-seen document id.
+    Every later document landing in an already-claimed bucket emits a
+    candidate row
     ``(id, first_id, band)`` — duplicates are detected across
     micro-batches, the ingestion-time shape batch dedup can't cover.
     Consumers drop ``DISTINCT id`` or verify candidates with the batch
@@ -269,7 +278,6 @@ def lsh_dedup_stream(stream: DataFrame, *, id_col: str = "doc_id",
     bucket key is the shuffle key, and the per-batch update is a tiny
     pandas pass. IDs are carried as strings so the state schema stays
     type-stable for any id column."""
-    import pandas as pd  # noqa: F401 (worker-side import)
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import IntegerType, StringType, StructField, \
         StructType

@@ -2806,36 +2806,41 @@ def test_vec_classify_points_peak_memory_is_chunked():
 
 
 REPEATED_VERTEX = "POLYGON ((0 0, 0 0, 4 0, 4 4, 0 4, 0 0))"
+SHORT_EDGE = "POLYGON ((0 0, 1e-13 0, 4 0, 4 4, 0 4, 0 0))"
 UNREPEATED = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
-PROBES = ["POINT (6 5.5)", "POINT (2 2)", "POINT (-3 -3)"]
+PROBES = ["POINT (6 5.5)", "POINT (2 2)", "POINT (-3 -3)", "POINT (2 1e-5)"]
 
 
 def test_repeated_vertex_is_a_point_not_a_boundary_everywhere():
     """A repeated ring vertex is a zero-length edge: a point, not a
-    segment that every point lies on. Every point-in-polygon path gives
-    exterior / interior / exterior, as for the polygon without the
-    repeat, and the predicates, distance and relate agree with it."""
-    rep = ga_from_wkt(*[REPEATED_VERTEX] * 3)
-    plain = ga_from_wkt(*[UNREPEATED] * 3)
+    segment that every point lies on; a 1e-13 edge is on-tested within
+    _EPS of itself, not within _EPS / length. Every point-in-polygon path
+    gives exterior / interior / exterior / interior, as for the polygon
+    without the repeat, and the predicates, distance and relate agree
+    with it."""
+    n = len(PROBES)
+    plain = ga_from_wkt(*[UNREPEATED] * n)
     pts = ga_from_wkt(*PROBES)
     px, py = pts.coords[:, 0], pts.coords[:, 1]
-    want = [0, 2, 0]
-    assert algos.points_in_geom(px, py, rep, 0).tolist() == want
-    assert algos._pairwise_point_in_poly(pts, rep, np.arange(3))[1] \
-        .tolist() == want
-    s0, s1, tgt = algos._row_segments(rep, np.array([0]))
-    cls = algos._vec_classify_points(px, py, s0, s1, np.array([3]),
-                                     np.bincount(tgt), np.array([True]))
-    assert cls.tolist() == want
-    for name in ("intersects", "within", "covered_by", "touches",
-                 "disjoint", "crosses", "overlaps"):
-        f = getattr(algos, name)
-        np.testing.assert_array_equal(f(pts, rep), f(pts, plain), name)
-        np.testing.assert_array_equal(f(rep, pts), f(plain, pts), name)
-    np.testing.assert_array_equal(algos.distance(pts, rep),
-                                  [2.5, 0.0, np.hypot(3, 3)])
-    assert algos.relate(rep, pts) == algos.relate(plain, pts)
-    assert algos.relate(rep.take([0]), pts.take([0])) == ["FF2FF10F2"]
+    want = [0, 2, 0, 2]
+    for poly in (REPEATED_VERTEX, SHORT_EDGE):
+        rep = ga_from_wkt(*[poly] * n)
+        assert algos.points_in_geom(px, py, rep, 0).tolist() == want
+        assert algos._pairwise_point_in_poly(pts, rep, np.arange(n))[1] \
+            .tolist() == want
+        s0, s1, tgt = algos._row_segments(rep, np.array([0]))
+        cls = algos._vec_classify_points(px, py, s0, s1, np.array([n]),
+                                         np.bincount(tgt), np.array([True]))
+        assert cls.tolist() == want
+        for name in ("intersects", "within", "covered_by", "touches",
+                     "disjoint", "crosses", "overlaps"):
+            f = getattr(algos, name)
+            np.testing.assert_array_equal(f(pts, rep), f(pts, plain), name)
+            np.testing.assert_array_equal(f(rep, pts), f(plain, pts), name)
+        np.testing.assert_array_equal(algos.distance(pts, rep),
+                                      [2.5, 0.0, np.hypot(3, 3), 0.0])
+        assert algos.relate(rep, pts) == algos.relate(plain, pts)
+        assert algos.relate(rep.take([0]), pts.take([0])) == ["FF2FF10F2"]
 
 
 def test_multipoint_on_line_endpoint_does_not_cross():

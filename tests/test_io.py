@@ -495,8 +495,8 @@ def test_gpkg_distributed_read(spark, sf_dir, tmp_path):
     assert back.count() == n == c.count()
     assert (back.select(F.sum(st.x("geom"))).collect()[0][0]
             == c.select(F.sum(st.x("geom"))).collect()[0][0])
-    # column types come from the first 64 rows: a REAL beyond them in the
-    # integer column fails the read instead of being truncated into it
+    # column types come from the declared types: a REAL in the INTEGER
+    # column fails the read instead of being truncated into it
     import sqlite3
     con = sqlite3.connect(p)
     con.execute('UPDATE "customer" SET c_custkey = 0.5 WHERE fid = 100')
@@ -505,6 +505,37 @@ def test_gpkg_distributed_read(spark, sf_dir, tmp_path):
     with pytest.raises(Exception, match="truncated"):
         read_gpkg(spark, p).collect()
 
+
+
+def test_gpkg_types_columns_from_declared_types(spark, tmp_path):
+    """A REAL or TEXT column whose first rows are all NULL keeps its type
+    (a row sample would type it bigint and fail on the first value), and
+    BOOLEAN / DATETIME columns read by SQLite's affinity rules."""
+    import sqlite3
+    from geopandas_spark.io import read_gpkg, to_gpkg
+
+    rows = [(i, None if i < 100 else i / 2, None if i < 100 else f"s{i}")
+            for i in range(120)]
+    df = spark.createDataFrame(rows, "k long, v double, s string") \
+        .withColumn("geom", st.point(F.col("k").cast("double"), F.lit(0.0)))
+    p = str(tmp_path / "n.gpkg")
+    assert to_gpkg(df, p, table="n") == 120
+    con = sqlite3.connect(p)
+    con.execute('ALTER TABLE "n" ADD COLUMN flag BOOLEAN')
+    con.execute('ALTER TABLE "n" ADD COLUMN ts DATETIME')
+    con.execute('UPDATE "n" SET flag = k % 2, ts = \'2024-01-02T03:04:05Z\' '
+                'WHERE k = 110')
+    con.commit()
+    con.close()
+    back = read_gpkg(spark, p)
+    assert {f.name: f.dataType.simpleString() for f in back.schema} == {
+        "fid": "bigint", "k": "bigint", "v": "double", "s": "string",
+        "flag": "bigint", "ts": "string", "geom": "binary"}
+    got = {r.k: r for r in back.collect()}
+    assert [(got[i].v, got[i].s) for i in (0, 99, 100, 119)] == [
+        (None, None), (None, None), (50.0, "s100"), (59.5, "s119")]
+    assert (got[110].flag, got[110].ts) == (0, "2024-01-02T03:04:05Z")
+    assert (got[111].flag, got[111].ts) == (None, None)
 
 def test_read_to_file_dispatch(spark, tmp_path):
     from geopandas_spark.io import read_file, to_file

@@ -4,10 +4,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from geopandas_spark.pipeline import (
-    add_text_stats, cosine_topk, exact_dedup, fingerprint, language_id,
-    lsh_bucket_topk, minhash_lsh_pairs, ngram_jaccard_pairs, quality_score,
-    token_count,
+    add_text_stats, cosine_topk, distributed_cumsum, exact_dedup,
+    fingerprint, language_id, lsh_bucket_topk, minhash_lsh_pairs,
+    ngram_jaccard_pairs, pack_sequences, quality_score, token_count,
 )
+from geopandas_spark.pipeline import multimodal as mm
 from geopandas_spark.pipeline.dedup import simhash_dedup_pairs, minhash_signatures
 from geopandas_spark.pipeline.multimodal import decode_images, extract_image_features
 
@@ -147,6 +148,10 @@ def test_multimodal_stub_plumbing(spark):
     metas = {r.id: r.image_meta for r in out}
     assert metas[3] is None
     assert metas[1].width >= 16 and metas[1].format == "fake"
+    # a stage run on its own output replaces its output column
+    twice = decode_images(decode_images(df))
+    assert twice.columns == ["id", "image", "image_meta"]
+    assert {r.id: r.image_meta for r in twice.collect()} == metas
     f = extract_image_features(df, dim=8).collect()
     feats = {r.id: r.features for r in f}
     assert len(feats[1]) == 8 and feats[3] is None
@@ -307,9 +312,9 @@ def test_url_ops(spark):
 
 
 def test_distributed_cumsum_and_packing(spark):
-    from geopandas_spark.pipeline import distributed_cumsum, pack_sequences
     rows = [(i, "w " * (i % 7 + 1)) for i in range(100)]
     df = spark.createDataFrame(rows, ["doc_id", "text"]).repartition(8)
+    spark.catalog.clearCache()
     out = distributed_cumsum(
         df.withColumn("n", F.length("text")), "doc_id", "n")
     got = {r.doc_id: r.cumsum for r in out.collect()}
@@ -318,6 +323,8 @@ def test_distributed_cumsum_and_packing(spark):
         exp[i] = acc
         acc += len("w " * (i % 7 + 1))
     assert got == exp
+    # both passes read a local checkpoint: nothing is left in the cache
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # packing: sequences tile the stream; spans consistent
     p = {r.doc_id: r for r in pack_sequences(df, budget=16).collect()}
     assert p[0].tok_start == 0 and p[0].seq_first == 0
@@ -325,6 +332,38 @@ def test_distributed_cumsum_and_packing(spark):
         assert p[i].tok_start == p[i - 1].tok_start + p[i - 1].n_tokens
         assert p[i].seq_first == p[i].tok_start // 16
         assert p[i].n_seqs == p[i].seq_last - p[i].seq_first + 1
+
+
+_PASS_THROUGH_STAGES = {
+    "distributed_cumsum": lambda d: distributed_cumsum(
+        d, "k", "n", num_partitions=1),
+    "pack_sequences": lambda d: pack_sequences(d, budget=4, id_col="k"),
+    "decode_images": decode_images,
+    "extract_image_features": extract_image_features,
+    "resize_images": lambda d: mm.resize_images(d, 2, 2),
+    "sample_frames": lambda d: mm.sample_frames(
+        d, blob_col="image", id_cols=("k", "doc_id", "x")),
+}
+
+
+@pytest.mark.parametrize("stage", list(_PASS_THROUGH_STAGES))
+def test_pipeline_stages_pass_columns_through_exactly(spark, stage):
+    """A bigint above 2**53, NaN and NULL in one batch come back exactly
+    from every pipeline stage that carries user columns (a pandas round
+    trip turns the bigint column into doubles and NaN into NULL)."""
+    big = 2 ** 53 + 1
+    rows = [(0, big, float("nan"), "a b c", 3, b"img-a"),
+            (1, None, None, "d e", None, b"img-b"),
+            (2, 7, 1.5, "f", 1, b"img-c")]
+    df = spark.createDataFrame(
+        rows, "k long, doc_id long, x double, text string, n long, "
+        "image binary").coalesce(1)
+    out = _PASS_THROUGH_STAGES[stage](df).collect()
+    want = {(k, repr(d), repr(x)) for k, d, x, *_ in rows}
+    assert {(r.k, repr(r.doc_id), repr(r.x)) for r in out} == want
+    assert {r.k: r.doc_id for r in out}[0] == big
+    if stage == "distributed_cumsum":   # a NULL value counts as 0
+        assert {r.k: r.cumsum for r in out} == {0: 0, 1: None, 2: 3}
 
 
 def test_word_ngrams_and_decontaminate(spark):
@@ -542,7 +581,7 @@ def test_minhash_bounded_kernel_parity():
     chunk boundaries, non-ASCII/astral codepoints, shorter-than-k rows,
     empty strings and NULLs."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from geopandas_spark.pipeline import dedup as dd
 
@@ -570,17 +609,18 @@ def test_minhash_bounded_kernel_parity():
              for n in rng.integers(1, 60, size=120)]
     texts += [None, "", "ab", "\0\0\0", "\U0010FFFF" * 10]
 
+    arr = pa.array(texts, pa.string())
     for nh, k in ((4, 8), (8, 5)):
         ref = reference(texts, nh, k)
         # tiny chunk bound forces many chunk boundaries mid-batch
         old = dd._CHUNK_CHARS
         try:
             dd._CHUNK_CHARS = 7
-            got_chunked = dd._sig_kernel(nh, k)(pd.Series(texts))
+            got_chunked = dd._sig_kernel(nh, k)(arr)
         finally:
             dd._CHUNK_CHARS = old
-        got = dd._sig_kernel(nh, k)(pd.Series(texts))
-        for g1, g2, r in zip(got_chunked, got, ref):
+        got = dd._sig_kernel(nh, k)(arr)
+        for g1, g2, r in zip(got_chunked.to_pylist(), got.to_pylist(), ref):
             assert (g1 is None and r is None) or list(g1) == r
             assert (g2 is None and r is None) or list(g2) == r
 
@@ -591,12 +631,12 @@ def test_minhash_kernel_buffers_are_bounded_and_reused():
     new large arrays (buffer ids stable), and no buffer exceeds the
     chunk bound."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from geopandas_spark.pipeline import dedup as dd
 
     fn = dd._sig_kernel(4, 8)
-    texts = pd.Series(["x" * 300] * 2000)
+    texts = pa.array(["x" * 300] * 2000, pa.string())
     fn(texts)
     # reach the closure's buffer dict (held by the _buf helper)
     cells = {v: c.cell_contents for v, c in
@@ -622,7 +662,7 @@ def test_minhash_kernel_reuses_every_buffer_across_batches():
     the very buffer objects the first batch allocated, the per-chunk
     shingle-code and window buffers included: the end-of-batch sweep
     releases only buffers grown by an oversized document."""
-    import pandas as pd
+    import pyarrow as pa
 
     from geopandas_spark.pipeline import dedup as dd
 
@@ -630,7 +670,7 @@ def test_minhash_kernel_reuses_every_buffer_across_batches():
     fn = dd._sig_kernel(4, k)
     # 300-char docs: a chunk holds far more characters than windows, so
     # its code and mask buffers are the largest it allocates
-    fn(pd.Series(["x" * 300] * 2000))
+    fn(pa.array(["x" * 300] * 2000, pa.string()))
     cells = {v: c.cell_contents for v, c in
              zip(fn.__code__.co_freevars, fn.__closure__)}
     hcells = {v: c.cell_contents for v, c in
@@ -640,7 +680,7 @@ def test_minhash_kernel_reuses_every_buffer_across_batches():
     assert {"codes", "H", "t", "vm", "Hv", "tv", "starts", "offs"} <= \
         set(bufs), sorted(bufs)
     ids1 = {name: id(b) for name, b in bufs.items()}
-    fn(pd.Series(["y" * 120, "z" * 500] * 1500))
+    fn(pa.array(["y" * 120, "z" * 500] * 1500, pa.string()))
     assert {name: id(b) for name, b in bufs.items()} == ids1
 
 
@@ -650,7 +690,7 @@ def test_minhash_kernel_outlier_buffers_are_released():
     the chunk bound; the end-of-batch sweep must release them so
     steady-state memory returns to the documented bound, while normal
     batches keep reusing their (never-oversized) buffers."""
-    import pandas as pd
+    import pyarrow as pa
 
     from geopandas_spark.pipeline import dedup as dd
 
@@ -658,7 +698,7 @@ def test_minhash_kernel_outlier_buffers_are_released():
     fn = dd._sig_kernel(4, k)
     cap = (dd._CHUNK_CHARS + k) * 8          # bytes, int64 buffers
     monster = "y" * (dd._CHUNK_CHARS + 5000 + k)
-    out_m = fn(pd.Series([monster, "abcdefghij"]))
+    out_m = fn(pa.array([monster, "abcdefghij"], pa.string()))
     cells = {v: c.cell_contents for v, c in
              zip(fn.__code__.co_freevars, fn.__closure__)}
     hcells = {v: c.cell_contents for v, c in
@@ -668,5 +708,6 @@ def test_minhash_kernel_outlier_buffers_are_released():
     assert all(b.nbytes <= cap for b in bufs.values()), \
         {n: b.nbytes for n, b in bufs.items()}
     # values unchanged vs a fresh kernel over the same rows
-    ref = dd._sig_kernel(4, k)(pd.Series([monster, "abcdefghij"]))
-    assert [list(a) for a in out_m] == [list(b) for b in ref]
+    ref = dd._sig_kernel(4, k)(
+        pa.array([monster, "abcdefghij"], pa.string()))
+    assert out_m.to_pylist() == ref.to_pylist()
